@@ -71,11 +71,9 @@ class FraudMachine:
     Exact transition semantics of reference
     ``src/pyflink_examples/fraud_detection/fraud_detector.py:39-149``
     including its stale-timer quirks (see ``docs/fraud_semantics.md``).
-    Shared verbatim by BOTH streaming backends: the
-    ``applyInPandasWithState`` fallback keeps ``armed`` inside its state
-    tuple; the native ``transformWithStateInPandas`` processor mirrors
-    ``armed`` into real per-key timers by diffing
-    :attr:`initial_armed` against :attr:`armed` after the batch.
+    The streaming detector (``streaming/fraud.py``) keeps ``armed`` inside
+    its ``applyInPandasWithState`` state tuple and parks Spark's single
+    event-time timeout on its earliest entry.
 
     State: ``flag`` (bool | None), ``latest`` (last registered timer ms,
     ``fraud_detector.py:53-62``), ``armed`` (every registered, unfired
@@ -94,7 +92,6 @@ class FraudMachine:
         self.flag = flag
         self.latest = latest
         self.armed: list[int] = sorted(armed or [])
-        self.initial_armed: tuple[int, ...] = tuple(self.armed)
         self.small = small
         self.large = large
         self.window_ms = window_ms

@@ -498,6 +498,28 @@ def _simhash_fingerprints_of(d: DataFrame) -> DataFrame:
     the adversarial 2^53-straddling + null corpus still pinned in
     ``tests/test_simhash_scale.py``. hm/cnt are non-nullable int64
     (md5-derived hash, count) and stay zero-copy numpy."""
+    # the output carries the caller's doc_id type verbatim (testdata
+    # corpus long, synthetic/planted corpora string)
+    id_type = d.schema["doc_id"].dataType.simpleString()
+    # doc-locality for the kernel comes from repartitioning the RAW rows
+    # once, BEFORE the explode: HashPartitioning(doc_id) satisfies the
+    # (doc_id, w) groupBy's clustering (subset rule), so the TF aggregate
+    # runs exchange-free and its output is already doc_id-partitioned for
+    # mapInArrow. The previous shape aggregated on an un-clustered input
+    # and then paid a SECOND exchange (repartition("doc_id")) to move the
+    # whole TF table — corpus-sized distinct-term rows at 100 TB (r14,
+    # guide §2.4). The width is deliberately NOT pinned (r15, VERDICT r14
+    # #2): repartition("doc_id") is REPARTITION_BY_COL, which AQE sizes
+    # from runtime bytes (advisory 64m) instead of the local core count —
+    # doc-locality (all rows of a doc in one partition) survives
+    # coalescing, which only merges whole hash partitions.
+    tf = _simhash_tf(d.repartition("doc_id"))
+    return tf.mapInArrow(_simhash_kernel(), f"doc_id {id_type}, fp long")
+
+
+def _simhash_kernel():
+    """The ``mapInArrow`` body of :func:`_simhash_fingerprints_of`:
+    (doc_id, hm, cnt) record batches of whole docs → (doc_id, fp)."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -534,14 +556,17 @@ def _simhash_fingerprints_of(d: DataFrame) -> DataFrame:
             signs[:, 56 + j] = np.fmod(v, np.int64(2)) * 2 - 1
         contrib = signs * cnt[:, None]
         # group-sum by doc_id with EXACT ids: to_pylist yields Python
-        # ints / strings / None verbatim (no float64 path exists), and
-        # factorize keys them; null ids get code -1 → their own group,
+        # ints / strings / None verbatim (no float64 path exists), held
+        # in an object array (pandas deprecates factorizing a list) that
+        # factorize keys as-is; null ids get code -1 → their own group,
         # because Spark's groupBy keeps a null doc_id group and the
         # expression twin / DuckDB oracle emit a fingerprint row for it
         # (review r8). int64 overflow in np.add.at wraps two's
         # complement, matching the JVM long accumulation.
         id_field = tbl.schema.field("doc_id")
-        codes, uniques = pd.factorize(tbl.column("doc_id").to_pylist())
+        ids = np.empty(tbl.num_rows, dtype=object)
+        ids[:] = tbl.column("doc_id").to_pylist()
+        codes, uniques = pd.factorize(ids)
         has_null = bool((codes == -1).any())
         g = len(uniques)
         sums = np.zeros((g + 1 if has_null else g, SIMHASH_BITS), np.int64)
@@ -556,23 +581,7 @@ def _simhash_fingerprints_of(d: DataFrame) -> DataFrame:
             names=["doc_id", "fp"],
         )
 
-    # the output carries the caller's doc_id type verbatim (testdata
-    # corpus long, synthetic/planted corpora string)
-    id_type = d.schema["doc_id"].dataType.simpleString()
-    # doc-locality for the kernel comes from repartitioning the RAW rows
-    # once, BEFORE the explode: HashPartitioning(doc_id) satisfies the
-    # (doc_id, w) groupBy's clustering (subset rule), so the TF aggregate
-    # runs exchange-free and its output is already doc_id-partitioned for
-    # mapInArrow. The previous shape aggregated on an un-clustered input
-    # and then paid a SECOND exchange (repartition("doc_id")) to move the
-    # whole TF table — corpus-sized distinct-term rows at 100 TB (r14,
-    # guide §2.4). The width is deliberately NOT pinned (r15, VERDICT r14
-    # #2): repartition("doc_id") is REPARTITION_BY_COL, which AQE sizes
-    # from runtime bytes (advisory 64m) instead of the local core count —
-    # doc-locality (all rows of a doc in one partition) survives
-    # coalescing, which only merges whole hash partitions.
-    tf = _simhash_tf(d.repartition("doc_id"))
-    return tf.mapInArrow(fn, f"doc_id {id_type}, fp long")
+    return fn
 
 
 def _simhash_fingerprints_expr_of(d: DataFrame) -> DataFrame:

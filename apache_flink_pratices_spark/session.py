@@ -1,8 +1,8 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
-configuration is what we would ship to a 1000-executor cluster, with only the
-master URL and memory sizing changing:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the box's
+``os.cpu_count()``); the same configuration is what we would ship to a
+1000-executor cluster, with only the master URL and memory sizing changing:
 
 - AQE on (runtime coalescing, skew-join splitting, dynamic join selection) —
   at 100 TB the static ``shuffle.partitions`` is only an upper bound; AQE
@@ -22,9 +22,9 @@ from pyspark.sql import SparkSession
 
 def _cpus() -> int:
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return os.cpu_count() or 1
 
 
 import contextlib
@@ -52,14 +52,6 @@ def narrowed_shuffle_partitions(spark: SparkSession, n: int):
 def tune(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
     """Apply engine configuration to any builder (also used on the driver's
     own session via ``spark.conf`` where dynamically settable)."""
-    # Bridge google.protobuf (vendored cloud-sdk runtime) into this process
-    # and — because tune() runs before getOrCreate — into future Python
-    # workers via PYTHONPATH, unblocking transformWithStateInPandas where
-    # no protobuf wheel exists (see streaming/pb_compat.py). No-op when a
-    # real wheel is installed or the vendored runtime is absent.
-    from apache_flink_pratices_spark.streaming.pb_compat import ensure_protobuf
-
-    ensure_protobuf()
     sp = shuffle_partitions or max(_cpus(), 2) * 2
     return (
         builder.config("spark.sql.session.timeZone", "UTC")

@@ -3,8 +3,10 @@
 Modules:
 
 - :mod:`.fraud` — the reference's flagship keyed stateful processor
-  (ValueState + event-time timers) as a Spark 4 ``StatefulProcessor``
-  driven by ``transformWithStateInPandas``.
+  (ValueState + event-time timers) on ``applyInPandasWithState``, with
+  the per-key timer set kept in the group state.
+- :mod:`.signal_generator` / :mod:`.trend` — the CEP signal generator and
+  the sliding-window trend rule, keyed the same way.
 - :mod:`.wordcount` — streaming word count in update output mode (the
   per-record-emission semantics of a Flink keyed ``reduce``).
 - :mod:`.watermarks` — the engine's late-data policy helpers.

@@ -81,7 +81,6 @@ def fraud_events_per_sec(
     n_accounts: int = 500,
     in_dir: str | None = None,
     n_rows: int | None = None,
-    impl: str = "auto",
 ) -> tuple[float, int]:
     """End-to-end tx/s through the keyed fraud state machine.
 
@@ -89,8 +88,7 @@ def fraud_events_per_sec(
     :func:`prepare_fraud_input` and its RETURNED row count — the count
     travels with the prebuilt input so the rate denominator can never
     drift from what the query actually processes (review r7). Omitted =
-    build it here. ``impl`` picks the stateful backend (VERDICT r8 #6:
-    both backends carry a measured rate)."""
+    build it here."""
     from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
 
     if in_dir is None:
@@ -102,7 +100,7 @@ def fraud_events_per_sec(
     with _stream_partitions(spark):
         src = spark.readStream.schema(FRAUD_SCHEMA).parquet(in_dir)
         q = (
-            fraud_alert_stream(src, impl=impl)
+            fraud_alert_stream(src)
             .writeStream.format("memory")
             .queryName("bench_fraud_tput")
             .option("checkpointLocation", os.path.join(workdir, "fraud_ckpt"))
@@ -319,7 +317,6 @@ def cep_events_per_sec(
     n_cycles: int = 17,
     in_dir: str | None = None,
     n_rows: int | None = None,
-    impl: str = "auto",
 ) -> tuple[float, int]:
     """End-to-end ev/s through the 4-stream CEP signal generator (J1),
     with every machine exercising the full buy+sell lifecycle per cycle
@@ -327,7 +324,7 @@ def cep_events_per_sec(
 
     ``in_dir``/``n_rows``: a directory already populated by
     :func:`prepare_cep_input` and its returned row count. Omitted =
-    build it here. ``impl`` picks the stateful backend (VERDICT r8 #6)."""
+    build it here."""
     from apache_flink_pratices_spark.streaming.signal_generator import (
         UNIFIED_SCHEMA,
         signal_stream,
@@ -342,7 +339,7 @@ def cep_events_per_sec(
     with _stream_partitions(spark):
         src = spark.readStream.schema(UNIFIED_SCHEMA).parquet(in_dir)
         q = (
-            signal_stream(src, impl=impl)
+            signal_stream(src)
             .writeStream.format("memory")
             .queryName("bench_cep_tput")
             .option("checkpointLocation", os.path.join(workdir, "cep_ckpt"))
@@ -434,70 +431,6 @@ def measure_all(
                 f"replay_signals={n_replay_sigs})"
             )
 
-    # --- per-backend rates (VERDICT r8 #6) -----------------------------
-    # The headline rates above run impl="auto", which resolves by the
-    # measured policy (round 10: pandas_state for the shipped
-    # small-state machines — crossover table in docs/scale_notes.md).
-    # The OTHER backend — native, the explicit large-state opt-in — gets
-    # one measured run per path so the artifact carries both; when the
-    # worker runtime lacks native state there is no second runnable
-    # backend and the secondary is recorded null. One run (vs the
-    # primary's best-of-N) bounds cost; the small untimed warm-up covers
-    # its worker spin-up like the primary's.
-    from apache_flink_pratices_spark.streaming.native_state import (
-        native_state_available,
-        resolve_stateful_backend,
-    )
-
-    primary = resolve_stateful_backend("small")
-    backends: dict = {
-        "auto": primary,
-        "fraud_ev_s": {primary: int(fraud_rate)},
-        "cep_ev_s": {primary: int(cep_rate)},
-        # 0 when no second backend is runnable (review r9: a reader must
-        # distinguish "one secondary run produced null" from "the native
-        # backend was unavailable"); set to 1 in the branch below
-        "secondary_runs": 0,
-    }
-    # derive the secondary as the COMPLEMENT of the policy's pick, and
-    # fail loudly if a future policy change ever makes them collide —
-    # a silent primary==sec would overwrite the headline best-of-N rate
-    # with the secondary's single run (review r10)
-    sec = "pandas_state" if primary == "native" else "native"
-    if primary == sec:
-        raise RuntimeError(f"backend bench: primary == secondary ({primary})")
-    if sec != "native" or native_state_available():
-        backends["secondary_runs"] = 1
-        if not small:  # untimed warm-up of the secondary backend — BOTH
-            # paths: warming only fraud left the single timed CEP
-            # pandas_state run paying worker spin-up the primary's
-            # best-of-N never pays (ADVICE r9)
-            fraud_events_per_sec(
-                spark, os.path.join(wd, "w2"), n_tx=2_000, impl=sec
-            )
-            cep_events_per_sec(
-                spark, os.path.join(wd, "w3"), n_codes=4, n_cycles=3, impl=sec
-            )
-        sd = os.path.join(wd, "sec")
-        sfr, sa = fraud_events_per_sec(
-            spark, os.path.join(sd, "f"), in_dir=fraud_in,
-            n_rows=fraud_rows, impl=sec,
-        )
-        scr, ss = cep_events_per_sec(
-            spark, os.path.join(sd, "c"), n_codes=n_codes,
-            n_cycles=n_cycles, in_dir=cep_in, n_rows=cep_rows, impl=sec,
-        )
-        if sa <= 0 or ss <= 0:
-            raise RuntimeError(
-                f"secondary-backend bench produced no output "
-                f"(alerts={sa}, signals={ss})"
-            )
-        backends["fraud_ev_s"][sec] = int(sfr)
-        backends["cep_ev_s"][sec] = int(scr)
-    else:  # native unavailable in this runtime
-        backends["fraud_ev_s"]["native"] = None
-        backends["cep_ev_s"]["native"] = None
-
     return {
         "fraud_ev_s": int(fraud_rate),
         "cep_ev_s": int(cep_rate),
@@ -511,339 +444,13 @@ def measure_all(
         "replay_slice": {
             "n_codes": rp_codes, "slice_s": rp_slice, "rows": replay_rows
         },
-        "backends": backends,
-    }
-
-
-def crossover_sweep(
-    spark: SparkSession,
-    wd: str,
-    n_tx: int = 100_000,
-    cardinalities: tuple[int, ...] = (50, 500, 5_000, 50_000),
-    runs: int = 2,
-) -> dict:
-    """Measured native-vs-pandas_state crossover over key cardinality
-    (VERDICT r9 #4): the W1 fraud path, same rows (``n_tx``), swept over
-    ``n_accounts`` so the per-key state-server round-trip cost the native
-    backend pays (and the monolithic-tuple serialization the fallback
-    pays) are both measured where they actually diverge — per distinct
-    key per batch. Both backends get an untimed warm-up; each cell is
-    best-of-``runs``. Returns ``{"n_tx": ..., "cells": {n_accounts:
-    {"native": ev_s, "pandas_state": ev_s}}}``; the measured table and
-    the `auto` policy it justifies live in docs/scale_notes.md."""
-    from apache_flink_pratices_spark.streaming.native_state import (
-        native_state_available,
-    )
-
-    if not native_state_available():
-        raise RuntimeError(
-            "crossover sweep needs both backends runnable (native state "
-            "unavailable in this runtime)"
-        )
-    for impl in ("native", "pandas_state"):  # untimed worker spin-up
-        fraud_events_per_sec(
-            spark, os.path.join(wd, f"w-{impl}"), n_tx=2_000, impl=impl
-        )
-    cells: dict = {}
-    for ka in cardinalities:
-        in_dir = os.path.join(wd, f"in{ka}")
-        n_rows = prepare_fraud_input(spark, in_dir, n_tx, n_accounts=ka)
-        row: dict = {}
-        for impl in ("native", "pandas_state"):
-            best = 0.0
-            for r in range(runs):
-                rate, n_out = fraud_events_per_sec(
-                    spark,
-                    os.path.join(wd, f"r{ka}-{impl}-{r}"),
-                    in_dir=in_dir,
-                    n_rows=n_rows,
-                    impl=impl,
-                )
-                if n_out <= 0:
-                    raise RuntimeError(
-                        f"crossover cell ({ka}, {impl}) produced no alerts"
-                    )
-                best = max(best, rate)
-            row[impl] = int(best)
-        cells[ka] = row
-    return {"n_tx": n_tx, "cells": cells}
-
-
-# --- state-SIZE sweep: the other axis of the backend policy -----------------
-# (VERDICT r10 #2: the "large → native" half of resolve_stateful_backend
-# rested on a qualitative per-variable-access argument — the same kind of
-# claim the round-10 cardinality sweep measured WRONG on its sibling axis.
-# This sweep measures it: a synthetic W4-shaped machine whose per-key
-# MapState grows to ~10^3 entries while each batch touches only the
-# batch's own entries.)
-
-MAPGROW_IN_SCHEMA = "key long, entry string, v long"
-MAPGROW_OUT_SCHEMA = "key long, entry string, total long"
-#: the applyInPandasWithState side is FORCED monolithic by the API: the
-#: whole per-key map rides one state tuple, rewritten every batch
-MAPGROW_STATE_SCHEMA = "entries array<string>, totals array<long>"
-
-
-def _make_mapgrow_processor():
-    """Native synthetic large-state machine: ONE MapState variable, each
-    input row read-modify-writes exactly its own entry (containsKey +
-    getValue + updateValue) — per-ENTRY state access, never an iterator
-    over the full map. This is the access pattern the native backend's
-    per-variable argument claims wins at large state."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class MapGrowNativeProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.entries = handle.getMapState(
-                "entries", "entry string", "total bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            out_e: list = []
-            out_t: list = []
-            for pdf in rows:
-                for ent, v in zip(pdf["entry"].tolist(), pdf["v"].tolist()):
-                    if self.entries.containsKey((ent,)):
-                        cur = self.entries.getValue((ent,))[0]
-                    else:
-                        cur = 0
-                    total = int(cur) + int(v)
-                    self.entries.updateValue((ent,), (total,))
-                    out_e.append(ent)
-                    out_t.append(total)
-            if out_e:
-                yield pd.DataFrame(
-                    {"key": int(key[0]), "entry": out_e, "total": out_t}
-                )
-
-        def close(self) -> None:
-            pass
-
-    return MapGrowNativeProcessor()
-
-
-def _mapgrow_pandas_fn():
-    """Fallback synthetic machine: identical transition logic, but the
-    per-key map is one monolithic (entries[], totals[]) state tuple —
-    applyInPandasWithState offers no narrower unit, so every batch
-    deserializes and rewrites the ENTIRE accumulated map."""
-    import pandas as pd
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            entries, totals = state.get
-            d = dict(zip(list(entries), [int(t) for t in totals]))
-        else:
-            d = {}
-        out_e: list = []
-        out_t: list = []
-        for pdf in pdfs:
-            for ent, v in zip(pdf["entry"].tolist(), pdf["v"].tolist()):
-                total = d.get(ent, 0) + int(v)
-                d[ent] = total
-                out_e.append(ent)
-                out_t.append(total)
-        state.update((list(d.keys()), list(d.values())))
-        if out_e:
-            yield pd.DataFrame(
-                {"key": int(key[0]), "entry": out_e, "total": out_t}
-            )
-
-    return fn
-
-
-def _mapgrow_stream(src: DataFrame, impl: str) -> DataFrame:
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if impl == "native":
-        return src.groupBy("key").transformWithStateInPandas(
-            statefulProcessor=_make_mapgrow_processor(),
-            outputStructType=MAPGROW_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    if impl == "pandas_state":
-        return src.groupBy("key").applyInPandasWithState(
-            _mapgrow_pandas_fn(),
-            outputStructType=MAPGROW_OUT_SCHEMA,
-            stateStructType=MAPGROW_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    raise ValueError(f"unknown impl {impl!r}")
-
-
-def mapgrow_touch_rate(
-    spark: SparkSession,
-    workdir: str,
-    impl: str,
-    n_keys: int,
-    n_entries: int,
-    touch_batches: int,
-) -> tuple[float, int, int]:
-    """(median touch-batch ms, n_output_rows, checksum) — the W4
-    measurement.
-
-    Phase A (untimed): one seed micro-batch populates ``n_entries`` map
-    entries per key. Phase B: ``touch_batches`` micro-batches, each
-    touching exactly ONE existing entry per key ('batch touches one
-    entry among ~10^3'). The query stays up across phases (the file
-    source picks up the touch files), and the metric is the MEDIAN
-    ``triggerExecution`` duration of the touch batches read from the
-    query's own progress events — per-batch engine time only, excluding
-    the driver's file writes and any wall-clock scheduling gaps. What a
-    touch batch costs is the axis under test: per-entry get+put on the
-    native path vs a full deserialize-rewrite of the monolithic
-    (entries[], totals[]) tuple on the fallback. The checksum (sum of
-    emitted running totals) is order-invariant and must agree across
-    backends — callers refuse to compare rates of machines that
-    disagree."""
-    import json as _json
-    import statistics as _stats
-
-    in_dir = os.path.join(workdir, "in")
-    seed = [(k, f"s{e}", 1) for k in range(n_keys) for e in range(n_entries)]
-    spark.createDataFrame(seed, MAPGROW_IN_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    name = "bench_mapgrow_" + "".join(
-        c if c.isalnum() else "_"
-        for c in f"{impl}_{os.path.basename(workdir)}"
-    )
-    touch = [(k, "s0", 1) for k in range(n_keys)]
-    with _stream_partitions(spark):
-        src = (
-            spark.readStream.schema(MAPGROW_IN_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
-        q = (
-            _mapgrow_stream(src, impl)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()  # phase A: seed, untimed
-            for _ in range(touch_batches):
-                # maxFilesPerTrigger=1 keeps 1 file = 1 micro-batch
-                spark.createDataFrame(touch, MAPGROW_IN_SCHEMA).coalesce(
-                    1
-                ).write.mode("append").parquet(in_dir)
-            q.processAllAvailable()
-            progress = [_json.loads(p) if isinstance(p, str) else p
-                        for p in (q.recentProgress or [])]
-        finally:
-            q.stop()
-    # A touch batch is identified by its row count AND by coming after
-    # the seed batch: at n_entries=1 the seed batch ALSO has n_keys rows,
-    # and counting its (expensive, state-creating) duration into the
-    # median would poison the metric (ADVICE r11). The seed is the
-    # earliest data-carrying batch by batchId.
-    data_batches = [p for p in progress if p.get("numInputRows", 0) > 0]
-    if not data_batches:
-        raise RuntimeError(
-            "no data-carrying progress events retained "
-            "(numRecentProgressUpdates too small?)"
-        )
-    seed_batch_id = min(p["batchId"] for p in data_batches)
-    touch_ms = [
-        p["durationMs"]["triggerExecution"]
-        for p in data_batches
-        if p["numInputRows"] == n_keys and p["batchId"] > seed_batch_id
-    ]
-    # exact-count check, both directions: fewer means progress events
-    # were dropped (numRecentProgressUpdates too small), MORE means a
-    # batch was misclassified as a touch batch — both invalidate the
-    # median, so both fail loudly (ADVICE r11).
-    if len(touch_ms) != touch_batches:
-        raise RuntimeError(
-            f"expected exactly {touch_batches} touch-batch progress "
-            f"events, got {len(touch_ms)}"
-        )
-    agg = spark.sql(
-        f"SELECT COUNT(*) AS n, COALESCE(SUM(total), 0) AS s FROM {name}"
-    ).collect()[0]
-    return float(_stats.median(touch_ms)), int(agg.n), int(agg.s)
-
-
-def state_size_sweep(
-    spark: SparkSession,
-    wd: str,
-    n_keys: int = 256,
-    touch_batches: int = 12,
-    entry_counts: tuple[int, ...] = (16, 256, 2048),
-) -> dict:
-    """Measured native-vs-pandas_state over per-key STATE SIZE at the W4
-    shape (VERDICT r10 #2): per cell, seed every key's MapState to
-    ``n_entries`` entries (untimed), then run ``touch_batches``
-    micro-batches each touching ONE existing entry per key, and compare
-    the MEDIAN per-touch-batch engine time. Output counts and checksums
-    must agree across backends. Returns ``{"n_keys", "touch_batches",
-    "cells": {entries_per_key: {"native": median_ms, "pandas_state":
-    median_ms}}}`` (milliseconds per touch batch, lower is better); the
-    measured table and the policy it justifies live in
-    docs/scale_notes.md."""
-    from apache_flink_pratices_spark.streaming.native_state import (
-        native_state_available,
-    )
-
-    if not native_state_available():
-        raise RuntimeError(
-            "state-size sweep needs both backends runnable (native state "
-            "unavailable in this runtime)"
-        )
-    for impl in ("native", "pandas_state"):  # untimed worker spin-up
-        mapgrow_touch_rate(
-            spark, os.path.join(wd, f"w-{impl}"), impl,
-            n_keys=4, n_entries=8, touch_batches=2,
-        )
-    cells: dict = {}
-    for n_entries in entry_counts:
-        expect_rows = n_keys * n_entries + touch_batches * n_keys
-        # totals: seed emits 1 per entry; touch b on s0 emits 2, 3, ...
-        expect_sum = n_keys * n_entries + n_keys * sum(
-            range(2, touch_batches + 2)
-        )
-        row: dict = {}
-        for impl in ("native", "pandas_state"):
-            med_ms, n_out, checksum = mapgrow_touch_rate(
-                spark,
-                os.path.join(wd, f"r{n_entries}-{impl}"),
-                impl,
-                n_keys,
-                n_entries,
-                touch_batches,
-            )
-            if n_out != expect_rows or checksum != expect_sum:
-                raise RuntimeError(
-                    f"state-size cell ({n_entries}, {impl}): got "
-                    f"({n_out} rows, sum {checksum}), want "
-                    f"({expect_rows}, {expect_sum})"
-                )
-            row[impl] = round(med_ms, 1)
-        cells[n_entries] = row
-    return {
-        "n_keys": n_keys,
-        "touch_batches": touch_batches,
-        "metric": "median_touch_batch_ms",
-        "cells": cells,
     }
 
 
 def main() -> None:
     """Subprocess entry for bench.py: run the streaming measurement in a
-    fresh engine and print ONE JSON line (the streaming dict).
-
-    ``--crossover``: run :func:`crossover_sweep` instead (not part of the
-    per-round bench — a diagnostic for the `auto` backend policy).
-    ``--state-size``: run :func:`state_size_sweep` (the state-SIZE axis
-    of the same policy, VERDICT r10 #2)."""
+    fresh engine and print ONE JSON line (the streaming dict)."""
     import json
-    import sys
     import tempfile
 
     from apache_flink_pratices_spark.session import get_spark
@@ -852,12 +459,7 @@ def main() -> None:
     spark = get_spark("afp-bench-streams")
     spark.sparkContext.setLogLevel("ERROR")
     with tempfile.TemporaryDirectory(prefix="afp_bench_stream_") as wd:
-        if "--crossover" in sys.argv[1:]:
-            out = crossover_sweep(spark, wd)
-        elif "--state-size" in sys.argv[1:]:
-            out = state_size_sweep(spark, wd)
-        else:
-            out = measure_all(spark, wd, small=small)
+        out = measure_all(spark, wd, small=small)
     print(json.dumps(out, separators=(",", ":")))
     spark.stop()
 

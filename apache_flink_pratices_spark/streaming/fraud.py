@@ -118,33 +118,15 @@ def fraud_alert_stream(
     small: float = REF_SMALL_AMOUNT,
     large: float = REF_LARGE_AMOUNT,
     window_ms: int = REF_WINDOW_MS,
-    impl: str = "auto",
 ) -> DataFrame:
     """Wire a streaming transactions DataFrame through the detector.
 
     ``transactions`` must be a streaming DataFrame with an event-time
     timestamp column. Late data is dropped (reference stance, see
-    :mod:`.watermarks`); state shuffles once on account_id.
-
-    ``impl`` picks the stateful backend:
-
-    - ``"native"`` — ``transformWithStateInPandas`` (Spark 4): separate
-      named ValueState/ListState variables and REAL per-key event-time
-      timers, the 1:1 Flink mapping. Each state var is read/written
-      independently, so at 100× state size a batch touches only what it
-      changes instead of rewriting one monolithic tuple per key.
-    - ``"pandas_state"`` — ``applyInPandasWithState`` (Spark 3.4+
-      fallback): one state tuple per key, single timeout timestamp parked
-      on the earliest armed timer.
-    - ``"auto"`` — the measured backend policy
-      (:func:`~apache_flink_pratices_spark.streaming.native_state.resolve_stateful_backend`):
-      pandas_state for this machine's small state profile (round-10
-      crossover sweep, docs/scale_notes.md), native by explicit opt-in.
-
-    Both backends drive the SAME framework-free
-    :class:`~apache_flink_pratices_spark.domain.rules.FraudMachine`, so
-    transition semantics (including the reference's stale-timer quirks)
-    are identical by construction.
+    :mod:`.watermarks`); state shuffles once on account_id. The keyed
+    state and its armed-timer set live in one
+    :class:`~apache_flink_pratices_spark.domain.rules.FraudMachine` per
+    key, persisted as one ``applyInPandasWithState`` state tuple.
     """
     # The watermarked timestamp column must survive projection for the
     # event-time timeout to bind; ts_us is what the processor consumes.
@@ -154,21 +136,6 @@ def fraud_alert_stream(
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
         F.col(amount_col).cast("double").alias("amount"),
     )
-    if impl == "auto":
-        from apache_flink_pratices_spark.streaming.native_state import (
-            resolve_stateful_backend,
-        )
-
-        # small per-key state (3 scalars + bounded armed list): the
-        # measured policy picks the fallback backend (VERDICT r9 #4,
-        # crossover table in docs/scale_notes.md)
-        impl = resolve_stateful_backend("small")
-    if impl == "native":
-        from apache_flink_pratices_spark.streaming.native_state import (
-            fraud_alert_stream_native,
-        )
-
-        return fraud_alert_stream_native(src, small, large, window_ms)
     return src.groupBy("account_id").applyInPandasWithState(
         make_detector(small, large, window_ms),
         outputStructType=ALERT_SCHEMA,

@@ -27,17 +27,10 @@ Reference design (``docs/project docs/호가창 분석 스캘퍼: 시스템
 - **W7**: every signal id is ``sha256(code|side|reason|second)`` —
   idempotent on replay.
 
-Two interchangeable stateful backends drive the same framework-free
+``applyInPandasWithState`` drives the framework-free
 :class:`SignalMachine` (the reference keeps domain rules framework-free by
-design, ``2. CEP 레이어...md:82,209``):
-
-- ``applyInPandasWithState`` (here): one state tuple per key, Spark 3.4+.
-- ``transformWithStateInPandas``
-  (:mod:`apache_flink_pratices_spark.streaming.native_state`): separate
-  named MapState/ListState/ValueState variables, REAL per-price event-time
-  timers and native TTL — selected by ``impl="native"``; ``impl="auto"``
-  follows the measured backend policy (pandas_state for this machine's
-  small state profile — round-10 crossover sweep, docs/scale_notes.md).
+design, ``2. CEP 레이어...md:82,209``), persisted as one state tuple per
+key.
 
 Timer semantics follow the engine's documented event-time interleave (see
 ``docs/fraud_semantics.md``): armed spoof deadlines strictly earlier than
@@ -132,10 +125,9 @@ def _decreasing(win_avgs: list[tuple]) -> bool:
 class SignalMachine:
     """One key's CEP state + transition rules, framework-free.
 
-    Both streaming backends construct it from their stores, replay the
-    batch through :meth:`process_row` / :meth:`fire_due_watches`, then
-    persist the attributes back — so signal semantics (and W7 ids) are
-    identical by construction.
+    The keyed processor builds it from the group state, replays the batch
+    through :meth:`process_row` / :meth:`fire_due_watches`, then persists
+    the attributes back.
     """
 
     def __init__(
@@ -355,7 +347,7 @@ def _machine_from_tuple(code: str, state: GroupState) -> SignalMachine:
 
 
 def make_signal_generator():
-    """Build the applyInPandasWithState function (fallback backend)."""
+    """Build the applyInPandasWithState function."""
 
     def process(
         key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -437,33 +429,9 @@ def unify_streams(
     return out
 
 
-def signal_stream(
-    unified: DataFrame, ts_col: str = "ts", impl: str = "auto"
-) -> DataFrame:
-    """Run the unified stream through the SignalGenerator, keyed by code.
-
-    ``impl``: ``"native"`` (transformWithStateInPandas — named state vars,
-    real per-price timers, native TTL), ``"pandas_state"`` (monolithic
-    tuple fallback), or ``"auto"`` (the measured backend policy —
-    ``native_state.resolve_stateful_backend``).
-    """
-    src = drop_late(unified, ts_col)
-    if impl == "auto":
-        from apache_flink_pratices_spark.streaming.native_state import (
-            resolve_stateful_backend,
-        )
-
-        # TTL-bounded windows per key = small state profile: the
-        # measured policy picks the fallback backend (VERDICT r9 #4,
-        # crossover table in docs/scale_notes.md)
-        impl = resolve_stateful_backend("small")
-    if impl == "native":
-        from apache_flink_pratices_spark.streaming.native_state import (
-            signal_stream_native,
-        )
-
-        return signal_stream_native(src)
-    return src.groupBy("code").applyInPandasWithState(
+def signal_stream(unified: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """Run the unified stream through the SignalGenerator, keyed by code."""
+    return drop_late(unified, ts_col).groupBy("code").applyInPandasWithState(
         make_signal_generator(),
         outputStructType=SIGNAL_SCHEMA,
         stateStructType=STATE_SCHEMA,

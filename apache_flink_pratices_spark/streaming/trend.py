@@ -109,7 +109,7 @@ class TrendMachine:
             # + window; once every window it can appear in has fired, the
             # trade is dead — evict exactly those, so a key that goes
             # permanently quiet drains to an empty buffer (and the
-            # fallback can state.remove() it) instead of retaining up to
+            # processor can state.remove() it) instead of retaining up to
             # one slide of dead trades forever
             self.buf = [
                 (ts, v)
@@ -188,36 +188,14 @@ def trend_stream(
     ts_col: str = "ts",
     code_col: str = "code",
     volume_col: str = "volume",
-    impl: str = "auto",
 ) -> DataFrame:
-    """Wire a streaming trade DataFrame through the trend detector.
-
-    ``impl`` picks the stateful backend (same contract as
-    :func:`~apache_flink_pratices_spark.streaming.fraud.fraud_alert_stream`):
-    ``"native"`` = ``transformWithStateInPandas`` named state + one real
-    event-time timer per key; ``"pandas_state"`` = monolithic-tuple
-    fallback; ``"auto"`` = the measured backend policy
-    (``native_state.resolve_stateful_backend``). Both
-    backends drive the same :class:`TrendMachine`."""
+    """Wire a streaming trade DataFrame through the trend detector."""
     src = drop_late(trades, ts_col).select(
         F.col(code_col).cast("string").alias("code"),
         F.col(ts_col).alias("ts"),
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
         F.col(volume_col).cast("double").alias("volume"),
     )
-    if impl == "auto":
-        from apache_flink_pratices_spark.streaming.native_state import (
-            resolve_stateful_backend,
-        )
-
-        # a few scalars per key = small state profile (VERDICT r9 #4)
-        impl = resolve_stateful_backend("small")
-    if impl == "native":
-        from apache_flink_pratices_spark.streaming.native_state import (
-            trend_stream_native,
-        )
-
-        return trend_stream_native(src)
     return src.groupBy("code").applyInPandasWithState(
         make_trend_detector(),
         outputStructType=TREND_SCHEMA,

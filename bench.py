@@ -168,8 +168,7 @@ def main() -> None:
     )
 
     # --- streaming events/sec through the flagship stateful paths --------
-    # (VERDICT r6 #6) in a fresh engine; per-backend rates since round 9
-    # (VERDICT r8 #6). Nothing else runs concurrently.
+    # (VERDICT r6 #6) in a fresh engine. Nothing else runs concurrently.
     if skip_tail:
         stream_detail: dict = {}
         streaming: dict = {}
@@ -237,8 +236,7 @@ def main() -> None:
             "medians are detail.queries_median only since r13 (ADVICE "
             "r12 summary-budget restructure). r9 used one "
             "warm-up; r8 and earlier one shared session for all queries "
-            "(docs/scale_notes.md re-baseline tables). streaming.backends: "
-            "rates per stateful backend, primary = `auto`"
+            "(docs/scale_notes.md re-baseline tables)"
         ),
     }
     summary = {

@@ -2,17 +2,26 @@
 query: the golden 12-tx corpus (3 alerts, accounts 3/4/3 — reference
 docs/fraud_detection_guide.md:86-100) plus the timer edge cases, including
 the consecutive-smalls stale-timer semantics the batch twin intentionally
-diverges on (docs/fraud_semantics.md)."""
+diverges on (docs/fraud_semantics.md). The shared FraudMachine is also
+pinned record-at-a-time, and the keyed processor is driven per micro-batch
+without Spark to check that any batch split reproduces that replay."""
 
 from __future__ import annotations
 
 import datetime
+import math
 import os
 
-import pytest
+import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
+from apache_flink_pratices_spark.domain.rules import FraudMachine
 from apache_flink_pratices_spark.sources.collection import stream_from_collection
-from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
+from apache_flink_pratices_spark.streaming.fraud import (
+    fraud_alert_stream,
+    make_detector,
+)
 
 from tests.test_fraud_fixture import BASE, CORPUS, EDGE_CASES
 
@@ -94,3 +103,145 @@ def test_timeout_fires_across_batches(spark, tmp_path):
     ]
     got = _run_stream(spark, tmp_path, txs, chunks=3, name="timeout")
     assert got == []
+
+
+# ---- the shared state machine, record-at-a-time -------------------------
+
+
+def _machine_replay(txs):
+    """Drive the shared state machine per key, record-at-a-time — the
+    Flink-semantics oracle the streaming detector must reproduce."""
+    machines: dict[int, FraudMachine] = {}
+    alerts: list[tuple[int, float]] = []
+    for acct, off, amount in sorted(txs, key=lambda t: t[1]):
+        m = machines.setdefault(acct, FraudMachine(None, None, []))
+        ts_ms = BASE + off
+        m.on_event(ts_ms, ts_ms * 1000, amount)
+        alerts.extend((acct, amt) for _, amt in m.alerts)
+        m.alerts.clear()
+    return sorted(alerts)
+
+
+def test_machine_golden_three_alerts():
+    assert _machine_replay(CORPUS) == [(3, 600.00), (3, 999.00), (4, 500.00)]
+
+
+def test_machine_edge_cases():
+    assert _machine_replay(EDGE_CASES) == [(6, 500.00), (9, 700.00)]
+
+
+def test_machine_consecutive_smalls_stale_timer():
+    """The first small's stale timer fires between the second small and
+    the large, clearing the flag (fraud_detector.py:103-110)."""
+    txs = [(20, 0, 0.50), (20, 30_000, 0.60), (20, 80_000, 900.00)]
+    assert _machine_replay(txs) == []
+
+
+# ---- the keyed processor, per micro-batch -------------------------------
+
+
+class _GroupState:
+    """Stand-in for pyspark's ``GroupState`` under ``EventTimeTimeout``:
+    the calls the detector makes, with Spark's rules that the timeout is
+    reset on every call and may not be set below the watermark."""
+
+    def __init__(self, value, watermark_ms: int, timed_out: bool) -> None:
+        self.value = value
+        self.watermark_ms = watermark_ms
+        self.hasTimedOut = timed_out
+        self.timeout_ms = None
+
+    @property
+    def exists(self) -> bool:
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value) -> None:
+        self.value = tuple(value)
+
+    def remove(self) -> None:
+        self.value = None
+
+    def getCurrentWatermarkMs(self) -> int:
+        return self.watermark_ms
+
+    def setTimeoutTimestamp(self, ms: int) -> None:
+        assert ms >= self.watermark_ms, (ms, self.watermark_ms)
+        self.timeout_ms = ms
+
+
+def _run_detector(txs, chunks):
+    """Split ``txs`` into ``chunks`` micro-batches and drive
+    ``make_detector`` the way ``applyInPandasWithState`` does under
+    ``drop_late``'s 0 s delay: batch N sees the max event time of batches
+    1..N-1 as its watermark; keys with rows run first, then every key
+    whose timeout the watermark passed runs with ``hasTimedOut``; one
+    final no-data batch runs at the last watermark."""
+    detect = make_detector()
+    rows = pd.DataFrame(
+        [(acct, (BASE + off) * 1000, amt) for acct, off, amt in txs],
+        columns=["account_id", "ts_us", "amount"],
+    )
+    n = max(1, math.ceil(len(rows) / chunks))
+    batches = [rows.iloc[i : i + n] for i in range(0, len(rows), n)]
+    states: dict[int, tuple] = {}
+    timeouts: dict[int, int] = {}
+    alerts: list[tuple[int, float]] = []
+    wm = 0
+
+    def call(acct, pdfs, timed_out):
+        st = _GroupState(states.get(acct), wm, timed_out)
+        for out in detect((acct,), pdfs, st):
+            alerts.extend(zip(out["account_id"], out["amount"]))
+        for d, v in ((states, st.value), (timeouts, st.timeout_ms)):
+            if v is None:
+                d.pop(acct, None)
+            else:
+                d[acct] = v
+
+    for batch in batches + [rows.iloc[:0]]:
+        for acct, pdf in batch.groupby("account_id", sort=False):
+            call(int(acct), iter([pdf]), False)
+        for acct in [k for k, t in timeouts.items() if t < wm]:
+            call(acct, iter([]), True)
+        if len(batch):
+            wm = max(wm, int(batch["ts_us"].max()) // 1000)
+    return sorted((int(a), float(amt)) for a, amt in alerts)
+
+
+def test_detector_state_survives_batch_boundaries():
+    """One row per batch, so every transition reads the persisted state
+    tuple: the alert's clean-up must delete the timer recorded in
+    ``latest`` (armed at 60 s), or it fires at 70 s and the second small
+    loses its flag."""
+    txs = [(40, 0, 0.50), (40, 10_000, 900.0), (40, 20_000, 0.50),
+           (40, 70_000, 900.0)]
+    want = [(40, 900.0), (40, 900.0)]
+    assert _machine_replay(txs) == want
+    assert _run_detector(txs, chunks=4) == want
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3),  # account
+            st.integers(min_value=1, max_value=90_000),  # gap ms
+            st.sampled_from([0.50, 1.00, 5.0, 499.99, 500.00, 900.0]),
+        ),
+        min_size=1,
+        max_size=20,
+    ),
+    st.integers(min_value=1, max_value=5),
+)
+def test_fraud_detector_matches_machine_replay(events, chunks):
+    """Property: for any in-order corpus and any micro-batch split, the
+    keyed processor equals the record-at-a-time machine replay."""
+    t, txs = 0, []
+    for acct, gap, amount in events:
+        t += gap  # strictly increasing -> nothing is late, no wm ties
+        txs.append((acct, t, amount))
+    assert _run_detector(txs, chunks) == _machine_replay(txs)

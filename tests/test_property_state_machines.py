@@ -1,8 +1,7 @@
 """Batch-split equivalence for the shared state machines: processing a
 key's events in ONE machine must equal processing a prefix, persisting
 the state variables, and resuming a fresh machine from them — which is
-exactly what micro-batches (and the native per-variable state store) do
-at every batch boundary. If any transition state failed to round-trip
+exactly what micro-batches do at every batch boundary. If any transition state failed to round-trip
 through the persisted attributes, these properties would catch it."""
 
 from __future__ import annotations
@@ -51,7 +50,7 @@ def test_fraud_split_equivalence(txs, data):
     for ts_ms, amt in txs[:split]:
         m1.on_event(ts_ms, ts_ms * 1000, amt)
     alerts.extend(m1.alerts)
-    # persist exactly the state the backends store, resume a new machine
+    # persist exactly the state the processor stores, resume a new machine
     m2 = FraudMachine(m1.flag, m1.latest, list(m1.armed))
     for ts_ms, amt in txs[split:]:
         m2.on_event(ts_ms, ts_ms * 1000, amt)

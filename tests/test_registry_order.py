@@ -162,8 +162,8 @@ def test_critical_set_leaves_rotation_capacity():
     one-round pin is still a burned rotation slot.
 
     Round-15 exception (VERDICT r14 #3): the judge mandated driver rows
-    on EVERY query touched in optimization rounds 14-15 — a 15-query
-    re-anchor burst on top of the 14 criticals, leaving 21 rotation
+    on EVERY query touched in optimization rounds 14-15 — a 16-query
+    re-anchor burst on top of the 14 criticals, leaving 20 rotation
     slots for one round. The permanent CRITICAL set alone must still
     respect the ≥28 budget, so the relaxation is scoped to the
     re-anchor group and reverts with it (RE_ANCHORED is one-round by

@@ -1,0 +1,32 @@
+"""The session factory configures Spark and nothing else: tuning a builder
+must not touch this interpreter's import state or the environment that
+Spark's Python workers inherit, and the local core count defaults to the
+box's."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+from pyspark.sql import SparkSession
+
+from apache_flink_pratices_spark import session
+
+
+def test_tune_leaves_interpreter_and_worker_env_alone():
+    pythonpath = os.environ.get("PYTHONPATH")
+    path = list(sys.path)
+    session.tune(SparkSession.builder)
+    assert os.environ.get("PYTHONPATH") == pythonpath
+    assert sys.path == path
+    assert "cloudsdk" not in sys.modules
+    assert "AFP_PB_VENDORED_PREJVM" not in os.environ
+
+
+def test_cpus_falls_back_to_the_box(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session._cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "many")
+    assert session._cpus() == os.cpu_count()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert session._cpus() == os.cpu_count()

@@ -407,6 +407,45 @@ def test_vectorized_fingerprints_huge_long_ids_with_nulls(spark):
     assert vec == exp and len(vec) == len(ids) and None in vec
 
 
+def test_simhash_kernel_keys_exact_ids_without_pandas_deprecation():
+    """The Arrow kernel groups rows by doc_id through ``pd.factorize``:
+    ints past 2^53, strings and the null group must come back verbatim,
+    each id's rows summed into one fingerprint, and no pandas
+    FutureWarning raised (factorizing a plain list is deprecated)."""
+    import warnings
+
+    import pyarrow as pa
+
+    from apache_flink_pratices_spark.operators.dedup import _simhash_kernel
+
+    def run(ids, typ, hms):
+        batch = pa.record_batch(
+            [pa.array(ids, typ), pa.array(hms, pa.int64()),
+             pa.array([1] * len(ids), pa.int64())],
+            names=["doc_id", "hm", "cnt"],
+        )
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", FutureWarning)
+            (out,) = list(_simhash_kernel()([batch]))
+        assert out.schema.field("doc_id").type == typ
+        return dict(zip(out.column("doc_id").to_pylist(),
+                        out.column("fp").to_pylist()))
+
+    big = 1 << 53
+    for ids, typ in (
+        ([big, big + 1, None, big, -(1 << 63), None], pa.int64()),
+        (["a", None, "b", "a"], pa.string()),
+    ):
+        hms = [(k + 1) * -0x9E3779B97F4A7C15 % (1 << 63) for k in range(len(ids))]
+        got = run(ids, typ, hms)
+        assert set(got) == set(ids)
+        for i in set(ids):  # one id alone fingerprints like its group
+            rows = [k for k, x in enumerate(ids) if x == i]
+            assert run([i] * len(rows), typ, [hms[k] for k in rows]) == {
+                i: got[i]
+            }
+
+
 try:
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
