@@ -22,10 +22,10 @@ probes are directly comparable):
   the query — one warm-up leaves min-of-N on the C2 compile ramp for
   sub-second queries (VERDICT r9 #2: ±45% driver-vs-preflight disagreement
   on identical code); the measured ann_pq plateau needs ~3;
-- ``$SPARK_GRAFT_BENCH_RUNS`` timed noop-format writes (doubled when the
-  last warm-up ran <1.2 s — a sub-second query's ramp tail is a larger
-  fraction of its measurement and extra runs are cheap), cache cleared
-  and GC run between runs (outside the timed window);
+- exactly ``$SPARK_GRAFT_BENCH_RUNS`` (default 4) timed noop-format
+  writes, cache cleared and GC run between runs (outside the timed
+  window) — the same sample count for every query, so mins stay
+  comparable run to run;
 - one untimed ``count()`` for the sanity row count.
 
 Entry points (each prints ONE JSON line on stdout):
@@ -34,11 +34,7 @@ Entry points (each prints ONE JSON line on stdout):
   ``{"name", "min", "median", "spread_pct", "runs", "rows"}``;
 - ``python -m apache_flink_pratices_spark.bench_query --extras`` —
   the untimed scale-evidence extras (clustered-ANN candidate fraction,
-  hot-bucket guard) in their own fresh session;
-- ``python -m apache_flink_pratices_spark.bench_query --calibrate`` —
-  the frozen box-state calibration micro-job (VERDICT r11 #2), measured
-  first in every bench run so cross-round deltas can be conditioned on
-  machine state.
+  hot-bucket guard) in their own fresh session.
 """
 
 from __future__ import annotations
@@ -81,31 +77,10 @@ def _run_query(name: str) -> dict:
     # rides the ramp, and the r9 driver-vs-preflight gap hit ±45% on
     # sub-second queries; VERDICT r9 #2), so the default is 3.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    warm = [one_noop_write() for _ in range(n_warm)]
+    for _ in range(n_warm):
+        one_noop_write()
 
-    # sub-second queries get extra timed runs: their C2 tail is a larger
-    # FRACTION of the measurement, and each extra run costs <1.2 s — the
-    # min sits on the plateau instead of sampling the ramp's tail.
-    # The doubling keys on the MIN of the warm-up times (ADVICE r10: the
-    # last warm-up alone can be GC-stalled past 1.2 s on a genuinely
-    # sub-second query, skipping the doubling); with warm-ups disabled
-    # (SPARK_GRAFT_BENCH_WARMUPS=0) the first timed run is the probe
-    # instead — never a constant-0.0 that silently always doubles.
-    per: list[float] = []
-    if warm:
-        probe = min(warm)
-    else:
-        per.append(one_noop_write())
-        probe = per[0]
-    runs = n_runs if probe >= 1.2 else 2 * n_runs
-    per += [one_noop_write() for _ in range(runs - len(per))]
-    # noise-adaptive extension (bounded to ONE extra batch): a >25%
-    # max-over-min spread after the base runs means the sample still
-    # straddles a compile/GC event — more samples tighten the min
-    # without biasing it (min is monotone in samples)
-    if min(per) > 0 and (max(per) - min(per)) / min(per) > 0.25:
-        per += [one_noop_write() for _ in range(n_runs)]
-        runs = len(per)
+    per = [one_noop_write() for _ in range(n_runs)]
     rows = spec.fn(spark, sf_dir).count()  # untimed, for sanity
     spark.stop()
     mn = min(per)
@@ -120,78 +95,8 @@ def _run_query(name: str) -> dict:
         # artifact surfaces (VERDICT r9 #2) — deltas smaller than this
         # are box noise, not code
         "spread_pct": int(round(100.0 * (max(per) - mn) / mn)) if mn else 0,
-        "runs": runs,
+        "runs": n_runs,
         "rows": rows,
-    }
-
-
-def _calibration_frame(spark):
-    """The FROZEN box-state calibration micro-job (VERDICT r11 #2).
-
-    Round 11 proved cross-boot bench numbers are not comparable: four
-    same-code full-bench runs spread 30.1-34.1 s across a reboot with the
-    flagged query rotating run to run, and the judge reproduced the r11
-    plateau (not the r10 lows) on an idle box. This job is the
-    conditioning variable: a deterministic CPU+shuffle micro-benchmark
-    whose CODE NEVER CHANGES, measured first in every bench run — its
-    round-over-round ratio estimates the box-state factor, and
-    ``tools/bench_compare.py`` reports query deltas both raw and
-    calibration-normalized.
-
-    Construction (frozen contract — do not edit; editing invalidates
-    every cross-round calibration ratio): 48M synthetic rows across 32
-    partitions, an 8-deep xxhash64 chain per row (pure whole-stage-
-    codegen CPU, no Python, no I/O), one 4096-key hash aggregate (a real
-    but small shuffle exchange). ~1-2 s on an idle 32-thread box."""
-    from pyspark.sql import functions as F
-
-    c = F.col("id")
-    for i in range(8):
-        c = F.xxhash64(c, F.lit(i))
-    return (
-        spark.range(0, 48_000_000, 1, 32)
-        .select(c.alias("h"))
-        .groupBy(F.pmod(F.col("h"), F.lit(4096)).alias("k"))
-        # summand bounded to <1e9 so 48M-row sums stay far inside int64
-        # under ANSI arithmetic
-        .agg(
-            F.count("*").alias("c"),
-            F.sum(F.pmod(F.col("h"), F.lit(1_000_000_007))).alias("s"),
-        )
-    )
-
-
-def _run_calibration() -> dict:
-    """Fresh-session measurement of the frozen calibration job, same
-    min/median/spread recipe as a query (3 warm-ups, 4 timed runs)."""
-    from apache_flink_pratices_spark.session import get_spark
-
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4"))
-    n_warm = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "3"))
-    spark = get_spark("afp-bench-calibration")
-    spark.sparkContext.setLogLevel("WARN")
-
-    def one() -> float:
-        t0 = time.perf_counter()
-        _calibration_frame(spark).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark._jvm.System.gc()
-        return dt
-
-    for _ in range(n_warm):
-        one()
-    per = [one() for _ in range(max(n_runs, 2))]
-    rows = _calibration_frame(spark).count()
-    spark.stop()
-    if rows != 4096:
-        raise RuntimeError(f"calibration job produced {rows} groups, not 4096")
-    mn = min(per)
-    return {
-        "name": "_calibration",
-        "min": round(mn, 3),
-        "median": round(statistics.median(per), 3),
-        "spread_pct": int(round(100.0 * (max(per) - mn) / mn)) if mn else 0,
-        "runs": len(per),
     }
 
 
@@ -288,15 +193,10 @@ def main() -> None:
     if len(sys.argv) != 2:
         raise SystemExit(
             "usage: python -m apache_flink_pratices_spark.bench_query "
-            "(<query_name> | --extras | --calibrate)"
+            "(<query_name> | --extras)"
         )
     arg = sys.argv[1]
-    if arg == "--extras":
-        out = _run_extras()
-    elif arg == "--calibrate":
-        out = _run_calibration()
-    else:
-        out = _run_query(arg)
+    out = _run_extras() if arg == "--extras" else _run_query(arg)
     print(json.dumps(out, separators=(",", ":")))
 
 

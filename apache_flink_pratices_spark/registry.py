@@ -29,6 +29,8 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: ``S2_ANCHORS`` guard in ``tests/test_registry_order.py`` (VERDICT r4 #1:
 #: anchors must sort into the window UNCONDITIONALLY, not as a same-round
 #: tie-breaker, or a fresh driver row rotates them out).
+#: Re-anchor on code change: a query whose semantics change goes into
+#: ``CRITICAL`` for one round, so the change carries a fresh gate row.
 CRITICAL = (
     # -- streaming goldens (W1-W8 flagship hard signals) --
     "stream_fraud_golden",  # W1/W2 keyed state machine + timers
@@ -46,99 +48,6 @@ CRITICAL = (
     "proto_roundtrip_trades",  # P8 protobuf wire codec
     "fraud_alerts",  # J2 temporal correlation (reference flagship, batch twin)
     "p_market_pipeline",  # P4-P7 parse/validate/normalize/event-time
-)
-
-#: Former anchors demoted to rotation in round 7 (VERDICT r6 #2: 27 slots
-#: re-burned every round and starved the stale backlog). They stay
-#: registered and rotate back in as their driver rows age — the policy is
-#: RE-ANCHOR ON CODE CHANGE: any semantic change to one of these queries
-#: (or the operators it exercises) must move it back into ``CRITICAL``
-#: for at least one round so the change carries a fresh hard driver row
-#: (the rule applied to ``interval_join_error_views`` in r5). Notes:
-#: ``q1_pricing_summary`` keeps an independent per-round hard signal via
-#: the driver's ``entry()`` smoke check; ``proto_roundtrip_orderbook``
-#: shares the codec with the still-anchored trades twin.
-#: Round-7 note on the re-anchor-on-change rule vs the rotation drain:
-#: this round vectorized the corpus-side passes of ann_ivf_topk /
-#: ann_ivfpq_topk / ann_pq_topk / kmeans_assign (and re-keyed the
-#: banded-join probe plumbing under dedup_simhash). Their latest driver
-#: rows are r4/r6, and anchoring them for a fresh row would evict
-#: exactly that many r03-stale queries from the 36 free slots —
-#: violating the round's primary goal (VERDICT r6 #1: drain the r03
-#: backlog, nothing older than r04 afterwards). Deliberate resolution:
-#: every changed query is pinned bit-equal to its retained expression
-#: twin (tests/test_ann_ivf.py, test_kmeans.py, test_pca_quantize.py)
-#: AND was re-run against its DuckDB oracle under the driver's exact
-#: plain-session recipe at sf0.01 this round (tools/
-#: driver_replica_check.py); they rotate into the r8 window naturally as
-#: the then-stalest cohort.
-#: One-round applications of the RE-ANCHOR ON CODE CHANGE rule. Round 11
-#: pinned ``corpus_pipeline_e2e``; round 12 pinned nothing (newcomers
-#: sort in as never-checked; every carried change was output-identical
-#: with twin pins + fresh replica rows — see git history for the full
-#: rationale). Round 13 pins ``quality_linear_classifier``: its scorer
-#: was re-registered on TRAINED batch-perceptron weights (VERDICT r12
-#: #3 — the md5 stand-in is gone), a genuine semantic change that must
-#: carry a fresh hard driver row. It is ALSO in the r9-stale cohort, so
-#: anchoring costs no extra window slot — the pin just makes the rule's
-#: application explicit and unconditional.
-#: Round 14 pinned nothing: the r13 re-anchor (quality_linear_classifier)
-#: carried its fresh green driver row in CORRECTNESS_r13, and every
-#: round-14 change to an already-green query was output-identical with a
-#: bit-equal twin pin + fresh replica row (the BPE merge-table artifact
-#: serving, per the round-7/12/13 precedent).
-#: Round 15 pins the VERDICT r14 #3 window verbatim: every query whose
-#: code was touched in optimization rounds 14-15 must carry a fresh hard
-#: driver row this round (the final round — builder replica rows are not
-#: driver ground truth). The list below is the r14-#3 mandate minus the
-#: members that rotate in naturally as the r11-stale cohort
-#: (ann_cosine_topk, ann_lsh_topk, ann_lsh_topk_clustered,
-#: contamination_ngrams, corpus_pipeline_e2e, dedup_ngram_jaccard,
-#: dup_span_extract, dup_span_removal — verified against the committed
-#: CORRECTNESS history at pin time; q5_local_supplier registered past
-#: the natural cutoff and is pinned explicitly), plus the
-#: r15-touched queries with fresh-but-stale-code r14 rows
-#: (dedup_simhash / tfidf_top_terms / pagerank_neardup / ...: their r14
-#: green rows predate this round's partitioning changes). Window math:
-#: 14 CRITICAL + 16 RE_ANCHORED = 30 pinned, 20 slots left for the
-#: stale rotation — a deliberate one-round burst past the usual ≥28
-#: rotation budget (tests/test_registry_order.py documents the
-#: exception), justified because a judge-mandated re-anchor list
-#: outranks rotation throughput in the final round.
-RE_ANCHORED: tuple[str, ...] = (
-    "quality_lm_perplexity",
-    "quality_lm_perplexity_ref",
-    "ann_ivf_topk",
-    "ann_ivf_trained_topk",
-    "bpe_encode_trained",
-    "mm_phash_pairs",
-    "mm_video_phash_pairs",
-    "dedup_simhash",
-    "tfidf_top_terms",
-    "quality_repetition",
-    "dedup_minhash_lsh",
-    "dup_ngram_coverage",
-    "source_overlap_matrix",
-    "pagerank_neardup",
-    "bpe_train",
-    "q5_local_supplier",
-)
-
-DEMOTED_ANCHORS = (
-    "w7_signal_ids",
-    "p_filter_even_clicks",
-    "win_tumbling_daily",
-    "win_sliding_5d_1d",
-    "win_sessionization",
-    "kafka_wire_trades",
-    "kafka_wire_routed",
-    "interval_join_error_views",
-    "wordcount",
-    "ob_imbalance",
-    "ob_density_change",
-    "proto_roundtrip_orderbook",
-    "q_distinct_users",
-    "q1_pricing_summary",
 )
 
 
@@ -273,9 +182,7 @@ def all_specs() -> dict[str, QuerySpec]:
 
     latest = _driver_check_rows()
     hist = _driver_check_history()
-    # RE_ANCHORED rides in the unconditional group for its one round —
-    # same priority as CRITICAL, distinct lifecycle (see its docstring)
-    crit = set(CRITICAL) | set(RE_ANCHORED)
+    crit = set(CRITICAL)
     reg_idx = {n: i for i, n in enumerate(_REGISTRY)}
 
     def key(name: str) -> tuple[int, int, int]:

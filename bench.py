@@ -19,8 +19,8 @@ compact): two JSON lines are printed —
 
 1. a verbose detail line: per-query medians ("queries_median", the
    box-noise indicator), sanity row counts ("rows"), the scale-evidence
-   extras, the streaming section (with per-backend rates) and a schema
-   note naming the harness version;
+   extras, the streaming section and a schema note naming the harness
+   version;
 2. the COMPACT summary line, LAST: {"metric", "value" (sum of mins),
    "unit", "sf", "runs", "queries" (per-query MIN, 3-decimal floats,
    no spaces), "spread_pct" (per-query 100*(max-min)/min, an ARRAY
@@ -38,12 +38,12 @@ the committed machine-readable record of the scale evidence. N = newest
 committed BENCH_r{N} + 1 (override: SPARK_GRAFT_ROUND); smoke runs with a
 query subset write only to SPARK_GRAFT_BENCH_DETAIL, if set.
 
-Each query runs $SPARK_GRAFT_BENCH_RUNS times (default 4; doubled for
-sub-second queries) after $SPARK_GRAFT_BENCH_WARMUPS (default 3) untimed
-warm-up executions in its subprocess; the min is the best estimate of
-the plan's cost on this box. Timing is a noop-format write — count()
-lets Catalyst skip computing final projections, which made round-1
-numbers up to 10x optimistic.
+Each query runs exactly $SPARK_GRAFT_BENCH_RUNS times (default 4) after
+$SPARK_GRAFT_BENCH_WARMUPS (default 3) untimed warm-up executions in its
+subprocess, so the summary's ``runs`` is every query's real sample count;
+the min is the best estimate of the plan's cost on this box. Timing is a
+noop-format write — count() lets Catalyst skip computing final
+projections, which made round-1 numbers up to 10x optimistic.
 
 SPARK_GRAFT_STREAM_BENCH: "small" shrinks the streaming corpora;
 "skip" (honored ONLY together with a SPARK_GRAFT_BENCH_QUERIES subset,
@@ -126,22 +126,10 @@ def main() -> None:
     # the idle/loaded state they started in
     box = _box_context()
 
-    # --- box-state calibration probe (VERDICT r11 #2), FIRST -------------
-    # the frozen CPU+shuffle micro-job whose code never changes: its
-    # round-over-round ratio is the box-state factor bench_compare.py
-    # conditions query deltas on (cross-boot numbers proved incomparable
-    # in r10<->r11; docs/scale_notes.md round 12 carries the worked
-    # example). Measured before any query so it also leads the artifact.
-    calibration = _subprocess_json(
-        ["-m", "apache_flink_pratices_spark.bench_query", "--calibrate"],
-        "bench calibration",
-    )
-
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     spreads: dict[str, float] = {}
     rows: dict[str, int] = {}
-    run_counts: dict[str, int] = {}
     for name in names:
         r = _subprocess_json(
             ["-m", "apache_flink_pratices_spark.bench_query", name],
@@ -151,7 +139,6 @@ def main() -> None:
         medians[name] = r["median"]
         spreads[name] = r["spread_pct"]
         rows[name] = r["rows"]
-        run_counts[name] = r["runs"]
 
     # "skip" is honored only in subset mode: the round's real artifact
     # (a full run) must always carry the extras + streaming sections
@@ -210,25 +197,15 @@ def main() -> None:
                 else {}
             ),
         },
-        # the frozen micro-job's full measurement (min is the summary
-        # `cal` scalar; median/spread gauge the probe's own noise)
-        "calibration": calibration,
         "queries_median": medians,
         "queries_spread_pct": spreads,
-        # actual timed samples behind each min (v2.1 varies it: doubled
-        # for sub-second queries, +1 batch on >25% spread) — the sample-
-        # size context the summary's base `runs` field cannot carry
-        "queries_runs": run_counts,
         "rows": rows,
         **extras,
         "streaming": stream_detail,
         "schema_note": (
-            "harness v2.1 (r10): each query timed in its OWN fresh "
-            "subprocess engine — min/median/spread over noop-write "
-            "executions (summary `runs` is the BASE count; the actual "
-            "per-query sample counts — doubled for sub-second queries, "
-            "one extra batch on >25% spread — are detail.queries_runs) "
-            "after 3 untimed "
+            "harness v2.2: each query timed in its OWN fresh "
+            "subprocess engine — min/median/spread over exactly `runs` "
+            "noop-write executions per query after 3 untimed "
             "warm-up runs (cache cleared + GC between runs); the summary "
             "`spread_pct` array aligns with the `queries` key order "
             "(spread_pct = 100*(max-min)/min — deltas under a query's "
@@ -253,10 +230,6 @@ def main() -> None:
         # be told from a regression). Medians ride detail.queries_median
         # only since round 13 (ADVICE r12 summary-budget restructure).
         "spread_pct": [spreads[n] for n in names],
-        # box-state calibration scalar (VERDICT r11 #2): min seconds of
-        # the frozen micro-job on this box — bench_compare.py divides
-        # query deltas by the two rounds' cal ratio
-        "cal": calibration["min"],
         # streaming ev/s repeated on the summary line: the driver may only
         # capture the LAST line, and the metric must land in BENCH_r{N}
         "streaming": streaming,

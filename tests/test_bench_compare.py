@@ -71,42 +71,20 @@ def test_corrupt_new_timing_is_not_an_improvement():
     assert out["improvements"] == []
 
 
-def test_calibration_ratio_normalizes_box_state():
-    # the r10<->r11 lesson: +50% raw on a box whose calibration also ran
-    # 1.5x slower is box state -> within-noise on the normalized column;
-    # a query that moved BEYOND the box factor still flags
-    old = _summary({"boxy": 1.0, "realreg": 1.0}, [5, 5])
-    new = _summary({"boxy": 1.5, "realreg": 2.4}, [5, 5])
-    out = bench_compare.compare(old, new, floor_pct=25.0, cal_ratio=1.5)
-    rows = {r["query"]: r for r in out["rows"]}
-    assert rows["boxy"]["status"] == "within-noise"
-    assert rows["boxy"]["delta_cal_pct"] == 0.0
-    assert rows["boxy"]["delta_pct"] == 50.0  # raw stays on the row
-    assert rows["realreg"]["status"] == "REGRESSION"
-    assert rows["realreg"]["delta_cal_pct"] == 60.0
-    # without a ratio the same raw move flags (pre-r12 behavior)
-    out_raw = bench_compare.compare(old, new, floor_pct=25.0)
-    assert {r["query"]: r["status"] for r in out_raw["rows"]}["boxy"] == "REGRESSION"
-
-
-def test_load_calibration_from_both_artifact_shapes(tmp_path):
-    s = dict(_summary({"a": 1.0}, [5]), cal=1.234)
-    driver = tmp_path / "BENCH_r12.json"
-    driver.write_text(json.dumps({"parsed": s}))
-    assert bench_compare.load_calibration(str(driver)) == 1.234
-    detail = tmp_path / "BENCH_DETAIL_r12.json"
-    detail.write_text(
-        json.dumps(
-            {
-                "summary": _summary({"a": 1.0}, [5]),
-                "detail": {"calibration": {"min": 2.5}},
-            }
-        )
-    )
-    assert bench_compare.load_calibration(str(detail)) == 2.5
-    old = tmp_path / "BENCH_r11.json"
-    old.write_text(json.dumps({"parsed": _summary({"a": 1.0}, [5])}))
-    assert bench_compare.load_calibration(str(old)) is None
+def test_legacy_cal_field_does_not_condition_flags(tmp_path, capsys):
+    """Artifacts from before the raw-delta comparator still carry a `cal`
+    scalar. It must be ignored: with the r14 -> r15 values (1.078 ->
+    0.689) a -3% query used to be divided by the 0.639 ratio and flagged
+    as a +51.8% REGRESSION; on the raw delta it is within noise."""
+    old = tmp_path / "old.json"
+    old.write_text(json.dumps({"parsed": dict(_summary({"a": 1.0}, [5]), cal=1.078)}))
+    new = tmp_path / "new.json"
+    new.write_text(json.dumps({"parsed": dict(_summary({"a": 0.97}, [5]), cal=0.689)}))
+    assert bench_compare.main([str(old), str(new)]) == 0
+    text = capsys.readouterr().out
+    assert "REGRESSION" not in text
+    assert "within-noise" in text and "-3.0%" in text
+    assert "0 flagged regression(s)" in text
 
 
 def test_load_summary_accepts_both_artifact_shapes(tmp_path):
@@ -164,7 +142,7 @@ def _stream_summary(fraud, cep, replay):
 
 def test_streaming_orientation_rates_fall_times_rise():
     """A rate REGRESSES when it falls; a time when it rises (VERDICT
-    r12 #5) — both beyond the floor here, no calibration."""
+    r12 #5) — both beyond the floor here."""
     old = _stream_summary(50000, 45000, 170.0)
     new = _stream_summary(30000, 60000, 250.0)  # fraud -40%, cep +33%, replay +47%
     out = bench_compare.compare_streaming(
@@ -177,26 +155,6 @@ def test_streaming_orientation_rates_fall_times_rise():
         "replay_day_s": "REGRESSION",
     }
     assert len(out["regressions"]) == 2
-
-
-def test_streaming_cal_normalization_absorbs_box_state():
-    """The r12 worked example: replay_day_s 166.0 idle -> 190.7 under a
-    1.153 cal ratio on identical code must read within-noise on the
-    normalized column (190.7/1.153 = 165.4, -0.4%); a rate deflated by
-    the same box factor multiplies back up."""
-    old = _stream_summary(53000, 46000, 166.0)
-    new = _stream_summary(53000 / 1.153, 46000 / 1.153, 190.7)
-    out = bench_compare.compare_streaming(
-        old, new, floor_pct=10.0, cal_ratio=1.153, stream_floor_pct=10.0
-    )
-    for row in out["rows"]:
-        assert row["status"] == "within-noise", row
-        assert abs(row["delta_cal_pct"]) < 1.0, row
-    # ... while the RAW deltas would all have breached the 10% floor
-    raw = bench_compare.compare_streaming(
-        old, new, floor_pct=10.0, stream_floor_pct=10.0
-    )
-    assert all(r["status"] != "within-noise" for r in raw["rows"])
 
 
 def test_streaming_default_floor_absorbs_subprocess_variance():

@@ -20,15 +20,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the driver's r14 verify window died exactly there (VERIFY_r14's
 # test_tail ends at the test collected immediately before the full
 # drive). tests/conftest.py starts both subprocesses in background
-# threads at collection time and moves the two joining tests to the END
-# of the session, so the drives overlap the serial suite instead of
-# adding two silent multi-minute gaps. This is safe because the drives
-# are sf0.001/local[4] SHAPE checks: no assertion in this file reads a
-# timing magnitude (spread/median relations are pure arithmetic
-# identities of the emitted JSON), the box has 8x the cores the three
-# concurrent JVMs can use, and the drives write only under their own
-# tempdir. Running this file (or one test) alone still works: the
-# conftest hook launches whatever subset was collected.
+# threads once collection has finished and moves the two joining tests
+# to the END of the session, so the drives overlap the serial suite
+# instead of adding two silent multi-minute gaps. This is safe because
+# the drives are sf0.001/local[4] SHAPE checks: no assertion in this
+# file reads a timing magnitude (spread/median relations are pure
+# arithmetic identities of the emitted JSON), the wall-clock-gated
+# modules wait for the drives to exit, and the drives write only under
+# their own tempdir. Running this file (or one test) alone still works:
+# the conftest hook launches whatever subset was selected.
 
 
 class _Drive:
@@ -87,12 +87,21 @@ _DRIVES: dict[str, _Drive] = {}
 
 
 def launch_drives(names):
-    """Called by tests/conftest.py at collection time for the selected
-    drive tests; idempotent per name."""
+    """Called by tests/conftest.py once collection (and -k/-m
+    deselection) has finished, for the selected drive tests; idempotent
+    per name."""
     fns = {"full": _drive_full, "skip": _drive_skip}
     for name in names:
         if name not in _DRIVES:
             _DRIVES[name] = _Drive(fns[name])
+
+
+def wait_for_drives():
+    """Block until every launched drive has exited. Called before the
+    wall-clock-gated tests so they never time a gate beside a bench JVM;
+    a drive's result or error is left for its joining test to assert."""
+    for d in _DRIVES.values():
+        d.thread.join(timeout=1800)
 
 
 def kill_stray_drives():
@@ -190,12 +199,15 @@ def test_bench_cli_contract():
         assert med >= doc["queries"][n] - 0.0055
     for n, sp in zip(doc["queries"], doc["spread_pct"]):
         assert sp == detail["queries_spread_pct"][n] and sp >= 0
-    # round-12 box-state calibration probe (VERDICT r11 #2): the frozen
-    # micro-job's scalar leads both the summary line and the detail
-    assert doc["cal"] > 0
-    assert detail["calibration"]["min"] == doc["cal"]
-    assert detail["calibration"]["runs"] >= 2
-    assert detail["calibration"]["spread_pct"] >= 0
+    # every query is timed exactly SPARK_GRAFT_BENCH_RUNS times, so the
+    # summary's `runs` is the real per-query sample count and the detail
+    # carries no per-query run-count map; no box-state scalar rides along
+    assert doc["runs"] == 2
+    assert {k for k in detail if k.startswith("queries_")} == {
+        "queries_median",
+        "queries_spread_pct",
+    }
+    assert "cal" not in doc and "calibration" not in detail
     # round-7 scale-evidence extras: measured LSH pruning on the planted
     # clusters, and streaming ev/s through the two stateful flagship paths
     assert 0 < detail["ann_lsh_clustered_candidate_fraction"] < 0.2
@@ -251,7 +263,6 @@ def test_bench_cli_contract():
     assert persisted["summary"] == doc
     assert persisted["detail"] == detail
     assert "ann_lsh_clustered_candidate_fraction" in persisted["detail"]
-    assert persisted["detail"]["queries_runs"] == detail["queries_runs"]
 
 
 def _drive_skip(drive: _Drive):
@@ -280,11 +291,34 @@ def test_bench_subset_skip_tail():
     assert out.returncode == 0, out.stderr[-2000:]
     doc = json.loads(out.stdout.strip().splitlines()[-1])
     assert doc["queries"] and doc["streaming"] == {}
-    assert doc["cal"] > 0  # the calibration probe still leads the run
     with open(detail_path) as f:
         detail = json.load(f)["detail"]
     assert detail["streaming"] == {}
     assert "ann_lsh_clustered_candidate_fraction" not in detail
+
+
+def test_run_query_times_exactly_bench_runs_samples(monkeypatch):
+    """A query gets exactly $SPARK_GRAFT_BENCH_RUNS timed noop writes
+    after $SPARK_GRAFT_BENCH_WARMUPS warm-ups, however fast or noisy it
+    is: the sample count never depends on the measurement."""
+    from types import SimpleNamespace
+    from unittest import mock
+
+    import apache_flink_pratices_spark.registry as reg
+    import apache_flink_pratices_spark.session as session
+    from apache_flink_pratices_spark import bench_query
+
+    fn = mock.MagicMock()
+    df = fn.return_value
+    df.count.return_value = 7
+    monkeypatch.setattr(reg, "bench_specs", lambda: {"q": SimpleNamespace(fn=fn)})
+    monkeypatch.setattr(session, "get_spark", lambda name: mock.MagicMock())
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_WARMUPS", "2")
+    out = bench_query._run_query("q")
+    save = df.write.format.return_value.mode.return_value.save
+    assert save.call_count == 2 + 3
+    assert out["runs"] == 3 and out["rows"] == 7
 
 
 def test_bench_detail_round_derivation(monkeypatch):
@@ -330,7 +364,6 @@ def test_bench_summary_line_budget():
         "runs": 99,
         "queries": {n: 9999.999 for n in names},
         "spread_pct": [999 for _ in names],
-        "cal": 9999.999,
         "streaming": {
             "fraud_ev_s": 99999999,
             "cep_ev_s": 99999999,

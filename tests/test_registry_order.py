@@ -10,7 +10,6 @@ import json
 
 from apache_flink_pratices_spark.registry import (
     CRITICAL,
-    RE_ANCHORED,
     _driver_check_history,
     _driver_check_rows,
     _row_is_green,
@@ -21,15 +20,15 @@ from apache_flink_pratices_spark.registry import (
 
 WINDOW = 50
 
-#: everything pinned unconditionally into the window this round: the §2
-#: anchors plus the one-round re-anchor-on-change cohort
-PINNED = set(CRITICAL) | set(RE_ANCHORED)
+#: everything pinned unconditionally into the window: the §2 anchors plus
+#: any query re-anchored into ``CRITICAL`` after a semantic change
+PINNED = set(CRITICAL)
 
 # §2-anchoring queries that must always be driver-checked (SURVEY §8).
 # Shrunk in round 7 (VERDICT r6 #2): the 11 streaming goldens + protobuf
 # wire codec + the J2 batch twin + the P4-P7 market pipeline. Everything
-# demoted rotates as regular backlog under the RE-ANCHOR ON CODE CHANGE
-# rule (registry.DEMOTED_ANCHORS).
+# else rotates as regular backlog under the re-anchor-on-code-change rule
+# (registry.CRITICAL).
 S2_ANCHORS = {
     "stream_fraud_golden",  # W1/W2 flagship
     "stream_cep_signals_golden",  # J1/W4-W6
@@ -158,30 +157,9 @@ def test_critical_set_leaves_rotation_capacity():
     """The anchors are pinned into the ~50-slot window every round; keep
     enough slack that never-checked newcomers plus a meaningful stale
     rotation still fit (≥28 free slots per VERDICT r6 #2), or gate
-    coverage stalls. The budget covers the re-anchor cohort too — a
-    one-round pin is still a burned rotation slot.
-
-    Round-15 exception (VERDICT r14 #3): the judge mandated driver rows
-    on EVERY query touched in optimization rounds 14-15 — a 16-query
-    re-anchor burst on top of the 14 criticals, leaving 20 rotation
-    slots for one round. The permanent CRITICAL set alone must still
-    respect the ≥28 budget, so the relaxation is scoped to the
-    re-anchor group and reverts with it (RE_ANCHORED is one-round by
-    contract)."""
+    coverage stalls. The budget covers re-anchored queries too — a
+    one-round pin is still a burned rotation slot."""
     assert len(CRITICAL) <= WINDOW - 28, len(CRITICAL)
-    assert len(PINNED) <= WINDOW - 20, len(PINNED)
-
-
-def test_demoted_anchors_are_registered_and_not_critical():
-    """Demoted anchors must stay registered (they rotate, not retire) and
-    must not silently re-enter CRITICAL without removing them from the
-    demoted list (the re-anchor rule is an explicit move, not a copy)."""
-    from apache_flink_pratices_spark.registry import DEMOTED_ANCHORS
-
-    specs = set(all_specs())
-    assert set(DEMOTED_ANCHORS) <= specs, sorted(set(DEMOTED_ANCHORS) - specs)
-    assert not set(DEMOTED_ANCHORS) & PINNED
-    assert set(RE_ANCHORED) <= specs, sorted(set(RE_ANCHORED) - specs)
 
 
 def test_backlog_rotates_after_r5_checks(tmp_path, monkeypatch):

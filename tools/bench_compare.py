@@ -51,27 +51,6 @@ def load_box(path: str) -> dict | None:
     return None
 
 
-def load_calibration(path: str) -> float | None:
-    """The box-state calibration scalar (min seconds of the frozen
-    micro-job): summary ``cal`` (r12+), else detail.calibration.min.
-    None for pre-r12 artifacts — the comparator then reports raw deltas
-    only."""
-    with open(path) as f:
-        doc = json.load(f)
-    summary = doc.get("summary") if isinstance(doc.get("summary"), dict) else None
-    summary = summary or (doc.get("parsed") if isinstance(doc.get("parsed"), dict) else None)
-    summary = summary or doc
-    cal = summary.get("cal")
-    if isinstance(cal, (int, float)) and cal > 0:
-        return float(cal)
-    detail = doc.get("detail")
-    if isinstance(detail, dict):
-        c = (detail.get("calibration") or {}).get("min")
-        if isinstance(c, (int, float)) and c > 0:
-            return float(c)
-    return None
-
-
 def spread_map(summary: dict) -> dict[str, float]:
     """query -> measured spread_pct (aligned arrays on the summary line);
     missing spread data degrades to 0 (flag on the floor alone)."""
@@ -80,11 +59,8 @@ def spread_map(summary: dict) -> dict[str, float]:
     return {n: float(s) for n, s in zip(names, spreads)}
 
 
-#: streaming summary metrics: name -> orientation. Rates (ev/s) DEFLATE
-#: on a slow box, so calibration-normalizing MULTIPLIES the new rate by
-#: the cal ratio; times (replay seconds) inflate, so they DIVIDE like
-#: the batch timings (VERDICT r12 #5: replay_day_s read 166.0 idle vs
-#: 190.7 under cal 1.153 on identical code — batch-shaped inflation).
+#: streaming summary metrics: name -> orientation. A rate (ev/s)
+#: regresses when it falls, a time (replay seconds) when it rises.
 STREAM_METRICS = (
     ("fraud_ev_s", "rate"),
     ("cep_ev_s", "rate"),
@@ -105,7 +81,6 @@ def compare_streaming(
     old: dict,
     new: dict,
     floor_pct: float,
-    cal_ratio: float | None = None,
     stream_floor_pct: float | None = None,
 ) -> dict:
     """{"rows": [...], "regressions": [...]} over the summary streaming
@@ -113,8 +88,7 @@ def compare_streaming(
     streaming window's inter-subprocess variance was measured up to
     1.6x), so flagging conditions on a streaming-specific floor —
     ``max(floor_pct, STREAM_FLOOR_PCT)`` by default, or the explicit
-    ``stream_floor_pct`` — applied to the CAL-NORMALIZED delta when the
-    box factor is known. A rate REGRESSES when it falls; a time when it
+    ``stream_floor_pct``. A rate REGRESSES when it falls; a time when it
     rises."""
     floor_pct = (
         stream_floor_pct
@@ -135,15 +109,9 @@ def compare_streaming(
                          "old": a, "new": b})
             continue
         delta_pct = 100.0 * (b - a) / a
-        eff = delta_pct
-        cal_delta = None
-        if cal_ratio and cal_ratio > 0:
-            b_norm = b * cal_ratio if kind == "rate" else b / cal_ratio
-            cal_delta = 100.0 * (b_norm - a) / a
-            eff = cal_delta
-        worse = eff < 0 if kind == "rate" else eff > 0
+        worse = delta_pct < 0 if kind == "rate" else delta_pct > 0
         status = "within-noise"
-        if abs(eff) > floor_pct:
+        if abs(delta_pct) > floor_pct:
             status = "REGRESSION" if worse else "improvement"
         row = {
             "metric": name,
@@ -154,8 +122,6 @@ def compare_streaming(
             "noise_pct": round(floor_pct, 1),
             "status": status,
         }
-        if cal_delta is not None:
-            row["delta_cal_pct"] = round(cal_delta, 1)
         rows.append(row)
         if status == "REGRESSION":
             regressions.append(row)
@@ -165,17 +131,12 @@ def compare_streaming(
             "improvements": improvements}
 
 
-def compare(
-    old: dict, new: dict, floor_pct: float, cal_ratio: float | None = None
-) -> dict:
+def compare(old: dict, new: dict, floor_pct: float) -> dict:
     """{"rows": [...], "regressions": [...], "improvements": [...]}
 
-    With ``cal_ratio`` (new_cal / old_cal — the box-state factor from the
-    frozen calibration micro-job, VERDICT r11 #2), each row ALSO carries
-    ``delta_cal_pct`` — the delta after dividing the new timing by the
-    ratio — and flagging conditions on the NORMALIZED delta: a +30% move
-    on a box whose calibration also ran +30% slower is box state, not
-    code. Raw ``delta_pct`` stays on every row for the honest record."""
+    Flags on the raw delta: a query regresses or improves only when
+    |delta| exceeds both sides' spread and ``floor_pct``. Any other
+    summary field (a legacy ``cal`` scalar included) is ignored."""
     old_q, new_q = old.get("queries", {}), new.get("queries", {})
     old_sp, new_sp = spread_map(old), spread_map(new)
     rows, regressions, improvements = [], [], []
@@ -201,16 +162,9 @@ def compare(
             continue
         delta_pct = 100.0 * (b - a) / a
         noise = max(old_sp.get(name, 0.0), new_sp.get(name, 0.0), floor_pct)
-        # flag on the calibration-normalized delta when the box-state
-        # factor is known; otherwise on the raw delta
-        eff_delta = delta_pct
-        cal_delta = None
-        if cal_ratio and cal_ratio > 0:
-            cal_delta = 100.0 * (b / cal_ratio - a) / a
-            eff_delta = cal_delta
         status = "within-noise"
-        if abs(eff_delta) > noise:
-            status = "REGRESSION" if eff_delta > 0 else "improvement"
+        if abs(delta_pct) > noise:
+            status = "REGRESSION" if delta_pct > 0 else "improvement"
         row = {
             "query": name,
             "old": a,
@@ -219,8 +173,6 @@ def compare(
             "noise_pct": round(noise, 1),
             "status": status,
         }
-        if cal_delta is not None:
-            row["delta_cal_pct"] = round(cal_delta, 1)
         rows.append(row)
         if status == "REGRESSION":
             regressions.append(row)
@@ -258,39 +210,20 @@ def main(argv: list[str] | None = None) -> int:
         "variance on identical streaming code (ADVICE r13)",
     )
     args = ap.parse_args(argv)
-    old_cal = load_calibration(args.old_artifact)
-    new_cal = load_calibration(args.new_artifact)
-    cal_ratio = (new_cal / old_cal) if (old_cal and new_cal) else None
     # load each summary exactly once and feed BOTH comparisons: a second
     # read could silently see different data if an artifact is rewritten
     # mid-run (self-review r13)
     old_summary = load_summary(args.old_artifact)
     new_summary = load_summary(args.new_artifact)
-    out = compare(old_summary, new_summary, args.floor_pct, cal_ratio=cal_ratio)
-    if cal_ratio:
-        print(
-            f"calibration: old {old_cal:.3f}s -> new {new_cal:.3f}s "
-            f"(box-state ratio {cal_ratio:.3f}; deltas flagged on the "
-            "normalized column)"
-        )
-    else:
-        print(
-            "calibration: absent on at least one side (pre-r12 artifact) "
-            "— raw deltas only"
-        )
+    out = compare(old_summary, new_summary, args.floor_pct)
     for row in sorted(
         (r for r in out["rows"] if "delta_pct" in r),
-        key=lambda r: -abs(r.get("delta_cal_pct", r["delta_pct"])),
+        key=lambda r: -abs(r["delta_pct"]),
     ):
-        cal_s = (
-            f" [cal {row['delta_cal_pct']:+6.1f}%]"
-            if "delta_cal_pct" in row
-            else ""
-        )
         print(
             f"{row['status']:>13}  {row['query']:<32} "
             f"{row['old']:>8.3f} -> {row['new']:>8.3f}  "
-            f"{row['delta_pct']:+6.1f}%{cal_s} (noise {row['noise_pct']:.0f}%)"
+            f"{row['delta_pct']:+6.1f}% (noise {row['noise_pct']:.0f}%)"
         )
     for row in out["rows"]:
         if row["status"] in ("new", "removed", "unmeasurable-old", "unmeasurable-new"):
@@ -304,22 +237,16 @@ def main(argv: list[str] | None = None) -> int:
         old_summary,
         new_summary,
         args.floor_pct,
-        cal_ratio=cal_ratio,
         stream_floor_pct=args.stream_floor_pct,
     )
     for row in stream["rows"]:
         if "delta_pct" not in row:
             print(f"{row['status']:>13}  streaming.{row['metric']}")
             continue
-        cal_s = (
-            f" [cal {row['delta_cal_pct']:+6.1f}%]"
-            if "delta_cal_pct" in row
-            else ""
-        )
         print(
             f"{row['status']:>13}  streaming.{row['metric']:<22} "
             f"{row['old']:>9.1f} -> {row['new']:>9.1f}  "
-            f"{row['delta_pct']:+6.1f}%{cal_s} (floor {row['noise_pct']:.0f}%)"
+            f"{row['delta_pct']:+6.1f}% (floor {row['noise_pct']:.0f}%)"
         )
     for side, path in (("old", args.old_artifact), ("new", args.new_artifact)):
         box = load_box(path)
