@@ -7,7 +7,7 @@ surface Spark-first:
 
 - batch DataFrame/SQL operators (the correctness oracle path),
 - Structured Streaming equivalents (windowed aggregation, stateful CEP),
-- a typed market-data model with JSON codecs and validation,
+- market-data JSON parsing and validation, and a proto3 wire codec,
 - large-scale training-data-pipeline operators (dedup, similarity search,
   text analysis, multimodal plumbing) designed for 100 TB-scale execution.
 

@@ -27,9 +27,7 @@ SESSION_GAP_US = 1_800 * 1_000_000  # 30 min inactivity closes a session
 
 # --- orderbook analytics (designed CEP layer, 시스템 아키텍처.md:649-651)
 IMBALANCE_THRESHOLD = 2.0  # total_ask / total_bid ratio flag
-DENSITY_WINDOW_S = 60  # trailing mean window for ask-volume density
 DENSITY_MIN_SAMPLES = 10  # warm-up gate (2. CEP 레이어...md:111-150)
-DENSITY_MIN_SECONDS = 30
 
 # Driver-scale equivalents for the sparse testdata event stream (events are
 # minutes-to-hours apart per key, not milliseconds): same formulas, window
@@ -55,14 +53,6 @@ CEP_MIN_SAMPLES = 10
 TRADE_WIN_US = 5 * 1_000_000  # sliding trade-volume window (:641-648)
 CONSEC_DECREASES = 2  # sell cond: 2 consecutive avg decreases (:646)
 P_WAVE_REASON = "P_WAVE_EARTHQUAKE_DETECTED"
-
-
-def is_small(amount: float, small: float = SMALL_AMOUNT) -> bool:
-    return amount <= small
-
-
-def is_large(amount: float, large: float = LARGE_AMOUNT) -> bool:
-    return amount >= large
 
 
 class FraudMachine:

@@ -7,8 +7,6 @@ paths would be object-store URIs; nothing else changes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,8 +28,6 @@ TABLES = (
 #: part grow linearly with scale factor — they must NOT be force-broadcast;
 #: AQE downgrades their joins to broadcast at small SF on its own.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: The testdata parquet stores timestamps as INT64 TIMESTAMP(NANOS), which
 #: Spark refuses by default (PARQUET_TYPE_ILLEGAL). We read them as raw
@@ -81,9 +77,3 @@ def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             f"broadcastable dims: {sorted(BROADCAST_TABLES)}"
         )
     return F.broadcast(load(spark, sf_dir, name))
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

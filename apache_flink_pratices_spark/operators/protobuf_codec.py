@@ -8,38 +8,20 @@ same fields — so the driver's value-hash match proves the codec is
 lossless: any wire-format defect (dropped field, wrong tag, double
 truncation, level reordering, timestamp drift) breaks equality.
 
-Two execution paths, chosen at query build (VERDICT r2 #4):
-
-- **JVM** (preferred): when the ``spark-protobuf`` connector is on the
-  classpath, the round-trip runs through ``to_protobuf``/``from_protobuf``
-  with a binary FileDescriptorSet generated from our own descriptor
-  tables (:mod:`..serialization.descriptor_set`) — whole-stage codegen,
-  no Python workers in the loop. Detection is a cached one-row probe
-  that also validates the descriptor bytes against the real parser.
-- **Python fallback**: the pure-Python wire codec in
-  :mod:`apache_flink_pratices_spark.serialization` carries identical wire
-  semantics for environments without the jar (like this sandbox); its
-  throughput is gated by the reference's own perf thresholds
-  (``tests/.../test_protobuf_mapper_extended.py:133-185`` — <100 ms / 1k
-  trades) in ``tests/test_protobuf_roundtrip.py``.
-
-The chosen path is logged once per process.
+The codec is the pure-Python wire codec in
+:mod:`apache_flink_pratices_spark.serialization`, like the reference's own
+plain-Python Protobuf mapper; its throughput is gated by the reference's
+perf thresholds (``tests/.../test_protobuf_mapper_extended.py:133-185`` —
+<100 ms / 1k trades) in ``tests/test_protobuf_roundtrip.py``.
 """
 
 from __future__ import annotations
 
-import logging
-
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-log = logging.getLogger(__name__)
-
-#: cached JVM-connector probe result (None = not probed yet)
-_JVM_PROTO_AVAILABLE: bool | None = None
 
 from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.operators.orderbook import _SQL_OB, orderbook_updates
@@ -74,59 +56,6 @@ _TRADE_OUT_SCHEMA = (
     "change_price double, trade_ts_us bigint, sequential_id bigint, "
     "stream_type bigint, received_ts_us bigint"
 )
-
-
-def jvm_protobuf_available(spark: SparkSession) -> bool:
-    """True when the spark-protobuf connector can actually round-trip a
-    message built from our generated FileDescriptorSet.
-
-    One-row probe, cached for the process: exercises the real JVM parser
-    (class loading, descriptor validation, encode+decode) rather than
-    guessing from classpath introspection."""
-    global _JVM_PROTO_AVAILABLE
-    if _JVM_PROTO_AVAILABLE is None:
-        try:
-            from pyspark.sql.protobuf.functions import from_protobuf, to_protobuf
-
-            from apache_flink_pratices_spark.serialization.descriptor_set import (
-                descriptor_set_bytes,
-                full_name,
-            )
-
-            desc = descriptor_set_bytes()
-            probe = spark.range(1).select(
-                F.struct(
-                    F.lit(7).cast("long").alias("seconds"),
-                    F.lit(13).cast("long").alias("nanos"),
-                ).alias("t")
-            )
-            wire = probe.select(
-                to_protobuf("t", full_name("Timestamp"), binaryDescriptorSet=desc).alias("b")
-            )
-            back = wire.select(
-                from_protobuf("b", full_name("Timestamp"), binaryDescriptorSet=desc).alias("t")
-            ).collect()
-            _JVM_PROTO_AVAILABLE = back[0]["t"]["seconds"] == 7 and back[0]["t"]["nanos"] == 13
-            log.info("protobuf path: JVM spark-protobuf connector detected")
-        except Exception as exc:  # connector jar absent or descriptor rejected
-            _JVM_PROTO_AVAILABLE = False
-            log.info(
-                "protobuf path: Python wire codec (spark-protobuf unavailable: %s)",
-                type(exc).__name__,
-            )
-    return _JVM_PROTO_AVAILABLE
-
-
-def _ts_struct(col: str) -> Column:
-    """epoch-micros column → google.protobuf.Timestamp-shaped struct."""
-    return F.expr(
-        f"struct({col} div 1000000 AS seconds, ({col} % 1000000) * 1000 AS nanos)"
-    )
-
-
-def _ts_us(prefix: str) -> Column:
-    """Timestamp struct column → epoch micros (mirrors ts_to_us exactly)."""
-    return F.expr(f"coalesce({prefix}.seconds, 0L) * 1000000 + coalesce({prefix}.nanos, 0L) div 1000")
 
 
 def trade_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,57 +139,7 @@ def _trade_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("protobuf", "serialization"),
 )
 def proto_roundtrip_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
-    msgs = trade_messages(spark, sf_dir)
-    if jvm_protobuf_available(spark):
-        return _trade_roundtrip_jvm(msgs)
-    return msgs.mapInPandas(_trade_roundtrip, _TRADE_OUT_SCHEMA)
-
-
-def _trade_roundtrip_jvm(msgs: DataFrame) -> DataFrame:
-    """Trade round-trip through the JVM connector — same output contract as
-    the Python path (column names, types, timestamp micros mapping)."""
-    from pyspark.sql.protobuf.functions import from_protobuf, to_protobuf
-
-    from apache_flink_pratices_spark.serialization.descriptor_set import (
-        descriptor_set_bytes,
-        full_name,
-    )
-
-    desc = descriptor_set_bytes()
-    proto_struct = F.struct(
-        F.col("exchange"),
-        F.col("code"),
-        F.col("trade_price"),
-        F.col("trade_volume"),
-        F.col("ask_bid"),
-        F.col("prev_closing_price"),
-        F.col("change"),
-        F.col("change_price"),
-        _ts_struct("trade_ts_us").alias("trade_timestamp"),
-        F.col("sequential_id"),
-        F.col("stream_type"),
-        _ts_struct("received_ts_us").alias("received_timestamp"),
-    )
-    wire = msgs.select(
-        to_protobuf(proto_struct, full_name("Trade"), binaryDescriptorSet=desc).alias("b")
-    )
-    m = wire.select(
-        from_protobuf("b", full_name("Trade"), binaryDescriptorSet=desc).alias("m")
-    )
-    return m.select(
-        F.col("m.exchange").alias("exchange"),
-        F.col("m.code").alias("code"),
-        F.col("m.trade_price").alias("trade_price"),
-        F.col("m.trade_volume").alias("trade_volume"),
-        F.col("m.ask_bid").alias("ask_bid"),
-        F.col("m.prev_closing_price").alias("prev_closing_price"),
-        F.col("m.change").alias("change"),
-        F.col("m.change_price").alias("change_price"),
-        _ts_us("m.trade_timestamp").alias("trade_ts_us"),
-        F.col("m.sequential_id").alias("sequential_id"),
-        F.col("m.stream_type").alias("stream_type"),
-        _ts_us("m.received_timestamp").alias("received_ts_us"),
-    )
+    return trade_messages(spark, sf_dir).mapInPandas(_trade_roundtrip, _TRADE_OUT_SCHEMA)
 
 
 _OB_OUT_SCHEMA = (
@@ -346,15 +225,12 @@ def _ob_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("protobuf", "serialization"),
 )
 def proto_roundtrip_orderbook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    shaped = orderbook_shaped(spark, sf_dir)
-    if jvm_protobuf_available(spark):
-        return _ob_roundtrip_jvm(shaped)
-    return shaped.mapInPandas(_ob_roundtrip, _OB_OUT_SCHEMA)
+    return orderbook_shaped(spark, sf_dir).mapInPandas(_ob_roundtrip, _OB_OUT_SCHEMA)
 
 
 def orderbook_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OrderBookUpdate-shaped messages (double-typed levels + totals),
-    the common input of both round-trip backends."""
+    the input of the orderbook round trip."""
     ob = orderbook_updates(spark, sf_dir)
     to_dbl = "transform({0}, l -> struct(CAST(l.price AS DOUBLE) AS price, CAST(l.size AS DOUBLE) AS size))"
     return ob.select(
@@ -369,52 +245,4 @@ def orderbook_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(aggregate(bids, 0L, (a, l) -> a + l.size) AS DOUBLE)").alias(
             "total_bid_size"
         ),
-    )
-
-
-def _ob_roundtrip_jvm(shaped: DataFrame) -> DataFrame:
-    """OrderBookUpdate round-trip through the JVM connector. event_id is
-    the envelope key (not a proto field — same as the Python path, which
-    carries it beside the message), so it rides next to the wire bytes."""
-    from pyspark.sql.protobuf.functions import from_protobuf, to_protobuf
-
-    from apache_flink_pratices_spark.serialization.descriptor_set import (
-        descriptor_set_bytes,
-        full_name,
-    )
-
-    desc = descriptor_set_bytes()
-    proto_struct = F.struct(
-        F.lit(1).cast("long").alias("exchange"),
-        F.col("code"),
-        F.col("total_ask_size"),
-        F.col("total_bid_size"),
-        F.col("asks"),
-        F.col("bids"),
-        F.lit(2).cast("long").alias("stream_type"),
-        _ts_struct("ts_us").alias("event_timestamp"),
-        _ts_struct("(ts_us + 1500)").alias("received_timestamp"),
-    )
-    wire = shaped.select(
-        "event_id",
-        to_protobuf(proto_struct, full_name("OrderBookUpdate"), binaryDescriptorSet=desc).alias("b"),
-    )
-    m = wire.select(
-        "event_id",
-        from_protobuf("b", full_name("OrderBookUpdate"), binaryDescriptorSet=desc).alias("m"),
-    )
-    pos_sum = "CAST(aggregate(transform(m.{0}, (l, i) -> (i + 1) * l.size), 0D, (a, x) -> a + x) AS DOUBLE)"
-    return m.select(
-        F.col("m.code").alias("code"),
-        F.col("event_id"),
-        _ts_us("m.event_timestamp").alias("ts_us"),
-        _ts_us("m.received_timestamp").alias("received_ts_us"),
-        F.col("m.total_ask_size").alias("total_ask_size"),
-        F.col("m.total_bid_size").alias("total_bid_size"),
-        F.size("m.asks").cast("long").alias("n_asks"),
-        F.size("m.bids").cast("long").alias("n_bids"),
-        F.expr("coalesce(element_at(m.asks, 1).price, 0D)").alias("first_ask_price"),
-        F.expr("coalesce(element_at(m.asks, -1).price, 0D)").alias("last_ask_price"),
-        F.expr(pos_sum.format("asks")).alias("ask_pos_checksum"),
-        F.expr(pos_sum.format("bids")).alias("bid_pos_checksum"),
     )

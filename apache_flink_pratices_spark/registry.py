@@ -14,7 +14,7 @@ import os
 import re
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,13 +67,22 @@ def _row_is_green(row: object) -> bool:
     )
 
 
-def _driver_check_rows(root: str | None = None) -> dict[str, tuple[int, bool]]:
-    """query name -> (latest round with any driver row, that row was green).
+class DriverCheck(NamedTuple):
+    """One query's driver-gate history across the CORRECTNESS files."""
 
-    Read from the ``CORRECTNESS_r*.json`` files the driver commits into
-    the repo root each round. Queries absent from every file have never
-    been driver-checked."""
-    latest: dict[str, tuple[int, bool]] = {}
+    latest: int  # newest round with any driver row
+    green: bool  # that newest row was fully green
+    last_green: int  # newest round with a green row; -1 = never green
+
+
+def _driver_checks(root: str | None = None) -> dict[str, DriverCheck]:
+    """query name -> its :class:`DriverCheck`.
+
+    Read in one pass from the ``CORRECTNESS_r*.json`` files the driver
+    commits into the repo root each round. Queries absent from every file
+    have never been driver-checked; a query whose only rows are failing
+    has ``last_green == -1``, so it sorts with the never-checked ones."""
+    checks: dict[str, DriverCheck] = {}
     for path in glob.glob(os.path.join(root or _REPO_ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
@@ -85,31 +94,14 @@ def _driver_check_rows(root: str | None = None) -> dict[str, tuple[int, bool]]:
         except (OSError, ValueError):
             continue
         for name, row in data.items():
-            if name not in latest or rnd > latest[name][0]:
-                latest[name] = (rnd, _row_is_green(row))
-    return latest
-
-
-def _driver_check_history(root: str | None = None) -> dict[str, int]:
-    """query name -> latest round with a GREEN driver CORRECTNESS row.
-
-    A query whose only rows are failing is treated as never-checked, so
-    it sorts to the front of :func:`all_specs` and is re-checked first."""
-    hist: dict[str, int] = {}
-    for path in glob.glob(os.path.join(root or _REPO_ROOT, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            if _row_is_green(row):
-                hist[name] = max(hist.get(name, 0), rnd)
-    return hist
+            green = _row_is_green(row)
+            chk = checks.get(name, DriverCheck(-1, False, -1))
+            if rnd > chk.latest:
+                chk = chk._replace(latest=rnd, green=green)
+            if green:
+                chk = chk._replace(last_green=max(chk.last_green, rnd))
+            checks[name] = chk
+    return checks
 
 
 @dataclass(frozen=True)
@@ -180,20 +172,19 @@ def all_specs() -> dict[str, QuerySpec]:
     # Import operator modules for their registration side effects.
     from apache_flink_pratices_spark import operators  # noqa: F401
 
-    latest = _driver_check_rows()
-    hist = _driver_check_history()
+    checks = _driver_checks()
     crit = set(CRITICAL)
     reg_idx = {n: i for i, n in enumerate(_REGISTRY)}
 
     def key(name: str) -> tuple[int, int, int]:
-        row = latest.get(name)
-        if row is not None and not row[1]:
+        chk = checks.get(name)
+        if chk is not None and not chk.green:
             group = 0  # latest driver row failing: re-check first
         elif name in crit:
             group = 1
         else:
             group = 2
-        return (group, hist.get(name, -1), reg_idx[name])
+        return (group, chk.last_green if chk else -1, reg_idx[name])
 
     return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=key)}
 

@@ -1,9 +1,9 @@
 """Serialization codecs (SURVEY.md §2.3 P8): proto3 wire-format encode and
 decode for the market-data messages, dependency-free.
 
-On a real cluster the JVM path (`spark-protobuf`'s ``to_protobuf`` /
-``from_protobuf`` against a compiled descriptor set) is the fast lane; this
-package implements the identical wire semantics in pure Python so the
-codec surface exists, is testable, and is measurable in this sandbox where
-neither the connector jar nor the google-protobuf wheel is available.
+This pure-Python codec is the project's only protobuf path, mirroring the
+reference's plain-Python Protobuf mapper; it needs neither the
+``spark-protobuf`` connector jar nor the google-protobuf wheel. Its wire
+output is pinned against spec-derived bytes in
+``tests/test_golden_wire_bytes.py``.
 """

@@ -55,6 +55,8 @@ class Field:
 
 def _varint(n: int) -> bytes:
     """Base-128 varint; negative int64 values use 10-byte two's complement."""
+    if 0 <= n < 0x80:  # one byte: every tag and every short length
+        return bytes((n,))
     n &= _MASK64
     out = bytearray()
     while True:
@@ -95,9 +97,13 @@ def _to_signed64(n: int) -> int:
 
 
 def encode(desc: tuple[Field, ...], obj: dict[str, Any]) -> bytes:
-    """Canonical encode: fields in field-number order, defaults elided."""
+    """Canonical encode: fields in ``desc`` order, defaults elided.
+
+    Canonical form is field-number order, so ``desc`` must be declared in
+    ascending field number (every descriptor in ``market_proto`` is);
+    encode does not re-sort it on each call."""
     out = bytearray()
-    for f in sorted(desc, key=lambda x: x.number):
+    for f in desc:
         v = obj.get(f.name)
         if f.repeated:
             for item in v or ():

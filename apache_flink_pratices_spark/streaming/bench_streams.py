@@ -21,8 +21,15 @@ from __future__ import annotations
 import datetime
 import os
 import time
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
+from apache_flink_pratices_spark.streaming.signal_generator import (
+    UNIFIED_SCHEMA,
+    signal_stream,
+)
 
 BASE = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
 BASE_US = int(BASE.timestamp()) * 1_000_000
@@ -52,58 +59,33 @@ def _stream_partitions(spark: SparkSession, n: int = STREAM_BENCH_PARTITIONS):
 FRAUD_SCHEMA = "account_id long, ts timestamp, amount double"
 
 
-def prepare_fraud_input(
-    spark: SparkSession, in_dir: str, n_tx: int, n_accounts: int = 500
-) -> int:
-    """Write the deterministic fraud input once and return its row count
-    (the rate denominator); runs reusing the same (n_tx, n_accounts)
-    share it (review r7: rebuilding identical rows + parquet per
-    measured run was pure untimed waste).
-
-    Amounts alternate small/large per account so ValueState flips and
-    timers arm/fire — the worst-case per-event state path, not a no-op
-    passthrough."""
-    rows = []
-    for i in range(n_tx):
-        acct = i % n_accounts
-        amount = 0.5 if (i // n_accounts) % 2 == 0 else 700.0
-        rows.append((acct, BASE + datetime.timedelta(milliseconds=i), amount))
-    spark.createDataFrame(rows, FRAUD_SCHEMA).coalesce(4).write.mode(
+def write_input(spark: SparkSession, in_dir: str, rows: list[tuple], schema: str) -> int:
+    """Write deterministic input rows once as parquet and return their
+    count, the rate denominator: measured runs over the same input share
+    it instead of rebuilding identical rows + parquet per run (review r7)."""
+    spark.createDataFrame(rows, schema).coalesce(4).write.mode(
         "overwrite"
     ).parquet(in_dir)
     return len(rows)
 
 
-def fraud_events_per_sec(
+def _drain(
     spark: SparkSession,
+    stream_fn: Callable[[DataFrame], DataFrame],
+    schema: str,
+    in_dir: str,
     workdir: str,
-    n_tx: int = 100_000,
-    n_accounts: int = 500,
-    in_dir: str | None = None,
-    n_rows: int | None = None,
+    name: str,
 ) -> tuple[float, int]:
-    """End-to-end tx/s through the keyed fraud state machine.
-
-    ``in_dir``/``n_rows``: a directory already populated by
-    :func:`prepare_fraud_input` and its RETURNED row count — the count
-    travels with the prebuilt input so the rate denominator can never
-    drift from what the query actually processes (review r7). Omitted =
-    build it here."""
-    from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
-
-    if in_dir is None:
-        in_dir = os.path.join(workdir, "fraud_in")
-        n_rows = prepare_fraud_input(spark, in_dir, n_tx, n_accounts)
-    if n_rows is None:
-        raise ValueError("n_rows must accompany a prebuilt in_dir")
-
+    """Run ``stream_fn`` over the parquet in ``in_dir`` into a memory sink
+    named ``name``; returns ``(seconds to drain the input, output rows)``."""
     with _stream_partitions(spark):
-        src = spark.readStream.schema(FRAUD_SCHEMA).parquet(in_dir)
+        src = spark.readStream.schema(schema).parquet(in_dir)
         q = (
-            fraud_alert_stream(src)
+            stream_fn(src)
             .writeStream.format("memory")
-            .queryName("bench_fraud_tput")
-            .option("checkpointLocation", os.path.join(workdir, "fraud_ckpt"))
+            .queryName(name)
+            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
             .outputMode("append")
             .start()
         )
@@ -115,61 +97,95 @@ def fraud_events_per_sec(
             wall = time.perf_counter() - t0
         finally:
             q.stop()
-    n_alerts = spark.sql(
-        "SELECT COUNT(*) AS n FROM bench_fraud_tput"
-    ).collect()[0].n
-    return n_rows / wall, int(n_alerts)
+    n_out = spark.sql(f"SELECT COUNT(*) AS n FROM {name}").collect()[0].n
+    return wall, int(n_out)
+
+
+def fraud_rows(n_tx: int, n_accounts: int = 500) -> list[tuple]:
+    """Deterministic fraud input. Amounts alternate small/large per
+    account so ValueState flips and timers arm/fire — the worst-case
+    per-event state path, not a no-op passthrough."""
+    return [
+        (
+            i % n_accounts,
+            BASE + datetime.timedelta(milliseconds=i),
+            0.5 if (i // n_accounts) % 2 == 0 else 700.0,
+        )
+        for i in range(n_tx)
+    ]
+
+
+def fraud_events_per_sec(
+    spark: SparkSession, workdir: str, in_dir: str, n_rows: int
+) -> tuple[float, int]:
+    """End-to-end tx/s through the keyed fraud state machine over
+    ``in_dir`` as written by :func:`write_input`, whose returned row count
+    is ``n_rows`` — the count travels with the prepared input so the rate
+    denominator can never drift from what the query processes (review r7).
+    Returns ``(events_per_sec, n_alerts)``."""
+    wall, n_alerts = _drain(
+        spark, fraud_alert_stream, FRAUD_SCHEMA, in_dir, workdir, "bench_fraud_tput"
+    )
+    return n_rows / wall, n_alerts
+
+
+def _ts(sec: float) -> datetime.datetime:
+    return BASE + datetime.timedelta(seconds=sec)
+
+
+def _us(sec: float) -> int:
+    return BASE_US + int(sec * 1_000_000)
+
+
+#: the ten steady book levels every CEP row generator starts from
+_STABLE_LEVELS = [(100 + i, 100) for i in range(10)]
+
+
+def _ob(code: str, sec: float, total_ask: int, total_bid: int, levels) -> tuple:
+    """One orderbook row of the unified CEP stream."""
+    return (
+        code, _ts(sec), _us(sec), "orderbook",
+        None, None, int(total_ask), int(total_bid), levels,
+        None, None, None, None,
+    )
+
+
+def _trade(code: str, sec: float, price: float, volume: float) -> tuple:
+    """One trade row of the unified CEP stream."""
+    return (
+        code, _ts(sec), _us(sec), "trade",
+        float(price), float(volume), None, None, None,
+        None, None, None, None,
+    )
 
 
 def _cep_rows(n_codes: int, n_cycles: int) -> list[tuple]:
     """Unified-stream rows: per (code, cycle) a compressed version of the
     signal-generator lifecycle — baseline books (warm-up), density drop +
     spoof level, vanish, watch fire, falling trades, imbalance SELL."""
-
-    def ts(sec: float) -> datetime.datetime:
-        return BASE + datetime.timedelta(seconds=sec)
-
-    def us(sec: float) -> int:
-        return BASE_US + int(sec * 1_000_000)
-
-    def ob(code, sec, total_ask, total_bid, levels):
-        return (
-            code, ts(sec), us(sec), "orderbook",
-            None, None, int(total_ask), int(total_bid), levels,
-            None, None, None, None,
-        )
-
-    def trade(code, sec, price, volume):
-        return (
-            code, ts(sec), us(sec), "trade",
-            float(price), float(volume), None, None, None,
-            None, None, None, None,
-        )
-
-    stable = [(100 + i, 100) for i in range(10)]
     rows = []
     for c in range(n_codes):
         code = f"KRW-C{c:04d}"
         for j in range(n_cycles):
             t0 = j * 200.0
             for k in range(12):  # warm-up baseline (>=10 samples / 30s)
-                rows.append(ob(code, t0 + 5 * k, 1000, 1000, stable))
-            rows.append(trade(code, t0 + 55.5, 50_000.0, 10.0))
+                rows.append(_ob(code, t0 + 5 * k, 1000, 1000, _STABLE_LEVELS))
+            rows.append(_trade(code, t0 + 55.5, 50_000.0, 10.0))
             rows.append(
-                ob(code, t0 + 56, 600, 1000,
-                   [(100 + i, 30) for i in range(10)] + [(999, 300)])
+                _ob(code, t0 + 56, 600, 1000,
+                    [(100 + i, 30) for i in range(10)] + [(999, 300)])
             )
             rows.append(
-                ob(code, t0 + 57, 600, 1000, [(100 + i, 60) for i in range(10)])
+                _ob(code, t0 + 57, 600, 1000, [(100 + i, 60) for i in range(10)])
             )
             rows.append(
-                ob(code, t0 + 58.2, 600, 1000, [(100 + i, 60) for i in range(10)])
+                _ob(code, t0 + 58.2, 600, 1000, [(100 + i, 60) for i in range(10)])
             )
-            rows.append(trade(code, t0 + 60, 50_100.0, 9.0))
-            rows.append(trade(code, t0 + 62, 50_200.0, 1.0))
-            rows.append(trade(code, t0 + 64, 50_300.0, 1.0))
+            rows.append(_trade(code, t0 + 60, 50_100.0, 9.0))
+            rows.append(_trade(code, t0 + 62, 50_200.0, 1.0))
+            rows.append(_trade(code, t0 + 64, 50_300.0, 1.0))
             rows.append(
-                ob(code, t0 + 65, 900, 300, [(100 + i, 90) for i in range(10)])
+                _ob(code, t0 + 65, 900, 300, [(100 + i, 90) for i in range(10)])
             )
     return rows
 
@@ -189,24 +205,6 @@ def replay_day_slice_rows(
     every 300 s per market so the CEP state machine does real work.
     Shared by the pytest gate (tests/streaming/test_backtest_replay.py)
     and the bench ``replay_day_s`` metric (VERDICT r7 #5)."""
-
-    def ts(sec: float) -> datetime.datetime:
-        return BASE + datetime.timedelta(seconds=sec)
-
-    def us(sec: float) -> int:
-        return BASE_US + int(sec * 1_000_000)
-
-    def ob(code, sec, ask, bid, levels):
-        return (code, ts(sec), us(sec), "orderbook",
-                None, None, int(ask), int(bid), levels, None, None, None, None)
-
-    def trade(code, sec, price, vol):
-        return (code, ts(sec), us(sec), "trade",
-                float(price), float(vol), None, None, None, None, None, None, None)
-
-    def stable_levels(size=100):
-        return [(100 + i, size) for i in range(10)]
-
     rows: list[tuple] = []
     episode_at = {e for e in range(300, slice_s, 300)} or {slice_s // 2}
     for c in range(n_codes):
@@ -214,148 +212,49 @@ def replay_day_slice_rows(
         for s in range(slice_s):
             in_episode = any(e <= s < e + 4 for e in episode_at)
             if not in_episode:
-                rows.append(ob(code, s, 1000, 1000, stable_levels(100)))
-                rows.append(ob(code, s + 0.5, 1000, 1000, stable_levels(100)))
-                rows.append(trade(code, s + 0.25, 50_000.0 + c, 5.0))
+                rows.append(_ob(code, s, 1000, 1000, _STABLE_LEVELS))
+                rows.append(_ob(code, s + 0.5, 1000, 1000, _STABLE_LEVELS))
+                rows.append(_trade(code, s + 0.25, 50_000.0 + c, 5.0))
         for e in episode_at:
-            rows.append(ob(code, e, 600, 1000,
-                           [(100 + i, 30) for i in range(10)] + [(999, 300)]))
-            rows.append(ob(code, e + 1, 600, 1000, [(100 + i, 60) for i in range(10)]))
-            rows.append(ob(code, e + 2.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
-            rows.append(trade(code, e + 3, 50_000.0 + c, 5.0))
+            rows.append(_ob(code, e, 600, 1000,
+                            [(100 + i, 30) for i in range(10)] + [(999, 300)]))
+            rows.append(_ob(code, e + 1, 600, 1000, [(100 + i, 60) for i in range(10)]))
+            rows.append(_ob(code, e + 2.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
+            rows.append(_trade(code, e + 3, 50_000.0 + c, 5.0))
     rows.sort(key=lambda r: r[2])
     return rows
 
 
-def prepare_replay_input(
-    spark: SparkSession,
-    in_dir: str,
-    n_codes: int = REPLAY_N_CODES,
-    slice_s: int = REPLAY_SLICE_S,
-) -> int:
-    """Write the deterministic replay slice once; returns its row count."""
-    from apache_flink_pratices_spark.streaming.signal_generator import (
-        UNIFIED_SCHEMA,
-    )
-
-    rows = replay_day_slice_rows(n_codes, slice_s)
-    spark.createDataFrame(rows, UNIFIED_SCHEMA).coalesce(4).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    return len(rows)
-
-
 def replay_day_seconds(
-    spark: SparkSession,
-    workdir: str,
-    n_codes: int = REPLAY_N_CODES,
-    slice_s: int = REPLAY_SLICE_S,
-    in_dir: str | None = None,
-    n_rows: int | None = None,
+    spark: SparkSession, workdir: str, in_dir: str, slice_s: int
 ) -> tuple[float, int]:
-    """Extrapolated seconds to replay a full 24 h day of the n_codes-market
-    feed through the real signal path; returns ``(day_seconds, n_signals)``.
+    """Extrapolated seconds to replay a full 24 h day of the feed in
+    ``in_dir`` (a :func:`replay_day_slice_rows` slice of ``slice_s``
+    seconds) through the real signal path; returns
+    ``(day_seconds, n_signals)``.
 
     Linear extrapolation from the measured slice is sound because per-key
     state is bounded (TTL'd MapState, fixed-depth trailing windows):
     throughput does not degrade with stream length, only with per-batch
     volume, which the slice reproduces at full fidelity."""
-    from apache_flink_pratices_spark.streaming.signal_generator import (
-        UNIFIED_SCHEMA,
-        signal_stream,
+    wall, n_signals = _drain(
+        spark, signal_stream, UNIFIED_SCHEMA, in_dir, workdir, "bench_replay"
     )
-
-    if in_dir is None:
-        in_dir = os.path.join(workdir, "replay_in")
-        n_rows = prepare_replay_input(spark, in_dir, n_codes, slice_s)
-    if n_rows is None:  # not assert: must survive python -O
-        raise ValueError("n_rows must accompany a prebuilt in_dir")
-
-    with _stream_partitions(spark):
-        src = spark.readStream.schema(UNIFIED_SCHEMA).parquet(in_dir)
-        q = (
-            signal_stream(src)
-            .writeStream.format("memory")
-            .queryName("bench_replay")
-            .option("checkpointLocation", os.path.join(workdir, "replay_ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        t0 = time.perf_counter()
-        try:
-            q.processAllAvailable()
-            wall = time.perf_counter() - t0  # before stop(), as above
-        finally:
-            q.stop()
-    n_signals = spark.sql(
-        "SELECT COUNT(*) AS n FROM bench_replay"
-    ).collect()[0].n
-    return wall * (REPLAY_DAY_S / slice_s), int(n_signals)
-
-
-def prepare_cep_input(
-    spark: SparkSession, in_dir: str, n_codes: int, n_cycles: int
-) -> int:
-    """Write the deterministic CEP input once and return its row count
-    (the rate denominator); runs reusing the same (n_codes, n_cycles)
-    share it (review r7)."""
-    from apache_flink_pratices_spark.streaming.signal_generator import (
-        UNIFIED_SCHEMA,
-    )
-
-    rows = _cep_rows(n_codes, n_cycles)
-    spark.createDataFrame(rows, UNIFIED_SCHEMA).coalesce(4).write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-    return len(rows)
+    return wall * (REPLAY_DAY_S / slice_s), n_signals
 
 
 def cep_events_per_sec(
-    spark: SparkSession,
-    workdir: str,
-    n_codes: int = 300,
-    n_cycles: int = 17,
-    in_dir: str | None = None,
-    n_rows: int | None = None,
+    spark: SparkSession, workdir: str, in_dir: str, n_rows: int
 ) -> tuple[float, int]:
-    """End-to-end ev/s through the 4-stream CEP signal generator (J1),
-    with every machine exercising the full buy+sell lifecycle per cycle
-    (ListState windows, MapState positions, spoof watch timers).
-
-    ``in_dir``/``n_rows``: a directory already populated by
-    :func:`prepare_cep_input` and its returned row count. Omitted =
-    build it here."""
-    from apache_flink_pratices_spark.streaming.signal_generator import (
-        UNIFIED_SCHEMA,
-        signal_stream,
+    """End-to-end ev/s through the 4-stream CEP signal generator (J1)
+    over ``in_dir`` as written by :func:`write_input` from
+    :func:`_cep_rows`, with every machine exercising the full buy+sell
+    lifecycle per cycle (ListState windows, MapState positions, spoof
+    watch timers). ``n_rows`` is the count :func:`write_input` returned."""
+    wall, n_signals = _drain(
+        spark, signal_stream, UNIFIED_SCHEMA, in_dir, workdir, "bench_cep_tput"
     )
-
-    if in_dir is None:
-        in_dir = os.path.join(workdir, "cep_in")
-        n_rows = prepare_cep_input(spark, in_dir, n_codes, n_cycles)
-    if n_rows is None:  # not assert: must survive python -O (review r7)
-        raise ValueError("n_rows must accompany a prebuilt in_dir")
-
-    with _stream_partitions(spark):
-        src = spark.readStream.schema(UNIFIED_SCHEMA).parquet(in_dir)
-        q = (
-            signal_stream(src)
-            .writeStream.format("memory")
-            .queryName("bench_cep_tput")
-            .option("checkpointLocation", os.path.join(workdir, "cep_ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        t0 = time.perf_counter()
-        try:
-            q.processAllAvailable()
-            wall = time.perf_counter() - t0  # before stop(), as above
-        finally:
-            q.stop()
-    n_signals = spark.sql(
-        "SELECT COUNT(*) AS n FROM bench_cep_tput"
-    ).collect()[0].n
-    return n_rows / wall, int(n_signals)
+    return n_rows / wall, n_signals
 
 
 def measure_all(
@@ -386,35 +285,31 @@ def measure_all(
     fraud_runs: list[int] = []
     cep_runs: list[int] = []
     replay_runs: list[float] = []
+
+    def prepare(name: str, rows: list[tuple], schema: str) -> tuple[str, int]:
+        in_dir = os.path.join(wd, name)
+        return in_dir, write_input(spark, in_dir, rows, schema)
+
     if not small:  # warm-up: spin up workers/state server, untimed
-        fraud_events_per_sec(spark, os.path.join(wd, "w0"), n_tx=2_000)
-        cep_events_per_sec(spark, os.path.join(wd, "w1"), n_codes=10, n_cycles=1)
-    fraud_in = os.path.join(wd, "fraud_in")
-    cep_in = os.path.join(wd, "cep_in")
-    replay_in = os.path.join(wd, "replay_in")
-    fraud_rows = prepare_fraud_input(spark, fraud_in, n_tx=n_tx)
-    cep_rows = prepare_cep_input(spark, cep_in, n_codes, n_cycles)
-    replay_rows = prepare_replay_input(spark, replay_in, rp_codes, rp_slice)
+        fraud_events_per_sec(
+            spark, os.path.join(wd, "w0"),
+            *prepare("w0_in", fraud_rows(2_000), FRAUD_SCHEMA),
+        )
+        cep_events_per_sec(
+            spark, os.path.join(wd, "w1"),
+            *prepare("w1_in", _cep_rows(10, 1), UNIFIED_SCHEMA),
+        )
+    fraud_in = prepare("fraud_in", fraud_rows(n_tx), FRAUD_SCHEMA)
+    cep_in = prepare("cep_in", _cep_rows(n_codes, n_cycles), UNIFIED_SCHEMA)
+    replay_in, replay_rows = prepare(
+        "replay_in", replay_day_slice_rows(rp_codes, rp_slice), UNIFIED_SCHEMA
+    )
     for r in range(stream_runs):
         rd = os.path.join(wd, f"r{r}")
-        fr, n_alerts = fraud_events_per_sec(
-            spark, os.path.join(rd, "f"), in_dir=fraud_in, n_rows=fraud_rows
-        )
-        cr, n_signals = cep_events_per_sec(
-            spark,
-            os.path.join(rd, "c"),
-            n_codes=n_codes,
-            n_cycles=n_cycles,
-            in_dir=cep_in,
-            n_rows=cep_rows,
-        )
+        fr, n_alerts = fraud_events_per_sec(spark, os.path.join(rd, "f"), *fraud_in)
+        cr, n_signals = cep_events_per_sec(spark, os.path.join(rd, "c"), *cep_in)
         ds, n_replay_sigs = replay_day_seconds(
-            spark,
-            os.path.join(rd, "p"),
-            n_codes=rp_codes,
-            slice_s=rp_slice,
-            in_dir=replay_in,
-            n_rows=replay_rows,
+            spark, os.path.join(rd, "p"), replay_in, rp_slice
         )
         fraud_rate, cep_rate = max(fraud_rate, fr), max(cep_rate, cr)
         day_s = min(day_s, ds)

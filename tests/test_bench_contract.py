@@ -410,26 +410,6 @@ def test_bench_order_is_registration_order_not_rotation(tmp_path, monkeypatch):
     assert gate != baseline or len(gate) != len(baseline)
 
 
-def test_stream_rate_functions_refuse_prebuilt_input_without_count():
-    """A prebuilt in_dir without its row count must fail fast with a
-    clear error, not report a rate with a stale/default denominator
-    (review r7: the denominator travels WITH the prepared input)."""
-    import pytest
-
-    from apache_flink_pratices_spark.streaming.bench_streams import (
-        cep_events_per_sec,
-        fraud_events_per_sec,
-        replay_day_seconds,
-    )
-
-    with pytest.raises(ValueError, match="n_rows"):
-        fraud_events_per_sec(None, "wd", in_dir="prebuilt")
-    with pytest.raises(ValueError, match="n_rows"):
-        cep_events_per_sec(None, "wd", in_dir="prebuilt")
-    with pytest.raises(ValueError, match="n_rows"):
-        replay_day_seconds(None, "wd", in_dir="prebuilt")
-
-
 def test_box_context_fields():
     """_box_context must carry cpu count plus (on linux) loadavg and
     uptime, and never raise."""

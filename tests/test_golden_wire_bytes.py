@@ -1,8 +1,8 @@
 """Golden wire-bytes corpus for the Python proto3 codec (VERDICT r5 #6).
 
-The JVM spark-protobuf path is unreachable in this sandbox (offline — no
-jar, no google-protobuf wheel), so the Python codec could previously only
-be parity-tested against itself. This corpus pins its wire output against
+The Python codec is the project's only protobuf implementation, so
+nothing else can check its bytes; round trips alone would only test it
+against itself. This corpus pins its wire output against
 byte sequences DERIVED BY HAND from the public proto3 encoding spec
 (https://protobuf.dev/programming-guides/encoding/): tags are
 (field_number << 3) | wire_type varints, doubles are 8-byte little-endian
@@ -10,9 +10,8 @@ IEEE-754, LEN records are varint-length-prefixed, defaults are elided.
 Each golden constant below is annotated with its byte-level derivation —
 none was produced by the codec under test, so a codec regression breaks
 these even if encode/decode stay mutually consistent. Any standards-
-conforming protobuf runtime (including the JVM one, when the jar is
-available) serializes these messages to exactly these bytes given the
-same field ordering, because proto3 canonical form here is
+conforming protobuf runtime serializes these messages to exactly these
+bytes given the same field ordering, because proto3 canonical form here is
 field-number-ordered with no unknown fields.
 
 Reference schema semantics: /root/reference proto/market_data.proto:9-45,

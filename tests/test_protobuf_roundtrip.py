@@ -12,6 +12,7 @@ import time
 
 import pytest
 
+from apache_flink_pratices_spark.serialization import market_proto
 from apache_flink_pratices_spark.serialization.market_proto import (
     decode_orderbook,
     decode_trade,
@@ -58,6 +59,16 @@ def _orderbook(n_levels: int = 15) -> dict:
 
 def test_trade_roundtrip_all_fields():
     assert decode_trade(encode_trade(TRADE)) == TRADE
+    # encode() writes fields in declared order, so canonical (field-number
+    # ordered) bytes need every descriptor declared in that order
+    for desc in (
+        market_proto.TIMESTAMP,
+        market_proto.ORDERBOOK_LEVEL,
+        market_proto.TRADE,
+        market_proto.ORDERBOOK_UPDATE,
+    ):
+        numbers = [f.number for f in desc]
+        assert numbers == sorted(numbers), numbers
 
 
 def test_zero_values_roundtrip():

@@ -10,8 +10,8 @@ import json
 
 from apache_flink_pratices_spark.registry import (
     CRITICAL,
-    _driver_check_history,
-    _driver_check_rows,
+    DriverCheck,
+    _driver_checks,
     _row_is_green,
     all_specs,
     oracle_sql,
@@ -47,10 +47,15 @@ S2_ANCHORS = {
 }
 
 
+def _green_history(root: str | None = None) -> dict[str, int]:
+    """query name -> last green round, for queries with a green row."""
+    return {n: c.last_green for n, c in _driver_checks(root).items() if c.last_green >= 0}
+
+
 def test_window_covers_never_checked_and_critical():
     names = list(all_specs())
     window = set(names[:WINDOW])
-    hist = _driver_check_history()
+    hist = _green_history()
     never = {n for n in names if n not in hist}
     assert PINNED <= window, sorted(PINNED - window)
     assert S2_ANCHORS <= window, sorted(S2_ANCHORS - window)
@@ -116,9 +121,8 @@ def test_failing_latest_row_sorts_to_front(tmp_path, monkeypatch):
     ordered = list(all_specs())
     assert ordered[0] == victim
     # and the green history treats it as never green
-    assert victim not in _driver_check_history(str(tmp_path))
-    latest = _driver_check_rows(str(tmp_path))
-    assert latest[victim] == (9, False)
+    assert victim not in _green_history(str(tmp_path))
+    assert _driver_checks(str(tmp_path))[victim] == DriverCheck(9, False, -1)
 
 
 def _green_row():
@@ -171,7 +175,7 @@ def test_backlog_rotates_after_r5_checks(tmp_path, monkeypatch):
 
     names = list(all_specs())
     window_now = names[:WINDOW]
-    hist = _driver_check_history()
+    hist = _green_history()
     r5 = {n: _green_row() for n in window_now}
     (tmp_path / "CORRECTNESS_r05.json").write_text(json.dumps(r5))
     # carry the real history forward so staleness ordering is realistic
@@ -184,7 +188,7 @@ def test_backlog_rotates_after_r5_checks(tmp_path, monkeypatch):
     assert PINNED <= set(window_next)
     # every non-pinned slot goes to the stalest survivors: nothing
     # checked in r5 may displace something whose last green is older
-    hist_next = _driver_check_history(str(tmp_path))
+    hist_next = _green_history(str(tmp_path))
     non_crit = [n for n in window_next if n not in PINNED]
     outside = [n for n in nxt[WINDOW:] if n not in PINNED]
     if non_crit and outside:
