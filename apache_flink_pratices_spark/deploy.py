@@ -1,7 +1,7 @@
 """Worker-side deployment of this package.
 
-Queries that run Python stages (``mapInPandas`` /
-``applyInPandasWithState``) pickle their functions by reference, so the
+Queries that run Python stages (``mapInPandas``, the keyed runner of
+``streaming.watermarks``) pickle their functions by reference, so the
 executors' Python workers must be able to ``import
 apache_flink_pratices_spark`` — which only works by accident when the
 driver process happens to run with the repo as cwd. :func:`ensure_shipped`

@@ -16,8 +16,9 @@ SMALL_AMOUNT = 50.0
 LARGE_AMOUNT = 400.0
 WINDOW_US = 86_400 * 1_000_000  # 1 day in microseconds
 
-# The reference's original constants, used verbatim by the fixture tests on
-# the canonical 12-transaction corpus (FIXTURES.md §1).
+# The reference's original constants, used verbatim by the streaming
+# FraudMachine and by the fixture tests on the canonical 12-transaction
+# corpus (FIXTURES.md §1).
 REF_SMALL_AMOUNT = 1.00
 REF_LARGE_AMOUNT = 500.00
 REF_WINDOW_MS = 60_000
@@ -60,10 +61,11 @@ class FraudMachine:
 
     Exact transition semantics of reference
     ``src/pyflink_examples/fraud_detection/fraud_detector.py:39-149``
-    including its stale-timer quirks (see ``docs/fraud_semantics.md``).
-    The streaming detector (``streaming/fraud.py``) keeps ``armed`` inside
-    its ``applyInPandasWithState`` state tuple and parks Spark's single
-    event-time timeout on its earliest entry.
+    including its stale-timer quirks (see ``docs/fraud_semantics.md``),
+    with the reference's own thresholds (``REF_*``). The streaming detector
+    (``streaming/fraud.py``) runs it through the keyed runner
+    (``streaming/watermarks.py::run_keyed``), which persists ``state`` and
+    parks Spark's single event-time timeout on the earliest armed timer.
 
     State: ``flag`` (bool | None), ``latest`` (last registered timer ms,
     ``fraud_detector.py:53-62``), ``armed`` (every registered, unfired
@@ -72,21 +74,20 @@ class FraudMachine:
 
     def __init__(
         self,
-        flag: bool | None,
-        latest: int | None,
-        armed: list[int] | None,
-        small: float = REF_SMALL_AMOUNT,
-        large: float = REF_LARGE_AMOUNT,
-        window_ms: int = REF_WINDOW_MS,
+        flag: bool | None = None,
+        latest: int | None = None,
+        armed: list[int] | None = None,
     ) -> None:
         self.flag = flag
         self.latest = latest
         self.armed: list[int] = sorted(armed or [])
-        self.small = small
-        self.large = large
-        self.window_ms = window_ms
         #: (account_id-free) alert event times collected this batch
         self.alerts: list[tuple[int, float]] = []
+
+    @classmethod
+    def restore(cls, key, state: tuple | None) -> "FraudMachine":
+        """Resume from the persisted ``state`` tuple (None: a new key)."""
+        return cls(*state) if state is not None else cls()
 
     def on_timer(self, t: int) -> None:
         """fraud_detector.py:116-133 — clear flag AND timer_state,
@@ -104,35 +105,47 @@ class FraudMachine:
         self.flag = None
         self.latest = None
 
-    def fire_due(self, bound_ms: int, inclusive: bool = True) -> None:
-        """Fire every armed timer the watermark has reached. Flink fires
-        all timers ≤ watermark; before an event at t the watermark trails
-        strictly below t, so in-batch interleaving uses inclusive=False."""
-        while self.armed and (
-            self.armed[0] <= bound_ms if inclusive else self.armed[0] < bound_ms
-        ):
+    def fire(self, wm_ms: int) -> None:
+        """Fire every armed timer the watermark has reached (Flink fires
+        all timers ≤ watermark)."""
+        while self.armed and self.armed[0] <= wm_ms:
             self.on_timer(self.armed[0])
 
     def on_event(self, ts_ms: int, ts_us: int, amount: float) -> None:
         """Process one transaction (fraud_detector.py:64-114), firing
-        timers the event-time watermark would have fired first."""
-        self.fire_due(ts_ms, inclusive=False)
+        timers the event-time watermark would have fired first: before an
+        event at ``ts_ms`` the watermark trails strictly below it."""
+        self.fire(ts_ms - 1)
 
         last_was_small = bool(self.flag)
-        if last_was_small and amount >= self.large:
+        if last_was_small and amount >= REF_LARGE_AMOUNT:
             self.alerts.append((ts_us, amount))
             self.clean_up()
             return  # reference returns right after the alert
 
-        if amount <= self.small:
+        if amount <= REF_SMALL_AMOUNT:
             self.flag = True
-            t = ts_ms + self.window_ms
+            t = ts_ms + REF_WINDOW_MS
             self.latest = t
             if t not in self.armed:
                 self.armed.append(t)
                 self.armed.sort()
         elif not last_was_small:
             self.clean_up()
+
+    def process_row(self, row) -> None:
+        self.on_event(int(row.ts_us) // 1000, int(row.ts_us), float(row.amount))
+
+    @property
+    def state(self) -> tuple:
+        return (self.flag, self.latest, self.armed)
+
+    def next_deadline_ms(self) -> int | None:
+        return self.armed[0] if self.armed else None
+
+    @property
+    def output(self) -> list[tuple[int, float]]:
+        return self.alerts
 
     @property
     def empty(self) -> bool:

@@ -23,8 +23,8 @@ relational engine and the DuckDB oracle can state exactly), pinned by
 ``test_batch_diverges_on_consecutive_smalls``, and documented in
 ``docs/fraud_semantics.md``.
 
-The streaming path (true per-event state + timers via
-``applyInPandasWithState``) lives in
+The streaming path (true per-event state + timers via the keyed runner,
+``streaming.watermarks.run_keyed``) lives in
 :mod:`apache_flink_pratices_spark.streaming.fraud`, implements the timer
 semantics faithfully, and reuses the same thresholds from
 :mod:`apache_flink_pratices_spark.domain.rules`.

@@ -26,12 +26,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from apache_flink_pratices_spark.domain.rules import P_WAVE_REASON
 from apache_flink_pratices_spark.registry import register
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
 from apache_flink_pratices_spark.streaming.signal_generator import (
+    SCENARIO_BASE_US as _BASE_US,
+    STABLE_LEVELS,
     UNIFIED_SCHEMA,
     deterministic_signal_id,
+    lifecycle_rows,
+    ob_row,
+    restore_row,
     signal_stream,
+    trade_row,
 )
 
 _BASE_MS = 1_609_459_200_000  # 2021-01-01T00:00:00Z
@@ -69,18 +75,7 @@ def _run_memory_stream(
             src = stream_from_collection(
                 spark, rows, schema, os.path.join(d, "in"), chunks=chunks
             )
-            q = (
-                build(src)
-                .writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .outputMode(output_mode)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            drain(build(src), name, os.path.join(d, "ckpt"), output_mode)
             out = spark.table(name)
             # materialize before the temp checkpoint dir disappears
             return spark.createDataFrame(out.collect(), out.schema)
@@ -124,57 +119,18 @@ def stream_fraud_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CODE = "KRW-BTC"
-_B = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
-#: epoch micros of _B — ts_us MUST be the absolute unix_micros(ts) (what
-#: unify_streams produces): watch deadlines are derived from ts_us and
-#: armed as event-time timeouts, so they must share the watermark's
-#: domain. Scenario-relative ts_us put deadlines ~1.6e12 ms below the
-#: watermark, and any watch spanning a micro-batch boundary would crash
-#: setTimeoutTimestamp (ADVICE r2).
-_BASE_US = int(_B.timestamp()) * 1_000_000
 
 
-def _cep_scenario():
-    def ts(sec):
-        # tz-aware (see stream_fraud_golden): host-TZ-independent epochs
-        return _B + datetime.timedelta(seconds=sec)
-
-    def ob(sec, ask, bid, levels):
-        return (_CODE, ts(sec), _BASE_US + int(sec * 1_000_000), "orderbook",
-                None, None, ask, bid, levels, None, None, None, None)
-
-    def trade(sec, price, vol):
-        return (_CODE, ts(sec), _BASE_US + int(sec * 1_000_000), "trade",
-                price, vol, None, None, None, None, None, None, None)
-
-    rows = [ob(5 * k, 1000, 1000, [(100 + i, 100) for i in range(10)]) for k in range(12)]
-    rows.append(trade(55.5, 50_000.0, 10.0))
-    rows.append(ob(56, 600, 1000, [(100 + i, 30) for i in range(10)] + [(999, 300)]))
-    rows.append(ob(57, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    rows.append(ob(58.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    rows.append(trade(60, 50_100.0, 9.0))
-    rows.append(trade(62, 50_200.0, 1.0))
-    rows.append(trade(64, 50_300.0, 1.0))
-    rows.append(ob(65, 900, 300, [(100 + i, 90) for i in range(10)]))
-    return rows
+def _signal(code: str, ts_us: int, side: str, ref_price: float) -> tuple:
+    """One expected P-wave signal row (SIGNAL_SCHEMA order)."""
+    sid = deterministic_signal_id(code, side, P_WAVE_REASON, ts_us)
+    return (code, ts_us, side, P_WAVE_REASON, sid, ref_price)
 
 
-def _cep_expected() -> list[tuple]:
-    # ts_us is absolute unix_micros (same domain as the watermark)
-    buy_us = _BASE_US + 58_199_000  # watch fires just before the 58.2s book
-    sell_us = _BASE_US + 65_000_000
-    return [
-        (_CODE, buy_us, "BUY", P_WAVE_REASON,
-         deterministic_signal_id(_CODE, "BUY", P_WAVE_REASON, buy_us), 50_000.0),
-        (_CODE, sell_us, "SELL", P_WAVE_REASON,
-         deterministic_signal_id(_CODE, "SELL", P_WAVE_REASON, sell_us), 50_300.0),
-    ]
-
-
-def _cep_oracle() -> str:
+def _signals_oracle(expected: list[tuple]) -> str:
     values = ",\n      ".join(
         f"('{c}', CAST({t} AS BIGINT), '{side}', '{reason}', '{sid}', CAST({price} AS DOUBLE))"
-        for c, t, side, reason, sid, price in _cep_expected()
+        for c, t, side, reason, sid, price in expected
     )
     return f"""
     SELECT * FROM (VALUES
@@ -183,9 +139,18 @@ def _cep_oracle() -> str:
     """
 
 
+def _cep_expected() -> list[tuple]:
+    # ts_us is absolute unix_micros (same domain as the watermark)
+    return [
+        # the watch fires just before the 58.2 s book
+        _signal(_CODE, _BASE_US + 58_199_000, "BUY", 50_000.0),
+        _signal(_CODE, _BASE_US + 65_000_000, "SELL", 50_300.0),
+    ]
+
+
 @register(
     "stream_cep_signals_golden",
-    oracle=_cep_oracle(),
+    oracle=_signals_oracle(_cep_expected()),
     doc="J1/W4/W5/W6/W7 streaming: the CEP SignalGenerator (co-processed "
     "union, MapState positions, ListState time-series, orderbook diff with "
     "per-price timers, deterministic ids) over the canonical P-wave "
@@ -194,7 +159,7 @@ def _cep_oracle() -> str:
 )
 def stream_cep_signals_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_memory_stream(
-        spark, _cep_scenario(), UNIFIED_SCHEMA, signal_stream, "afp_cep_golden"
+        spark, lifecycle_rows(_CODE), UNIFIED_SCHEMA, signal_stream, "afp_cep_golden"
     )
 
 
@@ -208,58 +173,32 @@ def _spoof_scenario():
     fires → BUY), one PERSISTS (its timer fires too, finds ≥25% of the
     armed size remaining, and must produce nothing). The single-BUY golden
     therefore pins both the fire and the non-fire path of W6."""
-
-    def ts(sec):
-        return _B + datetime.timedelta(seconds=sec)
-
-    def ob(sec, ask, bid, levels):
-        return (_SPOOF_CODE, ts(sec), _BASE_US + int(sec * 1_000_000), "orderbook",
-                None, None, ask, bid, levels, None, None, None, None)
-
-    def trade(sec, price, vol):
-        return (_SPOOF_CODE, ts(sec), _BASE_US + int(sec * 1_000_000), "trade",
-                price, vol, None, None, None, None, None, None, None)
-
+    code = _SPOOF_CODE
     # 0-55 s: warm-up + trailing-60s density baseline (12 samples of 1000)
-    rows = [ob(5 * k, 1000, 1000, [(100 + i, 100) for i in range(10)]) for k in range(12)]
-    rows.append(trade(55.5, 42_000.0, 10.0))  # sets last_price
+    rows = [ob_row(code, 5 * k, 1000, 1000, STABLE_LEVELS) for k in range(12)]
+    rows.append(trade_row(code, 55.5, 42_000.0, 10.0))  # sets last_price
     # 56 s: density -40% (cond1) + TWO big new levels appear: 999 (300) and
     # 888 (200), each > 5% of the 1600 book → two watches, deadline 57.5 s
-    rows.append(ob(56, 600, 1000,
-                   [(100 + i, 10) for i in range(10)] + [(999, 300), (888, 200)]))
+    rows.append(ob_row(code, 56, 600, 1000,
+                       [(100 + i, 10) for i in range(10)] + [(999, 300), (888, 200)]))
     # 57 s: level 999 is GONE, level 888 still fully there
-    rows.append(ob(57, 620, 1000, [(100 + i, 10) for i in range(10)] + [(888, 200)]))
+    rows.append(ob_row(code, 57, 620, 1000,
+                       [(100 + i, 10) for i in range(10)] + [(888, 200)]))
     # 58.2 s: first event past the deadline — both timers fire at 58.199 s
     # against the 57 s book: 999 → remaining 0 < 25% of 300 → cond2 → BUY
     # (ref = last_price 42000, before this trade updates it); 888 →
     # remaining 200 ≥ 25% of 200 → no signal
-    rows.append(trade(58.2, 42_100.0, 5.0))
+    rows.append(trade_row(code, 58.2, 42_100.0, 5.0))
     return rows
 
 
 def _spoof_expected() -> list[tuple]:
-    buy_us = _BASE_US + 58_199_000
-    return [
-        (_SPOOF_CODE, buy_us, "BUY", P_WAVE_REASON,
-         deterministic_signal_id(_SPOOF_CODE, "BUY", P_WAVE_REASON, buy_us), 42_000.0),
-    ]
-
-
-def _spoof_oracle() -> str:
-    values = ",\n      ".join(
-        f"('{c}', CAST({t} AS BIGINT), '{side}', '{reason}', '{sid}', CAST({price} AS DOUBLE))"
-        for c, t, side, reason, sid, price in _spoof_expected()
-    )
-    return f"""
-    SELECT * FROM (VALUES
-      {values}
-    ) AS t(code, ts_us, side, reason, signal_id, ref_price)
-    """
+    return [_signal(_SPOOF_CODE, _BASE_US + 58_199_000, "BUY", 42_000.0)]
 
 
 @register(
     "stream_spoof_golden",
-    oracle=_spoof_oracle(),
+    oracle=_signals_oracle(_spoof_expected()),
     doc="W6 streaming, isolated: the per-price event-time spoof watch "
     "(시스템 아키텍처.md:584-592 — a big new level that disappears within "
     "1.5 s) as its own driver row. Two watches armed in one book; only "
@@ -278,7 +217,7 @@ def stream_spoof_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RST_CODE = "KRW-RST"
 
 
-def _restore_scenario():
+def _restore_scenario(code: str = _RST_CODE):
     """Full position lifecycle with BOTH restore outcomes: a restore 5 s
     after the SELL is REJECTED by the 30 s recently-removed TTL guard (the
     sell-shaped book at 72 s then fires nothing — no position), and a
@@ -286,71 +225,26 @@ def _restore_scenario():
     102 s fires the second SELL. The golden output BUY/SELL/SELL plus the
     72 s row's absence pins the reference's stale-restore-rejection design
     (W4 MapState + TTL)."""
-
-    def ts(sec):
-        return _B + datetime.timedelta(seconds=sec)
-
-    def us(sec):
-        return _BASE_US + int(sec * 1_000_000)
-
-    def ob(sec, ask, bid, levels):
-        return (_RST_CODE, ts(sec), us(sec), "orderbook",
-                None, None, ask, bid, levels, None, None, None, None)
-
-    def trade(sec, price, vol):
-        return (_RST_CODE, ts(sec), us(sec), "trade",
-                price, vol, None, None, None, None, None, None, None)
-
-    def restore(sec, sid, entry):
-        return (_RST_CODE, ts(sec), us(sec), "restore",
-                None, None, None, None, None, sid, None, P_WAVE_REASON, entry)
-
-    stable = [(100 + i, 100) for i in range(10)]
-    rows = [ob(5 * k, 1000, 1000, stable) for k in range(12)]
-    rows.append(trade(55.5, 50_000.0, 10.0))
-    rows.append(ob(56, 600, 1000, [(100 + i, 30) for i in range(10)] + [(999, 300)]))
-    rows.append(ob(57, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    rows.append(ob(58.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    rows.append(trade(60, 50_100.0, 9.0))
-    rows.append(trade(62, 50_200.0, 1.0))
-    rows.append(trade(64, 50_300.0, 1.0))
     sell_book = [(100 + i, 90) for i in range(10)]
-    rows.append(ob(65, 900, 300, sell_book))  # SELL #1, guard armed
-    rows.append(restore(70, "sid-restore-1", 42.0))  # within TTL: rejected
-    rows.append(ob(72, 900, 300, sell_book))  # must fire NOTHING
-    rows.append(restore(100, "sid-restore-2", 42.0))  # TTL expired: accepted
-    rows.append(ob(102, 900, 300, sell_book))  # SELL #2
-    return rows
+    return lifecycle_rows(code) + [  # SELL #1 at 65 s arms the guard
+        restore_row(code, 70, "sid-restore-1", 42.0),  # within TTL: rejected
+        ob_row(code, 72, 900, 300, sell_book),  # must fire NOTHING
+        restore_row(code, 100, "sid-restore-2", 42.0),  # TTL expired: accepted
+        ob_row(code, 102, 900, 300, sell_book),  # SELL #2
+    ]
 
 
 def _restore_expected() -> list[tuple]:
-    buy_us = _BASE_US + 58_199_000
-    out = [(_RST_CODE, buy_us, "BUY", P_WAVE_REASON,
-            deterministic_signal_id(_RST_CODE, "BUY", P_WAVE_REASON, buy_us),
-            50_000.0)]
-    for sec, price in ((65, 50_300.0), (102, 50_300.0)):
-        t = _BASE_US + sec * 1_000_000
-        out.append((_RST_CODE, t, "SELL", P_WAVE_REASON,
-                    deterministic_signal_id(_RST_CODE, "SELL", P_WAVE_REASON, t),
-                    price))
-    return out
-
-
-def _restore_oracle() -> str:
-    values = ",\n      ".join(
-        f"('{c}', CAST({t} AS BIGINT), '{side}', '{reason}', '{sid}', CAST({price} AS DOUBLE))"
-        for c, t, side, reason, sid, price in _restore_expected()
-    )
-    return f"""
-    SELECT * FROM (VALUES
-      {values}
-    ) AS t(code, ts_us, side, reason, signal_id, ref_price)
-    """
+    return [
+        _signal(_RST_CODE, _BASE_US + 58_199_000, "BUY", 50_000.0),
+        _signal(_RST_CODE, _BASE_US + 65_000_000, "SELL", 50_300.0),
+        _signal(_RST_CODE, _BASE_US + 102_000_000, "SELL", 50_300.0),
+    ]
 
 
 @register(
     "stream_restore_golden",
-    oracle=_restore_oracle(),
+    oracle=_signals_oracle(_restore_expected()),
     doc="W4 streaming, isolated: the MapState+TTL stale-restore guard "
     "(시스템 아키텍처.md:702-718) as its own driver row. After the first "
     "SELL arms the 30 s recently-removed guard, a restore 5 s later is "
@@ -634,17 +528,7 @@ def stream_join_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_micros("o_ts").alias("o_us"),
                 F.unix_micros("p_ts").alias("p_us"),
             )
-            q = (
-                joined.writeStream.format("memory")
-                .queryName("afp_join_golden")
-                .option("checkpointLocation", os.path.join(d, "ckpt"))
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+            drain(joined, "afp_join_golden", os.path.join(d, "ckpt"))
             out = spark.table("afp_join_golden")
             return spark.createDataFrame(out.collect(), out.schema)
 
@@ -658,8 +542,8 @@ def stream_join_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: sit in batch 5 — 20+s behind the watermark with their state already
 #: gone — where the built-in aggregate drops them outright (no
 #: re-admission; contrast dropDuplicatesWithinWatermark's documented
-#: re-admission in _DEDUP_ROWS, and applyInPandasWithState, which always
-#: delivers late rows — see streaming/watermarks.py). Admitted, they
+#: re-admission in _DEDUP_ROWS, and the keyed runner's Python state
+#: operator, which always delivers late rows — see streaming/watermarks.py). Admitted, they
 #: would flip window 0 to a=4 and window 1's ranking. The spacers' own
 #: never-closed windows are filtered out of the result by the cutoff.
 _TOPK_ROWS = [

@@ -84,11 +84,8 @@ def tune(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -
         # parallelismFirst (default) the realized width stays
         # min(cores-proportional, bytes/256k) — data-bounded below,
         # cores-bounded above, and irrelevant at 100 TB where the
-        # advisory cap rules. Parameterized for production override.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("AFP_MIN_PARTITION_SIZE", "256k"),
-        )
+        # advisory cap rules.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -25,9 +25,7 @@ leading partition key); exactly-once *effects* on top of the file sink's
 at-least-once replay.
 
 File sizing: ``maxRecordsPerFile`` bounds the large end (no
-multi-GB files from a skewed day); a pre-write ``repartition`` on the
-partition columns bounds the small end (no thousands of 1 MB files from
-over-parallel writers — the classic small-file problem).
+multi-GB files from a skewed day).
 """
 
 from __future__ import annotations
@@ -42,6 +40,8 @@ from pyspark.sql import functions as F
 #: partitions present in the written data — the backfill contract.
 _OVERWRITE_MODE = ("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
+_MAX_RECORDS_PER_FILE = 5_000_000
+
 
 def with_event_date(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Add the partition column: calendar date of the event timestamp."""
@@ -52,8 +52,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: tuple[str, ...] = ("event_date",),
-    max_records_per_file: int = 5_000_000,
-    files_per_partition: int | None = None,
 ) -> None:
     """Write (or idempotently re-write) ``df``'s partitions under ``path``.
 
@@ -66,16 +64,9 @@ def write_partitioned(
     prev = spark.conf.get(key, None)
     spark.conf.set(key, want)
     try:
-        if files_per_partition is not None:
-            # co-locate each partition's rows into N writer tasks: bounds
-            # output file count at |partitions| x N instead of
-            # |partitions| x |shuffle partitions|
-            df = df.repartition(
-                files_per_partition * 8, *[F.col(c) for c in partition_cols]
-            )
         (
             df.write.mode("overwrite")
-            .option("maxRecordsPerFile", max_records_per_file)
+            .option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
             .partitionBy(*partition_cols)
             .parquet(path)
         )

@@ -1,5 +1,6 @@
 """Collection source (S1) — bounded in-memory rows as a batch DataFrame or
-as a file-backed stream for exercising streaming operators in tests.
+as a file-backed stream for exercising streaming operators in tests, plus
+:func:`drain`, which runs such a stream to completion into a memory table.
 
 Reference: ``env.from_collection(...)`` at ``src/pyflink_examples/
 fraud_detection/job.py:124-127``, ``examples/word_count.py:41``,
@@ -13,6 +14,7 @@ from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 
 def from_collection(
@@ -51,3 +53,24 @@ def stream_from_collection(
     return spark.readStream.schema(reader_schema).option("maxFilesPerTrigger", 1).parquet(
         staging_dir
     )
+
+
+def drain(
+    df: DataFrame, name: str, checkpoint: str, output_mode: str = "append"
+) -> StreamingQuery:
+    """Run streaming ``df`` into the memory table ``name`` until its
+    bounded input is exhausted, then stop it. Returns the stopped query,
+    whose ``recentProgress`` stays readable; read the rows with
+    ``spark.table(name)``."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q

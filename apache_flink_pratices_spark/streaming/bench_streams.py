@@ -27,12 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
 from apache_flink_pratices_spark.streaming.signal_generator import (
+    SCENARIO_BASE,
+    STABLE_LEVELS,
     UNIFIED_SCHEMA,
+    lifecycle_rows,
+    ob_row,
     signal_stream,
+    trade_row,
 )
-
-BASE = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
-BASE_US = int(BASE.timestamp()) * 1_000_000
 
 #: state partitions for the measured streaming queries. The state-store
 #: partition count is a property of the QUERY (it sizes per-batch task
@@ -108,7 +110,7 @@ def fraud_rows(n_tx: int, n_accounts: int = 500) -> list[tuple]:
     return [
         (
             i % n_accounts,
-            BASE + datetime.timedelta(milliseconds=i),
+            SCENARIO_BASE + datetime.timedelta(milliseconds=i),
             0.5 if (i // n_accounts) % 2 == 0 else 700.0,
         )
         for i in range(n_tx)
@@ -129,65 +131,17 @@ def fraud_events_per_sec(
     return n_rows / wall, n_alerts
 
 
-def _ts(sec: float) -> datetime.datetime:
-    return BASE + datetime.timedelta(seconds=sec)
-
-
-def _us(sec: float) -> int:
-    return BASE_US + int(sec * 1_000_000)
-
-
-#: the ten steady book levels every CEP row generator starts from
-_STABLE_LEVELS = [(100 + i, 100) for i in range(10)]
-
-
-def _ob(code: str, sec: float, total_ask: int, total_bid: int, levels) -> tuple:
-    """One orderbook row of the unified CEP stream."""
-    return (
-        code, _ts(sec), _us(sec), "orderbook",
-        None, None, int(total_ask), int(total_bid), levels,
-        None, None, None, None,
-    )
-
-
-def _trade(code: str, sec: float, price: float, volume: float) -> tuple:
-    """One trade row of the unified CEP stream."""
-    return (
-        code, _ts(sec), _us(sec), "trade",
-        float(price), float(volume), None, None, None,
-        None, None, None, None,
-    )
-
-
 def _cep_rows(n_codes: int, n_cycles: int) -> list[tuple]:
-    """Unified-stream rows: per (code, cycle) a compressed version of the
-    signal-generator lifecycle — baseline books (warm-up), density drop +
-    spoof level, vanish, watch fire, falling trades, imbalance SELL."""
-    rows = []
-    for c in range(n_codes):
-        code = f"KRW-C{c:04d}"
-        for j in range(n_cycles):
-            t0 = j * 200.0
-            for k in range(12):  # warm-up baseline (>=10 samples / 30s)
-                rows.append(_ob(code, t0 + 5 * k, 1000, 1000, _STABLE_LEVELS))
-            rows.append(_trade(code, t0 + 55.5, 50_000.0, 10.0))
-            rows.append(
-                _ob(code, t0 + 56, 600, 1000,
-                    [(100 + i, 30) for i in range(10)] + [(999, 300)])
-            )
-            rows.append(
-                _ob(code, t0 + 57, 600, 1000, [(100 + i, 60) for i in range(10)])
-            )
-            rows.append(
-                _ob(code, t0 + 58.2, 600, 1000, [(100 + i, 60) for i in range(10)])
-            )
-            rows.append(_trade(code, t0 + 60, 50_100.0, 9.0))
-            rows.append(_trade(code, t0 + 62, 50_200.0, 1.0))
-            rows.append(_trade(code, t0 + 64, 50_300.0, 1.0))
-            rows.append(
-                _ob(code, t0 + 65, 900, 300, [(100 + i, 90) for i in range(10)])
-            )
-    return rows
+    """Unified-stream rows: per (code, cycle) the signal-generator
+    lifecycle (:func:`lifecycle_rows`) — baseline books (warm-up), density
+    drop + spoof level, vanish, watch fire, falling trades, imbalance
+    SELL — cycles 200 s apart."""
+    return [
+        row
+        for c in range(n_codes)
+        for j in range(n_cycles)
+        for row in lifecycle_rows(f"KRW-C{c:04d}", j * 200.0)
+    ]
 
 
 #: backtest replay slice geometry (the "day of data in minutes" bar,
@@ -212,15 +166,15 @@ def replay_day_slice_rows(
         for s in range(slice_s):
             in_episode = any(e <= s < e + 4 for e in episode_at)
             if not in_episode:
-                rows.append(_ob(code, s, 1000, 1000, _STABLE_LEVELS))
-                rows.append(_ob(code, s + 0.5, 1000, 1000, _STABLE_LEVELS))
-                rows.append(_trade(code, s + 0.25, 50_000.0 + c, 5.0))
+                rows.append(ob_row(code, s, 1000, 1000, STABLE_LEVELS))
+                rows.append(ob_row(code, s + 0.5, 1000, 1000, STABLE_LEVELS))
+                rows.append(trade_row(code, s + 0.25, 50_000.0 + c, 5.0))
         for e in episode_at:
-            rows.append(_ob(code, e, 600, 1000,
+            rows.append(ob_row(code, e, 600, 1000,
                             [(100 + i, 30) for i in range(10)] + [(999, 300)]))
-            rows.append(_ob(code, e + 1, 600, 1000, [(100 + i, 60) for i in range(10)]))
-            rows.append(_ob(code, e + 2.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
-            rows.append(_trade(code, e + 3, 50_000.0 + c, 5.0))
+            rows.append(ob_row(code, e + 1, 600, 1000, [(100 + i, 60) for i in range(10)]))
+            rows.append(ob_row(code, e + 2.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
+            rows.append(trade_row(code, e + 3, 50_000.0 + c, 5.0))
     rows.sort(key=lambda r: r[2])
     return rows
 

@@ -27,10 +27,11 @@ Reference design (``docs/project docs/호가창 분석 스캘퍼: 시스템
 - **W7**: every signal id is ``sha256(code|side|reason|second)`` —
   idempotent on replay.
 
-``applyInPandasWithState`` drives the framework-free
-:class:`SignalMachine` (the reference keeps domain rules framework-free by
-design, ``2. CEP 레이어...md:82,209``), persisted as one state tuple per
-key.
+The keyed runner
+(:func:`~apache_flink_pratices_spark.streaming.watermarks.run_keyed`)
+drives the framework-free :class:`SignalMachine` (the reference keeps
+domain rules framework-free by design, ``2. CEP 레이어...md:82,209``),
+persisted as one state tuple per key.
 
 Timer semantics follow the engine's documented event-time interleave (see
 ``docs/fraud_semantics.md``): armed spoof deadlines strictly earlier than
@@ -49,13 +50,11 @@ aggregate state off-heap.
 
 from __future__ import annotations
 
+import datetime
 import hashlib
-from typing import Any, Iterator, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from apache_flink_pratices_spark.domain.rules import (
     CEP_DENSITY_WINDOW_US,
@@ -72,7 +71,7 @@ from apache_flink_pratices_spark.domain.rules import (
     SPOOF_VANISH_MS,
     TRADE_WIN_US,
 )
-from apache_flink_pratices_spark.streaming.watermarks import drop_late
+from apache_flink_pratices_spark.streaming.watermarks import drop_late, run_keyed
 
 #: unified input row shape after the union-with-discriminator
 UNIFIED_SCHEMA = (
@@ -125,9 +124,9 @@ def _decreasing(win_avgs: list[tuple]) -> bool:
 class SignalMachine:
     """One key's CEP state + transition rules, framework-free.
 
-    The keyed processor builds it from the group state, replays the batch
-    through :meth:`process_row` / :meth:`fire_due_watches`, then persists
-    the attributes back.
+    The keyed runner restores it from the state tuple, replays the batch
+    through :meth:`process_row` / :meth:`fire`, then persists
+    :attr:`state` back.
     """
 
     def __init__(
@@ -143,22 +142,49 @@ class SignalMachine:
         win_avgs: list[tuple] | None = None,
         cond1_ts_us: int | None = None,
         cond2_ts_us: int | None = None,
-        last_price: float = 0.0,
+        last_price: float | None = 0.0,
     ) -> None:
+        # struct fields restored from the state tuple arrive as Rows:
+        # normalise every element to a plain tuple
         self.code = code
-        self.positions = list(positions or [])
-        self.removed = list(removed or [])
-        self.last_ob = last_ob
-        self.watches = sorted(watches or [], key=lambda w: w[2])
-        self.ask_vols = list(ask_vols or [])
+        self.positions = [tuple(p) for p in positions or []]
+        self.removed = [tuple(r) for r in removed or []]
+        self.last_ob = (
+            (last_ob[0], last_ob[1], last_ob[2], [tuple(l) for l in last_ob[3] or []])
+            if last_ob is not None
+            else None
+        )
+        self.watches = sorted((tuple(w) for w in watches or []), key=lambda w: w[2])
+        self.ask_vols = [tuple(v) for v in ask_vols or []]
         self.first_seen_us = first_seen_us
-        self.trades = list(trades or [])
-        self.win_avgs = list(win_avgs or [])
+        self.trades = [tuple(t) for t in trades or []]
+        self.win_avgs = [tuple(a) for a in win_avgs or []]
         self.cond1_ts_us = cond1_ts_us
         self.cond2_ts_us = cond2_ts_us
         self.last_price = last_price if last_price is not None else 0.0
-        #: (code, ts_us, side, reason, signal_id, ref_price) emitted rows
+        #: (ts_us, side, reason, signal_id, ref_price) emitted rows
         self.signals: list[tuple] = []
+
+    @classmethod
+    def restore(cls, code: str, state: tuple | None) -> "SignalMachine":
+        """Resume from the persisted ``state`` tuple (None: a new key)."""
+        return cls(code, *state) if state is not None else cls(code)
+
+    @property
+    def state(self) -> tuple:
+        return (
+            self.positions,
+            self.removed,
+            self.last_ob,
+            self.watches,
+            self.ask_vols,
+            self.first_seen_us,
+            self.trades,
+            self.win_avgs,
+            self.cond1_ts_us,
+            self.cond2_ts_us,
+            self.last_price,
+        )
 
     # -- TTL'd recently-removed guard (W4) --------------------------------
     def evict_removed(self, now_ms: int) -> None:
@@ -172,7 +198,7 @@ class SignalMachine:
     # -- signal emission / buy-sell paths ---------------------------------
     def _emit(self, ts_us: int, side: str, reason: str, ref_price: float) -> str:
         sid = deterministic_signal_id(self.code, side, reason, ts_us)
-        self.signals.append((self.code, ts_us, side, reason, sid, ref_price))
+        self.signals.append((ts_us, side, reason, sid, ref_price))
         return sid
 
     def _ob_level_size(self, price: int) -> int:
@@ -204,10 +230,15 @@ class SignalMachine:
             self.cond2_ts_us = fire_us
             self._maybe_buy(fire_us)
 
-    def fire_due_watches(self, up_to_ms: int, fire_us: int) -> None:
+    def fire(self, up_to_ms: int) -> None:
+        """Fire every spoof watch due at or before ``up_to_ms``, at that
+        instant."""
         while self.watches and self.watches[0][2] <= up_to_ms:
             w = self.watches.pop(0)
-            self._fire_watch(w, fire_us)
+            self._fire_watch(w, up_to_ms * 1000)
+
+    def next_deadline_ms(self) -> int | None:
+        return self.watches[0][2] if self.watches else None
 
     # -- per-source handlers ----------------------------------------------
     def _on_orderbook(self, row) -> None:
@@ -295,7 +326,7 @@ class SignalMachine:
         """One unified-stream row, with the event-time timer interleave:
         spoof deadlines strictly earlier than the row fire first."""
         now_ms = int(row.ts_us) // 1000
-        self.fire_due_watches(now_ms - 1, (now_ms - 1) * 1000)
+        self.fire(now_ms - 1)
         self.evict_removed(now_ms)
         if row.source == "orderbook":
             self._on_orderbook(row)
@@ -305,6 +336,10 @@ class SignalMachine:
             self._on_feedback(row)
         elif row.source == "restore":
             self._on_restore(row)
+
+    @property
+    def output(self) -> list[tuple]:
+        return self.signals
 
     @property
     def empty(self) -> bool:
@@ -320,81 +355,6 @@ class SignalMachine:
             or self.cond1_ts_us is not None
             or self.cond2_ts_us is not None
         )
-
-
-def _machine_from_tuple(code: str, state: GroupState) -> SignalMachine:
-    if not state.exists:
-        return SignalMachine(code)
-    (pos, rem, ob, watches, vols, first, trades, avgs, c1, c2, lp) = state.get
-    return SignalMachine(
-        code,
-        positions=[tuple(p) for p in (pos or [])],
-        removed=[tuple(r) for r in (rem or [])],
-        last_ob=(
-            (ob[0], ob[1], ob[2], [tuple(l) for l in (ob[3] or [])])
-            if ob is not None
-            else None
-        ),
-        watches=[tuple(w) for w in (watches or [])],
-        ask_vols=[tuple(v) for v in (vols or [])],
-        first_seen_us=first,
-        trades=[tuple(t) for t in (trades or [])],
-        win_avgs=[tuple(a) for a in (avgs or [])],
-        cond1_ts_us=c1,
-        cond2_ts_us=c2,
-        last_price=lp if lp is not None else 0.0,
-    )
-
-
-def make_signal_generator():
-    """Build the applyInPandasWithState function."""
-
-    def process(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        m = _machine_from_tuple(key[0], state)
-
-        if state.hasTimedOut:
-            wm = state.getCurrentWatermarkMs()
-            m.fire_due_watches(wm, wm * 1000)
-        else:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            rows = rows.sort_values("ts_us", kind="mergesort")
-            for row in rows.itertuples(index=False):
-                m.process_row(row)
-            # End-of-batch drain (mirrors streaming/fraud.py): watches the
-            # watermark has already passed fire now — they would have been
-            # timeout callbacks had no rows arrived, and a leftover deadline
-            # <= WM would make setTimeoutTimestamp raise
-            # INVALID_TIMEOUT_TIMESTAMP. Late input rows (which
-            # applyInPandasWithState does NOT filter) can arm such watches.
-            wm = state.getCurrentWatermarkMs()
-            m.fire_due_watches(wm, wm * 1000)
-
-        state.update(
-            (
-                m.positions,
-                m.removed,
-                m.last_ob,
-                m.watches,
-                m.ask_vols,
-                m.first_seen_us,
-                m.trades,
-                m.win_avgs,
-                m.cond1_ts_us,
-                m.cond2_ts_us,
-                m.last_price,
-            )
-        )
-        if m.watches:
-            state.setTimeoutTimestamp(m.watches[0][2])
-        if m.signals:
-            yield pd.DataFrame(
-                m.signals,
-                columns=["code", "ts_us", "side", "reason", "signal_id", "ref_price"],
-            )
-
-    return process
 
 
 def unify_streams(
@@ -429,12 +389,77 @@ def unify_streams(
     return out
 
 
-def signal_stream(unified: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Run the unified stream through the SignalGenerator, keyed by code."""
-    return drop_late(unified, ts_col).groupBy("code").applyInPandasWithState(
-        make_signal_generator(),
-        outputStructType=SIGNAL_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+def signal_stream(unified: DataFrame) -> DataFrame:
+    """Run the unified stream (event time ``ts``) through the
+    SignalGenerator, keyed by code."""
+    return run_keyed(
+        drop_late(unified, "ts"), "code", SignalMachine, SIGNAL_SCHEMA, STATE_SCHEMA
     )
+
+
+# --- synthetic unified-stream rows (goldens, tests, CEP bench) -------------
+
+#: 2021-01-01T00:00:00Z, tz-aware so row epochs do not depend on the host
+#: timezone. ``ts_us`` is the absolute ``unix_micros(ts)`` that
+#: :func:`unify_streams` produces — the watermark's domain, so watch
+#: deadlines stay valid as event-time timeouts across micro-batches.
+SCENARIO_BASE = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
+SCENARIO_BASE_US = int(SCENARIO_BASE.timestamp()) * 1_000_000
+
+#: the ten steady book levels every synthetic scenario starts from
+STABLE_LEVELS = [(100 + i, 100) for i in range(10)]
+
+_PAYLOAD_COLS = (
+    "price", "volume", "total_ask", "total_bid", "levels",
+    "signal_id", "status", "reason", "entry_price",
+)
+
+
+def unified_row(code: str, sec: float, source: str, **payload) -> tuple:
+    """One :data:`UNIFIED_SCHEMA` row ``sec`` seconds after
+    :data:`SCENARIO_BASE`; payload columns not named are null."""
+    return (
+        code,
+        SCENARIO_BASE + datetime.timedelta(seconds=sec),
+        SCENARIO_BASE_US + int(sec * 1_000_000),
+        source,
+        *(payload.get(c) for c in _PAYLOAD_COLS),
+    )
+
+
+def ob_row(code: str, sec: float, total_ask: int, total_bid: int, levels) -> tuple:
+    return unified_row(
+        code, sec, "orderbook", total_ask=total_ask, total_bid=total_bid, levels=levels
+    )
+
+
+def trade_row(code: str, sec: float, price: float, volume: float) -> tuple:
+    return unified_row(code, sec, "trade", price=price, volume=volume)
+
+
+def restore_row(code: str, sec: float, signal_id: str, entry_price: float) -> tuple:
+    return unified_row(
+        code, sec, "restore",
+        signal_id=signal_id, reason=P_WAVE_REASON, entry_price=entry_price,
+    )
+
+
+def lifecycle_rows(code: str, t0: float = 0) -> list[tuple]:
+    """The canonical P-wave lifecycle, ``t0`` seconds after the base:
+    baseline books (warm-up) to 55 s, a trade, a density drop plus a big
+    new ask level at 56 s (spoof watch armed for 57.5 s), the level gone
+    at 57 s, the 58.2 s book the watch fires before (BUY), falling trade
+    volumes, and an imbalanced book at 65 s (SELL)."""
+    rows = [ob_row(code, t0 + 5 * k, 1000, 1000, STABLE_LEVELS) for k in range(12)]
+    rows += [
+        trade_row(code, t0 + 55.5, 50_000.0, 10.0),
+        ob_row(code, t0 + 56, 600, 1000,
+               [(100 + i, 30) for i in range(10)] + [(999, 300)]),
+        ob_row(code, t0 + 57, 600, 1000, [(100 + i, 60) for i in range(10)]),
+        ob_row(code, t0 + 58.2, 600, 1000, [(100 + i, 60) for i in range(10)]),
+        trade_row(code, t0 + 60, 50_100.0, 9.0),
+        trade_row(code, t0 + 62, 50_200.0, 1.0),
+        trade_row(code, t0 + 64, 50_300.0, 1.0),
+        ob_row(code, t0 + 65, 900, 300, [(100 + i, 90) for i in range(10)]),
+    ]
+    return rows

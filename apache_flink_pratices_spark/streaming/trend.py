@@ -13,8 +13,9 @@ every 1 s, a window exists only if it contains ≥1 trade) is exactly what
 "compare each window's average with the previous fired window's"
 judgment needs ordered state across window results, which cannot chain
 after a streaming aggregation in append mode. So the whole rule runs as
-ONE keyed stateful operator (``applyInPandasWithState`` — the same
-CoProcessFunction-shaped home the reference's own pseudo-code uses):
+ONE keyed stateful operator (the keyed runner,
+:func:`~apache_flink_pratices_spark.streaming.watermarks.run_keyed` — the
+same CoProcessFunction-shaped home the reference's own pseudo-code uses):
 per key, buffer trades within the sliding horizon, and when the
 watermark passes an aligned window end, fold that window's average into
 the (prev_avg, streak) ValueState, emitting a row whenever the streak
@@ -30,15 +31,11 @@ batch, so a key waking after a quiet day does constant work.
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from apache_flink_pratices_spark.domain.rules import CONSEC_DECREASES
-from apache_flink_pratices_spark.streaming.watermarks import drop_late
+from apache_flink_pratices_spark.streaming.watermarks import drop_late, run_keyed
 
 #: reference window geometry (시스템 아키텍처.md:644): 5 s size, 1 s slide
 TREND_WINDOW_MS = 5_000
@@ -64,12 +61,20 @@ class TrendMachine:
         streak: int = 0,
         last_end_ms: int | None = None,
     ) -> None:
-        self.buf = sorted(buf or [])
+        self.buf = sorted((int(t), float(v)) for t, v in buf or [])
         self.prev_avg = prev_avg
         self.streak = streak
         self.last_end_ms = last_end_ms
         #: (trend_ts_us, avg, prev_avg) emitted this batch
         self.events: list[tuple[int, float, float]] = []
+
+    @classmethod
+    def restore(cls, key, state: tuple | None) -> "TrendMachine":
+        """Resume from the persisted ``state`` tuple (None: a new key)."""
+        return cls(*state) if state is not None else cls()
+
+    def process_row(self, row) -> None:
+        self.add(int(row.ts_us), float(row.volume))
 
     def add(self, ts_us: int, vol: float) -> None:
         self.buf.append((int(ts_us), float(vol)))
@@ -109,7 +114,7 @@ class TrendMachine:
             # + window; once every window it can appear in has fired, the
             # trade is dead — evict exactly those, so a key that goes
             # permanently quiet drains to an empty buffer (and the
-            # processor can state.remove() it) instead of retaining up to
+            # runner removes its state) instead of retaining up to
             # one slide of dead trades forever
             self.buf = [
                 (ts, v)
@@ -136,70 +141,25 @@ class TrendMachine:
         return min(ends) if ends else None
 
     @property
+    def state(self) -> tuple:
+        return (self.buf, self.prev_avg, self.streak, self.last_end_ms)
+
+    @property
+    def output(self) -> list[tuple[int, float, float]]:
+        return self.events
+
+    @property
     def empty(self) -> bool:
         return not self.buf and self.prev_avg is None
 
 
-def make_trend_detector():
-    """Build the applyInPandasWithState function."""
-
-    def detect(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            buf, prev_avg, streak, last_end = state.get
-            m = TrendMachine(
-                [(int(t), float(v)) for t, v in (buf or [])],
-                prev_avg,
-                int(streak or 0),
-                last_end,
-            )
-        else:
-            m = TrendMachine()
-        code = key[0]
-
-        if not state.hasTimedOut:
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            for row in rows.itertuples(index=False):
-                m.add(int(row.ts_us), float(row.volume))
-        m.fire(state.getCurrentWatermarkMs())
-
-        if m.empty:
-            if state.exists:
-                state.remove()
-        else:
-            state.update((m.buf, m.prev_avg, m.streak, m.last_end_ms))
-            deadline = m.next_deadline_ms()
-            if deadline is not None and deadline > state.getCurrentWatermarkMs():
-                state.setTimeoutTimestamp(deadline)
-        if m.events:
-            yield pd.DataFrame(
-                [(code, ts_us, avg, prev) for ts_us, avg, prev in m.events],
-                columns=["code", "trend_ts_us", "avg_vol", "prev_avg"],
-            )
-
-    return detect
-
-
-def trend_stream(
-    trades: DataFrame,
-    ts_col: str = "ts",
-    code_col: str = "code",
-    volume_col: str = "volume",
-) -> DataFrame:
-    """Wire a streaming trade DataFrame through the trend detector."""
-    src = drop_late(trades, ts_col).select(
-        F.col(code_col).cast("string").alias("code"),
-        F.col(ts_col).alias("ts"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col(volume_col).cast("double").alias("volume"),
+def trend_stream(trades: DataFrame) -> DataFrame:
+    """Wire a streaming trade DataFrame (``code``, ``ts``, ``volume``)
+    through the trend detector."""
+    src = drop_late(trades, "ts").select(
+        F.col("code").cast("string").alias("code"),
+        F.col("ts").alias("ts"),
+        F.unix_micros(F.col("ts")).alias("ts_us"),
+        F.col("volume").cast("double").alias("volume"),
     )
-    return src.groupBy("code").applyInPandasWithState(
-        make_trend_detector(),
-        outputStructType=TREND_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return run_keyed(src, "code", TrendMachine, TREND_SCHEMA, STATE_SCHEMA)

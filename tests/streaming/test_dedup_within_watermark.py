@@ -8,7 +8,7 @@ from __future__ import annotations
 import datetime
 import os
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.watermarks import drop_late
 
 BASE = datetime.datetime(2021, 1, 1)
@@ -36,17 +36,7 @@ def test_replayed_signal_ids_dedupe(spark, tmp_path):
     deduped = drop_late(src, "ts", "10 seconds").dropDuplicatesWithinWatermark(
         ["signal_id"]
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_wm")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(deduped, "dedup_wm", os.path.join(str(tmp_path), "ckpt"))
     out = spark.sql("SELECT signal_id FROM dedup_wm").collect()
     ids = sorted(r.signal_id for r in out)
     assert ids == ["sig-a", "sig-b", "sig-c"], ids

@@ -3,13 +3,12 @@ query: the golden 12-tx corpus (3 alerts, accounts 3/4/3 — reference
 docs/fraud_detection_guide.md:86-100) plus the timer edge cases, including
 the consecutive-smalls stale-timer semantics the batch twin intentionally
 diverges on (docs/fraud_semantics.md). The shared FraudMachine is also
-pinned record-at-a-time, and the keyed processor is driven per micro-batch
+pinned record-at-a-time, and the keyed runner is driven per micro-batch
 without Spark to check that any batch split reproduces that replay."""
 
 from __future__ import annotations
 
 import datetime
-import math
 import os
 
 import pandas as pd
@@ -17,12 +16,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from apache_flink_pratices_spark.domain.rules import FraudMachine
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
-from apache_flink_pratices_spark.streaming.fraud import (
-    fraud_alert_stream,
-    make_detector,
-)
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
+from apache_flink_pratices_spark.streaming.fraud import ALERT_SCHEMA, fraud_alert_stream
+from apache_flink_pratices_spark.streaming.watermarks import keyed_step
 
+from tests.streaming.keyed_harness import run_micro_batches
 from tests.test_fraud_fixture import BASE, CORPUS, EDGE_CASES
 
 SCHEMA = "account_id long, ts timestamp, amount double"
@@ -45,22 +43,8 @@ def _run_stream(spark, tmpdir, txs, chunks=1, name="alerts"):
     src = stream_from_collection(
         spark, _rows(txs), SCHEMA, os.path.join(str(tmpdir), "in"), chunks=chunks
     )
-    alerts = fraud_alert_stream(src)
-    q = (
-        alerts.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(str(tmpdir), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return sorted(
-        (r.account_id, r.amount)
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
+    drain(fraud_alert_stream(src), name, os.path.join(str(tmpdir), "ckpt"))
+    return sorted((r.account_id, r.amount) for r in spark.table(name).collect())
 
 
 def test_golden_three_alerts_streaming(spark, tmp_path):
@@ -137,79 +121,19 @@ def test_machine_consecutive_smalls_stale_timer():
     assert _machine_replay(txs) == []
 
 
-# ---- the keyed processor, per micro-batch -------------------------------
-
-
-class _GroupState:
-    """Stand-in for pyspark's ``GroupState`` under ``EventTimeTimeout``:
-    the calls the detector makes, with Spark's rules that the timeout is
-    reset on every call and may not be set below the watermark."""
-
-    def __init__(self, value, watermark_ms: int, timed_out: bool) -> None:
-        self.value = value
-        self.watermark_ms = watermark_ms
-        self.hasTimedOut = timed_out
-        self.timeout_ms = None
-
-    @property
-    def exists(self) -> bool:
-        return self.value is not None
-
-    @property
-    def get(self):
-        return self.value
-
-    def update(self, value) -> None:
-        self.value = tuple(value)
-
-    def remove(self) -> None:
-        self.value = None
-
-    def getCurrentWatermarkMs(self) -> int:
-        return self.watermark_ms
-
-    def setTimeoutTimestamp(self, ms: int) -> None:
-        assert ms >= self.watermark_ms, (ms, self.watermark_ms)
-        self.timeout_ms = ms
+# ---- the keyed runner, per micro-batch ----------------------------------
 
 
 def _run_detector(txs, chunks):
-    """Split ``txs`` into ``chunks`` micro-batches and drive
-    ``make_detector`` the way ``applyInPandasWithState`` does under
-    ``drop_late``'s 0 s delay: batch N sees the max event time of batches
-    1..N-1 as its watermark; keys with rows run first, then every key
-    whose timeout the watermark passed runs with ``hasTimedOut``; one
-    final no-data batch runs at the last watermark."""
-    detect = make_detector()
+    """Split ``txs`` into ``chunks`` micro-batches and drive the keyed
+    runner's fraud step over them (see :func:`run_micro_batches`)."""
     rows = pd.DataFrame(
         [(acct, (BASE + off) * 1000, amt) for acct, off, amt in txs],
         columns=["account_id", "ts_us", "amount"],
     )
-    n = max(1, math.ceil(len(rows) / chunks))
-    batches = [rows.iloc[i : i + n] for i in range(0, len(rows), n)]
-    states: dict[int, tuple] = {}
-    timeouts: dict[int, int] = {}
-    alerts: list[tuple[int, float]] = []
-    wm = 0
-
-    def call(acct, pdfs, timed_out):
-        st = _GroupState(states.get(acct), wm, timed_out)
-        for out in detect((acct,), pdfs, st):
-            alerts.extend(zip(out["account_id"], out["amount"]))
-        for d, v in ((states, st.value), (timeouts, st.timeout_ms)):
-            if v is None:
-                d.pop(acct, None)
-            else:
-                d[acct] = v
-
-    for batch in batches + [rows.iloc[:0]]:
-        for acct, pdf in batch.groupby("account_id", sort=False):
-            call(int(acct), iter([pdf]), False)
-        for acct in [k for k, t in timeouts.items() if t < wm]:
-            call(acct, iter([]), True)
-        if len(batch):
-            wm = max(wm, int(batch["ts_us"].max()) // 1000)
-    return sorted((int(a), float(amt)) for a, amt in alerts)
+    step = keyed_step(FraudMachine, ALERT_SCHEMA)
+    alerts = run_micro_batches(step, rows, "account_id", chunks)
+    return sorted((int(a), float(amt)) for a, _, amt in alerts)
 
 
 def test_detector_state_survives_batch_boundaries():
@@ -239,7 +163,7 @@ def test_detector_state_survives_batch_boundaries():
 )
 def test_fraud_detector_matches_machine_replay(events, chunks):
     """Property: for any in-order corpus and any micro-batch split, the
-    keyed processor equals the record-at-a-time machine replay."""
+    keyed runner equals the record-at-a-time machine replay."""
     t, txs = 0, []
     for acct, gap, amount in events:
         t += gap  # strictly increasing -> nothing is late, no wm ties

@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.watermarks import drop_late
 
 BASE = datetime.datetime(2021, 1, 1)
@@ -40,17 +40,7 @@ def test_session_window_streaming(spark, tmp_path):
             "n_events",
         )
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sess")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(sessions, "sess", os.path.join(str(tmp_path), "ckpt"))
     rows = spark.sql("SELECT * FROM sess ORDER BY user_id, start_us").collect()
     base_us = int(BASE.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
     got = [(r.user_id, (r.start_us - base_us) // 1_000_000, r.n_events) for r in rows]

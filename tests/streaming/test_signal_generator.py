@@ -26,100 +26,43 @@ import datetime
 import os
 
 from apache_flink_pratices_spark.domain.rules import P_WAVE_REASON
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.operators.streaming_golden import _restore_scenario
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.signal_generator import (
+    SCENARIO_BASE,
+    SCENARIO_BASE_US,
+    STABLE_LEVELS,
     UNIFIED_SCHEMA,
     deterministic_signal_id,
+    ob_row,
+    restore_row,
     signal_stream,
+    trade_row,
+    unified_row,
     unify_streams,
 )
 
-BASE = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
 #: ts_us is the absolute unix_micros(ts) — the same domain the watermark
 #: lives in, so watch deadlines survive micro-batch boundaries (ADVICE r2)
-BASE_US = int(BASE.timestamp()) * 1_000_000
+BASE_US = SCENARIO_BASE_US
 CODE = "KRW-BTC"
 
 
 def _ts(sec: float) -> datetime.datetime:
-    return BASE + datetime.timedelta(seconds=sec)
-
-
-def _us(sec: float) -> int:
-    return BASE_US + int(sec * 1_000_000)
-
-
-def _ob(sec, total_ask, total_bid, levels):
-    return (
-        CODE, _ts(sec), _us(sec), "orderbook",
-        None, None, total_ask, total_bid, levels, None, None, None, None,
-    )
-
-
-def _trade(sec, price, volume):
-    return (
-        CODE, _ts(sec), _us(sec), "trade",
-        price, volume, None, None, None, None, None, None, None,
-    )
-
-
-def _restore(sec, signal_id, entry_price):
-    return (
-        CODE, _ts(sec), _us(sec), "restore",
-        None, None, None, None, None, signal_id, None, P_WAVE_REASON, entry_price,
-    )
-
-
-def _stable_levels(size=100):
-    return [(100 + i, size) for i in range(10)]
+    return SCENARIO_BASE + datetime.timedelta(seconds=sec)
 
 
 def _scenario():
-    rows = []
-    for k in range(12):  # t = 0..55: baseline books
-        rows.append(_ob(5 * k, 1000, 1000, _stable_levels(100)))
-    rows.append(_trade(55.5, 50_000.0, 10.0))
-    # density drop + spoof level appears
-    rows.append(_ob(56, 600, 1000, [(100 + i, 30) for i in range(10)] + [(999, 300)]))
-    # level vanishes
-    rows.append(_ob(57, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    # watch (deadline 57.5s) fires before this row → BUY
-    rows.append(_ob(58.2, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    # falling trade volumes → decreasing sliding averages
-    rows.append(_trade(60, 50_100.0, 9.0))
-    rows.append(_trade(62, 50_200.0, 1.0))
-    rows.append(_trade(64, 50_300.0, 1.0))
-    # imbalance → SELL
-    rows.append(_ob(65, 900, 300, [(100 + i, 90) for i in range(10)]))
-    # stale restore (rejected), then a sell-shaped book that must NOT fire
-    rows.append(_restore(70, "sid-restore-1", 42.0))
-    rows.append(_ob(72, 900, 300, [(100 + i, 90) for i in range(10)]))
-    # restore after TTL (accepted), then the same book fires a SELL
-    rows.append(_restore(100, "sid-restore-2", 42.0))
-    rows.append(_ob(102, 900, 300, [(100 + i, 90) for i in range(10)]))
-    return rows
+    return _restore_scenario(CODE)
 
 
 def _run(spark, tmpdir, rows, chunks, name):
     src = stream_from_collection(
         spark, rows, UNIFIED_SCHEMA, os.path.join(str(tmpdir), "in"), chunks=chunks
     )
-    # rows already carry source/ts_us; feed directly to the keyed processor
-    out = signal_stream(src)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(str(tmpdir), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return sorted(
-        spark.sql(f"SELECT * FROM {name}").collect(), key=lambda r: r.ts_us
-    )
+    # rows already carry source/ts_us; feed directly to the keyed runner
+    drain(signal_stream(src), name, os.path.join(str(tmpdir), "ckpt"))
+    return sorted(spark.table(name).collect(), key=lambda r: r.ts_us)
 
 
 def test_full_lifecycle(spark, tmp_path):
@@ -160,9 +103,9 @@ def test_no_buy_without_spoof(spark, tmp_path):
     """Density drop alone (cond1 without cond2) must not produce a BUY."""
     rows = []
     for k in range(12):
-        rows.append(_ob(5 * k, 1000, 1000, _stable_levels(100)))
-    rows.append(_ob(56, 600, 1000, [(100 + i, 60) for i in range(10)]))
-    rows.append(_ob(58, 600, 1000, [(100 + i, 60) for i in range(10)]))
+        rows.append(ob_row(CODE, 5 * k, 1000, 1000, STABLE_LEVELS))
+    rows.append(ob_row(CODE, 56, 600, 1000, [(100 + i, 60) for i in range(10)]))
+    rows.append(ob_row(CODE, 58, 600, 1000, [(100 + i, 60) for i in range(10)]))
     signals = _run(spark, tmp_path, rows, chunks=1, name="nobuy")
     assert signals == []
 
@@ -190,15 +133,13 @@ def test_feedback_failure_removes_position(spark, tmp_path):
     """A FAILED execution feedback closes the position: the subsequent
     sell-shaped book must not emit a SELL."""
     rows = [
-        _restore(0, "sid-x", 10.0),
-        _trade(1, 100.0, 9.0),
-        _trade(2, 100.0, 1.0),
-        _trade(3, 100.0, 1.0),
-        (
-            CODE, _ts(5), _us(5), "feedback",
-            None, None, None, None, None, "sid-x", "FAILED", P_WAVE_REASON, None,
-        ),
-        _ob(6, 900, 300, _stable_levels(90)),
+        restore_row(CODE, 0, "sid-x", 10.0),
+        trade_row(CODE, 1, 100.0, 9.0),
+        trade_row(CODE, 2, 100.0, 1.0),
+        trade_row(CODE, 3, 100.0, 1.0),
+        unified_row(CODE, 5, "feedback", signal_id="sid-x", status="FAILED",
+                    reason=P_WAVE_REASON),
+        ob_row(CODE, 6, 900, 300, [(100 + i, 90) for i in range(10)]),
     ]
     signals = _run(spark, tmp_path, rows, chunks=1, name="fb")
     assert signals == []
@@ -206,15 +147,13 @@ def test_feedback_failure_removes_position(spark, tmp_path):
 
 def test_feedback_filled_keeps_position(spark, tmp_path):
     rows = [
-        _restore(0, "sid-y", 10.0),
-        _trade(1, 100.0, 9.0),
-        _trade(2, 100.0, 1.0),
-        _trade(3, 100.0, 1.0),
-        (
-            CODE, _ts(5), _us(5), "feedback",
-            None, None, None, None, None, "sid-y", "FILLED", P_WAVE_REASON, None,
-        ),
-        _ob(6, 900, 300, _stable_levels(90)),
+        restore_row(CODE, 0, "sid-y", 10.0),
+        trade_row(CODE, 1, 100.0, 9.0),
+        trade_row(CODE, 2, 100.0, 1.0),
+        trade_row(CODE, 3, 100.0, 1.0),
+        unified_row(CODE, 5, "feedback", signal_id="sid-y", status="FILLED",
+                    reason=P_WAVE_REASON),
+        ob_row(CODE, 6, 900, 300, [(100 + i, 90) for i in range(10)]),
     ]
     signals = _run(spark, tmp_path, rows, chunks=1, name="fbok")
     assert [(r.side,) for r in signals] == [("SELL",)]

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.watermarks import drop_late
 
 BASE = datetime.datetime(2021, 1, 1)
@@ -57,17 +57,7 @@ def test_interval_join_emits_only_in_window_pairs(spark, tmp_path):
         & (p.p_ts <= o.o_ts + F.expr("INTERVAL 30 SECONDS")),
     ).select(o.order_id, "amount", "method", "o_ts", "p_ts")
 
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(joined, "ssj", os.path.join(str(tmp_path), "ckpt"))
     rows = spark.sql("SELECT order_id, amount, method FROM ssj ORDER BY order_id").collect()
     got = [(r.order_id, r.amount, r.method) for r in rows]
     assert got == [(1, 100.0, "card"), (9, 1.0, "card")], got

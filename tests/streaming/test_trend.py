@@ -6,15 +6,18 @@ windows over trades, avg volume, ValueState comparison)."""
 
 from __future__ import annotations
 
-import datetime
-
-from hypothesis import given, settings
+import pandas as pd
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from apache_flink_pratices_spark.streaming.trend import (
+    TREND_SCHEMA,
     TREND_WINDOW_MS,
     TrendMachine,
 )
+from apache_flink_pratices_spark.streaming.watermarks import keyed_step
+
+from tests.streaming.keyed_harness import run_micro_batches
 
 B_MS = 1_609_459_200_000
 
@@ -117,6 +120,40 @@ def test_watermark_stepping_never_changes_the_outcome(events, steps):
     _, once = _replay(events, [60_000])
     _, stepped = _replay(events, sorted(steps) + [60_000])
     assert once == stepped
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["KRW-A", "KRW-B", "KRW-C"]),
+            st.integers(min_value=1, max_value=2_500),  # gap ms
+            st.sampled_from([1.0, 2.0, 5.0, 9.0, 12.0]),
+        ),
+        min_size=1,
+        max_size=25,
+    ),
+    st.integers(min_value=2, max_value=6),
+)
+# the last batch's watermark (3 s) lands exactly on KRW-A's pending window
+# end, whose average (9 < 10.5 < 12) completes the trend: it must fire
+# through the timeout as it does in the single batch
+@example([("KRW-A", 500, 12.0), ("KRW-A", 1_000, 9.0), ("KRW-A", 1_000, 6.0),
+          ("KRW-B", 500, 1.0)], 4)
+def test_runner_batch_split_matches_single_batch(events, chunks):
+    """Property: for any split into micro-batches of a strictly increasing
+    multi-key trade corpus, the keyed runner emits the same trend rows as
+    one batch. Rows carry the window end, not the firing time, so when a
+    window fires under the global watermark cannot change them."""
+    t, rows = 0, []
+    for code, gap, vol in events:
+        t += gap  # strictly increasing -> nothing is late
+        rows.append((code, (B_MS + t) * 1000, vol))
+    trades = pd.DataFrame(rows, columns=["code", "ts_us", "volume"])
+    step = keyed_step(TrendMachine, TREND_SCHEMA)
+    assert sorted(run_micro_batches(step, trades, "code", chunks)) == sorted(
+        run_micro_batches(step, trades, "code", 1)
+    )
 
 
 def test_stream_trend_golden_matches_oracle(spark):

@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.windows import tumbling_agg
 
 BASE = datetime.datetime(2021, 1, 1)
@@ -35,16 +35,7 @@ def test_sliding_stream_fanout(spark, tmp_path):
         src, "ts", ["etype"], [F.count("*").alias("n")],
         size="10 seconds", slide="5 seconds",
     )
-    q = (
-        out.writeStream.format("memory").queryName("slide")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt2"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(out, "slide", os.path.join(str(tmp_path), "ckpt2"))
     rows = spark.sql("SELECT * FROM slide WHERE etype = 'click'").collect()
     t0 = int(BASE.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
     got = {(r.win_start_us - t0) // 1_000_000: r.n for r in rows}
@@ -63,16 +54,7 @@ def test_tumbling_stream_matches_batch(spark, tmp_path):
         src, "ts", ["etype"], [F.count("*").alias("n"), F.sum("v").alias("total")],
         size="10 seconds",
     )
-    q = (
-        out.writeStream.format("memory").queryName("tumble")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(out, "tumble", os.path.join(str(tmp_path), "ckpt"))
     rows = spark.sql("SELECT * FROM tumble").collect()
     got = {(r.win_start_us, r.etype): (r.n, r.total) for r in rows}
     # append mode only emits finalized windows (watermark passed window end):
@@ -89,17 +71,11 @@ def test_window_golden_drops_exactly_the_post_emission_late_row(spark):
     """W3: the golden corpus's last-file late row must be dropped BY THE
     ENGINE (numRowsDroppedByWatermark), not merely absent from output —
     and the in-state late merge means no other row may be dropped."""
-    import datetime
-    import os
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from apache_flink_pratices_spark.operators.streaming_golden import _WINDOW_ROWS
-    from apache_flink_pratices_spark.sources.collection import stream_from_collection
-    from apache_flink_pratices_spark.streaming.windows import tumbling_agg
 
-    base = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
+    base =datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc)
     rows = [
         (k, base + datetime.timedelta(seconds=off), v) for k, off, v in _WINDOW_ROWS
     ]
@@ -113,17 +89,7 @@ def test_window_golden_drops_exactly_the_post_emission_late_row(spark):
             [F.count("*").alias("cnt"), F.sum("v").alias("total")],
             size="30 seconds", delay="10 seconds",
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("wm_drop_probe")
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q = drain(agg, "wm_drop_probe", os.path.join(d, "ckpt"))
         dropped = sum(
             op.get("numRowsDroppedByWatermark", 0)
             for p in q.recentProgress

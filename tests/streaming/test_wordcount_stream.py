@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import os
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.wordcount import wordcount_stream
 
 LINES_B1 = [("hello world",), ("hello spark",)]
@@ -23,17 +23,7 @@ def test_update_mode_running_totals(spark, tmp_path):
         chunks=3,
     )
     counts = wordcount_stream(src)
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("wc")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(counts, "wc", os.path.join(str(tmp_path), "ckpt"), "update")
     rows = spark.sql("SELECT * FROM wc").collect()
     # update mode re-emits a key each batch it changes: 'hello' appears in
     # multiple batches — the running-total emission log of Flink's reduce.

@@ -1,8 +1,9 @@
 """Batch-split equivalence for the shared state machines: processing a
 key's events in ONE machine must equal processing a prefix, persisting
-the state variables, and resuming a fresh machine from them — which is
-exactly what micro-batches do at every batch boundary. If any transition state failed to round-trip
-through the persisted attributes, these properties would catch it."""
+the state tuple the keyed runner persists, and restoring a fresh machine
+from it — which is exactly what micro-batches do at every batch boundary.
+If any transition state failed to round-trip through the persisted
+tuple, these properties would catch it."""
 
 from __future__ import annotations
 
@@ -50,8 +51,8 @@ def test_fraud_split_equivalence(txs, data):
     for ts_ms, amt in txs[:split]:
         m1.on_event(ts_ms, ts_ms * 1000, amt)
     alerts.extend(m1.alerts)
-    # persist exactly the state the processor stores, resume a new machine
-    m2 = FraudMachine(m1.flag, m1.latest, list(m1.armed))
+    # persist exactly the state the runner stores, resume a new machine
+    m2 = FraudMachine.restore(None, m1.state)
     for ts_ms, amt in txs[split:]:
         m2.on_event(ts_ms, ts_ms * 1000, amt)
     alerts.extend(m2.alerts)
@@ -117,15 +118,7 @@ def test_signal_split_equivalence(rows, data):
     m1 = SignalMachine("K")
     for r in rows[:split]:
         m1.process_row(r)
-    m2 = SignalMachine(
-        "K",
-        positions=list(m1.positions), removed=list(m1.removed),
-        last_ob=m1.last_ob, watches=list(m1.watches),
-        ask_vols=list(m1.ask_vols), first_seen_us=m1.first_seen_us,
-        trades=list(m1.trades), win_avgs=list(m1.win_avgs),
-        cond1_ts_us=m1.cond1_ts_us, cond2_ts_us=m1.cond2_ts_us,
-        last_price=m1.last_price,
-    )
+    m2 = SignalMachine.restore("K", m1.state)
     for r in rows[split:]:
         m2.process_row(r)
     assert m1.signals + m2.signals == whole.signals
