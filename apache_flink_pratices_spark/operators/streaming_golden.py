@@ -62,15 +62,14 @@ def _run_memory_stream(
     chunks: int = 2,
     output_mode: str = "append",
 ) -> DataFrame:
-    # A handful of golden rows doesn't need the session's (often 200)
-    # shuffle partitions — each micro-batch would schedule that many state
-    # tasks; narrow via the shared helper for the run. Pin UTC like
-    # io.load does: the corpora carry naive datetimes whose epoch
-    # conversion must not depend on the host session's timezone.
-    from apache_flink_pratices_spark.session import narrowed_shuffle_partitions
+    # Run at the engine width, not the host session's (often 200); see
+    # engine_shuffle_width. Pin UTC like io.load does: the corpora
+    # carry naive datetimes whose epoch conversion must not depend on the
+    # host session's timezone.
+    from apache_flink_pratices_spark.session import engine_shuffle_width
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    with narrowed_shuffle_partitions(spark, 8):
+    with engine_shuffle_width(spark):
         with tempfile.TemporaryDirectory(prefix="afp-golden-") as d:
             src = stream_from_collection(
                 spark, rows, schema, os.path.join(d, "in"), chunks=chunks
@@ -495,10 +494,10 @@ def stream_join_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = [(i, ts(s), a) for i, s, a in _JOIN_ORDERS]
     payments = [(i, ts(s), m) for i, s, m in _JOIN_PAYMENTS]
-    from apache_flink_pratices_spark.session import narrowed_shuffle_partitions
+    from apache_flink_pratices_spark.session import engine_shuffle_width
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    with narrowed_shuffle_partitions(spark, 8):
+    with engine_shuffle_width(spark):
         with tempfile.TemporaryDirectory(prefix="afp-golden-") as d:
             o = drop_late(
                 stream_from_collection(
@@ -836,7 +835,7 @@ def stream_decon_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         _build_bloom,
     )
     from apache_flink_pratices_spark.operators.dedup import shingles_of
-    from apache_flink_pratices_spark.session import narrowed_shuffle_partitions
+    from apache_flink_pratices_spark.session import engine_shuffle_width
 
     # bloom + exact-verify set built ONCE from the static eval split
     eval_docs = spark.createDataFrame(_DECON_EVAL_TEXTS, "doc_id long, text string")
@@ -870,7 +869,7 @@ def stream_decon_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.extend((r["doc_id"], r["n_shingles"]) for r in clean.collect())
 
-    with narrowed_shuffle_partitions(spark, 8):
+    with engine_shuffle_width(spark):
         with tempfile.TemporaryDirectory(prefix="afp-golden-") as d:
             src = stream_from_collection(
                 spark,

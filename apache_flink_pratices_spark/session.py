@@ -4,13 +4,17 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the box's
 ``os.cpu_count()``); the same configuration is what we would ship to a
 1000-executor cluster, with only the master URL and memory sizing changing:
 
-- AQE on (runtime coalescing, skew-join splitting, dynamic join selection) —
-  at 100 TB the static ``shuffle.partitions`` is only an upper bound; AQE
-  right-sizes post-shuffle partitions from actual map output statistics.
+- One shuffle and state width, ``_cpus()``. AQE (runtime coalescing,
+  skew-join splitting, dynamic join selection) right-sizes batch shuffles
+  below it from map output statistics; a streaming checkpoint keeps the
+  state width it was first started with. The width is measured on a
+  4-core box only; on 32 cores a state width of 16 drained the fraud and
+  CEP streams about twice as fast as 32 (``docs/scale_notes.md``).
 - Session timezone pinned to UTC: the reference mandates tz-aware UTC
   timestamps everywhere (reference ``src/data_ingestion/domain/models/
   market_data.py:147-239``).
 - Arrow enabled for every pandas interchange (pandas UDFs, toPandas).
+- Driver memory ``$AFP_DRIVER_MEMORY`` (default ``4g``) for local masters.
 """
 
 from __future__ import annotations
@@ -31,31 +35,29 @@ import contextlib
 
 
 @contextlib.contextmanager
-def narrowed_shuffle_partitions(spark: SparkSession, n: int):
-    """Narrow ``spark.sql.shuffle.partitions`` for one run, restore after.
+def engine_shuffle_width(spark: SparkSession):
+    """Set ``spark.sql.shuffle.partitions`` to the engine width
+    ``_cpus()`` for one run, narrower or wider than the session's, and
+    restore the session's own width after.
 
-    The state-store partition count of a streaming query is fixed at the
-    conf's value when the query starts; for a handful of keys the
-    session's batch width (often 32-200) is pure per-batch overhead —
-    task scheduling, Python-worker round trips, per-partition state
-    commits. One definition for the three users (the golden stream
-    queries at 8, the bench streaming paths at 16) so the save/restore
-    discipline cannot drift per copy (review r8)."""
+    The registered golden stream queries use this: a caller may run them
+    in a plain session at Spark's default 200 partitions, where each
+    micro-batch would schedule 200 state tasks and commits for a handful
+    of keys."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_cpus()))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def tune(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
+def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine configuration to any builder (also used on the driver's
     own session via ``spark.conf`` where dynamically settable)."""
-    sp = shuffle_partitions or max(_cpus(), 2) * 2
     return (
         builder.config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", str(_cpus()))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -104,5 +106,5 @@ def get_spark(app_name: str = "afp-spark", master: str | None = None) -> SparkSe
     builder = SparkSession.builder.appName(app_name).master(master)
     builder = tune(builder)
     if master.startswith("local"):
-        builder = builder.config("spark.driver.memory", os.environ.get("AFP_DRIVER_MEMORY", "16g"))
+        builder = builder.config("spark.driver.memory", os.environ.get("AFP_DRIVER_MEMORY", "4g"))
     return builder.getOrCreate()

@@ -35,11 +35,6 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Spark's static partition-overwrite mode would TRUNCATE every partition
-#: of the table before writing; dynamic scopes the overwrite to the
-#: partitions present in the written data — the backfill contract.
-_OVERWRITE_MODE = ("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
 _MAX_RECORDS_PER_FILE = 5_000_000
 
 
@@ -59,22 +54,16 @@ def write_partitioned(
     partition on disk is untouched (dynamic partition overwrite). Run the
     same input twice and the second run is a no-op in effect.
     """
-    spark = df.sparkSession
-    key, want = _OVERWRITE_MODE
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, want)
-    try:
-        (
-            df.write.mode("overwrite")
-            .option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    # static overwrite would TRUNCATE every partition of the table; dynamic
+    # replaces only those present in ``df``. As a writer option it beats the
+    # session conf and leaves that conf as the caller set it.
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def foreach_batch_writer(

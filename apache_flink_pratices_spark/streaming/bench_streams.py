@@ -13,7 +13,9 @@ Each run drives a REAL Structured Streaming query end to end (file
 source → keyed shuffle → Python state machine → sink) and returns
 ``(events_per_sec, n_output_rows)``; callers assert ``n_output_rows > 0``
 so the measured rate always reflects genuine state-machine work, never an
-empty pipeline.
+empty pipeline. Every run keeps the session's one shuffle width
+(``session.tune``) as its state-partition count: the bench measures the
+width production runs at.
 """
 
 from __future__ import annotations
@@ -35,28 +37,6 @@ from apache_flink_pratices_spark.streaming.signal_generator import (
     signal_stream,
     trade_row,
 )
-
-#: state partitions for the measured streaming queries. The state-store
-#: partition count is a property of the QUERY (it sizes per-batch task
-#: scheduling, Python-worker round trips, and state commits), not of the
-#: session's batch shuffle width: at 64 partitions the CEP path spends
-#: ~2/3 of its wall on per-partition state machinery for a few hundred
-#: keys (measured r8: 8.9k ev/s at 32 partitions → 24.1k at 16; the
-#: trailing timer-only micro-batch pays the same per-partition tax at
-#: zero input rows). 16 keeps 2× headroom over the box's busiest
-#: measured partition while bounding the fixed overhead; at cluster
-#: scale the equivalent knob is sizing state partitions to key
-#: cardinality × executor count, exactly as the golden stream queries
-#: narrow to 8 for their handful of keys.
-STREAM_BENCH_PARTITIONS = 16
-
-
-def _stream_partitions(spark: SparkSession, n: int = STREAM_BENCH_PARTITIONS):
-    """Bench default over the shared narrow/restore helper."""
-    from apache_flink_pratices_spark.session import narrowed_shuffle_partitions
-
-    return narrowed_shuffle_partitions(spark, n)
-
 
 FRAUD_SCHEMA = "account_id long, ts timestamp, amount double"
 
@@ -80,25 +60,25 @@ def _drain(
     name: str,
 ) -> tuple[float, int]:
     """Run ``stream_fn`` over the parquet in ``in_dir`` into a memory sink
-    named ``name``; returns ``(seconds to drain the input, output rows)``."""
-    with _stream_partitions(spark):
-        src = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            stream_fn(src)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        t0 = time.perf_counter()
-        try:
-            q.processAllAvailable()
-            # measure BEFORE stop(): query teardown (thread join, checkpoint
-            # close) is not event-processing work (review r7)
-            wall = time.perf_counter() - t0
-        finally:
-            q.stop()
+    named ``name`` at the session's shuffle width (its state partitions);
+    returns ``(seconds to drain the input, output rows)``."""
+    src = spark.readStream.schema(schema).parquet(in_dir)
+    q = (
+        stream_fn(src)
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+        .outputMode("append")
+        .start()
+    )
+    t0 = time.perf_counter()
+    try:
+        q.processAllAvailable()
+        # measure BEFORE stop(): query teardown (thread join, checkpoint
+        # close) is not event-processing work (review r7)
+        wall = time.perf_counter() - t0
+    finally:
+        q.stop()
     n_out = spark.sql(f"SELECT COUNT(*) AS n FROM {name}").collect()[0].n
     return wall, int(n_out)
 

@@ -21,7 +21,7 @@ def _rows(txs):
     ]
 
 
-def _run_once(spark, in_dir, ckpt, out_dir):
+def _start(spark, in_dir, ckpt, out_dir):
     # file sink (not memory): the fault-tolerant sink family that supports
     # restart-from-checkpoint
     src = spark.readStream.schema(SCHEMA).parquet(in_dir)
@@ -37,6 +37,11 @@ def _run_once(spark, in_dir, ckpt, out_dir):
         q.processAllAvailable()
     finally:
         q.stop()
+    return q
+
+
+def _run_once(spark, in_dir, ckpt, out_dir):
+    _start(spark, in_dir, ckpt, out_dir)
     return spark.read.parquet(out_dir).collect()
 
 
@@ -78,3 +83,37 @@ def test_restart_does_not_reprocess(spark, tmp_path):
     # (no reprocessing, no duplicates)
     out2 = _run_once(spark, in_dir, ckpt, out_dir)
     assert len(out2) == 1
+
+
+def test_restart_keeps_the_checkpoints_state_width(spark, tmp_path):
+    """A checkpoint keeps the state width it was started with: Spark
+    restores ``spark.sql.shuffle.partitions`` from the offset log, so a
+    checkpoint written at another width (an older default, another box)
+    restarts safely under today's session width, with its state intact."""
+    in_dir = os.path.join(str(tmp_path), "in")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    out_dir = os.path.join(str(tmp_path), "out")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "2")
+        spark.createDataFrame(
+            _rows([(70, 0, 0.50)]), SCHEMA
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+        assert _run_once(spark, in_dir, ckpt, out_dir) == []
+
+        spark.conf.set(key, "4")
+        spark.createDataFrame(
+            _rows([(70, 30_000, 900.00)]), SCHEMA
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+        q = _start(spark, in_dir, ckpt, out_dir)
+    finally:
+        spark.conf.set(key, prev)
+    widths = {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    }
+    assert widths == {2}
+    out = spark.read.parquet(out_dir).collect()
+    assert [(r.account_id, r.amount) for r in out] == [(70, 900.00)]

@@ -10,12 +10,16 @@ from __future__ import annotations
 
 import datetime
 import os
+import time
 
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.streaming import StreamingQueryListener
 
 from apache_flink_pratices_spark.domain.rules import FraudMachine
+from apache_flink_pratices_spark.operators.streaming_golden import stream_fraud_golden
+from apache_flink_pratices_spark.session import _cpus
 from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.fraud import ALERT_SCHEMA, fraud_alert_stream
 from apache_flink_pratices_spark.streaming.watermarks import keyed_step
@@ -87,6 +91,42 @@ def test_timeout_fires_across_batches(spark, tmp_path):
     ]
     got = _run_stream(spark, tmp_path, txs, chunks=3, name="timeout")
     assert got == []
+
+
+class _StateWidths(StreamingQueryListener):
+    def __init__(self):
+        self.widths = []
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.widths += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def test_golden_runs_at_the_engine_width_in_a_plain_session(spark):
+    """The registered fraud golden, run in a plain session at Spark's
+    default 200 partitions, keeps its state at the engine width and leaves
+    the session's width as it found it."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    listener = _StateWidths()
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set(key, "200")
+        stream_fraud_golden(spark, "")
+        assert spark.conf.get(key) == "200"
+        # listener events are delivered asynchronously
+        deadline = time.time() + 20
+        while not listener.widths and time.time() < deadline:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, prev)
+    assert listener.widths and set(listener.widths) == {_cpus()}
 
 
 # ---- the shared state machine, record-at-a-time -------------------------

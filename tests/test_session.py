@@ -1,7 +1,7 @@
 """The session factory configures Spark and nothing else: tuning a builder
 must not touch this interpreter's import state or the environment that
-Spark's Python workers inherit, and the local core count defaults to the
-box's."""
+Spark's Python workers inherit, the local core count defaults to the
+box's, and that core count is the engine's one shuffle width."""
 
 from __future__ import annotations
 
@@ -30,3 +30,9 @@ def test_cpus_falls_back_to_the_box(monkeypatch):
     assert session._cpus() == os.cpu_count()
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert session._cpus() == os.cpu_count()
+
+
+def test_tune_sets_the_shuffle_width_to_the_core_count(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    builder = session.tune(SparkSession.Builder())
+    assert builder._options["spark.sql.shuffle.partitions"] == str(session._cpus()) == "3"
