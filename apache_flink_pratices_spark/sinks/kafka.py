@@ -45,13 +45,12 @@ PRODUCER_OPTIONS: dict[str, str] = {
 }
 
 
-def route_topic(type_col: Column, routing: dict[str, str] | None = None) -> Column:
+def route_topic(type_col: Column) -> Column:
     """Topic column from the event-type discriminator; unknown types get a
     NULL topic, which the caller should filter (the reference logs & skips
     unknown types at parse time, upbit_connector.py:148-156)."""
-    routing = routing or TOPIC_BY_TYPE
     expr: Column | None = None
-    for etype, topic in routing.items():
+    for etype, topic in TOPIC_BY_TYPE.items():
         expr = (
             F.when(type_col == etype, F.lit(topic))
             if expr is None
@@ -66,7 +65,6 @@ def to_kafka_frame(
     key_col: str,
     value_col: str,
     type_col: str | None = None,
-    routing: dict[str, str] | None = None,
 ) -> DataFrame:
     """Shape rows into Kafka wire columns (key, value[, topic]).
 
@@ -78,7 +76,7 @@ def to_kafka_frame(
     ]
     out = df
     if type_col is not None:
-        out = out.withColumn("topic", route_topic(F.col(type_col), routing)).filter(
+        out = out.withColumn("topic", route_topic(F.col(type_col))).filter(
             F.col("topic").isNotNull()
         )
         cols.append(F.col("topic"))

@@ -54,7 +54,7 @@ def read_kafka_stream(spark: SparkSession, brokers: str, **kwargs) -> DataFrame:
     return kafka_reader(spark, brokers, **kwargs).load()
 
 
-def decode_kafka_value(raw: DataFrame, value_schema, ts_col: str = "event_time") -> DataFrame:
+def decode_kafka_value(raw: DataFrame, value_schema) -> DataFrame:
     """Kafka wire columns → typed rows: JSON-decode ``value`` against
     ``value_schema``, keep the partitioning key and Kafka metadata."""
     return raw.select(

@@ -39,6 +39,7 @@ from apache_flink_pratices_spark.streaming.signal_generator import (
 )
 
 FRAUD_SCHEMA = "account_id long, ts timestamp, amount double"
+FRAUD_ACCOUNTS = 500
 
 
 def write_input(spark: SparkSession, in_dir: str, rows: list[tuple], schema: str) -> int:
@@ -83,15 +84,16 @@ def _drain(
     return wall, int(n_out)
 
 
-def fraud_rows(n_tx: int, n_accounts: int = 500) -> list[tuple]:
-    """Deterministic fraud input. Amounts alternate small/large per
-    account so ValueState flips and timers arm/fire — the worst-case
-    per-event state path, not a no-op passthrough."""
+def fraud_rows(n_tx: int) -> list[tuple]:
+    """Deterministic fraud input over ``FRAUD_ACCOUNTS`` accounts. Amounts
+    alternate small/large per account so ValueState flips and timers
+    arm/fire — the worst-case per-event state path, not a no-op
+    passthrough."""
     return [
         (
-            i % n_accounts,
+            i % FRAUD_ACCOUNTS,
             SCENARIO_BASE + datetime.timedelta(milliseconds=i),
-            0.5 if (i // n_accounts) % 2 == 0 else 700.0,
+            0.5 if (i // FRAUD_ACCOUNTS) % 2 == 0 else 700.0,
         )
         for i in range(n_tx)
     ]

@@ -10,8 +10,8 @@ that inflated later queries' minima by 20-50 % with zero code change
 carry the old->new re-baseline table); v2 numbers are fresh-session
 isolation numbers, so round-over-round deltas are attributable to code
 again. This process stays Spark-free and just orchestrates subprocesses
-sequentially (never in parallel: concurrent local[32] JVMs contend and
-inflate every number ~3x).
+sequentially (never in parallel: concurrent local[$SPARK_GRAFT_CPUS] JVMs
+each take every core, contend and inflate every number ~3x).
 
 Output contract (VERDICT r5 #1 — the driver captures only the LAST 2000
 chars of stdout and parses the last line, so the final line must stay
@@ -30,6 +30,10 @@ compact): two JSON lines are printed —
    each headline row cost ~8 summary chars it never used — the
    comparator flags on min+spread, medians are a detail-level signal).
    tests/test_bench_contract.py pins its length budget.
+
+Progress goes to stderr, never stdout: each query's result dict
+({"name", "min", "median", "spread_pct", "runs", "rows"}) as one flushed
+JSON line as soon as its subprocess returns.
 
 Since round 11 (VERDICT r10 #3: the driver's 2000-char stdout tail
 truncated the r10 detail line mid-object), the full {"detail", "summary"}
@@ -135,6 +139,9 @@ def main() -> None:
             ["-m", "apache_flink_pratices_spark.bench_query", name],
             f"bench query {name}",
         )
+        # one flushed JSON line per query on stderr: a pass cut short by
+        # an outer timeout still leaves a record of the queries it timed
+        print(json.dumps(r), file=sys.stderr, flush=True)
         timings[name] = r["min"]
         medians[name] = r["median"]
         spreads[name] = r["spread_pct"]
@@ -270,21 +277,10 @@ def _box_context() -> dict:
 
 
 def _detail_round() -> int:
+    # main() has already rejected a non-integer override before measuring
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env:
-        # a malformed override (e.g. 'r12') must not crash the bench
-        # AFTER the ~15-minute measurement already ran and lose the
-        # detail artifact — fall back to the glob derivation with a
-        # warning instead (ADVICE r11). Validated again up front in
-        # main() so interactive misuse still fails before the timed run.
-        try:
-            return int(env)
-        except ValueError:
-            print(
-                f"WARNING: ignoring non-numeric SPARK_GRAFT_ROUND={env!r}; "
-                "deriving the round from committed BENCH_r*.json instead",
-                file=sys.stderr,
-            )
+        return int(env)
     import glob
     import re
 

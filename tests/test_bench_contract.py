@@ -6,147 +6,30 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
-import tempfile
-import threading
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# --- background bench drives (r15, VERDICT r14 #5) ----------------------
-# The two bench.py CLI drives below are the suite's largest lines (~470 s
-# + ~60 s of a ~30-minute serial wall) and print NOTHING while they run —
-# the driver's r14 verify window died exactly there (VERIFY_r14's
-# test_tail ends at the test collected immediately before the full
-# drive). tests/conftest.py starts both subprocesses in background
-# threads once collection has finished and moves the two joining tests
-# to the END of the session, so the drives overlap the serial suite
-# instead of adding two silent multi-minute gaps. This is safe because
-# the drives are sf0.001/local[4] SHAPE checks: no assertion in this
-# file reads a timing magnitude (spread/median relations are pure
-# arithmetic identities of the emitted JSON), the wall-clock-gated
-# modules wait for the drives to exit, and the drives write only under
-# their own tempdir. Running this file (or one test) alone still works:
-# the conftest hook launches whatever subset was selected.
 
-
-class _Drive:
-    """One background bench.py subprocess + the thread that reaps it."""
-
-    def __init__(self, fn):
-        self.fn = fn
-        self.proc = None
-        self.killed = False
-        self.lock = threading.Lock()
-        #: detail directories the drive created; removed at session end
-        self.tmpdirs: list[str] = []
-        self.result = None
-        self.error = None
-        self.thread = threading.Thread(target=self._run, daemon=True)
-        self.thread.start()
-
-    def _run(self):
-        try:
-            self.result = self.fn(self)
-        except BaseException as e:  # noqa: BLE001 — re-raised in join()
-            self.error = e
-
-    def join(self):
-        self.thread.join(timeout=1800)
-        if self.thread.is_alive():
-            self.kill()
-            raise TimeoutError("bench drive did not finish within 1800 s")
-        if self.error is not None:
-            raise self.error
-        return self.result
-
-    def kill(self):
-        # the flag covers a kill that lands before Popen returned:
-        # attach() then kills the new process itself
-        with self.lock:
-            self.killed = True
-            p = self.proc
-        if p is not None and p.poll() is None:
-            p.kill()
-
-    def attach(self, p):
-        with self.lock:
-            self.proc = p
-            killed = self.killed
-        if killed:
-            p.kill()
-
-    def mkdtemp(self, prefix):
-        d = tempfile.mkdtemp(prefix=prefix)
-        self.tmpdirs.append(d)
-        return d
-
-
-_DRIVES: dict[str, _Drive] = {}
-
-
-def launch_drives(names):
-    """Called by tests/conftest.py once collection (and -k/-m
-    deselection) has finished, for the selected drive tests; idempotent
-    per name."""
-    fns = {"full": _drive_full, "skip": _drive_skip}
-    for name in names:
-        if name not in _DRIVES:
-            _DRIVES[name] = _Drive(fns[name])
-
-
-def wait_for_drives():
-    """Block until every launched drive has exited. Called before the
-    wall-clock-gated tests so they never time a gate beside a bench JVM;
-    a drive's result or error is left for its joining test to assert."""
-    for d in _DRIVES.values():
-        d.thread.join(timeout=1800)
-
-
-def kill_stray_drives():
-    """Session-finish safety net: never leave an orphan bench JVM burning
-    CPU after pytest exits (e.g. -x aborted the run before the join),
-    and never leave their detail directories behind."""
-    for d in _DRIVES.values():
-        d.kill()
-        for t in d.tmpdirs:
-            shutil.rmtree(t, ignore_errors=True)
-
-
-def _join(name, fn):
-    if name not in _DRIVES:  # collected without the conftest hook
-        _DRIVES[name] = _Drive(fn)
-    return _DRIVES[name].join()
-
-
-def _run_bench(drive: _Drive, env: dict):
-    p = subprocess.Popen(
+def _run_bench(env: dict):
+    return subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
+        capture_output=True,
         text=True,
         env=env,
         cwd=REPO,
+        timeout=1500,
     )
-    drive.attach(p)
-    try:
-        stdout, stderr = p.communicate(timeout=1500)
-    except subprocess.TimeoutExpired:
-        p.kill()
-        raise
-    return subprocess.CompletedProcess(p.args, p.returncode, stdout, stderr)
 
 
-def _drive_full(drive: _Drive):
+def test_bench_cli_contract(tmp_path):
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_CPUS"] = "4"
     env["SPARK_GRAFT_STREAM_BENCH"] = "small"  # keep the smoke fast
     env["SPARK_GRAFT_BENCH_RUNS"] = "2"  # v2 pays a JVM start per query
-    # r15 (VERDICT r14 #5: the suite must fit the driver's verify
-    # window; this test was its single largest line at ~620 s): one
-    # warm-up instead of three — the contract under test is the
+    # one warm-up instead of three — the contract under test is the
     # subprocess orchestration + JSON shape, not the timing plateau —
     # and the smoke-scale knob shrinks the untimed planted evidence
     # corpora (the driver's own full runs set neither, so committed
@@ -159,15 +42,9 @@ def _drive_full(drive: _Drive):
     env["SPARK_GRAFT_BENCH_QUERIES"] = "wordcount,fraud_alerts"
     # detail artifact (VERDICT r10 #3): subset runs write it only to an
     # explicit override path, never the repo-root round artifact
-    detail_path = os.path.join(
-        drive.mkdtemp("afp_bench_full_"), "BENCH_DETAIL_smoke.json"
-    )
+    detail_path = str(tmp_path / "BENCH_DETAIL_smoke.json")
     env["SPARK_GRAFT_BENCH_DETAIL"] = detail_path
-    return _run_bench(drive, env), detail_path
-
-
-def test_bench_cli_contract():
-    out, detail_path = _join("full", _drive_full)
+    out = _run_bench(env)
     assert out.returncode == 0, out.stderr[-2000:]
     lines = out.stdout.strip().splitlines()
     doc = json.loads(lines[-1])
@@ -179,6 +56,14 @@ def test_bench_cli_contract():
     # the driver tail-captures 2000 chars and parses the LAST line: the
     # summary must survive that window with slack (BENCH_r05 parsed=null)
     assert len(lines[-1]) <= 1500, len(lines[-1])
+    # per-query progress: bench.py prints each query's result to stderr
+    # as soon as its subprocess returns, so a pass cut short by an outer
+    # timeout still leaves a record of the queries it finished
+    progress = [
+        json.loads(ln) for ln in out.stderr.splitlines() if ln.startswith("{")
+    ]
+    assert [p["name"] for p in progress] == list(doc["queries"])
+    assert all(p["min"] == doc["queries"][p["name"]] for p in progress)
     detail = json.loads(lines[-2])
     assert set(detail["rows"]) == set(doc["queries"])
     assert set(detail["queries_median"]) == set(doc["queries"])
@@ -265,7 +150,13 @@ def test_bench_cli_contract():
     assert "ann_lsh_clustered_candidate_fraction" in persisted["detail"]
 
 
-def _drive_skip(drive: _Drive):
+def test_bench_subset_skip_tail(tmp_path):
+    """SPARK_GRAFT_STREAM_BENCH=skip with a query subset (round 13): the
+    extras and streaming subprocesses are omitted — the fast path for a
+    targeted batch probe — and the summary/detail shape stays parseable
+    with an empty streaming section. A FULL run must never skip (the
+    knob is honored only alongside SPARK_GRAFT_BENCH_QUERIES), which is
+    why the guard lives on `subset` in bench.main."""
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_CPUS"] = "4"
@@ -273,21 +164,9 @@ def _drive_skip(drive: _Drive):
     env["SPARK_GRAFT_BENCH_RUNS"] = "2"
     env["SPARK_GRAFT_BENCH_WARMUPS"] = "1"  # shape test, not a timing one
     env["SPARK_GRAFT_BENCH_QUERIES"] = "wordcount"
-    detail_path = os.path.join(
-        drive.mkdtemp("afp_bench_skip_"), "BENCH_DETAIL_skip.json"
-    )
+    detail_path = str(tmp_path / "BENCH_DETAIL_skip.json")
     env["SPARK_GRAFT_BENCH_DETAIL"] = detail_path
-    return _run_bench(drive, env), detail_path
-
-
-def test_bench_subset_skip_tail():
-    """SPARK_GRAFT_STREAM_BENCH=skip with a query subset (round 13): the
-    extras and streaming subprocesses are omitted — the fast path for a
-    targeted batch probe — and the summary/detail shape stays parseable
-    with an empty streaming section. A FULL run must never skip (the
-    knob is honored only alongside SPARK_GRAFT_BENCH_QUERIES), which is
-    why the guard lives on `subset` in bench.main."""
-    out, detail_path = _join("skip", _drive_skip)
+    out = _run_bench(env)
     assert out.returncode == 0, out.stderr[-2000:]
     doc = json.loads(out.stdout.strip().splitlines()[-1])
     assert doc["queries"] and doc["streaming"] == {}

@@ -73,19 +73,23 @@ def test_producer_options_mirror_reference():
 
 def test_decode_kafka_value_schema(spark):
     # simulate the kafka wire schema batch-side and decode
+    ts = __import__("datetime").datetime(2021, 1, 1)
     raw = spark.createDataFrame(
         [
-            (
-                b"KRW-BTC",
-                b'{"code":"KRW-BTC","price":100.5}',
-                TRADES_TOPIC,
-                0,
-                7,
-                __import__("datetime").datetime(2021, 1, 1),
-            )
+            (b"KRW-BTC", b'{"code":"KRW-BTC","price":100.5}', TRADES_TOPIC, 0, 7, ts),
+            # a truncated payload: today it decodes to null value columns
+            # while the key and the Kafka coordinates survive
+            (b"KRW-ETH", b'{"code":"KRW-ETH","pri', TRADES_TOPIC, 1, 8, ts),
         ],
         "key binary, value binary, topic string, partition int, offset long, timestamp timestamp",
     )
     out = decode_kafka_value(raw, "code string, price double")
-    row = out.collect()[0]
+    row, bad = out.orderBy("offset").collect()
     assert row.code == "KRW-BTC" and row.price == 100.5 and row.topic == TRADES_TOPIC
+    assert bad.code is None and bad.price is None
+    assert (bad.key, bad.topic, bad.partition, bad.offset) == (
+        "KRW-ETH",
+        TRADES_TOPIC,
+        1,
+        8,
+    )
