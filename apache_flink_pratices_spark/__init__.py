@@ -17,7 +17,11 @@ pushdown/pruning/join selection; pure business rules live framework-free in
 and then always Arrow-batched.
 """
 
+from apache_flink_pratices_spark.deploy import keep_unchanged_zip_directories
 from apache_flink_pratices_spark.session import get_spark
+
+# every Python worker that unpickles an engine function imports this package
+keep_unchanged_zip_directories()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -541,8 +541,9 @@ def stream_join_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: sit in batch 5 — 20+s behind the watermark with their state already
 #: gone — where the built-in aggregate drops them outright (no
 #: re-admission; contrast dropDuplicatesWithinWatermark's documented
-#: re-admission in _DEDUP_ROWS, and the keyed runner's Python state
-#: operator, which always delivers late rows — see streaming/watermarks.py). Admitted, they
+#: re-admission in _DEDUP_ROWS. The keyed runner's Python state operator
+#: drops them too; it only delivers rows late by less than a micro-batch
+#: — see streaming/watermarks.py). Admitted, they
 #: would flip window 0 to a=4 and window 1's ranking. The spacers' own
 #: never-closed windows are filtered out of the result by the cutoff.
 _TOPK_ROWS = [

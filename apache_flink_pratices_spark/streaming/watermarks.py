@@ -28,14 +28,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 def drop_late(df: DataFrame, ts_col: str, delay: str = "0 seconds") -> DataFrame:
     """Apply the engine's late-data policy via a watermark.
 
-    What the watermark actually enforces differs by operator (ADVICE r2):
-    built-in stateful ops (windowed aggregation, stream-stream joins,
-    dropDuplicatesWithinWatermark) DO drop rows older than the watermark,
-    but ``applyInPandasWithState`` delivers late rows to the processor —
-    there the watermark only drives event-time timeouts and state-cleanup
-    timing. :func:`run_keyed` therefore implements the reference's
-    late-data stance itself: rows are walked in event-time order (late
-    rows re-enter the timeline deterministically), and every timer the
+    Every stateful operator, ``applyInPandasWithState`` included, drops
+    the rows at or behind the *previous* micro-batch's watermark and counts
+    them in ``numRowsDroppedByWatermark``. A row between that watermark and
+    the current one (late by less than a micro-batch) still reaches the
+    processor, so :func:`run_keyed` finishes the reference's late-data
+    stance itself: each key's rows are walked in event-time order (such a
+    row re-enters the timeline deterministically), and every timer the
     watermark has reached fires at end of batch, so a late row can never
     leave a stale timer armed."""
     return df.withWatermark(ts_col, delay)

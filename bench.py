@@ -79,9 +79,18 @@ def _subprocess_json(args: list[str], what: str, timeout: int = 1800) -> dict:
         cwd=REPO,
         timeout=timeout,
     )
-    if sp.returncode != 0:
-        raise RuntimeError(f"{what} subprocess failed:\n{sp.stderr[-2000:]}")
-    return json.loads(sp.stdout.strip().splitlines()[-1])
+    lines = sp.stdout.strip().splitlines()
+    if sp.returncode == 0 and lines:
+        try:
+            return json.loads(lines[-1])
+        except json.JSONDecodeError:
+            pass
+    stdout_tail = "\n".join(lines[-5:])
+    raise RuntimeError(
+        f"{what} subprocess gave no JSON result (exit {sp.returncode})\n"
+        f"--- last stdout lines:\n{stdout_tail}\n"
+        f"--- last stderr:\n{sp.stderr[-2000:]}"
+    )
 
 
 def main() -> None:

@@ -93,6 +93,31 @@ def test_timeout_fires_across_batches(spark, tmp_path):
     assert got == []
 
 
+def test_late_rows_dropped_behind_the_previous_watermark_delivered_after_it(spark, tmp_path):
+    """Spark drops (and counts) rows at or behind the PREVIOUS batch's
+    watermark; a row between that and the current watermark still reaches
+    the runner, which walks it in event order (0 s delay, one file a batch).
+    File 2's small for account 70 is one file behind (10 s < watermark
+    20 s) and, walked before the 30 s large, arms the flag that alerts.
+    File 3's large for account 60 is two files behind (15 s <= file 1's
+    watermark 20 s): delivered, it would alert on the flag armed at 0 s."""
+    txs = [
+        (60, 0, 0.50), (61, 20_000, 5.0),  # file 1 -> watermark 20 s
+        (70, 30_000, 900.0), (70, 10_000, 0.50),  # file 2 runs at wm 20 s
+        (60, 15_000, 900.0), (61, 40_000, 5.0),  # file 3 drops at <= 20 s
+    ]
+    src = stream_from_collection(
+        spark, _rows(txs), SCHEMA, os.path.join(str(tmp_path), "in"), chunks=3
+    )
+    q = drain(fraud_alert_stream(src), "late", os.path.join(str(tmp_path), "ckpt"))
+    got = sorted((r.account_id, r.amount) for r in spark.table("late").collect())
+    dropped = sum(
+        op.numRowsDroppedByWatermark for p in q.recentProgress for op in p.stateOperators
+    )
+    assert got == [(70, 900.00)]
+    assert dropped == 1
+
+
 class _StateWidths(StreamingQueryListener):
     def __init__(self):
         self.widths = []

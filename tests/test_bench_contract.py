@@ -9,6 +9,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -317,3 +319,26 @@ def test_bench_rejects_arguments():
     )
     assert out.returncode != 0
     assert "takes no arguments" in out.stderr
+
+
+def test_subprocess_json_names_a_non_json_result():
+    """A bench subprocess that exits 0 but whose last stdout line is not
+    JSON fails with what it printed, not a bare JSONDecodeError."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    child = [
+        "-c",
+        "import sys; print('{\"ok\": 1}'); print('trailing note'); "
+        "print('worker warning', file=sys.stderr)",
+    ]
+    with pytest.raises(RuntimeError) as err:
+        bench._subprocess_json(child, "streaming", timeout=60)
+    msg = str(err.value)
+    assert "streaming" in msg and "exit 0" in msg
+    assert "trailing note" in msg and "worker warning" in msg
+    assert bench._subprocess_json(["-c", "print('{}')"], "probe", timeout=60) == {}
