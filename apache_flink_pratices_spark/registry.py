@@ -2,35 +2,23 @@
 
 Every implemented operator from SURVEY.md §2 registers a :class:`QuerySpec`
 here; ``__spark_entry__.queries()`` / ``oracle_sql()`` are thin views over
-this registry. Specs without ``oracle`` are genuinely non-SQL-expressible
-(custom stateful streaming) and get the driver's weaker rows-only check.
+this registry. Every spec carries DuckDB oracle SQL; the streaming
+goldens carry theirs as VALUES literals of the pinned output.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, NamedTuple
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-#: §2-critical queries that must stay inside the driver's checked window
-#: EVERY round, even when they already have a recent green row (the driver
-#: checks the FIRST N entries of ``queries()``; everything §2-anchoring
-#: belongs there every round, not just on rotation). Superset of the
-#: ``S2_ANCHORS`` guard in ``tests/test_registry_order.py`` (VERDICT r4 #1:
-#: anchors must sort into the window UNCONDITIONALLY, not as a same-round
-#: tie-breaker, or a fresh driver row rotates them out).
-#: Re-anchor on code change: a query whose semantics change goes into
-#: ``CRITICAL`` for one round, so the change carries a fresh gate row.
+#: §2-critical queries, first in ``queries()`` in this order, so a driver
+#: that checks only the first N entries always checks them. Pinned against
+#: the ``S2_ANCHORS`` copy in ``tests/test_registry_order.py``.
 CRITICAL = (
     # -- streaming goldens (W1-W8 flagship hard signals) --
     "stream_fraud_golden",  # W1/W2 keyed state machine + timers
@@ -51,64 +39,11 @@ CRITICAL = (
 )
 
 
-def _row_is_green(row: object) -> bool:
-    """A driver row counts as checked ONLY when fully green.
-
-    Rows with any ``*_match`` false or ``err`` set mean the driver ran the
-    query and it FAILED; treating those as 'checked' would rotate a
-    known-failing query out of the window instead of re-checking it first
-    (ADVICE r4 medium)."""
-    return (
-        isinstance(row, dict)
-        and row.get("rows_match") is True
-        and row.get("schema_match") is True
-        and row.get("hash_match") is True
-        and not row.get("err")
-    )
-
-
-class DriverCheck(NamedTuple):
-    """One query's driver-gate history across the CORRECTNESS files."""
-
-    latest: int  # newest round with any driver row
-    green: bool  # that newest row was fully green
-    last_green: int  # newest round with a green row; -1 = never green
-
-
-def _driver_checks(root: str | None = None) -> dict[str, DriverCheck]:
-    """query name -> its :class:`DriverCheck`.
-
-    Read in one pass from the ``CORRECTNESS_r*.json`` files the driver
-    commits into the repo root each round. Queries absent from every file
-    have never been driver-checked; a query whose only rows are failing
-    has ``last_green == -1``, so it sorts with the never-checked ones."""
-    checks: dict[str, DriverCheck] = {}
-    for path in glob.glob(os.path.join(root or _REPO_ROOT, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            green = _row_is_green(row)
-            chk = checks.get(name, DriverCheck(-1, False, -1))
-            if rnd > chk.latest:
-                chk = chk._replace(latest=rnd, green=green)
-            if green:
-                chk = chk._replace(last_green=max(chk.last_green, rnd))
-            checks[name] = chk
-    return checks
-
-
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # ANSI SQL for DuckDB over the same parquet views
+    oracle: str  # ANSI SQL for DuckDB over the same parquet views
     doc: str = ""
     bench: bool = False  # include in bench.py headline set
     tags: tuple[str, ...] = field(default_factory=tuple)
@@ -119,7 +54,7 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 def register(
     name: str,
-    oracle: str | None,
+    oracle: str,
     doc: str = "",
     bench: bool = False,
     tags: tuple[str, ...] = (),
@@ -143,62 +78,20 @@ def get_spec(name: str) -> QuerySpec:
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Every registered spec, in driver-gate priority order.
-
-    The driver's correctness gate checks the FIRST ~50 entries of
-    ``queries()`` (dict iteration order), so ordering is part of the
-    contract. Priority groups, each sorted by last GREEN round (never
-    green = -1, first) then registration order:
-
-    1. queries whose LATEST driver row is failing — a known-red query
-       must be re-checked before anything else (ADVICE r4);
-    2. the §2-critical anchors (:data:`CRITICAL`) — in the window EVERY
-       round, unconditionally, even with a fresh green row (VERDICT r4:
-       a freshness-first sort rotated the flagship stream goldens out
-       the moment the driver committed their green rows);
-    3. everything else — never-checked first, then stalest-green first.
-
-    With 14 anchors the remaining ~36 window slots rotate the stale
-    backlog through in ≤2 rounds. The history is re-read from the
-    CORRECTNESS files the driver commits, so this adapts each round.
-
-    Overflow: when criticals + never-checked together exceed the ~50-slot
-    window (a burst of newly registered queries), the LAST-registered
-    never-checked queries spill past the window for one round. That is the
-    self-healing choice: next round the spilled queries are the only
-    never-checked entries, so they sort to the very front of group 3 and
-    get checked first. ``tests/test_registry_order.py`` pins both the
-    no-overflow invariant and this exact spill policy."""
+    """Every registered spec: :data:`CRITICAL` first, in that order, then
+    the rest in registration order."""
     # Import operator modules for their registration side effects.
     from apache_flink_pratices_spark import operators  # noqa: F401
 
-    checks = _driver_checks()
-    crit = set(CRITICAL)
-    reg_idx = {n: i for i, n in enumerate(_REGISTRY)}
-
-    def key(name: str) -> tuple[int, int, int]:
-        chk = checks.get(name)
-        if chk is not None and not chk.green:
-            group = 0  # latest driver row failing: re-check first
-        elif name in crit:
-            group = 1
-        else:
-            group = 2
-        return (group, chk.last_green if chk else -1, reg_idx[name])
-
-    return {n: _REGISTRY[n] for n in sorted(_REGISTRY, key=key)}
+    rest = [n for n in _REGISTRY if n not in CRITICAL]
+    return {n: _REGISTRY[n] for n in (*CRITICAL, *rest)}
 
 
 def bench_specs() -> dict[str, QuerySpec]:
     """The bench=True specs in REGISTRATION order.
 
-    Deliberately decoupled from :func:`all_specs`'s driver-gate rotation:
-    bench timings are position-in-session sensitive (whole-stage-codegen
-    JIT and parquet-reader warm-up make an identical plan ~1.4× slower as
-    the 2nd query of a session than the 20th — measured in
-    docs/scale_notes.md), so round-over-round comparability requires an
-    order that never changes when CORRECTNESS files rotate the gate
-    window."""
+    Kept apart from :func:`all_specs`'s CRITICAL-first order, so the
+    bench artifact's layout does not move when the anchor set does."""
     from apache_flink_pratices_spark import operators  # noqa: F401
 
     return {n: s for n, s in _REGISTRY.items() if s.bench}
@@ -314,4 +207,4 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {n: s.oracle for n, s in all_specs().items() if s.oracle is not None}
+    return {n: s.oracle for n, s in all_specs().items()}

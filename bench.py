@@ -35,12 +35,11 @@ Progress goes to stderr, never stdout: each query's result dict
 ({"name", "min", "median", "spread_pct", "runs", "rows"}) as one flushed
 JSON line as soon as its subprocess returns.
 
-Since round 11 (VERDICT r10 #3: the driver's 2000-char stdout tail
-truncated the r10 detail line mid-object), the full {"detail", "summary"}
-payload is ALSO written to ``BENCH_DETAIL_r{N}.json`` at the repo root —
-the committed machine-readable record of the scale evidence. N = newest
-committed BENCH_r{N} + 1 (override: SPARK_GRAFT_ROUND); smoke runs with a
-query subset write only to SPARK_GRAFT_BENCH_DETAIL, if set.
+A 2000-char stdout tail can cut the detail line mid-object, so the full
+{"detail", "summary"} payload is ALSO written to a file: ``BENCH_DETAIL.json``
+at the repo root, or SPARK_GRAFT_BENCH_DETAIL if set. Smoke runs with a
+query subset write only to SPARK_GRAFT_BENCH_DETAIL, if set, so they never
+overwrite a full run's record.
 
 Each query runs exactly $SPARK_GRAFT_BENCH_RUNS times (default 4) after
 $SPARK_GRAFT_BENCH_WARMUPS (default 3) untimed warm-up executions in its
@@ -102,15 +101,8 @@ def main() -> None:
             "bench.py takes no arguments; configure via env "
             "(SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_RUNS, "
             "SPARK_GRAFT_BENCH_WARMUPS, SPARK_GRAFT_BENCH_QUERIES, "
-            "SPARK_GRAFT_BENCH_DETAIL, SPARK_GRAFT_ROUND, "
-            "SPARK_GRAFT_STREAM_BENCH). See the module docstring."
-        )
-    # fail fast on a malformed round override — BEFORE the ~15-minute
-    # measurement, not in the artifact write after it (ADVICE r11)
-    rnd_env = os.environ.get("SPARK_GRAFT_ROUND")
-    if rnd_env and not rnd_env.isdigit():
-        raise SystemExit(
-            f"SPARK_GRAFT_ROUND must be a plain integer, got {rnd_env!r}"
+            "SPARK_GRAFT_BENCH_DETAIL, SPARK_GRAFT_STREAM_BENCH). "
+            "See the module docstring."
         )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4"))
@@ -253,12 +245,9 @@ def main() -> None:
     print(json.dumps(detail))
     # The driver keeps only the LAST ~2000 chars of stdout, which
     # truncated the r10 detail line mid-object (VERDICT r10 #3) — so the
-    # bench persists its own full-detail artifact, committed per round.
-    # Round = newest committed BENCH_r{N} + 1 (the driver writes
-    # BENCH_r{N} at the END of round N); SPARK_GRAFT_ROUND overrides.
-    # Subset smoke runs (the pytest contract drive) must not overwrite
-    # the round's real artifact: they write to SPARK_GRAFT_BENCH_DETAIL
-    # if set, else skip.
+    # bench persists its own full-detail artifact. Subset smoke runs (the
+    # pytest contract drive) must not overwrite a full run's artifact:
+    # they write to SPARK_GRAFT_BENCH_DETAIL if set, else skip.
     override = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
     if override or not subset:
         _write_detail_artifact({"detail": detail, "summary": summary}, override)
@@ -285,26 +274,8 @@ def _box_context() -> dict:
     return ctx
 
 
-def _detail_round() -> int:
-    # main() has already rejected a non-integer override before measuring
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    import glob
-    import re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0) + 1
-
-
 def _write_detail_artifact(payload: dict, path: str | None = None) -> None:
-    path = path or os.path.join(
-        REPO, f"BENCH_DETAIL_r{_detail_round():02d}.json"
-    )
+    path = path or os.path.join(REPO, "BENCH_DETAIL.json")
     with open(path, "w") as f:
         json.dump(payload, f, indent=1, sort_keys=True)
         f.write("\n")

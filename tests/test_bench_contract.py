@@ -202,9 +202,9 @@ def test_run_query_times_exactly_bench_runs_samples(monkeypatch):
     assert out["runs"] == 3 and out["rows"] == 7
 
 
-def test_bench_detail_round_derivation(monkeypatch):
-    """The round-artifact name derives from the newest committed
-    BENCH_r{N} (+1), overridable via SPARK_GRAFT_ROUND."""
+def test_bench_detail_default_path(tmp_path, monkeypatch):
+    """A full run (no SPARK_GRAFT_BENCH_DETAIL) writes its detail artifact
+    to one fixed file, BENCH_DETAIL.json at the repo root."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -212,18 +212,11 @@ def test_bench_detail_round_derivation(monkeypatch):
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    import glob
-    import re
-
-    newest = max(
-        int(m.group(1))
-        for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-    )
-    assert bench._detail_round() == newest + 1
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "33")
-    assert bench._detail_round() == 33
+    assert bench.REPO == REPO
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    bench._write_detail_artifact({"summary": {}})
+    with open(tmp_path / "BENCH_DETAIL.json") as f:
+        assert json.load(f) == {"summary": {}}
 
 
 def test_bench_summary_line_budget():
@@ -255,7 +248,7 @@ def test_bench_summary_line_budget():
     # Budget rationale: the driver captures 2000 chars and parses the LAST
     # line; 1600 worst-case (every min 9999.999 — real lines run shorter)
     # leaves 400 chars of hard slack. Since round 11 the full detail
-    # rides its own committed BENCH_DETAIL_r{N}.json, so the stdout tail
+    # rides its own BENCH_DETAIL.json, so the stdout tail
     # carries ONLY this summary. Round 13 restructured per ADVICE r12
     # instead of raising again: the per-query `med` array moved to the
     # detail artifact (detail.queries_median — the comparator flags on
@@ -266,29 +259,13 @@ def test_bench_summary_line_budget():
     assert len(line) <= 1600, (len(line), "compact summary over budget")
 
 
-def test_bench_order_is_registration_order_not_rotation(tmp_path, monkeypatch):
-    """Bench timings are position-in-session sensitive (JIT warm-up:
-    the same plan measures ~1.4x slower as the 2nd query of a session
-    than the 20th), so the bench sequence must be IMMUTABLE across
-    rounds — in particular it must not move when the driver's
-    CORRECTNESS files rotate the correctness-gate ordering
-    (the r3->r5 fraud_alerts 'regression' was exactly this)."""
-    import json as _json
+def test_bench_order_is_registration_order_not_rotation():
+    """The bench runs its headline queries in registration order, not in
+    ``all_specs()``'s CRITICAL-first order, so the artifact layout stays
+    put when the anchor set changes."""
+    from apache_flink_pratices_spark.registry import _REGISTRY, bench_specs
 
-    import apache_flink_pratices_spark.registry as reg
-
-    baseline = list(reg.bench_specs())
-    # simulate a wildly different check history: every bench query green
-    # last round except one
-    rows = {n: {"rows_match": True, "schema_match": True, "hash_match": True,
-                "spark_rows": 1, "oracle_rows": 1, "err": None}
-            for n in baseline[:-1]}
-    (tmp_path / "CORRECTNESS_r09.json").write_text(_json.dumps(rows))
-    monkeypatch.setattr(reg, "_REPO_ROOT", str(tmp_path))
-    assert list(reg.bench_specs()) == baseline
-    # while the gate ordering DID change under the same history
-    gate = list(reg.all_specs())
-    assert gate != baseline or len(gate) != len(baseline)
+    assert list(bench_specs()) == [n for n, s in _REGISTRY.items() if s.bench]
 
 
 def test_box_context_fields():

@@ -1,5 +1,5 @@
 """Replicates the driver's correctness gate locally: every registered query
-with an oracle must match DuckDB exactly (row count, column names, values)
+must match its DuckDB oracle exactly (row count, column names, values)
 on sf0.001. Float aggregates are expected to be *bit-identical* thanks to
 the decimal-sum determinism playbook (functions/numeric.py)."""
 
@@ -16,7 +16,7 @@ from apache_flink_pratices_spark.registry import all_specs, released_caches
 from tests.conftest import SF_SMOKE
 
 SPECS = all_specs()
-ORACLE_SPECS = sorted(n for n, s in SPECS.items() if s.oracle is not None)
+ORACLE_SPECS = sorted(SPECS)
 
 
 def _duck(sf_dir: str):

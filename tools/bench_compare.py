@@ -10,7 +10,7 @@ ATTRIBUTABLE movers instead of eyeballing 31 floats:
   python tools/bench_compare.py BENCH_r10.json BENCH_DETAIL_r11.json
 
 Accepts either artifact shape per side: a driver ``BENCH_r{N}.json``
-(``{"parsed": summary}``) or a bench-written ``BENCH_DETAIL_r{N}.json``
+(``{"parsed": summary}``) or a bench-written ``BENCH_DETAIL.json``
 (``{"summary": ..., "detail": ...}``).
 
 A query is flagged only when |delta| exceeds BOTH sides' measured

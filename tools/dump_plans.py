@@ -1,12 +1,13 @@
-"""Dump EXPLAIN FORMATTED plans for registered queries into plans/<round>/ (SPARK_GRAFT_PLANS_ROUND, default r15).
+"""Dump EXPLAIN FORMATTED plans for registered queries into plans/.
 
 Usage:
     python tools/dump_plans.py <suffix> <query> [<query> ...]
     python tools/dump_plans.py before corpus_pipeline_e2e dedup_simhash
 
-Writes plans/<round>/<query>_<suffix>.txt for each query — the optimization
-round's committed evidence that plan-shape claims (Exchange counts, join
-strategies, PushedFilters, Python-boundary nodes) match the code.
+Writes plans/<query>_<suffix>.txt for each query — the committed evidence
+that plan-shape claims (Exchange counts, join strategies, PushedFilters,
+Python-boundary nodes) match the code. plans/r14/ and plans/r15/ hold
+earlier dumps.
 
 The frame is BUILT but not executed: explain() runs no jobs, though some
 query builders run bounded driver-side jobs (artifact builds, training
@@ -40,9 +41,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    out_dir = os.path.join(
-        REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15")
-    )
+    out_dir = os.path.join(REPO, "plans")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("afp-dump-plans")
     spark.sparkContext.setLogLevel("WARN")
