@@ -38,21 +38,6 @@ def sql_md5_long(expr: str, seed: int | None = None) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 14)) AS BIGINT)"
 
 
-def source_fingerprint(*objs) -> str:
-    """md5 of the given callables' source text — the mechanical
-    impl-version component for write-once artifacts (ADVICE r12): any
-    edit to the code that derives an artifact (even a comment) changes
-    the key and misses the cache, so a semantic change can never
-    silently serve stale data because someone forgot a manual version
-    bump. The cost of the safe direction — a cosmetic edit also
-    rebuilds — is one artifact build."""
-    import hashlib
-    import inspect
-
-    src = "\n".join(inspect.getsource(o) for o in objs)
-    return hashlib.md5(src.encode()).hexdigest()[:10]
-
-
 def signal_id(*cols: Column) -> Column:
     """sha256 over '|'-joined parts — deterministic, replay-idempotent."""
     return F.sha2(F.concat_ws("|", *[c.cast("string") for c in cols]), 256)

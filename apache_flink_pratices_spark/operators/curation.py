@@ -45,17 +45,17 @@ Oracle-checked batch operators:
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from apache_flink_pratices_spark.functions.hashing import (
-    md5_long,
-    source_fingerprint as _source_fingerprint,
-    sql_md5_long,
-)
+from apache_flink_pratices_spark import artifacts
+from apache_flink_pratices_spark.functions.hashing import md5_long, sql_md5_long
 from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.operators import text as _text  # registers
+from apache_flink_pratices_spark.operators import dedup as _dedup
 from apache_flink_pratices_spark.operators.dedup import (
     SQL_SIMHASH_PAIR_CTES,
     _SQL_SHS,
@@ -145,98 +145,39 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     raise RuntimeError(f"connected_components did not converge in {CC_MAX_ROUNDS} rounds")
 
 
-#: Artifact-key version for the CC label artifact. The ``cc-v2`` prefix is
-#: the human-readable epoch; the suffix is derived FROM THE SOURCE of
-#: :func:`connected_components` and :func:`neardup_cluster_labels` (set
-#: right after the latter's definition below), so a semantic edit
-#: mechanically misses the artifact key instead of trusting a manual bump
-#: (ADVICE r12; ``dedup._NEARDUP_IMPL_VERSION`` still rides in the key so
-#: a pair-pipeline change also invalidates labels derived from it).
-_CC_LABELS_IMPL_VERSION = "cc-v2-unset"  # finalized below neardup_cluster_labels
-
-
 def neardup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for EVERY document: connected components over
-    the verified simhash pair artifact, itself materialized as a
-    write-once local artifact (round 12).
+    the verified simhash pairs, served from a write-once parquet artifact
+    (round 12; keying and publishing: apache_flink_pratices_spark/artifacts.py).
 
-    The pair set is already disk-cached per (corpus, config), but every
-    ``dedup_clusters`` call still re-ran the O(log D) label-propagation
-    rounds — ~5.5 s of the composed pipeline's 12 s at sf0.1, re-paid on
-    every invocation of a fully deterministic computation. Labels are
-    derived data of exactly the pair artifact's nature (deterministic
-    function of corpus + config + implementation), so they get the same
-    treatment: built once, atomic-rename published, keyed by the corpus
-    files, the full simhash config, the pair-pipeline version AND this
-    module's CC version — any upstream change misses the key
-    mechanically. First build pays the iterative CC; every later caller
+    Every ``dedup_clusters`` call used to re-run the O(log D)
+    label-propagation rounds — ~5.5 s of the composed pipeline's 12 s at
+    sf0.1 — for a deterministic function of the corpus, the simhash
+    config and the code of this module and ``dedup``, which is what the
+    key covers. First build pays the iterative CC; every later caller
     scans 16-byte rows. ``tests/test_curation.py`` pins artifact-served
     labels bit-equal to a live connected_components run."""
-    import os
-    import shutil
 
-    from apache_flink_pratices_spark.operators.dedup import (
-        SH_COEFFS,
-        SIMHASH_BAND_BITS,
-        SIMHASH_BITS,
-        SIMHASH_HAMMING_MAX,
-        _NEARDUP_IMPL_VERSION,
-        _corpus_key,
-        _neardup_artifact_base,
-    )
-
-    key = _corpus_key(
-        sf_dir,
-        SIMHASH_BITS,
-        SIMHASH_BAND_BITS,
-        SIMHASH_HAMMING_MAX,
-        tuple(SH_COEFFS),
-        _NEARDUP_IMPL_VERSION,
-        "cc_labels",
-        _CC_LABELS_IMPL_VERSION,
-    )
-    path = os.path.join(_neardup_artifact_base(), key)
-    if not os.path.isdir(path):
-        import uuid
-
+    def build() -> DataFrame:
         pairs = simhash_verified_pairs(spark, sf_dir)
         edges = pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         )
         nodes = load(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"))
-        comp = connected_components(nodes, edges).select(
+        return connected_components(nodes, edges).select(
             F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
         )
-        # uuid suffix, not just pid: two THREADS of one driver process
-        # racing past the isdir check share a pid and would overwrite
-        # each other's tmp part files (round-12 self-review); the write
-        # is also cleanup-guarded so a mid-build executor failure cannot
-        # strand the tmp dir in the 0o700 artifact base forever
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        try:
-            comp.write.mode("overwrite").parquet(tmp)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # Swallow ONLY the lost-concurrent-builder shape: the
-            # destination must actually exist after the failed rename
-            # (identical deterministic content, drop ours). A genuine
-            # rename failure — permissions, a cross-device artifact base —
-            # re-raises here instead of surfacing later as a misleading
-            # path-not-found from spark.read.parquet (ADVICE r12).
-            if not os.path.isdir(path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
 
-
-_CC_LABELS_IMPL_VERSION = "cc-v2-" + _source_fingerprint(
-    connected_components, neardup_cluster_labels
-)
+    key = artifacts.key(
+        sf_dir,
+        (sys.modules[__name__], _dedup),
+        _dedup.SIMHASH_BITS,
+        _dedup.SIMHASH_BAND_BITS,
+        _dedup.SIMHASH_HAMMING_MAX,
+        tuple(_dedup.SH_COEFFS),
+        "cc_labels",
+    )
+    return artifacts.parquet_artifact(spark, key, build)
 
 
 @register(

@@ -34,10 +34,13 @@ the DuckDB oracle SQL, so results hash-match across engines.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from apache_flink_pratices_spark import artifacts
 from apache_flink_pratices_spark.functions.hashing import md5_long, sql_md5_long
 from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.registry import register
@@ -380,14 +383,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot-bucket-guarded band join (shared kernel; identical pairs to the
     # plain self-join below the cap — see banded_candidate_pairs); the
     # pre-check scalar is a write-once corpus statistic
-    # config captures the COEFFICIENT VALUES, not just their count: editing
-    # MH_COEFFS without bumping _NEARDUP_IMPL_VERSION must invalidate the
-    # probe mechanically, or a stale-low hint silently disables the
-    # hot-bucket guard (ADVICE r7)
-    hint = corpus_probe(
+    hint = artifacts.probe(
         sf_dir,
         "minhash_max_bucket",
         lambda: _max_bucket_size(bands),
+        derived_from=(sys.modules[__name__],),
         config=(NUM_HASHES, BAND_SIZE, P31, tuple(MH_COEFFS)),
     )
     cand = banded_candidate_pairs(bands, max_bucket_hint=hint).select(
@@ -646,83 +646,6 @@ def _max_bucket_size(bands: DataFrame) -> int:
     return int(v or 0)
 
 
-def _corpus_key(sf_dir: str, *parts, table: str = "documents") -> str:
-    """Cache key covering corpus file identity plus arbitrary config
-    parts — the ONE derivation shared by the pair artifact and every
-    corpus_probe (review r7: the probe key previously hardcoded the
-    simhash constants for all probe families, so a minhash/phash config
-    change would silently serve a stale hint). ``table`` names the
-    identity-bearing parquet: artifacts derived from ``embeddings``
-    (the trained IVF centroids, round 13) must key on THAT file's
-    identity, not the documents table's."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
-    tail = "|".join(str(p) for p in parts)
-    return hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}|{tail}".encode()
-    ).hexdigest()[:16]
-
-
-def json_artifact(name: str, key: str, build, valid=None):
-    """The ONE write-once JSON artifact kernel (round-13 review: three
-    hand-rolled copies — corpus_probe, the trained IVF codebook, the
-    trained classifier weights — had already diverged on the tmp-name
-    collision guard). Read ``{base}/{name}_{key}.json`` if present and
-    parseable; any unreadable/ill-typed file is a cache miss, never a
-    crash (review r7: a {"value": null} probe file raised TypeError past
-    the except clause and permanently failed every banded join until the
-    file was hand-deleted). On a miss, call ``build()`` (must return a
-    JSON-serializable object), publish atomically (uuid-suffixed tmp +
-    ``os.replace`` — concurrent builders compute identical content, so
-    the race is benign), and return the JSON ROUND-TRIP of the built
-    object, so both paths hand the caller identical types. Stored in
-    the 0o700 ownership-checked base (ADVICE r6)."""
-    import json
-    import os
-    import uuid
-
-    path = os.path.join(_neardup_artifact_base(), f"{name}_{key}.json")
-    try:
-        with open(path) as f:
-            obj = json.load(f)
-        # an ill-TYPED but parseable file (e.g. {"value": null}) is a
-        # miss too when the caller supplies a shape check — it gets
-        # rebuilt AND republished, preserving corpus_probe's review-r7
-        # behavior
-        if valid is None or valid(obj):
-            return obj
-    except (OSError, ValueError, KeyError, TypeError):
-        pass
-    payload = json.dumps(build())
-    tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(payload)
-    os.replace(tmp, path)
-    return json.loads(payload)
-
-
-def corpus_probe(sf_dir: str, name: str, compute, config: tuple = ()) -> int:
-    """Write-once cached integer statistic of a (corpus, config) pair —
-    the table-statistics pattern (ANALYZE): deterministic scalars like
-    the max band-bucket size are properties of the immutable corpus
-    files, so pay their job once and read the verdict from the artifact
-    dir afterwards. ``config`` must carry every constant that shapes the
-    statistic for THIS probe family (band counts/widths etc. — each call
-    site passes its own); the implementation version is appended so
-    algorithm changes invalidate too."""
-    key = _corpus_key(sf_dir, *config, name, _NEARDUP_IMPL_VERSION)
-    obj = json_artifact(
-        f"probe_{name}",
-        key,
-        lambda: {"value": int(compute())},
-        valid=lambda o: isinstance(o.get("value"), int),
-    )
-    return int(obj["value"])
-
-
 def banded_candidate_pairs(
     bands: DataFrame,
     id_col: str = "doc_id",
@@ -753,7 +676,7 @@ def banded_candidate_pairs(
     Two deliberate trade-offs (review r7): (1) calling this WITHOUT
     ``max_bucket_hint`` is EAGER — the pre-check aggregate job runs at
     DataFrame-construction time, once per call. Query-path callers must
-    pass the corpus_probe hint; hint-less construction is for synthetic/
+    pass the ``artifacts.probe`` hint; hint-less construction is for synthetic/
     test frames where one small job per call is fine. (2) the above-cap
     branch persists the tagged band frame (three consumers — the
     below-cap join, the hot set, and the representative pick — would
@@ -770,7 +693,7 @@ def banded_candidate_pairs(
     # upstream (simhash fp, minhash sigs, phash table), so re-deriving the
     # band explode per consumer is a cheap cache scan — and an extra
     # persist here would just pay materialization twice. Callers with an
-    # immutable corpus pass max_bucket_hint from corpus_probe so the
+    # immutable corpus pass max_bucket_hint from artifacts.probe so the
     # pre-check job runs once per (corpus, config), not once per query.
     # None-sentinel defaults resolve the module constants at CALL time,
     # not def time, so tests monkeypatching HOT_BUCKET_CAP drive the
@@ -1498,108 +1421,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # once per (corpus, simhash config), write them to a local parquet artifact,
 # and let every graph query start from a scan of ~24-byte rows. The
 # pipeline is fully deterministic (md5-derived hashes, exact integer
-# arithmetic), so write-once is sound; the artifact key covers the corpus
-# file identity AND the simhash constants, so a testdata or config change
-# invalidates it. dedup_simhash itself keeps building live — it IS the
-# benchmark of the fingerprint pipeline.
-
-#: Version of the fingerprint/candidate IMPLEMENTATION baked into the
-#: artifact key AND every corpus_probe key. BUMP THIS on any semantic
-#: change to ``_simhash_fingerprints`` / ``_simhash_candidates`` /
-#: ``_build_candidate_pairs`` — or to the minhash signature / phash
-#: fingerprint implementations, whose max-bucket probes share the
-#: version (review r7; numeric config constants travel separately via
-#: each probe's ``config`` tuple). The artifact is trusted by existence
-#: alone, so a silent implementation change would serve stale pairs to
-#: pagerank_neardup / triangle_count_neardup / dedup_clusters while
-#: their DuckDB oracles recompute live.
-_NEARDUP_IMPL_VERSION = "v4-arrow-kernel"  # r10: mapInArrow fingerprint
-# kernel (bit-identical to v3 by twin pin, but the artifact must reflect
-# the implementation that would rebuild it)
-
-
-def _neardup_artifact_base() -> str:
-    """Artifact base directory, created 0o700 and ownership-checked.
-
-    The default lives under the world-writable tempdir, where another
-    user could pre-create the keyed directory and have us trust poisoned
-    parquet (ADVICE r6): create with mode 0o700, refuse a base we do not
-    own, and fall back to numbered sibling paths until an owned one is
-    found (review r7: the original fallback recomputed the SAME path and
-    then chmod'ed a foreign directory — a guaranteed PermissionError,
-    i.e. a denial of service instead of a mitigation)."""
-    import os
-    import stat as stat_mod
-    import tempfile
-
-    def usable(base: str) -> bool:
-        # lstat, not stat: a squatter SYMLINK to a victim-owned
-        # directory passes the followed-stat uid check and the chmod
-        # would hit the attacker-chosen target (review r7)
-        st = os.lstat(base)
-        return (
-            not stat_mod.S_ISLNK(st.st_mode)
-            and stat_mod.S_ISDIR(st.st_mode)
-            and st.st_uid == os.getuid()
-        )
-
-    env = os.environ.get("SPARK_GRAFT_ARTIFACT_DIR")
-    if env:
-        # Explicit configuration is honored or refused LOUDLY — never
-        # silently diverted to a sibling path (review r7: a '.alt0'
-        # fallback would strand the configured cache and quietly ignore
-        # the operator's choice). Permissions are also the operator's
-        # choice here: no chmod on a deliberately group-shared dir.
-        os.makedirs(env, mode=0o700, exist_ok=True)
-        if not usable(env):
-            raise RuntimeError(
-                f"SPARK_GRAFT_ARTIFACT_DIR={env!r} is a symlink, not a "
-                "directory, or not owned by this user; refusing to trust it"
-            )
-        return env
-
-    preferred = os.path.join(
-        tempfile.gettempdir(), f"afp_neardup_pairs_{os.getuid()}"
-    )
-    # The DEFAULT base lives under the world-writable tempdir, where
-    # another user could pre-create the keyed directory and have us trust
-    # poisoned parquet (ADVICE r6): create with mode 0o700, refuse a base
-    # we do not own, and fall back to numbered sibling paths until an
-    # owned one is found (review r7: the original fallback recomputed the
-    # SAME path and then chmod'ed a foreign directory — a guaranteed
-    # PermissionError, i.e. a denial of service instead of a mitigation).
-    # chmod is safe here: this path is ours by construction, never shared.
-    for base in [preferred] + [f"{preferred}.alt{i}" for i in range(10)]:
-        try:
-            os.makedirs(base, mode=0o700, exist_ok=True)
-            if not usable(base):
-                continue  # squatter-owned: never chmod/trust, try the next
-            os.chmod(base, 0o700)
-            return base
-        except OSError:
-            continue
-    raise RuntimeError(
-        f"no owned artifact directory available near {preferred!r}; "
-        "set SPARK_GRAFT_ARTIFACT_DIR to a writable private path"
-    )
-
-
-def _neardup_artifact_path(sf_dir: str) -> str:
-    import os
-
-    key = _corpus_key(
-        sf_dir,
-        SIMHASH_BITS,
-        SIMHASH_BAND_BITS,
-        SIMHASH_HAMMING_MAX,
-        # coefficient VALUES, not just widths: a SH_COEFFS edit without a
-        # version bump must miss this key mechanically (review r8, same
-        # invariant as both max-bucket probes)
-        tuple(SH_COEFFS),
-        _NEARDUP_IMPL_VERSION,
-    )
-    return os.path.join(_neardup_artifact_base(), key)
-
+# arithmetic), so write-once is sound (keying and publishing:
+# apache_flink_pratices_spark/artifacts.py). dedup_simhash itself keeps
+# building live — it IS the benchmark of the fingerprint pipeline.
 
 def _build_candidate_pairs(
     spark: SparkSession, sf_dir: str
@@ -1614,13 +1438,11 @@ def _build_candidate_pairs(
     caller in the session shares ONE entry, and an unpersist by any of
     them would evict it for all (see simhash_candidate_pairs)."""
     fp = _simhash_fingerprints(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    # config captures the SH_COEFFS values like the minhash probe captures
-    # MH_COEFFS (review r8): a coefficient edit without a version bump
-    # must invalidate mechanically, or a stale-low hint disables the guard
-    hint = corpus_probe(
+    hint = artifacts.probe(
         sf_dir,
         "simhash_max_bucket",
         lambda: _max_bucket_size(_simhash_bands(fp)),
+        derived_from=(sys.modules[__name__],),
         config=(SIMHASH_BITS, SIMHASH_BAND_BITS, tuple(SH_COEFFS)),
     )
     cand = _simhash_candidates(fp, max_bucket_hint=hint)
@@ -1660,44 +1482,25 @@ def _build_candidate_pairs(
 
 def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, hamming) for ALL band-collision candidates, served
-    from the write-once local artifact (built on first use, atomic rename
-    so concurrent builders race safely)."""
-    import os
-    import shutil
-
-    path = _neardup_artifact_path(sf_dir)
-    if not os.path.isdir(path):
-        import uuid
-
-        # uuid suffix + cleanup guard, same contract as the label
-        # artifact (round-12 self-review): same-pid threads must not
-        # share a tmp dir, and a failed write must not strand it
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        pairs, _fp = _build_candidate_pairs(spark, sf_dir)
-        try:
-            pairs.write.mode("overwrite").parquet(tmp)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        # Deliberately NOT unpersisted: Spark's CacheManager dedupes cache
-        # entries by canonicalized-plan equality, so this fingerprint cache
-        # is the SAME entry a live dedup_simhash run (bench=True, same
-        # session) hits — unpersisting here would evict it out from under
-        # any lazily-built sibling and silently revert its 64-term
-        # aggregate to 3x recomputation (review pass r6). Session cache
-        # pressure is handled where it belongs: bench.py/clearCache.
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # swallow ONLY the lost-concurrent-builder shape (destination
-            # exists — both wrote identical deterministic content, drop
-            # ours); a genuine rename failure re-raises instead of
-            # resurfacing as path-not-found downstream (ADVICE r12)
-            if not os.path.isdir(path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path)
+    from the write-once parquet artifact (built on first use)."""
+    key = artifacts.key(
+        sf_dir,
+        (sys.modules[__name__],),
+        SIMHASH_BITS,
+        SIMHASH_BAND_BITS,
+        SIMHASH_HAMMING_MAX,
+        tuple(SH_COEFFS),
+    )
+    # The build's fingerprint cache is deliberately NOT unpersisted:
+    # Spark's CacheManager dedupes cache entries by canonicalized-plan
+    # equality, so it is the SAME entry a live dedup_simhash run
+    # (bench=True, same session) hits — unpersisting here would evict it
+    # out from under any lazily-built sibling and silently revert its
+    # 64-term aggregate to 3x recomputation (review pass r6). Session
+    # cache pressure is handled where it belongs: bench.py/clearCache.
+    return artifacts.parquet_artifact(
+        spark, key, lambda: _build_candidate_pairs(spark, sf_dir)[0]
+    )
 
 
 def simhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

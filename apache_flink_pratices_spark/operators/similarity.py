@@ -33,10 +33,12 @@ operator with 8-bit bands prunes >85% at recall ≥0.9
 from __future__ import annotations
 
 import hashlib
+import sys
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_flink_pratices_spark import artifacts
 from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.registry import register
 
@@ -715,29 +717,22 @@ def trained_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     (quantized int64, kmeans.Q scale) for THIS corpus, served from a
     write-once JSON artifact — closing the stand-in gap this module's
     round-7 note documented (hash-derived directions stood in for a
-    trained codebook). Keyed by the embeddings file identity + every
-    config constant + a SOURCE-derived impl version (kmeans_fit /
-    seed_farthest_point / this builder), so a semantic change to the
-    trainer mechanically misses the key (the ADVICE-r12 contract).
-    First build pays the deterministic farthest-point seeding +
+    trained codebook; keying and publishing:
+    apache_flink_pratices_spark/artifacts.py). The key names the whole
+    kmeans module, not just kmeans_fit: it delegates all distance,
+    quantization and tie-break arithmetic to module helpers (self-review
+    r13). First build pays the deterministic farthest-point seeding +
     bounded Lloyd loop; every later caller — including each fresh
-    bench/driver subprocess — reads K x dims integers. ``os.replace``
-    publishes atomically; concurrent builders compute identical content
-    so the race is benign."""
-    from apache_flink_pratices_spark.functions.hashing import source_fingerprint
+    bench/driver subprocess — reads K x dims integers."""
     from apache_flink_pratices_spark.operators import kmeans as km
-    from apache_flink_pratices_spark.operators.dedup import (
-        _corpus_key,
-        json_artifact,
-    )
 
-    # fingerprint the ENTIRE kmeans module, not just the two entry
-    # points: kmeans_fit delegates all distance/quantization/tie-break
-    # arithmetic to module helpers (_quantized, _best_cluster, ...), and
-    # a semantic edit there must miss the key too (self-review r13)
-    version = "ivfkm-v1-" + source_fingerprint(km, trained_ivf_centroids)
-    key = _corpus_key(
-        sf_dir, IVF_CELLS, km.Q, IVF_KM_ITERS, version, "ivf_centroids",
+    key = artifacts.key(
+        sf_dir,
+        (km, sys.modules[__name__]),
+        IVF_CELLS,
+        km.Q,
+        IVF_KM_ITERS,
+        "ivf_centroids",
         table="embeddings",
     )
 
@@ -747,7 +742,7 @@ def trained_ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
         )
         return {"centroids": seeds}
 
-    obj = json_artifact(
+    obj = artifacts.json_artifact(
         "ivf_centroids",
         key,
         build,
@@ -1037,7 +1032,7 @@ def _sql_ann_ivf_trained(
     f"{IVF_KM_ITERS} exact-int64 Lloyd iterations over quantized "
     "elements) are trained once per corpus and published as a "
     "write-once JSON artifact keyed by embeddings-file identity + "
-    "config + source-derived impl version; every query then runs the "
+    "config + trainer module sources; every query then runs the "
     "identical cell-bounded plan as ann_ivf_topk (map-side "
     f"nearest-centroid assignment, {IVF_NPROBE}/{IVF_CELLS} probes, "
     "exact-cosine verify inside probed cells) with the codebook as the "

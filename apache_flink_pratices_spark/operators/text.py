@@ -12,9 +12,12 @@ the final groupBy; per-document metrics are embarrassingly parallel map work.
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_flink_pratices_spark import artifacts
 from apache_flink_pratices_spark.functions.hashing import MOD, md5_long, sql_md5_long
 from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.registry import register
@@ -1070,25 +1073,17 @@ def trained_bpe_merges(
     artifact (VERDICT r13 #2: ``bpe_encode_trained`` re-ran the whole
     train loop per invocation — a deterministic function of (corpus,
     n_merges, min_count, source), i.e. exactly the derived-data shape
-    ``trained_classifier_weights`` and ``trained_ivf_centroids`` cache).
-    Keyed by documents-file identity + the merge budget/count floor + a
-    source fingerprint over this ENTIRE module (trainer, ``tokens``,
-    ``_merge_pair_col`` and the BPE constants live here), so any
-    semantic edit mechanically misses the key. The merge list is
+    ``trained_classifier_weights`` and ``trained_ivf_centroids`` cache;
+    keying and publishing: apache_flink_pratices_spark/artifacts.py — the
+    trainer, ``tokens``, ``_merge_pair_col`` and the BPE constants all
+    live in this module). The merge list is
     bounded by ``n_merges`` (a few hundred rows at any corpus scale),
     so the JSON stays tiny; ``bpe_train`` itself remains a LIVE train
     query — this serving path exists for every downstream consumer of
     the learned tokenizer (``bpe_encode_trained`` today)."""
-    import sys
-
-    from apache_flink_pratices_spark.functions.hashing import source_fingerprint
-    from apache_flink_pratices_spark.operators.dedup import (
-        _corpus_key,
-        json_artifact,
+    key = artifacts.key(
+        sf_dir, (sys.modules[__name__],), n_merges, min_count, "bpe_merges"
     )
-
-    version = "bpe-v1-" + source_fingerprint(sys.modules[__name__])
-    key = _corpus_key(sf_dir, n_merges, min_count, version, "bpe_merges")
 
     def build() -> dict:
         merges = bpe_train_merges(
@@ -1096,7 +1091,7 @@ def trained_bpe_merges(
         )
         return {"merges": [[ls, rs, pc] for ls, rs, pc in merges]}
 
-    obj = json_artifact(
+    obj = artifacts.json_artifact(
         "bpe_merges",
         key,
         build,
@@ -1924,7 +1919,7 @@ def _register_lm_perplexity_ref() -> None:
         # the oracle degrades identically — an all-NULL quality ranking
         # with a green replica row. A reference-less scorer is a
         # configuration error, not a result. One tiny aggregate job at
-        # construction (the same eager-probe stance as corpus_probe).
+        # construction (the same eager-probe stance as artifacts.probe).
         if tot.first()["n_tot"] is None:
             raise RuntimeError(
                 "quality_lm_perplexity_ref: no documents pass the Gopher "
@@ -2208,51 +2203,23 @@ def trained_classifier_weights(
     (self-review r13: fit and scorer each re-ran the full perceptron
     loop per invocation — a deterministic function of (corpus, config,
     source), i.e. exactly the derived-data shape trained_ivf_centroids
-    caches). Keyed by documents-file identity + the epoch budget + a
-    source fingerprint over this ENTIRE module (trainer, feature
-    builder, labeler and its _gopher_metrics delegate, tokenizer, and
-    every GOPHER_*/STOPWORDS constant live here), so any semantic edit
-    mechanically misses the key. The learned weight table is
-    vocabulary-bounded (Heaps' law), so the collect and the JSON stay
-    small at any corpus scale; rows are sorted for a deterministic
-    artifact. ``os.replace`` publishes atomically; concurrent builders
-    compute identical content so the race is benign.
-
-    Blast radius, acknowledged (ADVICE r13): the whole-module key means
-    ANY edit to this large module (even comments or BPE/bm25-adjacent
-    code) invalidates the artifact and forces one full retrain on next
-    use. Deliberate trade: the retrain is ~3 s at bench scale and
-    correctness-neutral (write-once + corrupt-rebuild tests), while the
-    r13 function-list fingerprint silently MISSED the _gopher_metrics
-    delegate twice — an under-inclusive key is a wrong-answer bug, an
-    over-inclusive one is a small rebuild cost. Revisit only if rebuild
-    cost grows (e.g. key on an explicitly collected closed set of
-    trainer/feature/label/constant sources, with a test that inspects
-    the trainer's call graph for escapees)."""
-    import sys
-
-    from apache_flink_pratices_spark.functions.hashing import source_fingerprint
-    from apache_flink_pratices_spark.operators.dedup import (
-        _corpus_key,
-        json_artifact,
-    )
-
-    # fingerprint the ENTIRE module (the trained-IVF stance): the trainer
-    # delegates to _clf_feats_col, gopher_rules_frame -> _gopher_metrics,
-    # tokens and the GOPHER_*/STOPWORDS constants, all defined here — a
-    # semantic edit to ANY of them (round-13 second review: the original
-    # five-function list missed _gopher_metrics and the constants, so a
-    # label-rule change would have served weights trained on old labels)
-    # must mechanically miss the key
-    version = "clf-v2-" + source_fingerprint(sys.modules[__name__])
-    key = _corpus_key(sf_dir, CLF_EPOCHS, version, "clf_weights")
+    caches; keying and publishing: apache_flink_pratices_spark/artifacts.py).
+    The key names this whole module: the trainer, feature builder,
+    labeler and its _gopher_metrics delegate, tokenizer, and every
+    GOPHER_*/STOPWORDS constant live here, and the r13 function-list
+    fingerprint silently MISSED the _gopher_metrics delegate twice
+    (ADVICE r13). So any edit here costs one ~3 s retrain at bench
+    scale. The learned weight table is vocabulary-bounded (Heaps' law),
+    so the collect and the JSON stay small at any corpus scale; rows are
+    sorted for a deterministic artifact."""
+    key = artifacts.key(sf_dir, (sys.modules[__name__],), CLF_EPOCHS, "clf_weights")
 
     def build() -> dict:
         wdf, bias = classifier_fit_tables(load(spark, sf_dir, "documents"))
         rows = sorted((r["w"], int(r["wt"])) for r in wdf.collect())
         return {"weights": rows, "bias": bias}
 
-    obj = json_artifact(
+    obj = artifacts.json_artifact(
         "clf_weights",
         key,
         build,

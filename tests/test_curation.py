@@ -119,88 +119,6 @@ def test_cluster_label_artifact_matches_live_cc(spark, tmp_path, monkeypatch):
     assert calls == []
 
 
-def test_cc_impl_version_is_derived_from_source():
-    """ADVICE r12: the CC artifact version must be a mechanical function
-    of the connected_components / label-derivation SOURCE, not a manual
-    bump someone can forget — recompute it here by the same formula."""
-    import hashlib
-    import inspect
-
-    from apache_flink_pratices_spark.operators import curation
-
-    expected = hashlib.md5(
-        "\n".join(
-            inspect.getsource(o)
-            for o in (
-                curation.connected_components,
-                curation.neardup_cluster_labels,
-            )
-        ).encode()
-    ).hexdigest()[:10]
-    assert curation._CC_LABELS_IMPL_VERSION == f"cc-v2-{expected}"
-    # the placeholder must never leak into an artifact key
-    assert "unset" not in curation._CC_LABELS_IMPL_VERSION
-
-
-def test_label_artifact_rename_failure_reraises(spark, tmp_path, monkeypatch):
-    """ADVICE r12: a GENUINE rename failure (permissions, cross-device
-    base) must re-raise — only the lost-concurrent-builder race (the
-    destination exists afterwards) is swallowed. Before the fix, any
-    OSError was swallowed and the function failed later at
-    spark.read.parquet with a misleading path-not-found."""
-    import os
-
-    from apache_flink_pratices_spark.operators import curation
-    from apache_flink_pratices_spark.operators.dedup import (
-        simhash_candidate_pairs,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
-    # pre-build the upstream PAIR artifact with a working rename so the
-    # injected failure below exercises the LABEL write specifically
-    simhash_candidate_pairs(spark, SF_SMOKE)
-
-    real_rename = os.rename
-
-    def broken_rename(src, dst, *a, **k):
-        raise OSError(18, "Invalid cross-device link", src, None, dst)
-
-    monkeypatch.setattr(os, "rename", broken_rename)
-    with pytest.raises(OSError, match="cross-device"):
-        curation.neardup_cluster_labels(spark, SF_SMOKE).collect()
-    # the failed build must not strand its tmp dir in the artifact base
-    assert not [p for p in tmp_path.iterdir() if ".tmp." in p.name]
-
-    # lost-race shape: a "concurrent builder" published the destination
-    # before our rename failed — swallowed, artifact served
-    def lost_race(src, dst, *a, **k):
-        real_rename(src, dst)
-        raise OSError(17, "File exists", src, None, dst)
-
-    monkeypatch.setattr(os, "rename", lost_race)
-    out = curation.neardup_cluster_labels(spark, SF_SMOKE)
-    assert out.count() > 0
-
-
-def test_pair_artifact_rename_failure_reraises(spark, tmp_path, monkeypatch):
-    """Same ADVICE r12 contract for the simhash pair artifact write."""
-    import os
-
-    from apache_flink_pratices_spark.operators.dedup import (
-        simhash_candidate_pairs,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
-
-    def broken_rename(src, dst, *a, **k):
-        raise OSError(13, "Permission denied", src, None, dst)
-
-    monkeypatch.setattr(os, "rename", broken_rename)
-    with pytest.raises(OSError, match="Permission denied"):
-        simhash_candidate_pairs(spark, SF_SMOKE).collect()
-    assert not [p for p in tmp_path.iterdir() if ".tmp." in p.name]
-
-
 def test_contamination_excludes_eval_docs(spark):
     out = contamination_ngrams(spark, SF_SMOKE).collect()
     assert all(r["doc_id"] % EVAL_MOD != 0 for r in out)

@@ -7,7 +7,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from apache_flink_pratices_spark.operators.multimodal import (
@@ -16,30 +15,11 @@ from apache_flink_pratices_spark.operators.multimodal import (
     IMG_H,
     IMG_W,
     FakeCodec,
-    get_codec,
     media_table,
     resize_images,
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_real_codec_dispatch():
-    """Round 7: every media type has a REAL stdlib codec — PNG, WAV, and
-    (closing the last gate) AVI for video."""
-    from apache_flink_pratices_spark.operators.media_codecs import (
-        AviCodec,
-        PngCodec,
-        WavCodec,
-    )
-
-    assert isinstance(get_codec("image", implementation="real"), PngCodec)
-    assert isinstance(get_codec("audio", implementation="real"), WavCodec)
-    assert isinstance(get_codec("video", implementation="real"), AviCodec)
-    with pytest.raises(ValueError):
-        get_codec("subtitles", implementation="real")
-    with pytest.raises(ValueError):
-        get_codec("image", implementation="nope")
 
 
 def test_payload_matches_md5_chain(spark):

@@ -197,121 +197,6 @@ def test_planted_hot_bucket_through_simhash_pipeline(spark):
     assert len(ids) == 300  # every boilerplate doc participates
 
 
-def test_corpus_probe_is_write_once(tmp_path, monkeypatch):
-    """The pre-check statistic is computed once per (corpus, config) and
-    then served from the artifact dir; the key covers the implementation
-    version, so bumping it invalidates cached verdicts."""
-    import apache_flink_pratices_spark.operators.dedup as dd
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
-    calls = []
-
-    def compute():
-        calls.append(1)
-        return 7
-
-    sf = "/root/testdata/sf0.001"
-    assert dd.corpus_probe(sf, "t_probe", compute) == 7
-    assert dd.corpus_probe(sf, "t_probe", compute) == 7
-    assert len(calls) == 1  # second read served from the cache file
-    # a different probe name gets its own slot
-    assert dd.corpus_probe(sf, "t_probe2", lambda: 9) == 9
-    # an implementation-version bump invalidates
-    monkeypatch.setattr(dd, "_NEARDUP_IMPL_VERSION", "v-test-bump")
-    assert dd.corpus_probe(sf, "t_probe", compute) == 7
-    assert len(calls) == 2
-
-
-def test_corpus_probe_config_tuple_separates_keys(tmp_path, monkeypatch):
-    """Probes with the same name but different config tuples must not
-    share a cache entry (review r7: the key previously hardcoded simhash
-    constants for every probe family)."""
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
-    from apache_flink_pratices_spark.operators.dedup import corpus_probe
-
-    sf = "/root/testdata/sf0.001"
-    a = corpus_probe(sf, "cfg_probe", lambda: 1, config=(16, 4))
-    b = corpus_probe(sf, "cfg_probe", lambda: 2, config=(32, 8))
-    a_again = corpus_probe(sf, "cfg_probe", lambda: 99, config=(16, 4))
-    assert (a, b, a_again) == (1, 2, 1)
-
-
-def test_corpus_probe_treats_any_bad_cache_file_as_a_miss(
-    tmp_path, monkeypatch
-):
-    """A parseable-but-wrong probe file (null/list/garbage value) must
-    fall back to recompute-and-rewrite, not crash every banded-join query
-    until someone hand-deletes the file (review r7: int(None) raised
-    TypeError past the except clause)."""
-    import glob
-    import os
-
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path))
-    from apache_flink_pratices_spark.operators.dedup import corpus_probe
-
-    sf = "/root/testdata/sf0.001"
-    assert corpus_probe(sf, "bad_probe", lambda: 5) == 5
-    (path,) = glob.glob(os.path.join(str(tmp_path), "probe_bad_probe_*.json"))
-    for junk in ('{"value": null}', '{"value": [1]}', "not json", ""):
-        with open(path, "w") as f:
-            f.write(junk)
-        assert corpus_probe(sf, "bad_probe", lambda: 5) == 5
-        with open(path) as f:  # the bad file was healed, not left behind
-            assert f.read() == '{"value": 5}'
-
-
-def test_artifact_base_default_falls_back_past_a_squatted_path(
-    tmp_path, monkeypatch
-):
-    """If the DEFAULT tempdir base is unusable (here: squatted by a
-    regular FILE, the reproducible stand-in for a foreign-owned dir), the
-    base helper must fall back to an owned sibling instead of chmod'ing
-    what it does not own (review r7)."""
-    import os
-    import tempfile
-
-    monkeypatch.delenv("SPARK_GRAFT_ARTIFACT_DIR", raising=False)
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    preferred = tmp_path / f"afp_neardup_pairs_{os.getuid()}"
-    preferred.write_text("squatter")  # a file: makedirs raises OSError
-
-    from apache_flink_pratices_spark.operators.dedup import (
-        _neardup_artifact_base,
-    )
-
-    base = _neardup_artifact_base()
-    assert base == str(preferred) + ".alt0"
-    assert os.path.isdir(base)
-    assert (os.stat(base).st_mode & 0o777) == 0o700
-
-
-def test_artifact_base_explicit_dir_is_never_diverted(tmp_path, monkeypatch):
-    """An EXPLICITLY configured SPARK_GRAFT_ARTIFACT_DIR is honored or
-    refused loudly — never silently replaced by an '.alt0' sibling, and
-    never chmod'ed (the operator may have chosen group-shared perms)
-    (review r7)."""
-    import os
-
-    import pytest
-
-    from apache_flink_pratices_spark.operators.dedup import (
-        _neardup_artifact_base,
-    )
-
-    squatted = tmp_path / "base"
-    squatted.write_text("squatter")  # a file: unusable, must raise
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(squatted))
-    with pytest.raises((RuntimeError, OSError)):
-        _neardup_artifact_base()
-    assert not os.path.exists(str(squatted) + ".alt0")
-
-    shared = tmp_path / "shared"
-    shared.mkdir(mode=0o750)  # deliberately group-readable
-    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(shared))
-    assert _neardup_artifact_base() == str(shared)
-    assert (os.stat(shared).st_mode & 0o777) == 0o750  # perms untouched
-
-
 def test_cluster_offsets_honours_n():
     from apache_flink_pratices_spark.operators.similarity import (
         CLU_N,
