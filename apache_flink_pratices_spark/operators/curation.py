@@ -379,9 +379,9 @@ def _bloom_probe_fn(bc):
 #: bitmap-collect job ran on EVERY frame construction — plan audits and
 #: registry tooling paid a full cluster job — and stats + operator each
 #: registered their own duplicate MEMORY_AND_DISK entries with no
-#: unpersist path). A released_caches block may unpersist the memoized
-#: frames; reuse after that simply recomputes lazily (the broadcast bloom
-#: stays valid), it never rebuilds eagerly.
+#: unpersist path). A long-lived caller that clears the session cache
+#: unpersists the memoized frames; reuse after that recomputes lazily
+#: (the broadcast bloom stays valid), it never rebuilds eagerly.
 _BLOOM_PROBED_CACHE: dict = {}
 
 

@@ -1471,8 +1471,8 @@ def _build_candidate_pairs(
         # (union left side, degree count, adjacency, both wedge sides) —
         # unpersisted, the guarded band join re-ran per reference on
         # exactly the adversarial corpora where it is most expensive
-        # (review r9); session-lived like fp, released by
-        # registry.released_caches in long-lived sessions.
+        # (review r9); session-lived like fp: a long-lived caller clears
+        # the session cache (spark.catalog.clearCache()).
         pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
         verified = pairs.filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
         rescued = with_hamming(wedge_rescue_pairs(verified))
@@ -1860,8 +1860,7 @@ def _register_dedup_semantic() -> None:
         # Three consumers (centroid pass + both pair sides) — persisted
         # so the Python-worker assignment runs once (unlike the r14
         # single-consumer ANN frames, which stream unpersisted);
-        # session-lived, reclaimed by registry.released_caches /
-        # run_and_release in long-lived sessions (VERDICT r8 #5)
+        # session-lived: a long-lived caller clears the session cache
         assigned = ivf_assign(e).persist(StorageLevel.MEMORY_AND_DISK)
         # exact per-cell centroid: element sums as quantized int64
         elems = assigned.select(
@@ -2204,8 +2203,8 @@ def dup_spans_of(d: DataFrame) -> DataFrame:
     # join; unpersisted, the corpus was scanned + position-exploded +
     # md5-hashed twice (r14: two identical Generate subtrees in the
     # plan). Persist the 24-byte (doc_id, s, h) rows — ≪ corpus — so the
-    # explode pass runs once (guide §1.1); released by released_caches
-    # in long-lived sessions like every other operator persist.
+    # explode pass runs once (guide §1.1); session-lived like every other
+    # operator persist: a long-lived caller clears the session cache.
     starts = arrs.select(
         "doc_id", F.explode(start_seq).alias("s"), "a"
     ).select(

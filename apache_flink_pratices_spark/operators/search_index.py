@@ -180,8 +180,8 @@ BM25_MICRO = 1_000_000  #: idf quantization (the LM scorers' micro-nats)
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     # one tokenize pass -> (doc_id, term, tf), persisted: df, dl and the
-    # candidate join all read it (the session-lived cache convention;
-    # registry.run_and_release scopes it — tests/test_cache_release.py)
+    # candidate join all read it (the session-lived cache convention: a
+    # long-lived caller clears the session cache)
     dt = (
         d.select(
             "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")

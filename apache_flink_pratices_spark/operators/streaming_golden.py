@@ -297,7 +297,7 @@ _WINDOW_ROWS = [
 def stream_window_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from apache_flink_pratices_spark.streaming.windows import tumbling_agg
+    from apache_flink_pratices_spark.streaming.windows import window_agg
 
     rows = [
         (
@@ -313,7 +313,7 @@ def stream_window_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         rows,
         "key string, ts timestamp, v long",
-        lambda src: tumbling_agg(
+        lambda src: window_agg(
             src,
             "ts",
             ["key"],

@@ -8,7 +8,6 @@ goldens carry theirs as VALUES literals of the pinned output.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -95,111 +94,6 @@ def bench_specs() -> dict[str, QuerySpec]:
     from apache_flink_pratices_spark import operators  # noqa: F401
 
     return {n: s for n, s in _REGISTRY.items() if s.bench}
-
-
-def _cached_plans(spark: SparkSession) -> list:
-    """The JVM CacheManager's live entries' logical plans (py4j proxies)."""
-    it = (
-        spark._jsparkSession.sharedState().cacheManager().cachedData().iterator()
-    )
-    out = []
-    while it.hasNext():
-        out.append(it.next().plan())
-    return out
-
-
-def cached_entry_count(spark: SparkSession) -> int:
-    """Number of live CacheManager entries — the executor-storage growth
-    signal ``run_and_release`` bounds (and its test asserts on)."""
-    return (
-        spark._jsparkSession.sharedState().cacheManager().cachedData().size()
-    )
-
-
-def _plan_keys_items(spark: SparkSession, plans: list):
-    """[(plan proxy, (identityHashCode, semanticHash))] for live entries."""
-    jvm = spark._jvm
-    return [
-        (p, (jvm.System.identityHashCode(p), p.semanticHash())) for p in plans
-    ]
-
-
-def _plan_keys(spark: SparkSession, plans: list) -> set:
-    return {key for _, key in _plan_keys_items(spark, plans)}
-
-
-@contextmanager
-def released_caches(spark: SparkSession):
-    """Release every cache entry CREATED inside the block on exit.
-
-    Several operators deliberately leave corpus-sized frames persisted
-    for the session (LSH/IVF bucket frames, minhash signatures, the
-    simhash fingerprint feeding the pair artifact) because Spark's
-    CacheManager dedupes entries by canonicalized plan, so sibling
-    queries in the same session share them — but a LONG-LIVED session
-    invoking many such queries accumulates executor storage without
-    bound (VERDICT r8 #5). This scopes that growth: entries present
-    before the block are left alone (identity-compared via the JVM
-    object, so a block re-persisting an already-cached plan does not
-    evict the original owner's entry); entries the block created are
-    uncached on exit, success or failure — with cascade=false, because
-    cascade=true would also evict PRE-EXISTING entries whose plans
-    contain a released plan as a subtree (e.g. a user-cached frame
-    derived from an upstream a query re-persisted), violating the
-    left-alone guarantee (review r9; pinned by the dependent-plan case
-    in tests/test_cache_release.py).
-
-    Driver-side cost is one CacheManager scan per entry/exit — no Spark
-    jobs. Queries re-run after release simply rebuild their caches.
-
-    Entries are keyed by ``(System.identityHashCode, plan.semanticHash())``
-    — identityHashCode alone is not unique, and a collision between a
-    pre-block plan and a block-created plan would silently leak the new
-    entry past the release (ADVICE r9); the semanticHash pair makes a
-    double collision vanishingly unlikely while staying identity-true
-    for the re-persist-existing-plan case (same object → same pair).
-
-    The snapshot path reaches private JVM internals
-    (``sharedState().cacheManager()``), so it is capability-probed: if a
-    Spark upgrade moves that API, the block DEGRADES instead of raising
-    (VERDICT r9 #6) — on exit it calls the public
-    ``spark.catalog.clearCache()``, which still bounds session cache
-    growth (the feature's contract) at the documented cost of also
-    evicting pre-existing entries; those are correctness-neutral and
-    rebuild lazily on next use. Pinned by the missing-API simulation in
-    ``tests/test_cache_release.py``."""
-    try:
-        before = _plan_keys(spark, _cached_plans(spark))
-    except Exception:  # private API gone: degrade, don't raise
-        try:
-            yield
-        finally:
-            spark.catalog.clearCache()
-        return
-    try:
-        yield
-    finally:
-        try:
-            cm = spark._jsparkSession.sharedState().cacheManager()
-            for p, key in _plan_keys_items(spark, _cached_plans(spark)):
-                if key not in before:
-                    cm.uncacheQuery(spark._jsparkSession, p, False)
-        except Exception:  # API vanished mid-block (same degraded path)
-            spark.catalog.clearCache()
-
-
-def run_and_release(spark: SparkSession, name: str, sf_dir: str) -> int:
-    """Run a registered query end-to-end and release any session cache it
-    created; returns the materialized row count.
-
-    The teardown wrapper for long-lived sessions that invoke many
-    registered queries (a service loop, a scheduled sweep): each query
-    still gets its intra-run cache reuse, but nothing it persisted
-    outlives the call. One-shot drivers (bench.py subprocesses, the
-    correctness gate) don't need it — their session dies with the query."""
-    spec = all_specs()[name]
-    with released_caches(spark):
-        return spec.fn(spark, sf_dir).count()
 
 
 def queries() -> dict[str, QueryFn]:

@@ -53,8 +53,7 @@ def engine_shuffle_width(spark: SparkSession):
 
 
 def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
-    """Apply engine configuration to any builder (also used on the driver's
-    own session via ``spark.conf`` where dynamically settable)."""
+    """Apply engine configuration to any builder."""
     return (
         builder.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(_cpus()))
@@ -96,7 +95,6 @@ def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-        .config("spark.sql.shuffle.spill.compress", "true")
     )
 
 

@@ -7,7 +7,7 @@ event-time windows (``SlidingEventTimeWindows.of(5s, 1s)``, reference
 trailing mean as the density baseline (``:569-583``). Spark expresses both
 with ``window()`` over a watermarked stream; the same column expressions
 drive the batch twins, so correctness is checked there against the DuckDB
-oracle and these wrappers only add watermark + output-mode policy.
+oracle and this wrapper only adds watermark + output-mode policy.
 """
 
 from __future__ import annotations
@@ -18,38 +18,19 @@ from pyspark.sql import functions as F
 from apache_flink_pratices_spark.streaming.watermarks import drop_late
 
 
-def tumbling_agg(
+def window_agg(
     stream: DataFrame,
     ts_col: str,
     key_cols: list[str],
     aggs: list[Column],
-    size: str = "1 day",
+    size: str,
+    slide: str | None = None,
     delay: str = "0 seconds",
 ) -> DataFrame:
-    """Tumbling event-time window aggregate; append-mode capable (windows
-    finalize when the watermark passes their end)."""
-    agged = (
-        drop_late(stream, ts_col, delay)
-        .groupBy(F.window(ts_col, size).alias("w"), *key_cols)
-        .agg(*aggs)
-    )
-    value_cols = [c for c in agged.columns if c != "w" and c not in key_cols]
-    return agged.select(
-        F.unix_micros(F.col("w.start")).alias("win_start_us"), *key_cols, *value_cols
-    )
-
-
-def sliding_agg(
-    stream: DataFrame,
-    ts_col: str,
-    key_cols: list[str],
-    aggs: list[Column],
-    size: str = "5 seconds",
-    slide: str = "1 second",
-    delay: str = "0 seconds",
-) -> DataFrame:
-    """Sliding event-time window aggregate (size/slide fan-out happens
-    JVM-side before partial aggregation)."""
+    """Event-time window aggregate, append-mode capable (windows finalize
+    when the watermark passes their end). Tumbling by default (``slide``
+    equal to ``size``); a shorter ``slide`` gives sliding windows, whose
+    fan-out happens JVM-side before partial aggregation."""
     agged = (
         drop_late(stream, ts_col, delay)
         .groupBy(F.window(ts_col, size, slide).alias("w"), *key_cols)

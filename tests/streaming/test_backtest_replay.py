@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 import time
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.bench_streams import (
     REPLAY_DAY_S as DAY_S,
 )
@@ -47,19 +47,8 @@ def _run_replay(spark, rows, root: str) -> float:
     src = stream_from_collection(
         spark, rows, UNIFIED_SCHEMA, os.path.join(root, "in"), chunks=4
     )
-    q = (
-        signal_stream(src)
-        .writeStream.format("memory")
-        .queryName("replay_sigs")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .outputMode("append")
-        .start()
-    )
     t0 = time.perf_counter()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(signal_stream(src), "replay_sigs", os.path.join(root, "ckpt"))
     return time.perf_counter() - t0
 
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import os
 import time
 
-from apache_flink_pratices_spark.sources.collection import stream_from_collection
+from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
 from apache_flink_pratices_spark.streaming.metrics import attach_metrics, detach_metrics
 from apache_flink_pratices_spark.streaming.wordcount import wordcount_stream
 
@@ -22,18 +22,10 @@ def test_listener_collects_progress(spark, tmp_path):
             os.path.join(str(tmp_path), "in"),
             chunks=2,
         )
-        q = (
-            wordcount_stream(src)
-            .writeStream.format("memory")
-            .queryName("wc_metrics")
-            .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-            .outputMode("update")
-            .start()
+        drain(
+            wordcount_stream(src), "wc_metrics", os.path.join(str(tmp_path), "ckpt"),
+            output_mode="update",
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         # listener events are delivered asynchronously
         deadline = time.time() + 20
         while time.time() < deadline:

@@ -9,41 +9,21 @@ import datetime
 import os
 import time
 
+from apache_flink_pratices_spark.sources.collection import drain
+from apache_flink_pratices_spark.streaming.bench_streams import FRAUD_SCHEMA, fraud_rows
 from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
 
 N_TX = 50_000
-N_ACCOUNTS = 500
 BASE = datetime.datetime(2021, 1, 1)
 
 
 def test_stateful_fraud_throughput(spark, tmp_path):
-    rows = []
-    for i in range(N_TX):
-        acct = i % N_ACCOUNTS
-        # alternate small/large so state actually flips and alerts fire
-        amount = 0.5 if (i // N_ACCOUNTS) % 2 == 0 else 700.0
-        rows.append((acct, BASE + datetime.timedelta(milliseconds=i), amount))
     in_dir = os.path.join(str(tmp_path), "in")
-    spark.createDataFrame(
-        rows, "account_id long, ts timestamp, amount double"
-    ).coalesce(4).write.parquet(in_dir)
+    spark.createDataFrame(fraud_rows(N_TX), FRAUD_SCHEMA).coalesce(4).write.parquet(in_dir)
 
-    src = spark.readStream.schema("account_id long, ts timestamp, amount double").parquet(
-        in_dir
-    )
-    q = (
-        fraud_alert_stream(src)
-        .writeStream.format("memory")
-        .queryName("fraud_tput")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("append")
-        .start()
-    )
+    src = spark.readStream.schema(FRAUD_SCHEMA).parquet(in_dir)
     t0 = time.perf_counter()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(fraud_alert_stream(src), "fraud_tput", os.path.join(str(tmp_path), "ckpt"))
     wall = time.perf_counter() - t0
     rate = N_TX / wall
     n_alerts = spark.sql("SELECT COUNT(*) AS n FROM fraud_tput").collect()[0].n
@@ -72,19 +52,8 @@ def test_stateful_trend_throughput(spark, tmp_path):
     src = spark.readStream.schema("code string, ts timestamp, volume double").parquet(
         in_dir
     )
-    q = (
-        trend_stream(src)
-        .writeStream.format("memory")
-        .queryName("trend_tput")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "tckpt"))
-        .outputMode("append")
-        .start()
-    )
     t0 = time.perf_counter()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(trend_stream(src), "trend_tput", os.path.join(str(tmp_path), "tckpt"))
     wall = time.perf_counter() - t0
     rate = n_trades / wall
     n_events = spark.sql("SELECT COUNT(*) AS n FROM trend_tput").collect()[0].n
@@ -119,18 +88,8 @@ def test_cdc_compaction_throughput(spark, tmp_path):
         .agg(F.max_by(state, ord_key).alias("s"))
         .filter(F.col("s.event_type") != "error")
     )
-    q = (
-        snap.writeStream.format("memory")
-        .queryName("cdc_tput")
-        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-        .outputMode("complete")
-        .start()
-    )
     t0 = time.perf_counter()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(snap, "cdc_tput", os.path.join(str(tmp_path), "ckpt"), output_mode="complete")
     wall = time.perf_counter() - t0
     rate = n_events / wall
     n_live = spark.sql("SELECT COUNT(*) AS n FROM cdc_tput").collect()[0].n

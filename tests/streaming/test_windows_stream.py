@@ -9,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from apache_flink_pratices_spark.sources.collection import drain, stream_from_collection
-from apache_flink_pratices_spark.streaming.windows import tumbling_agg
+from apache_flink_pratices_spark.streaming.windows import window_agg
 
 BASE = datetime.datetime(2021, 1, 1)
 
@@ -25,13 +25,11 @@ EVENTS = [
 
 
 def test_sliding_stream_fanout(spark, tmp_path):
-    from apache_flink_pratices_spark.streaming.windows import sliding_agg
-
     src = stream_from_collection(
         spark, EVENTS, "etype string, ts timestamp, v double",
         os.path.join(str(tmp_path), "in2"), chunks=1,
     )
-    out = sliding_agg(
+    out = window_agg(
         src, "ts", ["etype"], [F.count("*").alias("n")],
         size="10 seconds", slide="5 seconds",
     )
@@ -50,7 +48,7 @@ def test_tumbling_stream_matches_batch(spark, tmp_path):
         spark, EVENTS, "etype string, ts timestamp, v double",
         os.path.join(str(tmp_path), "in"), chunks=2,
     )
-    out = tumbling_agg(
+    out = window_agg(
         src, "ts", ["etype"], [F.count("*").alias("n"), F.sum("v").alias("total")],
         size="10 seconds",
     )
@@ -84,7 +82,7 @@ def test_window_golden_drops_exactly_the_post_emission_late_row(spark):
             spark, rows, "key string, ts timestamp, v long",
             os.path.join(d, "in"), chunks=4,
         )
-        agg = tumbling_agg(
+        agg = window_agg(
             src, "ts", ["key"],
             [F.count("*").alias("cnt"), F.sum("v").alias("total")],
             size="30 seconds", delay="10 seconds",

@@ -11,7 +11,7 @@ import duckdb
 import pytest
 
 from apache_flink_pratices_spark.io import TABLES, table_path
-from apache_flink_pratices_spark.registry import all_specs, released_caches
+from apache_flink_pratices_spark.registry import all_specs
 
 from tests.conftest import SF_SMOKE
 
@@ -44,15 +44,17 @@ def _normalize(rows, colnames):
 @pytest.mark.parametrize("name", ORACLE_SPECS)
 def test_matches_oracle(spark, name):
     spec = SPECS[name]
-    # scoped cache release: the driver runs every query in its own fresh
-    # process, but this suite shares one session — a query that persists
-    # a frame (corpus_pipeline_e2e deliberately caches the documents
-    # scan) must not leak it into later tests' plans (CacheManager
-    # substitutes cached subtrees, which broke the plan audits)
-    with released_caches(spark):
+    # the driver runs every query in its own fresh process, but this
+    # suite shares one session: a query that persists a frame
+    # (corpus_pipeline_e2e deliberately caches the documents scan) must
+    # not leak it into later tests' plans (CacheManager substitutes
+    # cached subtrees, which broke the plan audits)
+    try:
         sdf = spec.fn(spark, SF_SMOKE)
         s_cols = sdf.columns
         s_rows = [tuple(r) for r in sdf.collect()]
+    finally:
+        spark.catalog.clearCache()
 
     con = _duck(SF_SMOKE)
     oracle = con.execute(spec.oracle).fetch_arrow_table()

@@ -36,3 +36,13 @@ def test_tune_sets_the_shuffle_width_to_the_core_count(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     builder = session.tune(SparkSession.Builder())
     assert builder._options["spark.sql.shuffle.partitions"] == str(session._cpus()) == "3"
+
+
+def test_tune_sets_only_sql_confs_spark_registers(spark):
+    # a misspelt or unregistered key is silently stored and never read:
+    # every SQL-level key tune sets must be one this Spark knows
+    options = session.tune(SparkSession.Builder())._options
+    unknown = [
+        k for k in options if k.startswith("spark.sql.") and not spark.conf.isModifiable(k)
+    ]
+    assert not unknown, unknown
