@@ -28,13 +28,9 @@ probes are directly comparable):
   comparable run to run;
 - one untimed ``count()`` for the sanity row count.
 
-Entry points (each prints ONE JSON line on stdout):
-
-- ``python -m apache_flink_pratices_spark.bench_query <name>`` —
-  ``{"name", "min", "median", "spread_pct", "runs", "rows"}``;
-- ``python -m apache_flink_pratices_spark.bench_query --extras`` —
-  the untimed scale-evidence extras (clustered-ANN candidate fraction,
-  hot-bucket guard) in their own fresh session.
+Entry point: ``python -m apache_flink_pratices_spark.bench_query <name>``
+prints ONE JSON line on stdout,
+``{"name", "min", "median", "spread_pct", "runs", "rows"}``.
 """
 
 from __future__ import annotations
@@ -100,103 +96,12 @@ def _run_query(name: str) -> dict:
     }
 
 
-def _run_extras() -> dict:
-    from apache_flink_pratices_spark.operators.curation import (
-        corpus_pipeline_planted_stats,
-        decontaminate_bloom_lowoverlap_stats,
-        decontaminate_bloom_stats,
-    )
-    from apache_flink_pratices_spark.operators.dedup import (
-        hot_bucket_guard_bench,
-        hot_bucket_recall_bench,
-        neardup_method_compare_bench,
-    )
-    from apache_flink_pratices_spark.operators.similarity import (
-        ann_ivf_trained_recall_bench,
-        ann_lsh_clustered_candidate_fraction,
-    )
-    from apache_flink_pratices_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Smoke-scale knob for the PYTEST CONTRACT DRIVE ONLY (r15, VERDICT
-    # r14 #5/#6: the full-shape bench CLI test spent ~130 s of its 600 s
-    # building the full-size planted evidence corpora at local[4], the
-    # single largest line of the suite's 30-minute wall). The extras are
-    # UNTIMED scale evidence — shrinking their synthetic corpora changes
-    # no timed number and no oracle-checked result; the driver sets no
-    # such env, so every committed round artifact still carries the
-    # full-size evidence. Values below keep every planted property
-    # non-degenerate (overlap planted, clusters present, all stages
-    # keep-and-remove).
-    small = os.environ.get("SPARK_GRAFT_EXTRAS_SCALE") == "small"
-    spark = get_spark("afp-bench-extras")
-    spark.sparkContext.setLogLevel("WARN")
-    cand_fraction = round(ann_lsh_clustered_candidate_fraction(spark, sf_dir), 4)
-    spark.catalog.clearCache()
-    # measured trained-vs-hash-grid IVF recall on the planted clusters
-    # (VERDICT r12 #4): the recorded evidence that the kmeans codebook
-    # beats the stand-in directions where ANN is actually deployed
-    ivf_trained = ann_ivf_trained_recall_bench(spark, sf_dir)
-    spark.catalog.clearCache()
-    hot_guard = hot_bucket_guard_bench(spark, sf_dir)
-    spark.catalog.clearCache()
-    # measured verified-pair recall above the cap + wedge rescue
-    # (VERDICT r8 #3) — synthetic planted corpora, sf-independent
-    hot_recall = hot_bucket_recall_bench(spark)
-    spark.catalog.clearCache()
-    # measured bloom prefilter effectiveness at bench scale (round 10)
-    bloom_stats = decontaminate_bloom_stats(spark, sf_dir)
-    spark.catalog.clearCache()
-    # ... and on the planted ~1%-overlap corpus (VERDICT r11 #5): the
-    # realistic eval-decon shape, where candidate_fraction ~ overlap+FPR
-    # and the prefilter spares ~99% of the exact verify join
-    bloom_low = (
-        decontaminate_bloom_lowoverlap_stats(
-            spark, n_train=200_000, n_eval=20_000
-        )
-        if small
-        else decontaminate_bloom_lowoverlap_stats(spark)
-    )
-    spark.catalog.clearCache()
-    # minhash-vs-simhash recall/precision on the planted-pair corpus
-    # (VERDICT r11 #7): the dedup method choice, measured
-    method_cmp = (
-        neardup_method_compare_bench(spark, n_background=500, pairs_per_tier=10)
-        if small
-        else neardup_method_compare_bench(spark)
-    )
-    spark.catalog.clearCache()
-    # the flagship pipeline on a planted WIDE-vocab corpus where every
-    # stage keeps and removes rows (VERDICT r12 #6): the headline
-    # corpus_pipeline_e2e row's decon stage legitimately empties the
-    # driver's 31-word-vocabulary corpus at sf0.1, so packing/budget
-    # are measured on real rows HERE
-    pipeline_planted = (
-        corpus_pipeline_planted_stats(spark, n_docs=800, vocab_size=2500)
-        if small
-        else corpus_pipeline_planted_stats(spark)
-    )
-    spark.stop()
-    return {
-        "ann_lsh_clustered_candidate_fraction": cand_fraction,
-        "ann_ivf_trained_recall": ivf_trained,
-        "hot_bucket_guard": hot_guard,
-        "hot_bucket_recall": hot_recall,
-        "decontaminate_bloom": bloom_stats,
-        "decontaminate_bloom_lowoverlap": bloom_low,
-        "neardup_method_compare": method_cmp,
-        "corpus_pipeline_planted": pipeline_planted,
-    }
-
-
 def main() -> None:
     if len(sys.argv) != 2:
         raise SystemExit(
-            "usage: python -m apache_flink_pratices_spark.bench_query "
-            "(<query_name> | --extras)"
+            "usage: python -m apache_flink_pratices_spark.bench_query <query_name>"
         )
-    arg = sys.argv[1]
-    out = _run_extras() if arg == "--extras" else _run_query(arg)
+    out = _run_query(sys.argv[1])
     print(json.dumps(out, separators=(",", ":")))
 
 

@@ -410,11 +410,11 @@ def _bloom_probed(spark: SparkSession, sf_dir: str):
 
 
 def decontaminate_bloom_stats(spark: SparkSession, sf_dir: str) -> dict:
-    """Measured bloom effectiveness at ``sf_dir`` scale (emitted in the
-    bench's scale-evidence extras each round): candidate fraction (how
-    much of the train shingle stream the exact verify join must touch)
-    and the realized row-level false-positive rate (bloom-positive rows
-    NOT in the exact eval set, over truly-negative rows)."""
+    """Measured bloom effectiveness at ``sf_dir`` scale: candidate
+    fraction (how much of the train shingle stream the exact verify join
+    must touch) and the realized row-level false-positive rate
+    (bloom-positive rows NOT in the exact eval set, over truly-negative
+    rows)."""
     eval_h, probed = _bloom_probed(spark, sf_dir)
     total = probed.count()
     pos = probed.filter(F.col("hit") == 1).count()
@@ -435,10 +435,7 @@ def decontaminate_bloom_stats(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def synthetic_decon_corpus(
-    spark: SparkSession,
-    n_train: int = 2_000_000,
-    n_eval: int = 200_000,
-    overlap_bp: int = 100,
+    spark: SparkSession, n_train: int, n_eval: int, overlap_bp: int
 ):
     """(eval_h, train, n_planted): a PLANTED low-overlap decontamination
     corpus (VERDICT r11 #5). The sf0.1 documents corpus is 61.5%
@@ -471,14 +468,9 @@ def synthetic_decon_corpus(
     return eval_h, train, n_planted
 
 
-def decontaminate_bloom_lowoverlap_stats(
-    spark: SparkSession,
-    n_train: int = 2_000_000,
-    n_eval: int = 200_000,
-    overlap_bp: int = 100,
-) -> dict:
+def decontaminate_bloom_lowoverlap_stats(spark: SparkSession) -> dict:
     """Measured bloom-prefilter effectiveness on the planted ~1%-overlap
-    corpus (bench extras since round 12, VERDICT r11 #5) — the shape
+    corpus (40k train rows, 4k eval rows; VERDICT r11 #5) — the shape
     where the bloom actually pays: candidate_fraction should sit at
     ~overlap + FPR, i.e. the exact verify join touches ~1% of the train
     stream instead of 100% (the 10^9-eval-ngram argument is made from
@@ -487,8 +479,9 @@ def decontaminate_bloom_lowoverlap_stats(
     bitmap, vectorized `_bloom_probe_fn`; `false_negatives` is recounted
     mechanically (bloom-negative rows truly in eval must be zero — the
     no-false-negative contract) rather than assumed."""
+    n_eval = 4_000
     eval_h, train, n_planted = synthetic_decon_corpus(
-        spark, n_train, n_eval, overlap_bp
+        spark, n_train=40_000, n_eval=n_eval, overlap_bp=100
     )
     words = _build_bloom(eval_h)
     bc = spark.sparkContext.broadcast(words.tobytes())
@@ -1204,10 +1197,6 @@ def doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- batch funnel / sequence match -----------------------------------------
 
-#: the funnel pattern, as ordered event-type initials (types are
-#: click/error/purchase/signup/view — initials are unique)
-FUNNEL_STAGES = ("signup", "click", "purchase")
-
 
 @register(
     "funnel_conversion",
@@ -1253,6 +1242,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     seqs = e.groupBy("user_id").agg(
         F.count("*").alias("n_events"), seq.alias("seq")
     )
+    # event types click/error/purchase/signup/view have unique initials
     stage = (
         F.when(F.col("seq").rlike("s.*c.*p"), 3)
         .when(F.col("seq").rlike("s.*c"), 2)
@@ -1950,10 +1940,10 @@ def _pipeline_oracle() -> str:
     "saturates 3-gram overlap at that scale), so the benched wall "
     "covers the full stage graph but the packing/budget tail runs on "
     "zero survivors; stage VALUES are verified at sf0.01 (101 "
-    "survivors) by the driver gate, and since round 13 the bench "
-    "extras ALSO measure the pipeline on a planted wide-vocabulary "
-    "corpus where every stage keeps and removes rows "
-    "(corpus_pipeline_planted_stats, VERDICT r12 #6).",
+    "survivors) by the driver gate, and the pipeline is ALSO measured "
+    "on a planted wide-vocabulary corpus where every stage keeps and "
+    "removes rows (corpus_pipeline_planted_stats, VERDICT r12 #6; "
+    "pinned in tests/test_curation.py).",
     bench=True,
     tags=("curation", "dedup", "tokens", "packing", "llm-pipeline", "composition"),
 )
@@ -2102,32 +2092,32 @@ def _planted_pipeline_words(i: int, vocab_size: int, n: int = 48) -> list[str]:
     ]
 
 
-def corpus_pipeline_planted_stats(
-    spark: SparkSession, n_docs: int = 2500, vocab_size: int = 6000
-) -> dict:
+def corpus_pipeline_planted_stats(spark: SparkSession) -> dict:
     """Measured NON-degenerate pipeline row (VERDICT r12 #6): at sf0.1 the
     driver corpus's 31-word vocabulary saturates 3-gram overlap and the
     decon stage legitimately empties the corpus, so the flagship bench
     row's packing/budget tail ran on zero rows. This plants a
-    WIDE-vocabulary corpus where every stage keeps AND removes documents
-    — exact near-dup copies (every 17th train doc copies its
-    predecessor), short Gopher-failing docs (every 11th), eval-plagiarist
-    docs (every 13th train doc reuses its eval anchor's words — >10%
-    shingle overlap, decon-dirty), and a hash-gated ~56% quality-
-    temperature survival — then runs the REGISTERED pipeline end-to-end
-    and records per-stage survivor counts plus two walls (first run
-    includes the one-time pair/label-artifact builds; the second is the
-    steady state the headline row measures). Emitted in bench extras."""
+    WIDE-vocabulary corpus (800 docs over a 2500-word vocabulary) where
+    every stage keeps AND removes documents — exact near-dup copies
+    (every 17th train doc copies its predecessor), short Gopher-failing
+    docs (every 11th), eval-plagiarist docs (every 13th train doc reuses
+    its eval anchor's words — >10% shingle overlap, decon-dirty), and a
+    hash-gated ~56% quality-temperature survival — then runs the
+    REGISTERED pipeline end-to-end and records per-stage survivor counts
+    plus two walls (first run includes the one-time pair/label-artifact
+    builds; the second is the steady state the headline row measures)."""
     import os
     import shutil
     import tempfile
     import time
 
+    n_docs, vocab_size = 800, 2500
+
     sf = tempfile.mkdtemp(prefix="afp_pipe_planted_")
     # Scope the write-once pair/label/probe artifacts to the planted
     # corpus's own tempdir: the corpus key embeds this fresh mkdtemp
     # path, so artifacts published into the SHARED base could never be
-    # cache-hit again and would accumulate unboundedly across bench runs
+    # cache-hit again and would accumulate unboundedly across runs
     # (self-review r13). Restored before the rmtree in finally.
     prior_base = os.environ.get("SPARK_GRAFT_ARTIFACT_DIR")
     os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = os.path.join(sf, "artifacts")

@@ -785,28 +785,26 @@ def _simhash_candidates(
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
-def hot_bucket_guard_bench(
-    spark: SparkSession, sf_dir: str, n_boiler: int = 3000
-) -> dict:
-    """Measured above-cap guard behaviour at bench scale (VERDICT r7 #4).
+def hot_bucket_guard_bench(spark: SparkSession, sf_dir: str) -> dict:
+    """Measured above-cap guard behaviour (VERDICT r7 #4).
 
     The shipped corpora never trip the 1024 cap (max simhash bucket at
-    sf0.1: 203), so the guarded branch's bound was previously evidenced
-    only at pytest scale. This plants the adversarial case AT sf0.1: the
-    real documents table plus ``n_boiler`` identical boilerplate docs —
-    every boilerplate fingerprint is identical, so all four 16-bit bands
-    collide into one bucket of ``n_boiler`` members, well past the cap —
-    then runs the exact production candidate kernel
-    (:func:`_simhash_candidates`, same cap/reps constants) end to end.
+    sf0.1: 203). This plants the adversarial case on ``sf_dir``: the
+    real documents table plus ``HOT_BUCKET_CAP + 200`` identical
+    boilerplate docs — every boilerplate fingerprint is identical, so all
+    four 16-bit bands collide into one bucket past the cap — then runs
+    the exact production candidate kernel (:func:`_simhash_candidates`,
+    same cap/reps constants) end to end.
 
-    Returns the bench detail dict: guarded candidate-pair count and wall
-    seconds, alongside the arithmetic all-pairs fan-out the unguarded
-    self-join would have emitted for the boilerplate bucket alone
-    (``bands × C(n_boiler, 2)`` join rows — at the default 3000 docs
-    that is ~18M pairs vs the guard's ≤ ``bands·B·reps`` ≈ 96k). This is
-    the 100 TB skew story made a number: a boilerplate block scales the
-    unguarded join quadratically, the guarded one linearly."""
+    Returns the guarded candidate-pair count and wall seconds, alongside
+    the arithmetic all-pairs fan-out the unguarded self-join would have
+    emitted for the boilerplate bucket alone (``bands × C(n_boiler, 2)``
+    join rows — ~3.0M pairs for 1224 docs vs the guard's
+    ≤ ``bands·B·reps`` ≈ 39k): a boilerplate block scales the unguarded
+    join quadratically, the guarded one linearly."""
     import time
+
+    n_boiler = HOT_BUCKET_CAP + 200  # the smallest above-cap block
 
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
@@ -1117,24 +1115,13 @@ def hot_bucket_recall_bench(spark: SparkSession) -> dict:
     }
 
 
-def planted_pair_text_corpus(
-    n_background: int = 2000,
-    pairs_per_tier: int = 25,
-    doc_len: int = 40,
-    vocab_size: int = 200,
-    tiers: tuple[tuple[str, int], ...] = (
-        ("r1", 1),
-        ("r2", 2),
-        ("r4", 4),
-        ("r6", 6),
-    ),
-):
+def planted_pair_text_corpus():
     """(rows, planted): a deterministic planted-pair TEXT corpus for the
     minhash-vs-simhash method comparison (VERDICT r11 #7).
 
-    Background documents draw ``doc_len`` tokens md5-deterministically
-    from a ``vocab_size`` vocabulary (random pairs share essentially no
-    3-gram shingles). Each tier plants ``pairs_per_tier`` (A, B) pairs
+    300 background documents draw ``doc_len`` = 40 tokens
+    md5-deterministically from a 200-word vocabulary (random pairs share
+    essentially no 3-gram shingles). Each tier plants 10 (A, B) pairs
     where B replaces ``r`` of A's tokens at positions spaced 5 apart
     (each replacement kills ≤3 distinct shingles), so the tiers land at
     shingle-Jaccard ≈ (S-3r)/(S+3r) for S = doc_len-2: r=1→~0.85,
@@ -1143,6 +1130,9 @@ def planted_pair_text_corpus(
     Jaccard is recomputed from the shingle sets by the bench, never
     assumed."""
     import hashlib
+
+    n_background, pairs_per_tier, doc_len, vocab_size = 300, 10, 40, 200
+    tiers = (("r1", 1), ("r2", 2), ("r4", 4), ("r6", 6))
 
     def tok(tag: str) -> str:
         return f"w{int(hashlib.md5(tag.encode()).hexdigest()[:8], 16) % vocab_size:03d}"
@@ -1165,11 +1155,7 @@ def planted_pair_text_corpus(
     return rows, planted
 
 
-def neardup_method_compare_bench(
-    spark: SparkSession,
-    n_background: int = 2000,
-    pairs_per_tier: int = 25,
-) -> dict:
+def neardup_method_compare_bench(spark: SparkSession) -> dict:
     """Measured recall/precision/pairs/wall of `dedup_minhash_lsh` vs
     `dedup_simhash` semantics on the planted-pair corpus (VERDICT
     r11 #7) — the method choice, made measurable the way the streaming
@@ -1194,9 +1180,7 @@ def neardup_method_compare_bench(
     Jaccard 0.86/0.73/0.52, precision 1.0 for both)."""
     import time
 
-    rows, planted = planted_pair_text_corpus(
-        n_background=n_background, pairs_per_tier=pairs_per_tier
-    )
+    rows, planted = planted_pair_text_corpus()
     d = spark.createDataFrame(rows, "doc_id long, text string").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -1247,9 +1231,8 @@ def neardup_method_compare_bench(
         }, emitted
 
     # upstream frames each method persists, unpersisted in the closing
-    # cleanup (round-12 self-review: they leaked past the bench in
-    # long-lived sessions — the module-scoped test fixture, a service
-    # loop — and only the extras path escaped via spark.stop())
+    # cleanup so they do not outlive the measurement in a long-lived
+    # session (the module-scoped test fixture)
     method_persists: list[DataFrame] = []
 
     def minhash_pairs() -> DataFrame:

@@ -284,7 +284,6 @@ def kmeans_fit(
     vectors: DataFrame,
     k: int = KMEANS_K,
     max_iter: int = 5,
-    seeds: list[list[int]] | None = None,
 ) -> tuple[list[list[int]], list[float]]:
     """Multi-iteration Lloyd loop: returns (final quantized centroids,
     per-round inertia history — non-increasing by construction).
@@ -297,8 +296,7 @@ def kmeans_fit(
     once per Lloyd round — not once for inertia and again for the
     update (VERDICT/ADVICE r4). An empty cluster keeps its previous
     centroid."""
-    if seeds is None:
-        seeds = seed_farthest_point(vectors, k)
+    seeds = seed_farthest_point(vectors, k)
     history: list[float] = []
     for _ in range(max_iter):
         # one `best` struct projected, fields extracted from it — never

@@ -43,6 +43,9 @@ from apache_flink_pratices_spark.registry import register
 
 #: embedding width of the testdata corpus (asserted at load in the loop)
 DIMS = 64
+#: power-iteration convergence: stop once the unit iterate moves less
+#: than this (Euclidean step between rounds)
+PCA_TOL = 1e-7
 
 
 def _power_step(vectors: DataFrame, v: list[int]) -> DataFrame:
@@ -103,7 +106,7 @@ def pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pca_fit(
-    vectors: DataFrame, max_iter: int = 8, tol: float = 1e-7
+    vectors: DataFrame, max_iter: int = 8
 ) -> tuple[list[float], list[float]]:
     """Power-iteration loop: returns (unit top principal direction,
     per-round Rayleigh-quotient history — non-decreasing up to float
@@ -133,7 +136,7 @@ def pca_fit(
         if norm == 0.0:
             break
         new_v = [x / norm for x in w]
-        if sum((a - b) ** 2 for a, b in zip(new_v, v)) < tol * tol:
+        if sum((a - b) ** 2 for a, b in zip(new_v, v)) < PCA_TOL * PCA_TOL:
             v = new_v
             break
         v = new_v

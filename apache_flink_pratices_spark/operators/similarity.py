@@ -223,8 +223,6 @@ def ann_lsh_frame(
     vectors: DataFrame,
     bits: int = RH_BITS,
     band_size: int = RH_BAND,
-    dim: int = DIM,
-    n_queries: int = N_QUERIES,
     top_k: int = TOP_K,
 ) -> DataFrame:
     """Bucketed ANN over (vec_id, label, embedding) rows: band-bucket
@@ -240,19 +238,19 @@ def ann_lsh_frame(
     )
     # The corpus signature pass has exactly ONE consumer (the corpus side
     # of the band join): the broadcast query side re-derives its
-    # signatures from the n_queries RAW rows instead of filtering a
+    # signatures from the N_QUERIES RAW rows instead of filtering a
     # persisted corpus-wide signature table (r14, guide §5 "caching is
     # only worth it when a DataFrame is reused"). The old persist made
     # the qb broadcast build materialize the ENTIRE corpus signature
     # cache to extract 5 query rows — a corpus-sized session cache and a
     # full materialization barrier before the main join could start; the
     # per-row signature kernel is deterministic, so re-running it on the
-    # tiny query subset is bit-identical and costs n_queries rows. At
+    # tiny query subset is bit-identical and costs N_QUERIES rows. At
     # 100 TB this is the difference between caching the corpus signature
     # table and streaming it through the join once.
-    bands = _signature_bands(vectors, bits, band_size, dim)
+    bands = _signature_bands(vectors, bits, band_size, DIM)
     qb = _signature_bands(
-        vectors.filter(F.col("vec_id") < n_queries), bits, band_size, dim
+        vectors.filter(F.col("vec_id") < N_QUERIES), bits, band_size, DIM
     ).select(F.col("vec_id").alias("query_id"), "band", "bucket")
     cand = (
         bands.join(F.broadcast(qb), ["band", "bucket"])
@@ -260,7 +258,7 @@ def ann_lsh_frame(
         .select("query_id", "vec_id")
         .distinct()
     )
-    q = _query_frame(vectors, n_queries)
+    q = _query_frame(vectors, N_QUERIES)
     pairs = cand.join(with_norm, "vec_id").join(F.broadcast(q), "query_id")
     return _ranked_topk(_pair_cosine_scored(pairs), top_k)
 
@@ -477,38 +475,33 @@ def ivf_assign(vectors: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf_frame(
-    vectors: DataFrame,
-    n_queries: int = N_QUERIES,
-    nprobe: int = IVF_NPROBE,
-    top_k: int = TOP_K,
-) -> DataFrame:
-    """IVF ANN: assign corpus to cells, probe the query's nprobe best
+def ann_ivf_frame(vectors: DataFrame, top_k: int = TOP_K) -> DataFrame:
+    """IVF ANN: assign corpus to cells, probe the query's IVF_NPROBE best
     cells, exact-cosine verify inside probed cells only, per-query top-k.
 
     At 100 TB the corpus is written bucketed by cell; a query then reads
-    only nprobe/IVF_CELLS of the data — the probe list is a broadcast of
-    n_queries·nprobe (8-byte, 8-byte) rows, and the verify is
+    only IVF_NPROBE/IVF_CELLS of the data — the probe list is a broadcast
+    of N_QUERIES·IVF_NPROBE (8-byte, 8-byte) rows, and the verify is
     partition-local within each probed cell.
     """
     # assigned has exactly ONE consumer (the candidate side): the query
-    # frame is re-derived from the n_queries RAW rows (see _query_frame),
+    # frame is re-derived from the N_QUERIES RAW rows (see _query_frame),
     # so the vectorized assignment streams straight into the probe join —
     # no corpus-sized cache, no materialization barrier (r14, guide §5).
     assigned = ivf_assign(vectors)
     probes = (
-        vectors.filter(F.col("vec_id") < n_queries)
+        vectors.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.explode(
                 F.transform(
-                    F.slice(_ivf_sims(), 1, nprobe), lambda s: s["cell"]
+                    F.slice(_ivf_sims(), 1, IVF_NPROBE), lambda s: s["cell"]
                 )
             ).alias("cell"),
         )
     )
     return _ivf_probe_verify(
-        assigned, probes, _query_frame(vectors, n_queries), top_k
+        assigned, probes, _query_frame(vectors, N_QUERIES), top_k
     )
 
 
@@ -755,11 +748,11 @@ def l2_cells_sorted(seeds: list[list[int]]) -> Column:
     """array<struct<d2, cell>> over the ``embedding`` column, sorted
     ascending by exact quantized-int64 squared distance to each trained
     centroid (ties -> smallest cell): element 1 is the assignment, the
-    first ``nprobe`` are the probe list. The K x dims codebook inlines
+    first IVF_NPROBE are the probe list. The K x dims codebook inlines
     as ONE nested literal looped by an indexed transform (the
     kmeans._best_cluster codegen stance). HOF-interpreted per element —
     the corpus hot path uses the vectorized kernel instead; this is the
-    query-side probe (n_queries rows) and the pinned expression twin."""
+    query-side probe (N_QUERIES rows) and the pinned expression twin."""
     from apache_flink_pratices_spark.operators.kmeans import Q
 
     qe = F.expr(
@@ -848,47 +841,37 @@ def ivf_assign_trained(
 
 
 def ann_ivf_trained_frame(
-    vectors: DataFrame,
-    seeds: list[list[int]],
-    n_queries: int = N_QUERIES,
-    nprobe: int = IVF_NPROBE,
-    top_k: int = TOP_K,
+    vectors: DataFrame, seeds: list[list[int]]
 ) -> DataFrame:
     """Trained-centroid IVF ANN: assign the corpus to its nearest
-    k-means centroid (map-only kernel), probe each query's ``nprobe``
+    k-means centroid (map-only kernel), probe each query's IVF_NPROBE
     nearest centroids, exact-cosine verify inside probed cells only —
     the identical cell-bounded tail as the hash-grid IVF by shared
     :func:`_ivf_probe_verify`. Like the hash-grid frame, the assignment
     has one consumer and streams unpersisted; the query side comes from
     the raw rows (r14, guide §5)."""
     assigned = ivf_assign_trained(vectors, seeds)
-    probes = vectors.filter(F.col("vec_id") < n_queries).select(
+    probes = vectors.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.explode(
             F.transform(
-                F.slice(l2_cells_sorted(seeds), 1, nprobe),
+                F.slice(l2_cells_sorted(seeds), 1, IVF_NPROBE),
                 lambda s: s["cell"].cast("int"),
             )
         ).alias("cell"),
     )
     return _ivf_probe_verify(
-        assigned, probes, _query_frame(vectors, n_queries), top_k
+        assigned, probes, _query_frame(vectors, N_QUERIES), TOP_K
     )
 
 
-def _sql_ann_ivf_trained(
-    k: int = IVF_CELLS,
-    iters: int = IVF_KM_ITERS,
-    n_queries: int = N_QUERIES,
-    nprobe: int = IVF_NPROBE,
-    top_k: int = TOP_K,
-) -> str:
+def _sql_ann_ivf_trained() -> str:
     """DuckDB twin of the ENTIRE trained pipeline, unrolled: deterministic
-    farthest-point seeding (k-1 running-min/argmax stages), ``iters``
-    Lloyd iterations (exact int64 distances; centroid update is exact
-    FLOOR division — ``(sx - ((sx % n) + n) % n) // n`` replicates
-    Python's ``//`` for negative sums where DuckDB truncates), then the
-    nearest-centroid assignment/probe and the standard cell-bounded
+    farthest-point seeding (IVF_CELLS-1 running-min/argmax stages),
+    IVF_KM_ITERS Lloyd iterations (exact int64 distances; centroid
+    update is exact FLOOR division — ``(sx - ((sx % n) + n) % n) // n``
+    replicates Python's ``//`` for negative sums where DuckDB truncates),
+    then the nearest-centroid assignment/probe and the standard cell-bounded
     cosine verify. Multiply-referenced stages are MATERIALIZED (the
     bpe_train exponential-inlining lesson)."""
     from apache_flink_pratices_spark.operators.kmeans import Q
@@ -908,7 +891,7 @@ def _sql_ann_ivf_trained(
     ),
     s1 AS MATERIALIZED (SELECT qe FROM q ORDER BY vec_id LIMIT 1)"""
     ]
-    for j in range(1, k):
+    for j in range(1, IVF_CELLS):
         if j == 1:
             parts.append("""
     m1 AS MATERIALIZED (
@@ -933,13 +916,13 @@ def _sql_ann_ivf_trained(
       ORDER BY m.d2 DESC, m.vec_id LIMIT 1
     )""")
     seeds_union = "\n      UNION ALL ".join(
-        f"SELECT {c} AS cluster, qe FROM s{c + 1}" for c in range(k)
+        f"SELECT {c} AS cluster, qe FROM s{c + 1}" for c in range(IVF_CELLS)
     )
     parts.append(f"""
     seeds0 AS MATERIALIZED (
       {seeds_union}
     )""")
-    for it in range(1, iters + 1):
+    for it in range(1, IVF_KM_ITERS + 1):
         parts.append(f"""
     a{it} AS (
       SELECT vec_id, cluster FROM (
@@ -976,14 +959,14 @@ def _sql_ann_ivf_trained(
       FROM (SELECT p.vec_id, p.cluster,
                    CAST(SUM((u.a - u.b) * (u.a - u.b)) AS BIGINT) AS d2
             FROM (SELECT v.vec_id, s.cluster, v.qe, s.qe AS sq
-                  FROM q v CROSS JOIN seeds{iters} s) p,
+                  FROM q v CROSS JOIN seeds{IVF_KM_ITERS} s) p,
                  LATERAL (SELECT unnest(p.qe) AS a, unnest(p.sq) AS b) u
             GROUP BY p.vec_id, p.cluster)
     ),
     assigned AS (SELECT vec_id, cell FROM rankt WHERE rk = 1),
     probes AS (
       SELECT vec_id AS query_id, cell
-      FROM rankt WHERE vec_id < {n_queries} AND rk <= {nprobe}
+      FROM rankt WHERE vec_id < {N_QUERIES} AND rk <= {IVF_NPROBE}
     ),
     cand AS (
       SELECT DISTINCT p.query_id, a.vec_id
@@ -1019,7 +1002,7 @@ def _sql_ann_ivf_trained(
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                        ORDER BY cosine DESC, vec_id) AS rn
           FROM scored)
-    WHERE rn <= {top_k}"""
+    WHERE rn <= {TOP_K}"""
     return "WITH " + ",".join(parts) + final
 
 
@@ -1041,7 +1024,7 @@ def _sql_ann_ivf_trained(
     "verify) as unrolled CTE stages, so the artifact content itself is "
     "value-hash-checked against an independent engine. Measured on the "
     "planted-cluster corpus the trained codebook beats the hash-grid "
-    "cells (bench extras ann_ivf_trained_recall; pinned in "
+    "cells (ann_ivf_trained_recall_bench, pinned in "
     "tests/test_ann_ivf_trained.py).",
     bench=True,
     tags=("similarity", "ann", "ivf", "kmeans", "training"),
@@ -1054,9 +1037,8 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_ivf_trained_recall_bench(spark: SparkSession, sf_dir: str) -> dict:
     """Measured trained-vs-hash-grid IVF comparison on the planted-cluster
     corpus (the deployment regime): per-variant recall@10 vs brute force
-    and candidate fraction. Emitted in bench.py's detail extras so the
-    'trained centroids beat the stand-in grid' claim is a recorded
-    artifact (VERDICT r12 #4)."""
+    and candidate fraction, so the 'trained centroids beat the stand-in
+    grid' claim is a measured, test-pinned number (VERDICT r12 #4)."""
     from pyspark.sql.window import Window
 
     from pyspark.storagelevel import StorageLevel
@@ -1065,7 +1047,7 @@ def ann_ivf_trained_recall_bench(spark: SparkSession, sf_dir: str) -> dict:
 
     # Every persisted frame registers here and is unpersisted in the
     # closing finally: an exception mid-measurement must not leak
-    # MEMORY_AND_DISK frames for the rest of the bench-extras session
+    # MEMORY_AND_DISK frames for the rest of the calling session
     # (ADVICE r13).
     persisted: list[DataFrame] = []
 
@@ -1306,10 +1288,10 @@ CLU_BAND = 8  #: band width → 8 bands × 256 buckets (measured at sf0.01:
 #: fraction stays well under the 0.2 bar)
 
 
-def cluster_offsets(n: int = CLU_N, dim: int = DIM, w: float = CLU_W) -> list[list[float]]:
-    """±w offset matrix from md5 of 'afp-clu-{c}-{k}' (k 1-based) — the
-    same derivation kernel as :func:`rh_signs` (w=1 special case)."""
-    return _md5_pm_matrix("afp-clu", n, dim, w)
+def cluster_offsets(n: int = CLU_N) -> list[list[float]]:
+    """±CLU_W offset matrix from md5 of 'afp-clu-{c}-{k}' (k 1-based) —
+    the same derivation kernel as :func:`rh_signs` (w=1 special case)."""
+    return _md5_pm_matrix("afp-clu", n, DIM, CLU_W)
 
 
 def clustered_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1410,10 +1392,9 @@ _SQL_CLUSTERED_ELEMS = f"""
     "the wide bands, cross-cluster signatures agree per-bit with p≈0.5 so "
     "a band collides with p≈1/256 — measured candidate fraction <0.2 and "
     "recall ≥0.9 vs the brute-force oracle on the same derived corpus "
-    "(pinned in tests/test_ann_lsh.py; fraction emitted in bench.py's "
-    "detail line per VERDICT r6 #5). Plan shape identical to ann_lsh_topk: "
-    "map-only signatures, broadcast query bands, exact verify on "
-    "candidates only.",
+    "(pinned in tests/test_ann_lsh.py, VERDICT r6 #5). Plan shape "
+    "identical to ann_lsh_topk: map-only signatures, broadcast query "
+    "bands, exact verify on candidates only.",
     bench=True,
     tags=("similarity", "ann", "lsh", "clustered"),
 )
@@ -1427,15 +1408,14 @@ def ann_lsh_clustered_candidate_fraction(
     spark: SparkSession, sf_dir: str
 ) -> float:
     """Measured candidate fraction of the clustered LSH query: distinct
-    (query, candidate) pairs / (N_QUERIES · (N−1)). Emitted in bench.py's
-    detail line so the pruning claim is a recorded artifact."""
+    (query, candidate) pairs / (N_QUERIES · (N−1)); the pruning claim
+    is pinned on it in tests/test_ann_lsh.py."""
     from pyspark.storagelevel import StorageLevel
 
     vectors = clustered_embeddings(spark, sf_dir)
     # persist: the signature pass is the dominant map work and feeds BOTH
-    # band-join sides (review r7: it ran twice per call without this —
-    # several wasted seconds of untimed bench wall per round); n comes
-    # off the same cache instead of a third corpus scan
+    # band-join sides (review r7: it ran twice per call without this);
+    # n comes off the same cache instead of a third corpus scan
     bands = _signature_bands(vectors, CLU_BITS, CLU_BAND, DIM).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -63,15 +63,13 @@ def salted_agg(
     df: DataFrame,
     keys: list[str],
     sum_cols: list[str] | None = None,
-    count: bool = True,
     salt_n: int = 8,
 ) -> DataFrame:
     """Two-stage sum/count aggregation via an intermediate salted groupBy."""
     sum_cols = sum_cols or []
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_n))
     partial_aggs: list[Column] = [F.sum(c).alias(f"__sum_{c}") for c in sum_cols]
-    if count:
-        partial_aggs.append(F.count("*").alias("__cnt"))
+    partial_aggs.append(F.count("*").alias("__cnt"))
     partial = (
         df.withColumn("__salt", salt.cast("int"))
         .groupBy(*keys, "__salt")
@@ -80,8 +78,7 @@ def salted_agg(
     final_aggs: list[Column] = [
         F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sum_cols
     ]
-    if count:
-        final_aggs.append(F.sum("__cnt").alias("cnt"))
+    final_aggs.append(F.sum("__cnt").alias("cnt"))
     return partial.groupBy(*keys).agg(*final_aggs)
 
 

@@ -2,7 +2,8 @@
 reference's schema semantics (``proto/market_data.proto:9-45``,
 ``proto/common.proto:6-32``) and the mapper conventions of
 ``src/data_ingestion/infrastructure/serialization/protobuf_mapper.py:36-73``
-(enum tables, ms-epoch ↔ google.protobuf.Timestamp).
+(enums carried as their integer codes, ms-epoch ↔
+google.protobuf.Timestamp).
 
 Messages:
 
@@ -21,12 +22,6 @@ from __future__ import annotations
 from typing import Any
 
 from apache_flink_pratices_spark.serialization.protowire import Field, decode, encode
-
-# enums (common.proto:6-32)
-EXCHANGE = {"EXCHANGE_UNSPECIFIED": 0, "UPBIT": 1}
-CHANGE_TYPE = {"CHANGE_TYPE_UNSPECIFIED": 0, "RISE": 1, "EVEN": 2, "FALL": 3}
-ASK_BID = {"ASK_BID_UNSPECIFIED": 0, "ASK": 1, "BID": 2}
-STREAM_TYPE = {"STREAM_TYPE_UNSPECIFIED": 0, "SNAPSHOT": 1, "REALTIME": 2}
 
 TIMESTAMP = (
     Field(1, "seconds", "int64"),

@@ -4,12 +4,13 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the box's
 ``os.cpu_count()``); the same configuration is what we would ship to a
 1000-executor cluster, with only the master URL and memory sizing changing:
 
-- One shuffle and state width, ``_cpus()``. AQE (runtime coalescing,
-  skew-join splitting, dynamic join selection) right-sizes batch shuffles
-  below it from map output statistics; a streaming checkpoint keeps the
-  state width it was first started with. The width is measured on a
-  4-core box only; on 32 cores a state width of 16 drained the fraud and
-  CEP streams about twice as fast as 32 (``docs/scale_notes.md``).
+- One shuffle and state width, ``_cpus()``. Spark's default AQE
+  (runtime coalescing, skew-join splitting, dynamic join selection)
+  right-sizes batch shuffles below it from map output statistics; a
+  streaming checkpoint keeps the state width it was first started with.
+  The width is measured on a 4-core box only; on 32 cores a state width
+  of 16 drained the fraud and CEP streams about twice as fast as 32
+  (``docs/scale_notes.md``).
 - Session timezone pinned to UTC: the reference mandates tz-aware UTC
   timestamps everywhere (reference ``src/data_ingestion/domain/models/
   market_data.py:147-239``).
@@ -53,13 +54,13 @@ def engine_shuffle_width(spark: SparkSession):
 
 
 def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
-    """Apply engine configuration to any builder."""
+    """Apply engine configuration to any builder. Only values that differ
+    from Spark's own defaults are set (AQE, its coalescing and skew-join
+    splitting, parquet filter pushdown and the 128 MiB file split are
+    already Spark's defaults; tests/test_session.py checks this)."""
     return (
         builder.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(_cpus()))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # AQE must also right-size CACHED plan materializations: the
         # default (false) builds every persist()/localCheckpoint() at the
         # static shuffle.partitions width with NO runtime coalescing —
@@ -88,8 +89,6 @@ def tune(builder: SparkSession.Builder) -> SparkSession.Builder:
         # advisory cap rules.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         # streaming state: RocksDB scales state size past executor heap
         .config(
             "spark.sql.streaming.stateStore.providerClass",

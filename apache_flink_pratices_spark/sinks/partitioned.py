@@ -38,9 +38,9 @@ from pyspark.sql import functions as F
 _MAX_RECORDS_PER_FILE = 5_000_000
 
 
-def with_event_date(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Add the partition column: calendar date of the event timestamp."""
-    return df.withColumn("event_date", F.to_date(F.col(ts_col)))
+def with_event_date(df: DataFrame) -> DataFrame:
+    """Add the partition column: calendar date of the ``ts`` column."""
+    return df.withColumn("event_date", F.to_date(F.col("ts")))
 
 
 def write_partitioned(
@@ -66,18 +66,15 @@ def write_partitioned(
     )
 
 
-def foreach_batch_writer(
-    path: str,
-    ts_col: str = "ts",
-) -> Callable[[DataFrame, int], None]:
+def foreach_batch_writer(path: str) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` function: idempotent partitioned landing of a
-    stream under ``(event_date, batch_id)``. A replayed micro-batch
+    stream under ``(event_date of ts, batch_id)``. A replayed micro-batch
     dynamically overwrites exactly its own ``batch_id`` sub-partitions —
     no duplicates, and no clobbering of other batches that share the
     event date."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        out = with_event_date(batch_df, ts_col).withColumn(
+        out = with_event_date(batch_df).withColumn(
             "batch_id", F.lit(batch_id)
         )
         write_partitioned(out, path, ("event_date", "batch_id"))

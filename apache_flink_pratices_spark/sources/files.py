@@ -42,15 +42,13 @@ def load_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     )
 
 
-def load_csv(
-    spark: SparkSession, path: str, schema: str, header: bool = True
-) -> DataFrame:
-    """CSV with the quarantine contract above."""
+def load_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """CSV with a header row, under the quarantine contract above."""
     return (
         spark.read.schema(_with_corrupt(schema))
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("header", "true" if header else "false")
+        .option("header", "true")
         .csv(path)
     )
 

@@ -19,11 +19,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def wordcount_stream(lines: DataFrame, text_col: str = "line") -> DataFrame:
-    """lines (streaming) → running (word, cnt). Pair with
+def wordcount_stream(lines: DataFrame) -> DataFrame:
+    """lines (streaming, a ``line`` column) → running (word, cnt). Pair with
     ``writeStream.outputMode("update")`` for Flink reduce semantics."""
     return (
-        lines.select(F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"))
+        lines.select(F.explode(F.split(F.lower(F.col("line")), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))

@@ -18,9 +18,8 @@ chars of stdout and parses the last line, so the final line must stay
 compact): two JSON lines are printed —
 
 1. a verbose detail line: per-query medians ("queries_median", the
-   box-noise indicator), sanity row counts ("rows"), the scale-evidence
-   extras, the streaming section and a schema note naming the harness
-   version;
+   box-noise indicator), sanity row counts ("rows"), the streaming
+   section and a schema note naming the harness version;
 2. the COMPACT summary line, LAST: {"metric", "value" (sum of mins),
    "unit", "sf", "runs", "queries" (per-query MIN, 3-decimal floats,
    no spaces), "spread_pct" (per-query 100*(max-min)/min, an ARRAY
@@ -50,10 +49,10 @@ projections, which made round-1 numbers up to 10x optimistic.
 
 SPARK_GRAFT_STREAM_BENCH: "small" shrinks the streaming corpora;
 "skip" (honored ONLY together with a SPARK_GRAFT_BENCH_QUERIES subset,
-so a full round artifact always carries the extras + streaming
-sections) omits the extras and streaming subprocesses entirely — the
-fast path for a targeted batch-query probe, which otherwise pays the
-several-minute streaming tail it never reads (round 13).
+so a full round artifact always carries the streaming section) omits
+the streaming subprocess — the fast path for a targeted batch-query
+probe, which otherwise pays the several-minute streaming tail it never
+reads (round 13).
 """
 
 from __future__ import annotations
@@ -149,17 +148,9 @@ def main() -> None:
         rows[name] = r["rows"]
 
     # "skip" is honored only in subset mode: the round's real artifact
-    # (a full run) must always carry the extras + streaming sections
+    # (a full run) must always carry the streaming section
     skip_tail = bool(subset) and (
         os.environ.get("SPARK_GRAFT_STREAM_BENCH") == "skip"
-    )
-
-    # --- scale-evidence extras (untimed, own fresh session) --------------
-    # measured LSH pruning on the planted-cluster corpus (VERDICT r6 #5)
-    # and the above-cap hot-bucket guard at sf0.1 (VERDICT r7 #4)
-    extras = {} if skip_tail else _subprocess_json(
-        ["-m", "apache_flink_pratices_spark.bench_query", "--extras"],
-        "bench extras",
     )
 
     # --- streaming events/sec through the flagship stateful paths --------
@@ -202,7 +193,6 @@ def main() -> None:
         "queries_median": medians,
         "queries_spread_pct": spreads,
         "rows": rows,
-        **extras,
         "streaming": stream_detail,
         "schema_note": (
             "harness v2.2: each query timed in its OWN fresh "

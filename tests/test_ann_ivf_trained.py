@@ -124,8 +124,8 @@ def test_trained_beats_hash_grid_on_clustered_corpus(spark):
 
 def test_recall_bench_unpersists_on_midway_failure(spark, monkeypatch):
     """ADVICE r13: an exception mid-measurement must not leak the
-    MEMORY_AND_DISK frames for the rest of the bench-extras session —
-    every persisted frame is released by the closing finally."""
+    MEMORY_AND_DISK frames for the rest of the calling session — every
+    persisted frame is released by the closing finally."""
     import apache_flink_pratices_spark.operators.kmeans as km
 
     def boom(*a, **k):

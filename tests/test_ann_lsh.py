@@ -111,9 +111,8 @@ def test_signs_derivation_matches_sql(spark):
 
 def test_planted_cluster_query_recall_and_pruning(spark):
     """The REGISTERED clustered variant (ann_lsh_topk_clustered) must
-    prune hard and stay near-exact at sf0.01 — the scale claim the bench
-    now records per round (VERDICT r6 #5): candidate fraction < 0.2,
-    recall vs brute force on the same derived corpus >= 0.95."""
+    prune hard and stay near-exact at sf0.01 (VERDICT r6 #5): candidate
+    fraction < 0.2, recall vs brute force on the same corpus >= 0.95."""
     import pyspark.sql.functions as F
     from pyspark.sql.window import Window
 

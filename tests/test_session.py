@@ -6,6 +6,7 @@ box's, and that core count is the engine's one shuffle width."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 from pyspark.sql import SparkSession
@@ -46,3 +47,21 @@ def test_tune_sets_only_sql_confs_spark_registers(spark):
         k for k in options if k.startswith("spark.sql.") and not spark.conf.isModifiable(k)
     ]
     assert not unknown, unknown
+
+
+
+def test_tune_sets_no_sql_conf_to_sparks_own_default(spark):
+    # a key set to the value Spark already uses changes nothing: each
+    # default is read from a fresh session with the key unset
+    def norm(v: str):  # byte sizes ("256k", "1MB", "134217728b") as bytes
+        m = re.fullmatch(r"(\d+)([kmgt]?)i?b?", v.strip().lower())
+        return int(m[1]) * 1024 ** " kmgt".index(m[2] or " ") if m else v.lower()
+
+    fresh = spark.newSession()
+    restated = []
+    for key, value in session.tune(SparkSession.Builder())._options.items():
+        if key.startswith("spark.sql."):
+            fresh.conf.unset(key)
+            if norm(fresh.conf.get(key)) == norm(value):
+                restated.append(key)
+    assert not restated, restated

@@ -211,22 +211,21 @@ def test_cluster_offsets_honours_n():
 
 
 def test_hot_bucket_guard_bench_contract(spark):
-    """The bench-scale guard measurement (VERDICT r7 #4) must actually
-    exercise the above-cap branch: the planted boilerplate block exceeds
-    the production cap, the reported pair count stays far below the
-    all-pairs fan-out, and the dict carries the pinned keys bench.py
-    publishes in the detail line."""
+    """The guard measurement (VERDICT r7 #4) must actually exercise the
+    above-cap branch: the planted boilerplate block exceeds the
+    production cap, the reported pair count stays far below the
+    all-pairs fan-out, and the dict carries its pinned keys."""
     from apache_flink_pratices_spark.operators.dedup import (
         HOT_BUCKET_CAP,
         hot_bucket_guard_bench,
     )
+    from tests.conftest import SF_SMOKE
 
-    n_boiler = HOT_BUCKET_CAP + 200  # smallest above-cap block: fast, still adversarial
-    out = hot_bucket_guard_bench(spark, "/root/testdata/sf0.001", n_boiler=n_boiler)
+    out = hot_bucket_guard_bench(spark, SF_SMOKE)
     assert set(out) == {
         "pairs", "wall_s", "n_boiler", "unguarded_boiler_pairs", "guard_bound_pairs",
     }
-    assert out["n_boiler"] == n_boiler
+    assert out["n_boiler"] == HOT_BUCKET_CAP + 200
     assert out["wall_s"] > 0
     # the guarded total (boiler + normal-corpus pairs) must stay under the
     # unguarded boilerplate fan-out alone — the point of the guard
