@@ -2,11 +2,19 @@
 round-trip queries.
 
 Field construction happens JVM-side (column expressions mirrored in the
-oracle SQL); the Arrow-batched ``mapInPandas`` stage ONLY encodes to proto3
-wire bytes and decodes back. The oracle is the *direct* projection of the
-same fields — so the driver's value-hash match proves the codec is
-lossless: any wire-format defect (dropped field, wrong tag, double
-truncation, level reordering, timestamp drift) breaks equality.
+oracle SQL); the ``mapInArrow`` stage ONLY encodes to proto3 wire bytes
+and decodes back. The oracle is the *direct* projection of the same
+fields — so the driver's value-hash match proves the codec is lossless:
+any wire-format defect (dropped field, wrong tag, double truncation, level
+reordering, timestamp drift) breaks equality.
+
+The stage is ``mapInArrow``, not ``mapInPandas``: it reads the Arrow
+columns directly (``to_pylist`` / ``to_numpy``) and builds its output as
+a ``RecordBatch`` in the declared schema, so no pandas frame is built on
+either side, and the orderbook levels never become Python dicts: they go
+to the codec as (values, offsets) columns, are packed and gathered a batch
+at a time (``protowire.encode_batch`` / ``decode_batch``), and the level
+statistics are computed with numpy.
 
 The codec is the pure-Python wire codec in
 :mod:`apache_flink_pratices_spark.serialization`, like the reference's own
@@ -19,7 +27,8 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,9 +36,9 @@ from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.operators.orderbook import _SQL_OB, orderbook_updates
 from apache_flink_pratices_spark.registry import register
 from apache_flink_pratices_spark.serialization.market_proto import (
-    decode_orderbook,
+    decode_orderbooks,
     decode_trade,
-    encode_orderbook,
+    encode_orderbooks,
     encode_trade,
     ts_to_us,
     us_to_ts,
@@ -56,6 +65,15 @@ _TRADE_OUT_SCHEMA = (
     "change_price double, trade_ts_us bigint, sequential_id bigint, "
     "stream_type bigint, received_ts_us bigint"
 )
+_ARROW_TYPES = {"string": pa.string(), "bigint": pa.int64(), "double": pa.float64()}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a flat DDL schema string, for the kernels' output."""
+    return pa.schema([(name, _ARROW_TYPES[kind]) for name, kind in (c.split(" ") for c in ddl.split(", "))])
+
+
+_TRADE_ARROW = _arrow_schema(_TRADE_OUT_SCHEMA)
 
 
 def trade_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,42 +96,27 @@ def trade_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trade_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for row in pdf.to_dict("records"):
-            msg = {
-                "exchange": int(row["exchange"]),
-                "code": row["code"],
-                "trade_price": float(row["trade_price"]),
-                "trade_volume": float(row["trade_volume"]),
-                "ask_bid": int(row["ask_bid"]),
-                "prev_closing_price": float(row["prev_closing_price"]),
-                "change": int(row["change"]),
-                "change_price": float(row["change_price"]),
-                "trade_timestamp": us_to_ts(int(row["trade_ts_us"])),
-                "sequential_id": int(row["sequential_id"]),
-                "stream_type": int(row["stream_type"]),
-                "received_timestamp": us_to_ts(int(row["received_ts_us"])),
-            }
+def _doubles(batch: pa.RecordBatch, name: str) -> list[float]:
+    """A double column as Python floats, a null as NaN."""
+    return batch.column(name).to_numpy(zero_copy_only=False).tolist()
+
+
+def _trade_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        cols = [
+            _doubles(batch, c) if batch.schema.field(c).type == pa.float64() else batch.column(c).to_pylist()
+            for c in _TRADE_COLS
+        ]
+        rows = []
+        for values in zip(*cols):
+            msg = dict(zip(_TRADE_COLS, values))
+            msg["trade_timestamp"] = us_to_ts(msg["trade_ts_us"])
+            msg["received_timestamp"] = us_to_ts(msg["received_ts_us"])
             d = decode_trade(encode_trade(msg))
-            out.append(
-                (
-                    d["exchange"],
-                    d["code"],
-                    d["trade_price"],
-                    d["trade_volume"],
-                    d["ask_bid"],
-                    d["prev_closing_price"],
-                    d["change"],
-                    d["change_price"],
-                    ts_to_us(d["trade_timestamp"]),
-                    d["sequential_id"],
-                    d["stream_type"],
-                    ts_to_us(d["received_timestamp"]),
-                )
-            )
-        yield pd.DataFrame(out, columns=list(_TRADE_COLS))
+            d["trade_ts_us"] = ts_to_us(d["trade_timestamp"])
+            d["received_ts_us"] = ts_to_us(d["received_timestamp"])
+            rows.append(d)
+        yield pa.RecordBatch.from_pylist(rows, schema=_TRADE_ARROW)
 
 
 @register(
@@ -139,7 +142,7 @@ def _trade_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("protobuf", "serialization"),
 )
 def proto_roundtrip_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return trade_messages(spark, sf_dir).mapInPandas(_trade_roundtrip, _TRADE_OUT_SCHEMA)
+    return trade_messages(spark, sf_dir).mapInArrow(_trade_kernel, _TRADE_OUT_SCHEMA)
 
 
 _OB_OUT_SCHEMA = (
@@ -150,48 +153,81 @@ _OB_OUT_SCHEMA = (
 )
 
 
-def _ob_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        for row in pdf.to_dict("records"):
-            msg = {
+_OB_ARROW = _arrow_schema(_OB_OUT_SCHEMA)
+
+
+def _levels(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
+    """list<struct<price, size>> → (values (m, 2) in ORDERBOOK_LEVEL field
+    order, n + 1 list offsets). A null list is empty; a null level or value
+    is +0.0, the proto3 default a None value encodes to."""
+    offsets = np.zeros(len(col) + 1, np.int64)
+    np.cumsum(col.value_lengths().fill_null(0).to_numpy(zero_copy_only=False), out=offsets[1:])
+    price, size = col.flatten().flatten()
+    values = np.column_stack(
+        [price.fill_null(0.0).to_numpy(zero_copy_only=False), size.fill_null(0.0).to_numpy(zero_copy_only=False)]
+    )
+    return values, offsets
+
+
+def _level_stats(values: np.ndarray, offsets: np.ndarray):
+    """Per message: level count, first and last price, and the
+    position-weighted size checksum sum((i + 1) * size), bit-equal to the
+    builtin ``sum``: added left to right from 0 (a numpy reduction is
+    pairwise and can round differently), and where both addends are NaN
+    the term's payload is kept, as CPython's float addition keeps its
+    right operand's (a numpy loop may keep either)."""
+    starts, counts = offsets[:-1], np.diff(offsets)
+    some = counts > 0
+    first, last, checksum = np.zeros(len(counts)), np.zeros(len(counts)), np.zeros(len(counts))
+    first[some] = values[starts[some], 0]
+    last[some] = values[offsets[1:][some] - 1, 0]
+    with np.errstate(over="ignore", invalid="ignore"):
+        for i in range(int(counts.max(initial=0))):
+            live = counts > i
+            acc, term = checksum[live], (i + 1) * values[starts[live] + i, 1]
+            checksum[live] = np.where(np.isnan(acc) & np.isnan(term), term, acc + term)
+    return counts, first, last, checksum
+
+
+def _ob_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        heads = [
+            {
                 "exchange": 1,
-                "code": row["code"],
-                "total_ask_size": float(row["total_ask_size"]),
-                "total_bid_size": float(row["total_bid_size"]),
-                "asks": [
-                    {"price": float(lvl["price"]), "size": float(lvl["size"])}
-                    for lvl in row["asks"]
-                ],
-                "bids": [
-                    {"price": float(lvl["price"]), "size": float(lvl["size"])}
-                    for lvl in row["bids"]
-                ],
+                "code": code,
+                "total_ask_size": ask,
+                "total_bid_size": bid,
                 "stream_type": 2,
-                "event_timestamp": us_to_ts(int(row["ts_us"])),
-                "received_timestamp": us_to_ts(int(row["ts_us"]) + 1500),
+                "event_timestamp": us_to_ts(ts),
+                "received_timestamp": us_to_ts(ts + 1500),
             }
-            d = decode_orderbook(encode_orderbook(msg))
-            asks, bids = d["asks"], d["bids"]
-            out.append(
-                (
-                    d["code"],
-                    int(row["event_id"]),
-                    ts_to_us(d["event_timestamp"]),
-                    ts_to_us(d["received_timestamp"]),
-                    d["total_ask_size"],
-                    d["total_bid_size"],
-                    len(asks),
-                    len(bids),
-                    asks[0]["price"] if asks else 0.0,
-                    asks[-1]["price"] if asks else 0.0,
-                    sum((i + 1) * lvl["size"] for i, lvl in enumerate(asks)),
-                    sum((i + 1) * lvl["size"] for i, lvl in enumerate(bids)),
-                )
+            for code, ask, bid, ts in zip(
+                batch.column("code").to_pylist(),
+                _doubles(batch, "total_ask_size"),
+                _doubles(batch, "total_bid_size"),
+                batch.column("ts_us").to_pylist(),
             )
-        yield pd.DataFrame(
-            out,
-            columns=[c.split(" ")[0] for c in _OB_OUT_SCHEMA.split(", ")],
+        ]
+        wire = encode_orderbooks(heads, {"asks": _levels(batch.column("asks")), "bids": _levels(batch.column("bids"))})
+        obs, levels = decode_orderbooks(wire)
+        n_asks, first_ask, last_ask, ask_sum = _level_stats(*levels["asks"])
+        n_bids, _, _, bid_sum = _level_stats(*levels["bids"])
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([d["code"] for d in obs], pa.string()),
+                batch.column("event_id"),
+                pa.array([ts_to_us(d["event_timestamp"]) for d in obs], pa.int64()),
+                pa.array([ts_to_us(d["received_timestamp"]) for d in obs], pa.int64()),
+                pa.array([d["total_ask_size"] for d in obs], pa.float64()),
+                pa.array([d["total_bid_size"] for d in obs], pa.float64()),
+                pa.array(n_asks),
+                pa.array(n_bids),
+                pa.array(first_ask),
+                pa.array(last_ask),
+                pa.array(ask_sum),
+                pa.array(bid_sum),
+            ],
+            schema=_OB_ARROW,
         )
 
 
@@ -225,7 +261,7 @@ def _ob_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("protobuf", "serialization"),
 )
 def proto_roundtrip_orderbook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return orderbook_shaped(spark, sf_dir).mapInPandas(_ob_roundtrip, _OB_OUT_SCHEMA)
+    return orderbook_shaped(spark, sf_dir).mapInArrow(_ob_kernel, _OB_OUT_SCHEMA)
 
 
 def orderbook_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,7 +21,14 @@ from __future__ import annotations
 
 from typing import Any
 
-from apache_flink_pratices_spark.serialization.protowire import Field, decode, encode
+from apache_flink_pratices_spark.serialization.protowire import (
+    Columns,
+    Field,
+    decode,
+    decode_batch,
+    encode,
+    encode_batch,
+)
 
 TIMESTAMP = (
     Field(1, "seconds", "int64"),
@@ -89,3 +96,15 @@ def encode_orderbook(ob: dict[str, Any]) -> bytes:
 
 def decode_orderbook(data: bytes) -> dict[str, Any]:
     return decode(ORDERBOOK_UPDATE, data)
+
+
+def encode_orderbooks(obs: list[dict[str, Any]], levels: Columns) -> list[bytes]:
+    """``encode_orderbook`` of each message, its ``asks``/``bids`` given
+    as (values, offsets) columns (see ``protowire.encode_batch``)."""
+    return encode_batch(ORDERBOOK_UPDATE, obs, levels)
+
+
+def decode_orderbooks(data: list[bytes]) -> tuple[list[dict[str, Any]], Columns]:
+    """``decode_orderbook`` of each buffer, ``asks``/``bids`` returned as
+    (values, offsets) columns (see ``protowire.decode_batch``)."""
+    return decode_batch(ORDERBOOK_UPDATE, data)

@@ -20,12 +20,17 @@ proto/common.proto:6-32.
 
 from __future__ import annotations
 
+import pytest
+
 from apache_flink_pratices_spark.serialization.market_proto import (
+    ORDERBOOK_LEVEL,
     decode_orderbook,
+    decode_orderbooks,
     decode_trade,
     encode_orderbook,
     encode_trade,
 )
+from apache_flink_pratices_spark.serialization.protowire import decode
 
 # --- Trade, every field set -------------------------------------------------
 # field 1 exchange=1 (UPBIT):        08 01            (tag 1|VARINT, 1)
@@ -142,3 +147,58 @@ def test_decode_skips_unknown_field_like_a_conforming_runtime():
     for extra in (unknown_varint, unknown_len, unknown_i64):
         out = decode_trade(GOLDEN_TRADE_NEG_SEQ + extra)
         assert out["sequential_id"] == -1
+
+
+# --- near-canonical level records --------------------------------------------
+# A canonical OrderBookLevel record is 2a 12 | 09 <price> 11 <size>: field 5
+# (asks) LEN 18, then both doubles in field order. The batch decoder recognises
+# that exact shape by its length and tag bytes; each record below looks
+# almost like it and must decode exactly as the general decoder does.
+PRICE_15 = bytes.fromhex("000000000000f83f")  # 1.5
+PRICE_25 = bytes.fromhex("0000000000000440")  # 2.5
+SIZE_20 = bytes.fromhex("0000000000000040")  # 2.0
+CANONICAL_LEVEL = bytes.fromhex("2a1209") + PRICE_15 + b"\x11" + SIZE_20
+NEAR_CANONICAL = {
+    # size first, then price: 18 bytes but tags 11 .. 09
+    "reversed": (bytes.fromhex("2a1211") + SIZE_20 + b"\x09" + PRICE_15, {"price": 1.5, "size": 2.0}),
+    # price twice, the last one wins; size absent → default
+    "price_twice": (bytes.fromhex("2a1209") + PRICE_15 + b"\x09" + PRICE_25, {"price": 2.5, "size": 0.0}),
+    # unknown field 3 (VARINT 1) after both doubles: LEN 20
+    "unknown_inside": (
+        bytes.fromhex("2a1409") + PRICE_15 + b"\x11" + SIZE_20 + bytes.fromhex("1801"),
+        {"price": 1.5, "size": 2.0},
+    ),
+    # 18-byte body whose second tag is field 3 (I64), an unknown double
+    "wrong_second_tag": (bytes.fromhex("2a1209") + PRICE_15 + b"\x19" + SIZE_20, {"price": 1.5, "size": 0.0}),
+    # one field only: LEN 9
+    "one_field": (bytes.fromhex("2a0909") + PRICE_15, {"price": 1.5, "size": 0.0}),
+}
+# LEN says 18 but only 13 body bytes follow
+TRUNCATED_LEVEL = bytes.fromhex("2a1209") + PRICE_15 + b"\x11" + SIZE_20[:4]
+
+
+def _batch_asks(data: bytes) -> list[dict]:
+    (obj,), columns = decode_orderbooks([data])
+    values, offsets = columns["asks"]
+    assert offsets.tolist() == [0, len(values)] and "asks" not in obj
+    return [dict(zip(("price", "size"), v)) for v in values.tolist()]
+
+
+def test_near_canonical_level_records_decode_like_the_general_decoder():
+    for name, (record, expected) in NEAR_CANONICAL.items():
+        body = record[2:]
+        assert decode(ORDERBOOK_LEVEL, body) == expected, name  # the general decoder
+        # alone, and after a canonical record (element order kept)
+        for data, levels in ((record, [expected]), (CANONICAL_LEVEL + record, [{"price": 1.5, "size": 2.0}, expected])):
+            assert decode_orderbook(data)["asks"] == levels, name
+            assert _batch_asks(data) == levels, name
+
+
+def test_truncated_level_record_raises_the_general_error():
+    message = "truncated field: need 18 bytes at 2, have 16"
+    with pytest.raises(ValueError, match=f"^{message}$"):
+        decode_orderbook(TRUNCATED_LEVEL)
+    with pytest.raises(ValueError, match=f"^{message}$"):
+        decode_orderbooks([TRUNCATED_LEVEL])
+    with pytest.raises(ValueError, match="^truncated field: need 18 bytes at 22, have 36$"):
+        decode_orderbooks([CANONICAL_LEVEL, CANONICAL_LEVEL + TRUNCATED_LEVEL])

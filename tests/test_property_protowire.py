@@ -5,7 +5,10 @@ int64 extremes, unicode strings, any level count and order."""
 from __future__ import annotations
 
 import math
+import struct
+import sys
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -13,6 +16,7 @@ from apache_flink_pratices_spark.serialization.market_proto import (
     decode_orderbook,
     decode_trade,
     encode_orderbook,
+    encode_orderbooks,
     encode_trade,
     ts_to_us,
     us_to_ts,
@@ -126,3 +130,116 @@ def test_decoder_never_crashes_on_wellformed_prefix(data):
         decode_trade(bytes(data))
     except (ValueError, IndexError, UnicodeDecodeError):
         pass
+
+
+# --- the batch (Arrow kernel) path equals the per-message path ---------------
+_NAN_PAYLOAD = struct.unpack("<d", struct.pack("<Q", 0x7FF8_0000_0000_0ABC))[0]
+level_values = st.one_of(
+    st.sampled_from([0.0, -0.0, _NAN_PAYLOAD, math.inf, -math.inf, 5e-324, sys.float_info.max]),
+    st.floats(allow_nan=False, allow_infinity=False, width=64),
+)
+_LEVELS = pa.list_(pa.struct([("price", pa.float64()), ("size", pa.float64())]))
+
+
+@st.composite
+def orderbook_rows(draw):
+    levels = st.lists(st.tuples(level_values, level_values), max_size=20)
+    return [
+        {
+            "code": draw(st.text(max_size=8)),
+            "event_id": draw(int64s),
+            "ts_us": draw(ts_us),
+            "asks": draw(levels),
+            "bids": draw(levels),
+            "total_ask_size": draw(level_values),
+            "total_bid_size": draw(level_values),
+        }
+        for _ in range(draw(st.integers(min_value=0, max_value=6)))
+    ]
+
+
+def _orderbook_message(row):
+    return {
+        "exchange": 1,
+        "code": row["code"],
+        "total_ask_size": row["total_ask_size"],
+        "total_bid_size": row["total_bid_size"],
+        "asks": [{"price": p, "size": s} for p, s in row["asks"]],
+        "bids": [{"price": p, "size": s} for p, s in row["bids"]],
+        "stream_type": 2,
+        "event_timestamp": us_to_ts(row["ts_us"]),
+        "received_timestamp": us_to_ts(row["ts_us"] + 1500),
+    }
+
+
+def _orderbook_output(row):
+    """The kernel's output row, derived from the per-message codec."""
+    d = decode_orderbook(encode_orderbook(_orderbook_message(row)))
+    asks, bids = d["asks"], d["bids"]
+    return {
+        "code": d["code"],
+        "event_id": row["event_id"],
+        "ts_us": ts_to_us(d["event_timestamp"]),
+        "received_ts_us": ts_to_us(d["received_timestamp"]),
+        "total_ask_size": d["total_ask_size"],
+        "total_bid_size": d["total_bid_size"],
+        "n_asks": len(asks),
+        "n_bids": len(bids),
+        "first_ask_price": asks[0]["price"] if asks else 0.0,
+        "last_ask_price": asks[-1]["price"] if asks else 0.0,
+        "ask_pos_checksum": float(sum((i + 1) * lvl["size"] for i, lvl in enumerate(asks))),
+        "bid_pos_checksum": float(sum((i + 1) * lvl["size"] for i, lvl in enumerate(bids))),
+    }
+
+
+@given(orderbook_rows())
+@settings(max_examples=150, deadline=None)
+def test_orderbook_batch_path_matches_per_message_path(rows):
+    from apache_flink_pratices_spark.operators.protobuf_codec import _levels, _ob_kernel
+
+    def column(side):
+        return pa.array([[{"price": p, "size": s} for p, s in r[side]] for r in rows], _LEVELS)
+
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "code": pa.array([r["code"] for r in rows], pa.string()),
+            "event_id": pa.array([r["event_id"] for r in rows], pa.int64()),
+            "ts_us": pa.array([r["ts_us"] for r in rows], pa.int64()),
+            "asks": column("asks"),
+            "bids": column("bids"),
+            "total_ask_size": pa.array([r["total_ask_size"] for r in rows], pa.float64()),
+            "total_bid_size": pa.array([r["total_bid_size"] for r in rows], pa.float64()),
+        }
+    )
+    messages = [_orderbook_message(r) for r in rows]
+    heads = [{k: v for k, v in m.items() if k not in ("asks", "bids")} for m in messages]
+    wire = encode_orderbooks(heads, {"asks": _levels(batch.column("asks")), "bids": _levels(batch.column("bids"))})
+    assert wire == [encode_orderbook(m) for m in messages]
+    (out,) = _ob_kernel(iter([batch]))
+    assert _bits(out.to_pylist()) == _bits([_orderbook_output(r) for r in rows])
+
+
+@given(st.lists(trades(), max_size=6), st.lists(st.sampled_from([2**53 + 1, 2**63 - 1, -(2**63)]), max_size=6))
+@settings(max_examples=150, deadline=None)
+def test_trade_batch_path_matches_per_message_path(msgs, extreme_ids):
+    from apache_flink_pratices_spark.operators.protobuf_codec import (
+        _TRADE_ARROW,
+        _TRADE_COLS,
+        _trade_kernel,
+    )
+
+    for msg, seq in zip(msgs, extreme_ids):
+        msg["sequential_id"] = seq
+    rows = [
+        dict(msg, trade_ts_us=ts_to_us(msg["trade_timestamp"]), received_ts_us=ts_to_us(msg["received_timestamp"]))
+        for msg in msgs
+    ]
+    batch = pa.RecordBatch.from_pylist(rows, schema=_TRADE_ARROW)
+    (out,) = _trade_kernel(iter([batch]))
+    expected = []
+    for row in rows:
+        d = decode_trade(encode_trade(row))
+        expected.append(
+            dict(d, trade_ts_us=ts_to_us(d["trade_timestamp"]), received_ts_us=ts_to_us(d["received_timestamp"]))
+        )
+    assert _bits(out.to_pylist()) == _bits([{c: e[c] for c in _TRADE_COLS} for e in expected])
