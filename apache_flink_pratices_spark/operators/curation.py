@@ -10,11 +10,7 @@ Oracle-checked batch operators:
   min-label propagation with per-round pointer jumping (path compression),
   so rounds grow as O(log diameter) — the sf0.1 near-dup graph's
   diameter-12 chains converge in 8 rounds instead of 13. Each round
-  shuffles only (8-byte, 8-byte) pairs. The fully adversarial variant —
-  large-star/small-star (Kiveris et al., "Connected Components in
-  MapReduce") — is implemented as :func:`connected_components_star`
-  (edge-count-proportional rounds, no per-node neighbor lists) and
-  property-tested against union-find on chain/star/clique topologies.
+  shuffles only (8-byte, 8-byte) pairs.
 - **contamination_ngrams**: eval-set leakage check — for every training
   document, the fraction of its 3-gram shingles that appear anywhere in a
   held-out eval split. The eval shingle set is tiny by construction
@@ -69,6 +65,7 @@ from apache_flink_pratices_spark.operators.text import (
     text_quality,
 )
 from apache_flink_pratices_spark.registry import register
+from apache_flink_pratices_spark.session import _cpus
 
 # --- connected-component dedup clustering ---------------------------------
 
@@ -308,12 +305,13 @@ def _build_bloom(eval_h: DataFrame):
     local 512 KiB bitmap, and the driver ORs the per-partition bitmaps —
     the driver receives n_partitions x m/8 bytes, NOT the raw hash set,
     which is the construction that still works when the eval superset has
-    10^9 n-grams (the bitmaps OR; the hashes would not fit). repartition(8)
-    bounds the collect under the driver's plain 200-partition session
-    WITHOUT narrowing the upstream stage: coalesce(8) would fuse the whole
-    shingle distinct into 8 tasks (ADVICE r10), while the shuffle boundary
-    keeps the eval-shingle build at full parallelism and only the tiny
-    8-bitmap fold runs narrow."""
+    10^9 n-grams (the bitmaps OR; the hashes would not fit). The fold
+    runs at the engine width ``_cpus()``, one bitmap per core, so the
+    collect stays bounded under a plain 200-partition session too; the
+    repartition (not a coalesce, which would fuse the whole shingle
+    distinct into that many tasks) keeps the eval-shingle build at full
+    parallelism. The OR is order- and partition-free, so the width never
+    changes the bitmap."""
     import numpy as np
     import pyarrow as pa
 
@@ -339,7 +337,8 @@ def _build_bloom(eval_h: DataFrame):
             )
 
     out = np.zeros(n_words, dtype=np.uint64)
-    for row in eval_h.repartition(8).mapInArrow(fn, "bm binary").collect():
+    folded = eval_h.repartition(_cpus()).mapInArrow(fn, "bm binary")
+    for row in folded.collect():
         out |= np.frombuffer(row["bm"], dtype=np.uint64)
     return out
 
@@ -388,7 +387,7 @@ _BLOOM_PROBED_CACHE: dict = {}
 def _bloom_probed(spark: SparkSession, sf_dir: str):
     """(eval_h, probed): the eval shingle hashes and the train shingle
     rows annotated with their bloom verdict — shared by the registered
-    query and the bench's measured-evidence stats, memoized per
+    query and the composed pipeline, memoized per
     (session, sf_dir) so both consumers see ONE bloom build and ONE pair
     of persisted frames (ADVICE r10)."""
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -407,109 +406,6 @@ def _bloom_probed(spark: SparkSession, sf_dir: str):
     ).persist(StorageLevel.MEMORY_AND_DISK)
     _BLOOM_PROBED_CACHE[key] = (eval_h, probed)
     return eval_h, probed
-
-
-def decontaminate_bloom_stats(spark: SparkSession, sf_dir: str) -> dict:
-    """Measured bloom effectiveness at ``sf_dir`` scale: candidate
-    fraction (how much of the train shingle stream the exact verify join
-    must touch) and the realized row-level false-positive rate
-    (bloom-positive rows NOT in the exact eval set, over truly-negative
-    rows)."""
-    eval_h, probed = _bloom_probed(spark, sf_dir)
-    total = probed.count()
-    pos = probed.filter(F.col("hit") == 1).count()
-    true_rows = (
-        probed.filter(F.col("hit") == 1)
-        .join(F.broadcast(eval_h.distinct()), "h")
-        .count()
-    )
-    neg_truth = total - true_rows
-    return {
-        "train_shingle_rows": total,
-        "bloom_positive_rows": pos,
-        "candidate_fraction": round(pos / max(1, total), 4),
-        "false_positive_rate": round(
-            (pos - true_rows) / max(1, neg_truth), 5
-        ),
-    }
-
-
-def synthetic_decon_corpus(
-    spark: SparkSession, n_train: int, n_eval: int, overlap_bp: int
-):
-    """(eval_h, train, n_planted): a PLANTED low-overlap decontamination
-    corpus (VERDICT r11 #5). The sf0.1 documents corpus is 61.5%
-    contaminated at the shingle level, so the bloom prefilter's measured
-    win there is only ~1.6x — the realistic eval-decon shape is the
-    OPPOSITE: a huge train stream sharing ~overlap_bp/10000 of its
-    shingles with a frozen eval set, where the prefilter spares almost
-    the whole exact-verify join. Hashes are synthetic 56-bit values
-    (xxhash64 of a range, salted per role); the planted rows reuse the
-    eval salt on eval ids, so overlap is exact by construction and the
-    truth join stays purely mechanical."""
-    two56 = F.lit(1 << 56)
-    eval_h = spark.range(n_eval).select(
-        F.pmod(F.xxhash64(F.col("id"), F.lit("planted-eval")), two56).alias("h")
-    )
-    n_planted = n_train * overlap_bp // 10_000
-    if not 0 < n_planted <= n_eval:
-        raise ValueError("overlap sizing: need 0 < planted <= n_eval")
-    clean = spark.range(n_train - n_planted).select(
-        F.col("id").alias("rid"),
-        F.pmod(F.xxhash64(F.col("id"), F.lit("train-clean")), two56).alias("h"),
-    )
-    planted = spark.range(n_planted).select(
-        (F.col("id") + (n_train - n_planted)).alias("rid"),
-        F.pmod(F.xxhash64(F.col("id"), F.lit("planted-eval")), two56).alias("h"),
-    )
-    train = clean.unionByName(planted).select(
-        F.pmod(F.col("rid"), F.lit(10_000)).alias("doc_id"), "h"
-    )
-    return eval_h, train, n_planted
-
-
-def decontaminate_bloom_lowoverlap_stats(spark: SparkSession) -> dict:
-    """Measured bloom-prefilter effectiveness on the planted ~1%-overlap
-    corpus (40k train rows, 4k eval rows; VERDICT r11 #5) — the shape
-    where the bloom actually pays: candidate_fraction should sit at
-    ~overlap + FPR, i.e. the exact verify join touches ~1% of the train
-    stream instead of 100% (the 10^9-eval-ngram argument is made from
-    THIS row, not the saturated sf0.1 one). Same production kernels as
-    the registered operator: distributed `_build_bloom`, broadcast
-    bitmap, vectorized `_bloom_probe_fn`; `false_negatives` is recounted
-    mechanically (bloom-negative rows truly in eval must be zero — the
-    no-false-negative contract) rather than assumed."""
-    n_eval = 4_000
-    eval_h, train, n_planted = synthetic_decon_corpus(
-        spark, n_train=40_000, n_eval=n_eval, overlap_bp=100
-    )
-    words = _build_bloom(eval_h)
-    bc = spark.sparkContext.broadcast(words.tobytes())
-    probed = train.mapInArrow(
-        _bloom_probe_fn(bc), "doc_id long, h long, hit int"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        total = probed.count()
-        pos = probed.filter(F.col("hit") == 1).count()
-        ev = F.broadcast(eval_h.distinct())
-        true_rows = probed.filter(F.col("hit") == 1).join(ev, "h").count()
-        false_negatives = (
-            probed.filter(F.col("hit") == 0).join(ev, "h").count()
-        )
-        neg_truth = total - true_rows
-        return {
-            "train_shingle_rows": total,
-            "planted_rows": n_planted,
-            "bloom_positive_rows": pos,
-            "candidate_fraction": round(pos / max(1, total), 5),
-            "false_positive_rate": round(
-                (pos - true_rows) / max(1, neg_truth), 6
-            ),
-            "false_negatives": false_negatives,
-            "n_eval": n_eval,
-        }
-    finally:
-        probed.unpersist()
 
 
 @register(
@@ -1419,105 +1315,6 @@ def global_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: round cap for the alternating star kernel: O(log^2 n) proven bound
-#: (Kiveris et al.), so 40 rounds covers any graph this side of 2^30
-#: nodes with a wide margin; exceeding it means a logic bug, fail loudly.
-STAR_MAX_ROUNDS = 40
-
-
-def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
-    """Large-star/small-star connected components: (id) × (src, dst) → (id, label).
-
-    The adversarial-scale variant of :func:`connected_components`
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm). Pointer-jumping relabels every node
-    every round, which is fine when components are shallow; the
-    alternating star rounds instead only ever move EDGES, and each
-    round's work is proportional to the current edge count, which
-    SHRINKS as stars collapse — the property that matters when a single
-    component spans billions of nodes (a boilerplate shingle cluster at
-    100 TB):
-
-    - large-star: every node u links each neighbor v > u to
-      m(u) = min(N(u) ∪ {u});
-    - small-star: every node u links each neighbor v <= u (and itself)
-      to m(u).
-
-    Both steps are expressible as one grouped MIN plus one self-join on
-    the grouping key — no per-node neighbor lists are ever materialized
-    (a collect_list formulation would put a billion-member star's whole
-    neighborhood in one aggregation buffer; the join formulation
-    streams it). Convergence = the edge set reaches a fixpoint, checked
-    with an anti-join count (exact, no hash-collision risk). Rounds are
-    O(log^2 n) worst-case, O(log n) in practice.
-    """
-    # canonical undirected edge set as (big, small) pairs, self-loops dropped
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _round in range(STAR_MAX_ROUNDS):
-        # -- large-star ---------------------------------------------------
-        # directed both ways; m(u) over ALL neighbors and self
-        dir_ = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = dir_.groupBy("u").agg(F.min("v").alias("mv"))
-        mins = mins.select("u", F.least("u", "mv").alias("m"))
-        big = (
-            dir_.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        e1 = (
-            big.filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # -- small-star ---------------------------------------------------
-        dir1 = e1.select("u", "v").union(
-            e1.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins1 = dir1.groupBy("u").agg(F.min("v").alias("mv"))
-        mins1 = mins1.select("u", F.least("u", "mv").alias("m"))
-        small = (
-            dir1.filter(F.col("v") < F.col("u"))
-            .join(mins1, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins1.select(F.col("u"), F.col("m").alias("v")))
-        )
-        e2 = (
-            small.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # fixpoint: the canonical edge sets are identical (exact anti-joins)
-        changed = (
-            e2.join(e, ["u", "v"], "left_anti").limit(1).count()
-            + e.join(e2, ["u", "v"], "left_anti").limit(1).count()
-        )
-        e.unpersist()
-        e1.unpersist()
-        e = e2
-        if changed == 0:
-            # expose the round count for the O(log n) convergence tests
-            connected_components_star.last_rounds = _round + 1
-            break
-    else:
-        raise RuntimeError(f"star CC did not converge in {STAR_MAX_ROUNDS} rounds")
-    # at the fixpoint every edge is (member, component-min): label lookup
-    labels = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("label"))
-    return (
-        nodes.join(labels, "id", "left")
-        .select("id", F.coalesce("label", "id").alias("label"))
-    )
-
-
 #: deterministic "previous snapshot" predicate for the snapshot-diff
 #: operator: the synthetic corpus has no history, so the prior snapshot is
 #: simulated as a deterministic subset (drop every 13th doc = "added since",
@@ -1942,8 +1739,8 @@ def _pipeline_oracle() -> str:
     "zero survivors; stage VALUES are verified at sf0.01 (101 "
     "survivors) by the driver gate, and the pipeline is ALSO measured "
     "on a planted wide-vocabulary corpus where every stage keeps and "
-    "removes rows (corpus_pipeline_planted_stats, VERDICT r12 #6; "
-    "pinned in tests/test_curation.py).",
+    "removes rows (corpus_pipeline_planted_stats in "
+    "tests/test_curation.py).",
     bench=True,
     tags=("curation", "dedup", "tokens", "packing", "llm-pipeline", "composition"),
 )
@@ -1955,8 +1752,7 @@ def _pipeline_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Every stage of the composed pipeline as a named frame (round 13,
     extracted verbatim from corpus_pipeline_e2e so the planted-corpus
     measurement harness counts THE stages the registered query runs,
-    not a reimplementation): canon, gate, dirty, keep, surv, budget,
-    packed, final."""
+    not a reimplementation): canon, gate, dirty, surv, budget, final."""
     from apache_flink_pratices_spark.operators.text import (
         _gopher_metrics,
         gopher_rules_frame,
@@ -2004,19 +1800,14 @@ def _pipeline_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         )
         % 10000
     )
-    keep = (
-        _quality_bp_frame(docs)
-        .filter(qts_gate * 10000 < F.col("q_bp") * F.col("q_bp"))
-        .select("doc_id")
-    )
     # Survivors (optimization r14, guide §2.2/§3): the gopher gate and the
     # temperature gate are ROW-WISE predicates over the document row, so
     # they run as FILTERS fused into the survivor scan instead of doc_id
     # self-joins (doc_id is unique, so inner-join-on-derived-subset ≡
     # filter; equivalence measured exact at sf0.01 — 101 identical rows).
-    # The named `gate`/`keep` frames above are kept for the planted-stats
-    # harness and single-definition sharing: `m["passes"]` and _QBP_EXPR
-    # are the SAME expressions both paths evaluate. Only `canon` (cluster
+    # The named `gate` frame above is kept for the planted-pipeline
+    # harness (tests/test_curation.py): `m["passes"]` is the SAME
+    # expression both paths evaluate. Only `canon` (cluster
     # membership) and `dirty` (decon verdict) stay relational. surv is
     # PERSISTED because three consumers read it (budget aggregate, packing
     # window, final join) and nothing else dedupes the subtree — the
@@ -2067,119 +1858,10 @@ def _pipeline_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         )
     )
     return {
-        "docs": docs,
         "canon": canon,
         "gate": gate,
         "dirty": dirty,
-        "keep": keep,
         "surv": surv,
         "budget": budget,
-        "packed": packed,
         "final": final,
     }
-
-
-def _planted_pipeline_words(i: int, vocab_size: int, n: int = 48) -> list[str]:
-    """Deterministic md5-drawn words for planted doc ``i`` — structure-
-    free draws so unrelated docs share essentially no aligned 3-gram
-    (an arithmetic index schedule here created accidental full-overlap
-    pairs at a fixed doc distance)."""
-    import hashlib
-
-    return [
-        f"w{int(hashlib.md5(f'{i}-{j}'.encode()).hexdigest()[:8], 16) % vocab_size:04d}"
-        for j in range(n)
-    ]
-
-
-def corpus_pipeline_planted_stats(spark: SparkSession) -> dict:
-    """Measured NON-degenerate pipeline row (VERDICT r12 #6): at sf0.1 the
-    driver corpus's 31-word vocabulary saturates 3-gram overlap and the
-    decon stage legitimately empties the corpus, so the flagship bench
-    row's packing/budget tail ran on zero rows. This plants a
-    WIDE-vocabulary corpus (800 docs over a 2500-word vocabulary) where
-    every stage keeps AND removes documents — exact near-dup copies
-    (every 17th train doc copies its predecessor), short Gopher-failing
-    docs (every 11th), eval-plagiarist docs (every 13th train doc reuses
-    its eval anchor's words — >10% shingle overlap, decon-dirty), and a
-    hash-gated ~56% quality-temperature survival — then runs the
-    REGISTERED pipeline end-to-end and records per-stage survivor counts
-    plus two walls (first run includes the one-time pair/label-artifact
-    builds; the second is the steady state the headline row measures)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    n_docs, vocab_size = 800, 2500
-
-    sf = tempfile.mkdtemp(prefix="afp_pipe_planted_")
-    # Scope the write-once pair/label/probe artifacts to the planted
-    # corpus's own tempdir: the corpus key embeds this fresh mkdtemp
-    # path, so artifacts published into the SHARED base could never be
-    # cache-hit again and would accumulate unboundedly across runs
-    # (self-review r13). Restored before the rmtree in finally.
-    prior_base = os.environ.get("SPARK_GRAFT_ARTIFACT_DIR")
-    os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = os.path.join(sf, "artifacts")
-    try:
-        rows = []
-        for i in range(n_docs):
-            is_eval = i % 10 == 0
-            if i % 11 == 3:
-                # too short for the Gopher word-count rule
-                words = _planted_pipeline_words(i, vocab_size, n=10)
-            elif not is_eval and i % 13 == 2:
-                # plagiarizes its eval anchor wholesale -> decon-dirty
-                words = _planted_pipeline_words((i // 10) * 10, vocab_size)
-            elif not is_eval and i % 17 == 1:
-                # exact near-dup of its predecessor -> dedup removes one
-                words = _planted_pipeline_words(i - 1, vocab_size)
-            else:
-                words = _planted_pipeline_words(i, vocab_size)
-            text = "the a " + " ".join(words)
-            rows.append((i, text, "en", f"src{i % 6}", len(text)))
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, n_chars long",
-        ).coalesce(4).write.mode("overwrite").parquet(
-            os.path.join(sf, "documents.parquet")
-        )
-
-        t0 = time.time()
-        first_rows = corpus_pipeline_e2e(spark, sf).count()
-        first_wall = time.time() - t0
-        t0 = time.time()
-        frames = _pipeline_frames(spark, sf)
-        packed_rows = frames["final"].count()
-        wall = time.time() - t0
-        assert packed_rows == first_rows
-
-        # SUM over an empty budget frame is NULL; `or 0` keeps a
-        # degenerate corpus failing at the diagnostic assert below
-        # instead of as int(None) here (self-review r13)
-        tok_total = frames["budget"].agg(F.sum("planned_tokens")).collect()[0][0]
-        stats = {
-            "n_docs": n_docs,
-            "n_canonical": frames["canon"].count(),
-            "n_gopher_pass": frames["gate"].count(),
-            "n_decon_dirty": frames["dirty"].count(),
-            "n_survivors": frames["surv"].count(),
-            "n_packed_rows": packed_rows,
-            "n_budget_sources": frames["budget"].count(),
-            "planned_tokens_total": int(tok_total or 0),
-            "first_wall_s": round(first_wall, 2),
-            "wall_s": round(wall, 2),
-        }
-        # the point of the row: every stage both keeps and removes rows
-        assert 0 < stats["n_survivors"] < n_docs
-        assert 0 < stats["n_decon_dirty"]
-        assert stats["n_canonical"] < stats["n_docs"]  # dedup removed copies
-        assert 0 < stats["n_packed_rows"]
-        assert stats["planned_tokens_total"] > 0
-        return stats
-    finally:
-        if prior_base is None:
-            os.environ.pop("SPARK_GRAFT_ARTIFACT_DIR", None)
-        else:
-            os.environ["SPARK_GRAFT_ARTIFACT_DIR"] = prior_base
-        shutil.rmtree(sf, ignore_errors=True)

@@ -446,8 +446,8 @@ def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_tf(d: DataFrame) -> DataFrame:
-    """(doc_id, hm, cnt) hashed term-frequency table — the shared input of
-    both fingerprint implementations."""
+    """(doc_id, hm, cnt) hashed term-frequency table, the input of the
+    fingerprint kernel."""
     # hash before the frequency groupBy: the shuffle carries (doc_id, long)
     # pairs instead of token strings (same trick as the shingle pipeline)
     # count first, hash after: the term-frequency groupBy collapses token
@@ -478,9 +478,9 @@ def _simhash_fingerprints_of(d: DataFrame) -> DataFrame:
     ~0.1 s. The TF table is hash-repartitioned on doc_id so every doc's
     rows land in one partition; the kernel accumulates the partition's
     batches, then one factorize+``np.add.at`` group-sum emits
-    (doc_id, fp). Bit-for-bit equal to the retained expression twin
-    (:func:`_simhash_fingerprints_expr_of`, pinned by
-    ``tests/test_simhash_scale.py``): truncated modulo (``np.fmod``)
+    (doc_id, fp). Bit-for-bit equal to the DuckDB oracle's ``fp`` stage
+    (``SQL_SIMHASH_PAIR_CTES``, pinned by ``tests/test_simhash_scale.py``
+    on the same frames): truncated modulo (``np.fmod``)
     matches Spark's and DuckDB's ``%`` on negative dividends, arithmetic
     int64 shifts match ``shiftright``, and the final bit-weight sum
     wraps to two's complement exactly like the JVM long accumulation.
@@ -560,7 +560,7 @@ def _simhash_kernel():
         # in an object array (pandas deprecates factorizing a list) that
         # factorize keys as-is; null ids get code -1 → their own group,
         # because Spark's groupBy keeps a null doc_id group and the
-        # expression twin / DuckDB oracle emit a fingerprint row for it
+        # DuckDB oracle emits a fingerprint row for it
         # (review r8). int64 overflow in np.add.at wraps two's
         # complement, matching the JVM long accumulation.
         id_field = tbl.schema.field("doc_id")
@@ -582,35 +582,6 @@ def _simhash_kernel():
         )
 
     return fn
-
-
-def _simhash_fingerprints_expr_of(d: DataFrame) -> DataFrame:
-    """Retained higher-order-expression twin of
-    :func:`_simhash_fingerprints_of` — the cross-engine derivation the
-    DuckDB oracle mirrors; the vectorized default is equality-pinned to
-    this (same pattern as ``ivf_assign_expr``)."""
-    hs = _simhash_tf(d)
-
-    def sign(i: int) -> F.Column:
-        if i < 56:  # raw hash bit: shift+mask, the cheap path
-            return F.shiftright(F.col("hm"), i).bitwiseAND(1) * 2 - 1
-        a, b = SH_COEFFS[i]
-        return ((F.lit(a) * (F.col("hm") % P31) + F.lit(b)) % P31) % 2 * 2 - 1
-
-    sums = hs.groupBy("doc_id").agg(
-        *[
-            F.sum(sign(i) * F.col("cnt")).alias(f"s{i}")
-            for i in range(SIMHASH_BITS)
-        ]
-    )
-    fp_col = None
-    for b in range(SIMHASH_BITS):
-        addend = _I64_MIN if b == SIMHASH_BITS - 1 else (1 << b)
-        term = F.when(F.col(f"s{b}") > 0, F.lit(addend).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        fp_col = term if fp_col is None else fp_col + term
-    return sums.select("doc_id", fp_col.alias("fp"))
 
 
 #: Adversarial hot-bucket guard for every banded candidate join (VERDICT
@@ -785,62 +756,6 @@ def _simhash_candidates(
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
 
 
-def hot_bucket_guard_bench(spark: SparkSession, sf_dir: str) -> dict:
-    """Measured above-cap guard behaviour (VERDICT r7 #4).
-
-    The shipped corpora never trip the 1024 cap (max simhash bucket at
-    sf0.1: 203). This plants the adversarial case on ``sf_dir``: the
-    real documents table plus ``HOT_BUCKET_CAP + 200`` identical
-    boilerplate docs — every boilerplate fingerprint is identical, so all
-    four 16-bit bands collide into one bucket past the cap — then runs
-    the exact production candidate kernel (:func:`_simhash_candidates`,
-    same cap/reps constants) end to end.
-
-    Returns the guarded candidate-pair count and wall seconds, alongside
-    the arithmetic all-pairs fan-out the unguarded self-join would have
-    emitted for the boilerplate bucket alone (``bands × C(n_boiler, 2)``
-    join rows — ~3.0M pairs for 1224 docs vs the guard's
-    ≤ ``bands·B·reps`` ≈ 39k): a boilerplate block scales the unguarded
-    join quadratically, the guarded one linearly."""
-    import time
-
-    n_boiler = HOT_BUCKET_CAP + 200  # the smallest above-cap block
-
-    d = load(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    boiler = spark.range(n_boiler).select(
-        F.concat(F.lit("boiler_"), F.col("id")).alias("doc_id"),
-        F.lit(
-            "the exact same legal boilerplate footer text repeated on "
-            "every page of the crawl"
-        ).alias("text"),
-    )
-    corpus = d.unionByName(boiler)
-    # persisted like every production caller (the kernel contract: the
-    # expensive upstream is cached by the caller) — the pre-check
-    # aggregate, the below-cap join sides, and the hot-branch tagging all
-    # read the one materialized fingerprint table
-    fp = _simhash_fingerprints_of(corpus).persist(StorageLevel.MEMORY_AND_DISK)
-    fp.count()  # materialize BEFORE the timer: the wall must attribute
-    # to the guarded candidate kernel, not the shared fingerprint pass
-    t0 = time.perf_counter()
-    # hint-less on purpose: the planted corpus is synthetic, so the
-    # pre-check aggregate must run (and is part of the measured wall —
-    # the adversarial path pays it exactly once per corpus in production)
-    pairs = int(_simhash_candidates(fp).count())
-    wall = time.perf_counter() - t0
-    fp.unpersist()
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
-    return {
-        "pairs": pairs,
-        "wall_s": round(wall, 3),
-        "n_boiler": n_boiler,
-        "unguarded_boiler_pairs": n_bands * n_boiler * (n_boiler - 1) // 2,
-        "guard_bound_pairs": n_bands * n_boiler * HOT_BUCKET_REPS,
-    }
-
-
 #: Max verified-graph degree of a pivot node the wedge rescue expands
 #: through. The rescue (below) closes 2-hop paths of the VERIFIED graph
 #: into direct candidate pairs, so its fan-out per pivot is C(deg, 2);
@@ -873,8 +788,8 @@ def wedge_rescue_pairs(
     past ``deg_cap`` are excluded — a boilerplate block's representative
     (degree ≈ block size) contributes nothing, preserving the guard's
     bound; block-internal pair enumeration stays representative-star by
-    design (component-exact, measured in
-    :func:`hot_bucket_recall_bench`). Pure below-cap corpora never reach
+    design (component-exact, measured by ``hot_bucket_recall_bench`` in
+    tests/test_simhash_scale.py). Pure below-cap corpora never reach
     this function (see :func:`_build_candidate_pairs`), and on mixed
     corpora the closure is a no-op on the below-cap part: a verified
     pair at Hamming ≤ 3 over 4 bands always shares an intact 16-bit band
@@ -896,401 +811,6 @@ def wedge_rescue_pairs(
         .select(F.col("l.n").alias(id_a), F.col("r.n").alias(id_b))
         .distinct()
     )
-
-
-def hot_bucket_recall_bench(spark: SparkSession) -> dict:
-    """Measured verified-pair recall above the hot-bucket cap (VERDICT
-    r8 #3) on two planted fingerprint corpora, with the exact production
-    candidate kernel + Hamming verification + wedge rescue.
-
-    Corpus A — boilerplate mass (``cap+476`` identical fingerprints, all
-    four 16-bit bands hot) with three planted pair classes:
-
-    - ``in_mass``: Hamming-3 pairs, each member ≤ 3 bits from the mass
-      center → representative edges verify → COMPONENT recall must be
-      1.0 while direct-pair recall is 0.0 by design (block-internal pair
-      enumeration is representative-star; closing it is the quadratic
-      blowup the cap prevents, so the rescue's degree cap skips it).
-    - ``fringe``: Hamming-2 pairs, each member 4 bits from the center and
-      agreeing with its partner ONLY on hot bands → no verified edge at
-      all — the guard's honest irreducible loss. Expected 0.0 recall;
-      what bounds it in real corpora is the ``control`` class.
-    - ``control``: same 4-bit distance from the center, but the pair
-      shares a private (below-cap) band bucket → found by the normal
-      join. Pigeonhole: a Hamming ≤ 3 pair always shares an intact band,
-      so a pair is lost ONLY when every shared band is independently
-      hot — both members must carry the exact mass pattern on all their
-      agreeing bands.
-
-    Corpus B — heterogeneous hot bucket (two bands carry a shared hot
-    pattern, two are per-member random), the near-threshold case the
-    rescue targets:
-
-    - ``wedge``: Hamming-3 pairs whose members verify against the same
-      low-degree representative but share only hot bands with each
-      other → direct recall 0.0 WITHOUT the rescue, 1.0 WITH it.
-    - ``orphan``: Hamming-2 pairs ≥ 4 bits from every representative,
-      agreeing only on hot bands → 0.0 everywhere (irreducible).
-
-    Returns per-class direct/component/rescued recall fractions for the
-    bench detail line; the class expectations above are pinned by
-    ``tests/test_simhash_scale.py``."""
-    import hashlib
-
-    from apache_flink_pratices_spark.operators.curation import (
-        connected_components_star,
-    )
-
-    center = 0x5A5A3C3CF0F09696  # arbitrary fixed center, positive int64
-    bit = lambda band, i: 1 << (16 * band + i)  # noqa: E731
-
-    def md5v(doc_id: str) -> int:
-        return int(hashlib.md5(doc_id.encode()).hexdigest()[:14], 16)
-
-    # --- corpus A: boilerplate mass --------------------------------------
-    n_mass = HOT_BUCKET_CAP + 476
-    rows_a = [(f"m{i:05d}", center) for i in range(n_mass)]
-    in_mass, fringe, control = [], [], []
-    for i in range(20):  # in-mass: x 1 bit out, y 2 bits out, same band
-        b, t = i % 4, i // 4
-        x = center ^ bit(b, 3 * t)
-        y = center ^ bit(b, 3 * t + 1) ^ bit(b, 3 * t + 2)
-        in_mass.append((f"pax{i:02d}", f"pay{i:02d}"))
-        rows_a += [(f"pax{i:02d}", x), (f"pay{i:02d}", y)]
-    for i in range(12):  # fringe: 4 bits out each, 3 shared flips
-        b, s = i % 4, i // 4
-        g = [5 * s + j for j in range(5)]
-        u = center
-        for j in (0, 1, 2, 3):
-            u ^= bit(b, g[j])
-        v = center
-        for j in (0, 1, 2, 4):
-            v ^= bit(b, g[j])
-        fringe.append((f"pau{i:02d}", f"pav{i:02d}"))
-        rows_a += [(f"pau{i:02d}", u), (f"pav{i:02d}", v)]
-    for i in range(12):  # control: 4 bits out, pair shares a private band
-        b, s = i % 4, i // 4
-        g = [5 * s + j for j in range(5)]
-        w = center
-        for j in (0, 1, 3, 4):
-            w ^= bit(b, g[j])
-        z = w ^ bit((b + 1) % 4, 7)
-        control.append((f"paw{i:02d}", f"paz{i:02d}"))
-        rows_a += [(f"paw{i:02d}", w), (f"paz{i:02d}", z)]
-    # planted fps must be unique (an accidental duplicate would open an
-    # unplanned exact-match path and corrupt the accounting)
-    planted_a = [fp for did, fp in rows_a if not did.startswith("m")]
-    # bench-integrity invariants raise explicitly, not via assert: assert
-    # is stripped under `python -O`, which would let the corrupted
-    # accounting these comments describe pass silently (ADVICE r9)
-    if not (len(set(planted_a)) == len(planted_a) and center not in planted_a):
-        raise RuntimeError("recall bench: corpus-A planted fps not unique")
-    # no planted id may win a representative slot: the 8 md5-smallest
-    # MASS ids sit in every hot bucket, so if every planted md5 sorts
-    # above them, every bucket's bottom-8 is mass-only. (First run of
-    # this harness: 'av03' DID win a slot and silently turned one fringe
-    # pair direct — hence the 'p' prefix and this mechanical check.)
-    mass_floor = sorted(
-        md5v(did) for did, _ in rows_a if did.startswith("m")
-    )[: HOT_BUCKET_REPS]
-    if not all(
-        md5v(did) > mass_floor[-1]
-        for did, _ in rows_a
-        if not did.startswith("m")
-    ):
-        raise RuntimeError("recall bench: a corpus-A planted id wins a rep slot")
-
-    # --- corpus B: heterogeneous hot bucket ------------------------------
-    # bands 0 and 3 carry the shared (hot) pattern; bands 1-2 are
-    # deterministic pseudo-random per member, so members sit far apart
-    # and representative edges FAIL verification — except around the
-    # planted pivot p, the md5-smallest member (the salted bottom-k
-    # representative pick is md5-ordered, so p is a representative of
-    # both hot buckets by construction).
-    n_het = HOT_BUCKET_CAP + 200
-    mask12 = ((1 << 32) - 1) << 16  # bands 1-2
-    rows_b = []
-    for i in range(n_het):
-        h = int(
-            hashlib.md5(f"het-fp-{i}".encode()).hexdigest()[:8], 16
-        )  # 32 random-ish bits for bands 1-2
-        rows_b.append((f"h{i:05d}", (center & ~mask12) | (h << 16)))
-    p_id, p_fp = min(rows_b, key=lambda r: md5v(r[0]))
-    wedge, orphan = [], []
-    for i in range(8):  # wedge: x,y verify against pivot p only
-        x = p_fp ^ bit(1, i)
-        y = p_fp ^ bit(1, i + 8) ^ bit(2, i)
-        wedge.append((f"bx{i}", f"by{i}"))
-        rows_b += [(f"bx{i}", x), (f"by{i}", y)]
-    for j in range(6):  # orphan: ≥4 bits from p, agree only on hot bands
-        c = p_fp ^ bit(1, j) ^ bit(1, j + 6) ^ bit(2, j) ^ bit(2, j + 6)
-        q1 = c ^ bit(1, 15)
-        q2 = c ^ bit(2, 15)
-        orphan.append((f"bq{j}a", f"bq{j}b"))
-        rows_b += [(f"bq{j}a", q1), (f"bq{j}b", q2)]
-    planted_b = [fp for did, fp in rows_b if not did.startswith("h")]
-    if len(set(planted_b)) != len(planted_b):
-        raise RuntimeError("recall bench: corpus-B planted fps not unique")
-    # planted members must not themselves win representative slots (md5
-    # order is deterministic — check mechanically, don't hope)
-    rep_floor = sorted(md5v(did) for did, _ in rows_b)[:HOT_BUCKET_REPS]
-    if md5v(p_id) != rep_floor[0]:
-        raise RuntimeError("recall bench: pivot is not the md5-smallest member")
-    if not all(
-        md5v(did) not in rep_floor
-        for did, _ in rows_b
-        if not did.startswith("h")
-    ):
-        raise RuntimeError("recall bench: a corpus-B planted id wins a rep slot")
-
-    def measure(rows, classes) -> dict:
-        fp = spark.createDataFrame(rows, "doc_id string, fp long").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        fp.count()
-        cand = _simhash_candidates(fp)
-        fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("fp_a"))
-        fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("fp").alias("fp_b"))
-        ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-
-        def verify(c: DataFrame) -> DataFrame:
-            return (
-                c.join(fa, "doc_a")
-                .join(fb, "doc_b")
-                .filter(ham <= SIMHASH_HAMMING_MAX)
-                .select("doc_a", "doc_b")
-            )
-
-        base = verify(cand).persist(StorageLevel.MEMORY_AND_DISK)
-        rescued = base.unionByName(
-            verify(wedge_rescue_pairs(base))
-        ).distinct()
-        edges = base.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        labels = connected_components_star(
-            fp.select(F.col("doc_id").alias("id")), edges
-        )
-
-        def recall(pairs, planted) -> float:
-            canon = [(min(a, b), max(a, b)) for a, b in planted]
-            pl = spark.createDataFrame(canon, "doc_a string, doc_b string")
-            return round(
-                pl.join(pairs, ["doc_a", "doc_b"], "semi").count() / len(canon),
-                3,
-            )
-
-        def comp_recall(planted) -> float:
-            pl = spark.createDataFrame(planted, "doc_a string, doc_b string")
-            same = (
-                pl.join(labels.withColumnRenamed("id", "doc_a"), "doc_a")
-                .withColumnRenamed("label", "la")
-                .join(labels.withColumnRenamed("id", "doc_b"), "doc_b")
-                .filter(F.col("la") == F.col("label"))
-                .count()
-            )
-            return round(same / len(planted), 3)
-
-        out = {
-            name: {
-                "direct": recall(base, planted),
-                "component": comp_recall(planted),
-                "rescued": recall(rescued, planted),
-            }
-            for name, planted in classes.items()
-        }
-        base.unpersist()
-        fp.unpersist()
-        return out
-
-    return {
-        "mass": measure(
-            rows_a,
-            {"in_mass": in_mass, "fringe": fringe, "control": control},
-        ),
-        "het": measure(rows_b, {"wedge": wedge, "orphan": orphan}),
-        "n_mass": n_mass,
-        "n_het": n_het,
-        "deg_cap": RESCUE_PIVOT_DEG,
-    }
-
-
-def planted_pair_text_corpus():
-    """(rows, planted): a deterministic planted-pair TEXT corpus for the
-    minhash-vs-simhash method comparison (VERDICT r11 #7).
-
-    300 background documents draw ``doc_len`` = 40 tokens
-    md5-deterministically from a 200-word vocabulary (random pairs share
-    essentially no 3-gram shingles). Each tier plants 10 (A, B) pairs
-    where B replaces ``r`` of A's tokens at positions spaced 5 apart
-    (each replacement kills ≤3 distinct shingles), so the tiers land at
-    shingle-Jaccard ≈ (S-3r)/(S+3r) for S = doc_len-2: r=1→~0.85,
-    r=2→~0.73, r=4→~0.52, r=6→~0.36 — two tiers comfortably above the
-    0.4 verify threshold, one straddling it, one below. Exact per-pair
-    Jaccard is recomputed from the shingle sets by the bench, never
-    assumed."""
-    import hashlib
-
-    n_background, pairs_per_tier, doc_len, vocab_size = 300, 10, 40, 200
-    tiers = (("r1", 1), ("r2", 2), ("r4", 4), ("r6", 6))
-
-    def tok(tag: str) -> str:
-        return f"w{int(hashlib.md5(tag.encode()).hexdigest()[:8], 16) % vocab_size:03d}"
-
-    rows: list[tuple[int, str]] = []
-    for d in range(n_background):
-        rows.append((d, " ".join(tok(f"bg-{d}-{i}") for i in range(doc_len))))
-    planted: dict[str, list[tuple[int, int]]] = {}
-    for t, (tier, r) in enumerate(tiers):
-        planted[tier] = []
-        for p in range(pairs_per_tier):
-            base = [tok(f"pl-{tier}-{p}-{i}") for i in range(doc_len)]
-            partner = list(base)
-            for k in range(r):
-                partner[3 + 5 * k] = tok(f"rep-{tier}-{p}-{k}")
-            a_id = 1_000_000 + t * 10_000 + 2 * p
-            b_id = a_id + 1
-            rows += [(a_id, " ".join(base)), (b_id, " ".join(partner))]
-            planted[tier].append((a_id, b_id))
-    return rows, planted
-
-
-def neardup_method_compare_bench(spark: SparkSession) -> dict:
-    """Measured recall/precision/pairs/wall of `dedup_minhash_lsh` vs
-    `dedup_simhash` semantics on the planted-pair corpus (VERDICT
-    r11 #7) — the method choice, made measurable the way the streaming
-    backend policy is.
-
-    Both methods run their production kernels on the same frame:
-    minhash = shingles → 16-hash signatures → 4×4 LSH bands →
-    banded_candidate_pairs → EXACT Jaccard ≥ 0.4 verify; simhash =
-    TF-weighted 64-bit fingerprints → 16-bit bands →
-    banded_candidate_pairs → Hamming ≤ 3 verify. Ground truth is the
-    UNCAPPED exact shingle-Jaccard join at the same 0.4 threshold
-    (affordable at bench scale; never run on real corpora).
-
-    Honest read of the table: minhash's verify IS the truth predicate,
-    so its precision is 1.0 by construction and its losses are LSH
-    candidate recall (1-(1-J^4)^4: ~0.95 at J=0.85, ~0.74 at 0.73,
-    ~0.26 at 0.52). Simhash answers a DIFFERENT question (token-multiset
-    Hamming proximity), so measuring it against Jaccard truth is exactly
-    the point: its precision and tier recalls quantify how the Hamming≤3
-    contract maps onto shingle Jaccard (measured round 12: much stricter
-    — tier recalls 0.64/0.28/0.0 vs minhash's 1.0/0.80/0.28 at mean
-    Jaccard 0.86/0.73/0.52, precision 1.0 for both)."""
-    import time
-
-    rows, planted = planted_pair_text_corpus()
-    d = spark.createDataFrame(rows, "doc_id long, text string").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    d.count()
-
-    sh = shingles_of(d).persist(StorageLevel.MEMORY_AND_DISK)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-
-    # ground truth: uncapped exact-Jaccard pair set at the shared
-    # threshold, plus unthresholded values for the planted pairs
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jac_col = F.col("inter").cast("double") / (
-        F.col("sa.n") + F.col("sb.n") - F.col("inter")
-    )
-    jac_all = (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac_col.alias("jaccard"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # one collect serves both: truth is the >= threshold subset
-    jac_by_pair = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"] for r in jac_all.collect()
-    }
-    truth = {p for p, j in jac_by_pair.items() if j >= JACCARD_THRESHOLD}
-
-    def measure(build) -> tuple[dict, set]:
-        t0 = time.perf_counter()
-        pairs = build()
-        emitted = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-        wall = time.perf_counter() - t0
-        hit = emitted & truth
-        return {
-            "wall_s": round(wall, 2),
-            "pairs": len(emitted),
-            "recall": round(len(hit) / max(1, len(truth)), 3),
-            "precision": round(len(hit) / max(1, len(emitted)), 3),
-        }, emitted
-
-    # upstream frames each method persists, unpersisted in the closing
-    # cleanup so they do not outlive the measurement in a long-lived
-    # session (the module-scoped test fixture)
-    method_persists: list[DataFrame] = []
-
-    def minhash_pairs() -> DataFrame:
-        sigs = minhash_signatures_of(sh).persist(StorageLevel.MEMORY_AND_DISK)
-        method_persists.append(sigs)
-        cand = banded_candidate_pairs(minhash_bands_of(sigs)).select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-        )
-        s_a = sh.select(F.col("doc_id").alias("__va"), F.col("h").alias("__ha"))
-        s_b = sh.select(F.col("doc_id").alias("__vb"), F.col("h").alias("__hb"))
-        it = (
-            cand.join(s_a, F.col("doc_a") == F.col("__va"))
-            .join(
-                s_b,
-                (F.col("doc_b") == F.col("__vb")) & (F.col("__ha") == F.col("__hb")),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        return _jaccard_from_inter(it, sizes).select("doc_a", "doc_b")
-
-    def simhash_pairs() -> DataFrame:
-        fp = _simhash_fingerprints_of(d).persist(StorageLevel.MEMORY_AND_DISK)
-        method_persists.append(fp)
-        cand = _simhash_candidates(fp)
-        fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("fp_a"))
-        fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("fp").alias("fp_b"))
-        ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-        return (
-            cand.join(fa, "doc_a")
-            .join(fb, "doc_b")
-            .filter(ham <= SIMHASH_HAMMING_MAX)
-            .select("doc_a", "doc_b")
-        )
-
-    out: dict = {"truth_pairs": len(truth)}
-    emitted_by_method: dict[str, set] = {}
-    for name, build in (("minhash_lsh", minhash_pairs), ("simhash", simhash_pairs)):
-        out[name], emitted_by_method[name] = measure(build)
-
-    tiers_out: dict = {}
-    for tier, pls in planted.items():
-        canon = [(min(p), max(p)) for p in pls]
-        in_truth = [p for p in canon if p in truth]
-        js = [jac_by_pair.get(p, 0.0) for p in canon]
-        tiers_out[tier] = {
-            "planted": len(canon),
-            "mean_jaccard": round(sum(js) / len(js), 3),
-            "in_truth": len(in_truth),
-            **{
-                f"found_{m}": sum(1 for p in canon if p in emitted_by_method[m])
-                for m in emitted_by_method
-            },
-        }
-    out["tiers"] = tiers_out
-    for f in (*method_persists, jac_all, sh, d):
-        f.unpersist()
-    return out
 
 
 def _sql_simhash_sums() -> str:
@@ -1673,8 +1193,8 @@ def _semantic_pair_cosine(pairs: DataFrame) -> DataFrame:
     2.4 s); the numpy formulation of the SAME quantized arithmetic —
     per-element ``floor(a·b·SCALE)`` in float64, exact int64 sum, then
     the double division — is bit-equal (same pattern as
-    ``scaled_floor_sums`` behind IVF/PQ; twin pinned in
-    tests/test_dedup_semantic.py)."""
+    ``scaled_floor_sums`` behind IVF/PQ; pinned against the oracle's
+    ``pairs`` stage in tests/test_dedup_semantic.py)."""
     import numpy as np
     import pandas as pd
 
@@ -1706,17 +1226,6 @@ def _semantic_pair_cosine(pairs: DataFrame) -> DataFrame:
     return pairs.mapInPandas(
         fn, "vec_a bigint, vec_b bigint, cell int, cosine double"
     )
-
-
-def _semantic_pair_cosine_expr(pairs: DataFrame) -> DataFrame:
-    """Retained expression twin of :func:`_semantic_pair_cosine` — the
-    cross-engine derivation the DuckDB oracle mirrors."""
-    from apache_flink_pratices_spark.operators.similarity import _dot
-
-    cosine = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt(F.col("nrm_a")) * F.sqrt(F.col("nrm_b"))
-    )
-    return pairs.select("vec_a", "vec_b", "cell", cosine.alias("cosine"))
 
 
 def _register_dedup_semantic() -> None:
@@ -1910,9 +1419,9 @@ def _register_dedup_semantic() -> None:
                 "emb_a", "emb_b", "nrm_a", "nrm_b",
             )
         )
-        # vectorized exact-cosine verify (bit-pinned to the expression
-        # twin; the HOF dot interprets per element and was ~80% of the
-        # query at sf0.1)
+        # vectorized exact-cosine verify (bit-pinned to the oracle's
+        # pairs stage; the HOF dot interprets per element and was ~80%
+        # of the query at sf0.1)
         pairs = _semantic_pair_cosine(raw).filter(
             F.col("cosine") >= SEM_DEDUP_TAU
         )

@@ -95,24 +95,6 @@ def _best_cluster(seeds: list[list[int]]) -> Column:
     return F.array_min(entries)
 
 
-def assign_frame_expr(vectors: DataFrame, seeds: list[list[int]]) -> DataFrame:
-    """Expression-twin of :func:`assign_frame` (higher-order functions).
-
-    Kept as the cross-engine reference formulation (the oracle mirrors
-    it, and the internal multi-seed passes — update_frame,
-    seed_farthest_point, kmeans_fit — still project _best_cluster into
-    larger plans); tests pin :func:`assign_frame` bit-equal to it."""
-    return (
-        vectors.select("vec_id", _quantized().alias("qe"))
-        .select("vec_id", _best_cluster(seeds).alias("best"))
-        .select(
-            "vec_id",
-            F.col("best.cluster").alias("cluster"),
-            F.col("best.dist2").alias("dist2"),
-        )
-    )
-
-
 def assign_frame(vectors: DataFrame, seeds: list[list[int]]) -> DataFrame:
     """(vec_id, cluster, dist2): nearest seed per vector, map-only.
 
@@ -121,8 +103,8 @@ def assign_frame(vectors: DataFrame, seeds: list[list[int]]) -> DataFrame:
     rewrite as similarity.ivf_assign). All-integer arithmetic after the
     ``floor(x·Q)`` quantization, so numpy int64 matches the JVM long
     path exactly; ``np.argmin`` breaks ties at the smallest cluster id
-    like ``array_min(struct(dist2, cluster))``. Equality with
-    :func:`assign_frame_expr` pinned in tests/test_kmeans.py."""
+    like ``array_min(struct(dist2, cluster))``. Equality with the
+    ``kmeans_assign`` DuckDB oracle pinned in tests/test_kmeans.py."""
     import numpy as np
     import pandas as pd
 

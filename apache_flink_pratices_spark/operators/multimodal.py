@@ -51,10 +51,6 @@ _N_BLOCKS = {
     "video": VID_FRAMES * VID_W * VID_H * VID_C // _BLOCK,  # 48
 }
 
-MEDIA_META_SCHEMA = (
-    "struct<width:int, height:int, channels:int, sample_rate:int, n_frames:int>"
-)
-
 
 def md5_chain_payload(doc_id: int, media_type: str = "image") -> np.ndarray:
     """Python mirror of the JVM md5-chain payload builder in

@@ -354,46 +354,16 @@ def _ann_ivfpq_oracle() -> str:
     """
 
 
-def ivfpq_corpus_expr(e: DataFrame, mn: list, mx: list) -> DataFrame:
-    """Expression-twin of :func:`ivfpq_corpus` (higher-order functions).
-
-    The cross-engine reference formulation — the DuckDB oracle mirrors
-    this arithmetic, and tests pin :func:`ivfpq_corpus` bit-equal to it.
-    Not used on the corpus hot path (interpreted lambda evaluation:
-    cells × dim argmax + per-element reconstruction per row)."""
-    from apache_flink_pratices_spark.operators.similarity import _dot, _ivf_sims
-
-    lit_mn, lit_mx = F.lit(mn), F.lit(mx)
-
-    def rec_elem(x, i):
-        m = F.element_at(lit_mn, i + 1)
-        rng = F.element_at(lit_mx, i + 1) - m
-        q = F.least(
-            F.lit(255).cast("long"),
-            F.greatest(F.lit(0).cast("long"), F.floor((x - m) * BINS / rng)),
-        )
-        return F.when(rng == 0.0, m).otherwise(
-            m + (q.cast("double") + 0.5) * rng / BINS
-        )
-
-    xs = F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    return e.select(
-        "vec_id",
-        "label",
-        F.element_at(_ivf_sims(), 1)["cell"].alias("cell"),
-        F.transform(xs, rec_elem).alias("rec"),
-    ).withColumn("rnrm", _dot(F.col("rec"), F.col("rec")))
-
-
 def ivfpq_corpus(e: DataFrame, mn: list, mx: list) -> DataFrame:
     """(vec_id, label, cell, rec, rnrm): map-side IVF cell assignment plus
     int8-reconstructed code vectors, one vectorized Arrow stage.
 
     Round 7: same rewrite as similarity.ivf_assign — the argmax +
     reconstruction arithmetic is identical floor-quantized IEEE float64
-    in numpy (division-by-zero rows resolve through the same rng==0
-    guard the expression's WHEN applies), pinned bit-equal to
-    :func:`ivfpq_corpus_expr` in tests/test_pca_quantize.py."""
+    in numpy (division-by-zero rows resolve through the same mx = mn
+    guard the oracle's CASE applies), pinned bit-equal to the
+    ``ann_ivfpq_topk`` oracle's ``assigned``, ``rec`` and ``rnorm``
+    stages in tests/test_pca_quantize.py."""
     import numpy as np
     import pandas as pd
 

@@ -21,10 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_flink_pratices_spark.functions.numeric import (
-    davg,
     dsum,
     qlong,
-    sql_davg,
     sql_dsum,
     sql_qavg,
     sql_qsum,

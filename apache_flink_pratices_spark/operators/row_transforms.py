@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from apache_flink_pratices_spark.functions.hashing import signal_id, sql_signal_id
 from apache_flink_pratices_spark.io import load

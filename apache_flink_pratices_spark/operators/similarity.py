@@ -404,23 +404,6 @@ def _ivf_sims() -> Column:
     return F.array_sort(entries)
 
 
-def ivf_assign_expr(vectors: DataFrame) -> DataFrame:
-    """Expression-twin of :func:`ivf_assign` (higher-order functions).
-
-    Kept as the cross-engine reference formulation: tests pin
-    ``ivf_assign`` bit-equal to this on real and random corpora, and the
-    tiny query-side probe list still derives from the same ``_ivf_sims``
-    expression. Not used on the corpus hot path — HOF lambdas evaluate
-    interpreted per element (cells × dim = 1024 invocations per row)."""
-    return vectors.select(
-        "vec_id",
-        "label",
-        "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
-        F.element_at(_ivf_sims(), 1)["cell"].alias("cell"),
-    )
-
-
 def ivf_assign(vectors: DataFrame) -> DataFrame:
     """(vec_id, label, embedding, nrm, cell): map-side cell assignment —
     no shuffle; the embedding never leaves its input partition.
@@ -434,7 +417,8 @@ def ivf_assign(vectors: DataFrame) -> DataFrame:
     floors to the same int64 in numpy float64 as in the JVM double path,
     int64 sums are exact, and ``np.argmax`` breaks ties at the smallest
     cell id exactly like the ``array_sort(struct(neg_sim, cell))``
-    expression. Equality with :func:`ivf_assign_expr` is pinned in
+    expression. Cells and norms are pinned bit-equal to the
+    ``ann_ivf_topk`` oracle's ``assigned`` and ``norms`` stages in
     tests/test_ann_ivf.py."""
     import numpy as np
     import pandas as pd
@@ -558,9 +542,9 @@ def _pair_cosine_scored(pairs: DataFrame) -> DataFrame:
 
 
 def _pair_cosine_scored_expr(pairs: DataFrame) -> DataFrame:
-    """Retained expression twin of :func:`_pair_cosine_scored` — the
-    cross-engine derivation the DuckDB oracles mirror (same stance as
-    ``_semantic_pair_cosine_expr``)."""
+    """Expression form of :func:`_pair_cosine_scored`, the verify
+    ``ann_cosine_topk`` runs (see the measurement note there); bit-equal
+    to the kernel, pinned in tests/test_ann_lsh.py."""
     cosine = _dot(F.col("q_embedding"), F.col("embedding")) / (
         F.sqrt(F.col("q_nrm")) * F.sqrt(F.col("nrm"))
     )
@@ -582,9 +566,9 @@ def _ranked_topk(scored: DataFrame, top_k: int) -> DataFrame:
 def _query_frame(vectors: DataFrame, n_queries: int) -> DataFrame:
     """(query_id, q_embedding, q_nrm) for the n_queries query vectors,
     derived straight from the RAW rows. The HOF ``_dot`` norm runs on
-    n_queries rows only and is pinned bit-equal to the vectorized
-    kernels' numpy norm (tests/test_ann_ivf.py pins ivf_assign ==
-    ivf_assign_expr, whose nrm is this same expression), so serving the
+    n_queries rows only and is bit-equal to the vectorized kernels'
+    numpy norm (tests/test_ann_ivf.py pins ivf_assign's nrm to the
+    oracle's ``norms`` stage, the norm both oracle sides use), so serving the
     query side from here instead of a persisted corpus-wide assignment
     frame changes no bits — it only drops the corpus-sized cache and
     the materialization barrier its broadcast build paid (r14)."""
@@ -752,7 +736,7 @@ def l2_cells_sorted(seeds: list[list[int]]) -> Column:
     as ONE nested literal looped by an indexed transform (the
     kmeans._best_cluster codegen stance). HOF-interpreted per element —
     the corpus hot path uses the vectorized kernel instead; this is the
-    query-side probe (N_QUERIES rows) and the pinned expression twin."""
+    query-side probe (N_QUERIES rows)."""
     from apache_flink_pratices_spark.operators.kmeans import Q
 
     qe = F.expr(
@@ -770,21 +754,6 @@ def l2_cells_sorted(seeds: list[list[int]]) -> Column:
         ),
     )
     return F.array_sort(entries)
-
-
-def ivf_assign_trained_expr(
-    vectors: DataFrame, seeds: list[list[int]]
-) -> DataFrame:
-    """Expression twin of :func:`ivf_assign_trained` — the cross-engine
-    reference formulation the vectorized kernel is pinned bit-equal to
-    (tests/test_ann_ivf_trained.py), mirroring ivf_assign_expr."""
-    return vectors.select(
-        "vec_id",
-        "label",
-        "embedding",
-        _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
-        F.element_at(l2_cells_sorted(seeds), 1)["cell"].cast("int").alias("cell"),
-    )
 
 
 def ivf_assign_trained(
@@ -1024,7 +993,7 @@ def _sql_ann_ivf_trained() -> str:
     "verify) as unrolled CTE stages, so the artifact content itself is "
     "value-hash-checked against an independent engine. Measured on the "
     "planted-cluster corpus the trained codebook beats the hash-grid "
-    "cells (ann_ivf_trained_recall_bench, pinned in "
+    "cells (ann_ivf_trained_recall_bench in "
     "tests/test_ann_ivf_trained.py).",
     bench=True,
     tags=("similarity", "ann", "ivf", "kmeans", "training"),
@@ -1032,125 +1001,6 @@ def _sql_ann_ivf_trained() -> str:
 def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = trained_ivf_centroids(spark, sf_dir)
     return ann_ivf_trained_frame(load(spark, sf_dir, "embeddings"), seeds)
-
-
-def ann_ivf_trained_recall_bench(spark: SparkSession, sf_dir: str) -> dict:
-    """Measured trained-vs-hash-grid IVF comparison on the planted-cluster
-    corpus (the deployment regime): per-variant recall@10 vs brute force
-    and candidate fraction, so the 'trained centroids beat the stand-in
-    grid' claim is a measured, test-pinned number (VERDICT r12 #4)."""
-    from pyspark.sql.window import Window
-
-    from pyspark.storagelevel import StorageLevel
-
-    from apache_flink_pratices_spark.operators.kmeans import kmeans_fit
-
-    # Every persisted frame registers here and is unpersisted in the
-    # closing finally: an exception mid-measurement must not leak
-    # MEMORY_AND_DISK frames for the rest of the calling session
-    # (ADVICE r13).
-    persisted: list[DataFrame] = []
-
-    def _persist(frame: DataFrame) -> DataFrame:
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(frame)
-        return frame
-
-    try:
-        vectors = _persist(clustered_embeddings(spark, sf_dir))
-        n = vectors.count()
-
-        # brute-force ground truth: 5 broadcast queries x corpus
-        base = vectors.select(
-            "vec_id",
-            "embedding",
-            _dot(F.col("embedding"), F.col("embedding")).alias("nrm"),
-        )
-        qf = base.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("qn"),
-        )
-        scored = (
-            base.crossJoin(F.broadcast(qf))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                (
-                    _dot(F.col("qe"), F.col("embedding"))
-                    / (F.sqrt("qn") * F.sqrt("nrm"))
-                ).alias("cos"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-        truth: dict[int, set[int]] = {}
-        for r in (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOP_K)
-            .collect()
-        ):
-            truth.setdefault(r["query_id"], set()).add(r["vec_id"])
-
-        def recall_of(frame: DataFrame) -> float:
-            got: dict[int, set[int]] = {}
-            for r in frame.select("query_id", "vec_id").collect():
-                got.setdefault(r["query_id"], set()).add(r["vec_id"])
-            return sum(
-                len(got.get(qid, set()) & t) / len(t) for qid, t in truth.items()
-            ) / len(truth)
-
-        def fraction_of(assigned: DataFrame, probes: DataFrame) -> float:
-            cand = (
-                assigned.select("vec_id", "cell")
-                .join(F.broadcast(probes), "cell")
-                .filter(F.col("vec_id") != F.col("query_id"))
-            )
-            return cand.count() / float(N_QUERIES * (n - 1))
-
-        # trained variant (live fit on the derived corpus — the artifact is
-        # keyed to raw tables, and this measurement IS the training story)
-        seeds, _hist = kmeans_fit(vectors, k=IVF_CELLS, max_iter=IVF_KM_ITERS)
-        t_probes = vectors.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.transform(
-                    F.slice(l2_cells_sorted(seeds), 1, IVF_NPROBE),
-                    lambda s: s["cell"].cast("int"),
-                )
-            ).alias("cell"),
-        )
-        t_assigned = _persist(ivf_assign_trained(vectors, seeds))
-        qframe = _query_frame(vectors, N_QUERIES)
-        trained = {
-            "recall": round(
-                recall_of(_ivf_probe_verify(t_assigned, t_probes, qframe, TOP_K)),
-                4,
-            ),
-            "candidate_fraction": round(fraction_of(t_assigned, t_probes), 4),
-        }
-
-        # hash-grid variant (the round-7 stand-in directions)
-        h_assigned = _persist(ivf_assign(vectors))
-        h_probes = vectors.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.transform(
-                    F.slice(_ivf_sims(), 1, IVF_NPROBE), lambda s: s["cell"]
-                )
-            ).alias("cell"),
-        )
-        hash_grid = {
-            "recall": round(
-                recall_of(_ivf_probe_verify(h_assigned, h_probes, qframe, TOP_K)),
-                4,
-            ),
-            "candidate_fraction": round(fraction_of(h_assigned, h_probes), 4),
-        }
-        return {"trained": trained, "hash_grid": hash_grid}
-    finally:
-        for f in persisted:
-            f.unpersist()
 
 
 # --- per-label centroids ---------------------------------------------------
@@ -1402,34 +1252,3 @@ def ann_lsh_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_lsh_frame(
         clustered_embeddings(spark, sf_dir), bits=CLU_BITS, band_size=CLU_BAND
     )
-
-
-def ann_lsh_clustered_candidate_fraction(
-    spark: SparkSession, sf_dir: str
-) -> float:
-    """Measured candidate fraction of the clustered LSH query: distinct
-    (query, candidate) pairs / (N_QUERIES · (N−1)); the pruning claim
-    is pinned on it in tests/test_ann_lsh.py."""
-    from pyspark.storagelevel import StorageLevel
-
-    vectors = clustered_embeddings(spark, sf_dir)
-    # persist: the signature pass is the dominant map work and feeds BOTH
-    # band-join sides (review r7: it ran twice per call without this);
-    # n comes off the same cache instead of a third corpus scan
-    bands = _signature_bands(vectors, CLU_BITS, CLU_BAND, DIM).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    n_bands = CLU_BITS // CLU_BAND
-    n = bands.count() // n_bands
-    qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "band", "bucket"
-    )
-    cand = (
-        bands.join(F.broadcast(qb), ["band", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    frac = cand.count() / float(N_QUERIES * (n - 1))
-    bands.unpersist()
-    return frac

@@ -334,13 +334,15 @@ def _repetition_metrics(t: DataFrame) -> DataFrame:
     ``(doc_id, ws)`` token-list frame — vectorized Arrow ``mapInPandas``.
 
     All four metrics are integer counts over the JVM-produced token list,
-    so Python hash counting is exactly the HOF arithmetic (no floats, no
-    collation: tokens arrive as the same UTF-8 strings the expressions
-    compare). Bigrams dedupe as (w_i, w_{i+1}) tuples — equivalent to the
-    twin's ``concat(w_i, ' ', w_{i+1})`` strings because tokens are
-    split on ' ' and therefore never contain one. Counter/max is O(n)
-    per row; the twin's ``filter-per-distinct`` top-word scan is
-    O(n·distinct) and interpreted per element."""
+    so Python hash counting is exactly the oracle's list arithmetic (no
+    floats, no collation: tokens arrive as the same UTF-8 strings the
+    oracle compares). Bigrams dedupe as (w_i, w_{i+1}) tuples —
+    equivalent to the oracle's ``ws[i] || ' ' || ws[i+1]`` strings
+    because tokens are split on ' ' and therefore never contain one.
+    Counter/max is O(n) per row; a ``filter-per-distinct`` top-word scan
+    as a Spark higher-order expression is O(n·distinct) and interpreted
+    per element. Pinned against the ``quality_repetition`` oracle in
+    tests/test_text_pipeline.py."""
     import pandas as pd
 
     def fn(batches):
@@ -355,9 +357,9 @@ def _repetition_metrics(t: DataFrame) -> DataFrame:
                 c = Counter(ws)
                 n_words.append(n)
                 n_distinct.append(len(c))
-                # empty token list → 0, matching the HOF twin's
-                # array_max(empty) = null coalesced by the callers'
-                # size(ws) > 0 pre-filter; without the guard a stray
+                # empty token list → 0: the callers' size(ws) > 0
+                # pre-filter (the oracle's len(ws) > 0) never sends
+                # one, and without the guard a stray
                 # empty row would crash the Python worker (max() of an
                 # empty sequence) instead of degrading (ADVICE r14)
                 top_cnt.append(max(c.values()) if n else 0)
@@ -381,27 +383,6 @@ def _repetition_metrics(t: DataFrame) -> DataFrame:
         fn,
         "doc_id bigint, n_words int, n_distinct int, "
         "top_word_cnt int, n_dup_bigrams int",
-    )
-
-
-def _repetition_metrics_expr(t: DataFrame) -> DataFrame:
-    """Retained higher-order-function twin of :func:`_repetition_metrics`
-    — the cross-engine formulation the DuckDB oracle mirrors (pinned
-    bit-equal in tests/test_text_pipeline.py)."""
-    return t.select(
-        "doc_id",
-        F.size("ws").alias("n_words"),
-        F.size(F.array_distinct("ws")).alias("n_distinct"),
-        F.expr(
-            "array_max(transform(array_distinct(ws), "
-            "d -> size(filter(ws, w -> w = d))))"
-        ).alias("top_word_cnt"),
-        F.expr(
-            "CASE WHEN size(ws) >= 2 THEN size(ws) - 1 - size(array_distinct("
-            "transform(sequence(1, size(ws) - 1), "
-            "i -> concat(element_at(ws, i), ' ', element_at(ws, i + 1))))) "
-            "ELSE 0 END"
-        ).alias("n_dup_bigrams"),
     )
 
 
@@ -443,9 +424,9 @@ def _repetition_metrics_expr(t: DataFrame) -> DataFrame:
     "(split/lower/filter — the cross-engine string semantics the oracle "
     "mirrors) and the four integer counts run in ONE vectorized Arrow "
     "kernel per token list — O(n_words) per row via hash counting, where "
-    "the retained higher-order-function twin pays an INTERPRETED "
+    "a higher-order-function expression pays an INTERPRETED "
     "O(n_words × n_distinct) top-word scan (r14: that scan was the "
-    "query's hot loop; kernel pinned bit-equal to the twin in "
+    "query's hot loop; kernel pinned bit-equal to the oracle in "
     "tests/test_text_pipeline.py).",
     bench=True,
     tags=("text", "quality", "repetition", "curation"),
@@ -752,14 +733,6 @@ def bpe_encode_word_with(
             n_unk += 1
             pos += 1
     return pieces, ids, n_unk
-
-
-def bpe_encode_word(w: str) -> tuple[list[str], list[int], int]:
-    """Greedy encode against the FIXED frozen piece table — the
-    deterministic contract both engines and the pure-Python pin in
-    tests/test_bpe_encode.py implement independently (see
-    :func:`bpe_encode_word_with` for the parametrized kernel)."""
-    return bpe_encode_word_with(w, BPE_PIECE_IDS, BPE_MAX_PIECE_LEN)
 
 
 def bpe_word_fingerprint(ids: list[int]) -> int:

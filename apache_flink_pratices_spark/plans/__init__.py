@@ -1,6 +1,3 @@
-"""Physical-plan introspection and audit helpers.
-
-The engine's scale claims (filter pushdown, column pruning, broadcast vs
-shuffle join choice, whole-stage codegen coverage) are asserted as tests
-via :mod:`.explain`, not just stated in docstrings.
-"""
+"""Physical-plan introspection: :mod:`.explain` renders a DataFrame's
+formatted plan, which the plan-audit tests read (filter pushdown, column
+pruning, broadcast vs shuffle join choice, codegen coverage)."""

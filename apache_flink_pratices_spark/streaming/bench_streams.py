@@ -27,6 +27,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_flink_pratices_spark.session import _cpus
 from apache_flink_pratices_spark.streaming.fraud import fraud_alert_stream
 from apache_flink_pratices_spark.streaming.signal_generator import (
     SCENARIO_BASE,
@@ -45,8 +46,10 @@ FRAUD_ACCOUNTS = 500
 def write_input(spark: SparkSession, in_dir: str, rows: list[tuple], schema: str) -> int:
     """Write deterministic input rows once as parquet and return their
     count, the rate denominator: measured runs over the same input share
-    it instead of rebuilding identical rows + parquet per run (review r7)."""
-    spark.createDataFrame(rows, schema).coalesce(4).write.mode(
+    it instead of rebuilding identical rows + parquet per run (review r7).
+    One file per core: the stream's first batch reads them in parallel at
+    the session's width."""
+    spark.createDataFrame(rows, schema).coalesce(_cpus()).write.mode(
         "overwrite"
     ).parquet(in_dir)
     return len(rows)

@@ -16,12 +16,13 @@ from pyspark.sql import functions as F
 
 from apache_flink_pratices_spark.operators.similarity import (
     IVF_CELLS,
-    IVF_NPROBE,
     N_QUERIES,
     ann_ivf_frame,
     ivf_assign,
     ivf_directions,
 )
+
+from tests.oracle_duck import duck, oracle_stage, rows_by
 
 SF = "/root/testdata/sf0.01"
 
@@ -92,12 +93,11 @@ def test_directions_derivation_matches_sql(spark):
 
 def test_vectorized_assign_matches_expression_twin(spark, clustered):
     """ivf_assign (numpy mapInPandas) must be BIT-identical to the
-    higher-order-function reference formulation — cell ids, exact nrm
-    doubles, and the passed-through embedding — on clustered synthetic
-    data and on the real corpus (round 7: the corpus-side argmax moved
-    off interpreted HOF lambdas; this pin is what licenses that move)."""
-    from apache_flink_pratices_spark.operators.similarity import ivf_assign_expr
-
+    ann_ivf_topk DuckDB oracle's own stages — cell ids (``assigned``),
+    exact nrm doubles (``norms``) — and pass the embedding through
+    unchanged, on clustered synthetic data and on the real corpus
+    (round 7: the corpus-side argmax moved off interpreted HOF lambdas;
+    this pin is what licenses that move)."""
     df, _ = clustered
     real = spark.read.parquet(f"{SF}/embeddings.parquet")
     for frame in (df, real):
@@ -105,8 +105,12 @@ def test_vectorized_assign_matches_expression_twin(spark, clustered):
             r["vec_id"]: (r["cell"], r["nrm"], tuple(r["embedding"]))
             for r in ivf_assign(frame).collect()
         }
+        con = duck(embeddings=frame)
+        cells = rows_by(con, oracle_stage("ann_ivf_topk", "assigned"), "vec_id", "cell")
+        norms = rows_by(con, oracle_stage("ann_ivf_topk", "norms"), "vec_id", "nrm")
+        con.close()
         ref = {
-            r["vec_id"]: (r["cell"], r["nrm"], tuple(r["embedding"]))
-            for r in ivf_assign_expr(frame).collect()
+            r["vec_id"]: (cells[r["vec_id"]][0], norms[r["vec_id"]][0], tuple(r["embedding"]))
+            for r in frame.collect()
         }
         assert vec == ref

@@ -14,13 +14,18 @@ import hashlib
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from apache_flink_pratices_spark.operators.similarity import (
+    CLU_BAND,
+    CLU_BITS,
+    DIM,
     N_QUERIES,
     _signature_bands,
     ann_cosine_topk,
     ann_lsh_frame,
     ann_lsh_topk,
+    clustered_embeddings,
 )
 
 SF = "/root/testdata/sf0.01"
@@ -109,6 +114,33 @@ def test_signs_derivation_matches_sql(spark):
     assert signs[2][2] == expected  # k is 1-based → index 2 is k=3
 
 
+def ann_lsh_clustered_candidate_fraction(spark, sf_dir: str) -> float:
+    """Measured candidate fraction of the clustered LSH query: distinct
+    (query, candidate) pairs / (N_QUERIES · (N−1)); the pruning claim
+    is pinned on it in :func:`test_planted_cluster_query_recall_and_pruning`."""
+    vectors = clustered_embeddings(spark, sf_dir)
+    # persist: the signature pass is the dominant map work and feeds BOTH
+    # band-join sides (review r7: it ran twice per call without this);
+    # n comes off the same cache instead of a third corpus scan
+    bands = _signature_bands(vectors, CLU_BITS, CLU_BAND, DIM).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    n_bands = CLU_BITS // CLU_BAND
+    n = bands.count() // n_bands
+    qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "band", "bucket"
+    )
+    cand = (
+        bands.join(F.broadcast(qb), ["band", "bucket"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
+        .distinct()
+    )
+    frac = cand.count() / float(N_QUERIES * (n - 1))
+    bands.unpersist()
+    return frac
+
+
 def test_planted_cluster_query_recall_and_pruning(spark):
     """The REGISTERED clustered variant (ann_lsh_topk_clustered) must
     prune hard and stay near-exact at sf0.01 (VERDICT r6 #5): candidate
@@ -120,9 +152,7 @@ def test_planted_cluster_query_recall_and_pruning(spark):
         N_QUERIES,
         TOP_K,
         _dot,
-        ann_lsh_clustered_candidate_fraction,
         ann_lsh_topk_clustered,
-        clustered_embeddings,
     )
 
     sf = "/root/testdata/sf0.01"

@@ -6,6 +6,7 @@ shape (distinct-word kernel, UNK path, exact id-sequence fingerprint)."""
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 import pytest
 from hypothesis import given, settings
@@ -17,8 +18,14 @@ from apache_flink_pratices_spark.operators.text import (
     BPE_PIECE_IDS,
     BPE_SINGLES,
     BPE_UNK_MOD,
-    bpe_encode_word,
+    bpe_encode_word_with,
     bpe_word_fingerprint,
+)
+
+#: the greedy kernel against the FIXED frozen piece table — the contract
+#: both engines and the pure-Python reference below implement
+bpe_encode_word = partial(
+    bpe_encode_word_with, piece_ids=BPE_PIECE_IDS, max_piece_len=BPE_MAX_PIECE_LEN
 )
 
 

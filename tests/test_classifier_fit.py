@@ -6,8 +6,6 @@ equivalence is covered by tests/test_oracle_parity.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from apache_flink_pratices_spark.io import load
 from apache_flink_pratices_spark.operators.text import (
     CLF_EPOCHS,

@@ -2,9 +2,10 @@
 
 The within-cell cosine verify is a vectorized Arrow ``mapInPandas``
 stage; like every vectorized kernel in this repo it must be BIT-EQUAL
-to the retained expression twin (the derivation the DuckDB oracle
-mirrors) — float64 ``floor(a·b·SCALE)`` products, exact int64 sums,
-double division and sqrt are IEEE-identical across numpy and the JVM.
+to the DuckDB oracle — here the registered oracle's ``pairs`` stage,
+the within-cell pairs at cosine >= SEM_DEDUP_TAU — float64
+``floor(a·b·SCALE)`` products, exact int64 sums, double division and
+sqrt are IEEE-identical across numpy and DuckDB.
 """
 
 from __future__ import annotations
@@ -16,8 +17,9 @@ from pyspark.sql import functions as F
 from apache_flink_pratices_spark.operators.dedup import (
     SEM_DEDUP_TAU,
     _semantic_pair_cosine,
-    _semantic_pair_cosine_expr,
 )
+
+from tests.oracle_duck import duck, oracle_stage
 
 SF = "/root/testdata/sf0.001"
 
@@ -41,21 +43,56 @@ def _pair_frame_from(spark, e):
     )
 
 
-def test_vectorized_pair_cosine_matches_expression_twin(spark):
-    from apache_flink_pratices_spark.io import load
+def _kernel_and_oracle_pairs(spark, e):
+    """(kernel, oracle): {(vec_a, vec_b): (cell, cosine)} of the pairs at
+    cosine >= SEM_DEDUP_TAU — the kernel over the within-cell pair frame,
+    filtered as dedup_semantic filters it, and the oracle's ``pairs``
+    stage run by DuckDB over the same embeddings.
 
-    e = load(spark, SF, "embeddings")
+    The oracle emits no pair below the threshold, so every candidate
+    pair's cosine is also pinned to the shipped expression form of the
+    same arithmetic, ann_cosine_topk's verify (itself oracle-checked)."""
+    from apache_flink_pratices_spark.operators.similarity import (
+        _pair_cosine_scored_expr,
+    )
+
     raw = _pair_frame_from(spark, e).persist()
     raw.count()
-    vec = {
+    scored = {
         (r.vec_a, r.vec_b): (r.cell, r.cosine)
         for r in _semantic_pair_cosine(raw).collect()
     }
-    exp = {
-        (r.vec_a, r.vec_b): (r.cell, r.cosine)
-        for r in _semantic_pair_cosine_expr(raw).collect()
+    shipped = _pair_cosine_scored_expr(
+        raw.select(
+            F.col("vec_a").alias("query_id"),
+            F.col("vec_b").alias("vec_id"),
+            F.col("cell").alias("label"),
+            F.col("emb_a").alias("q_embedding"),
+            F.col("nrm_a").alias("q_nrm"),
+            F.col("emb_b").alias("embedding"),
+            F.col("nrm_b").alias("nrm"),
+        )
+    )
+    assert scored == {
+        (r.query_id, r.vec_id): (r.label, r.cosine) for r in shipped.collect()
     }
     raw.unpersist()
+    vec = {k: v for k, v in scored.items() if v[1] >= SEM_DEDUP_TAU}
+    con = duck(embeddings=e)
+    exp = {
+        (r["vec_a"], r["vec_b"]): (r["cell"], r["cosine"])
+        for r in con.execute(oracle_stage("dedup_semantic", "pairs"))
+        .fetch_arrow_table()
+        .to_pylist()
+    }
+    con.close()
+    return vec, exp
+
+
+def test_vectorized_pair_cosine_matches_expression_twin(spark):
+    from apache_flink_pratices_spark.io import load
+
+    vec, exp = _kernel_and_oracle_pairs(spark, load(spark, SF, "embeddings"))
     assert len(vec) > 0
     assert vec == exp  # bit-equal doubles, every pair
 
@@ -75,17 +112,7 @@ def test_vectorized_pair_cosine_twin_on_adversarial_floats(spark):
     e = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<float>, label int"
     )
-    raw = _pair_frame_from(spark, e).persist()
-    raw.count()
-    vec = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in _semantic_pair_cosine(raw).collect()
-    }
-    exp = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in _semantic_pair_cosine_expr(raw).collect()
-    }
-    raw.unpersist()
+    vec, exp = _kernel_and_oracle_pairs(spark, e)
     assert len(vec) > 0 and vec == exp
 
 

@@ -176,7 +176,8 @@ def test_triangle_kernel_path_has_none(spark):
 
 def test_triangle_plan_has_no_cartesian_and_caches_oriented(spark):
     from apache_flink_pratices_spark.operators.graph import triangle_count_neardup
-    from apache_flink_pratices_spark.plans.explain import formatted_plan, join_kinds
+    from apache_flink_pratices_spark.plans.explain import formatted_plan
+    from tests.plan_helpers import join_kinds
 
     plan = formatted_plan(triangle_count_neardup(spark, SF))
     assert "CartesianProduct" not in join_kinds(plan), join_kinds(plan)

@@ -5,10 +5,6 @@ sandbox)."""
 
 from __future__ import annotations
 
-import pytest
-
-from pyspark.sql import functions as F
-
 from apache_flink_pratices_spark.sinks.kafka import (
     PRODUCER_OPTIONS,
     TOPIC_BY_TYPE,

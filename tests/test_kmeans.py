@@ -11,6 +11,7 @@ from apache_flink_pratices_spark.operators.kmeans import (
 )
 
 from tests.conftest import SF_SMOKE
+from tests.oracle_duck import duck, rows_by
 
 
 def test_farthest_point_seeds_distinct_and_deterministic(spark):
@@ -39,16 +40,13 @@ def test_lloyd_inertia_non_increasing(spark):
 
 def test_vectorized_assign_matches_expression_twin(spark):
     """assign_frame (numpy mapInPandas) must be BIT-identical to the
-    higher-order-function reference formulation on the real corpus —
+    kmeans_assign DuckDB oracle on the real corpus at two scale factors —
     cluster ids, exact int64 dist2 — (round 7: the K x dim distance pass
     moved off interpreted HOF lambdas; this pin licenses the move)."""
-    from apache_flink_pratices_spark.operators.kmeans import (
-        _seed_arrays,
-        assign_frame,
-        assign_frame_expr,
-    )
-    from apache_flink_pratices_spark.io import load
+    from apache_flink_pratices_spark.operators.kmeans import _seed_arrays
+    from apache_flink_pratices_spark.registry import all_specs
 
+    oracle = all_specs()["kmeans_assign"].oracle
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         vectors = load(spark, sf, "embeddings")
         seeds = _seed_arrays(spark, sf)
@@ -56,8 +54,7 @@ def test_vectorized_assign_matches_expression_twin(spark):
             r["vec_id"]: (r["cluster"], r["dist2"])
             for r in assign_frame(vectors, seeds).collect()
         }
-        ref = {
-            r["vec_id"]: (r["cluster"], r["dist2"])
-            for r in assign_frame_expr(vectors, seeds).collect()
-        }
-        assert vec == ref
+        con = duck(sf)
+        ref = rows_by(con, oracle, "vec_id", "cluster", "dist2")
+        con.close()
+        assert vec == ref and len(vec) == vectors.count()

@@ -21,6 +21,11 @@ from apache_flink_pratices_spark.operators.multimodal import (
 
 SF = "/root/testdata/sf0.001"
 
+#: the media table's meta struct, for hand-built media frames
+MEDIA_META_SCHEMA = (
+    "struct<width:int, height:int, channels:int, sample_rate:int, n_frames:int>"
+)
+
 
 def test_payload_matches_md5_chain(spark):
     """The JVM-built binary payload must equal the md5 chain, byte for
@@ -186,7 +191,6 @@ def test_video_phash_planted_twins_strangers_and_frame_alignment(spark):
     import numpy as np
 
     from apache_flink_pratices_spark.operators.multimodal import (
-        MEDIA_META_SCHEMA,
         VID_C,
         VID_FRAMES,
         VID_H,
@@ -243,7 +247,6 @@ def test_video_phash_unequal_signature_lengths_never_strict_pair(spark):
     import numpy as np
 
     from apache_flink_pratices_spark.operators.multimodal import (
-        MEDIA_META_SCHEMA,
         VID_C,
         VID_FRAMES,
         VID_H,

@@ -11,9 +11,10 @@ from apache_flink_pratices_spark.operators.olap import (
     q_value_zscore_outliers,
     sketch_kmv_jaccard,
 )
-from apache_flink_pratices_spark.plans.explain import (
+from apache_flink_pratices_spark.plans.explain import formatted_plan
+
+from tests.plan_helpers import (
     exchange_count,
-    formatted_plan,
     join_kinds,
     scan_columns,
 )

@@ -5,40 +5,15 @@ the decimal-sum determinism playbook (functions/numeric.py)."""
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
-from apache_flink_pratices_spark.io import TABLES, table_path
 from apache_flink_pratices_spark.registry import all_specs
 
 from tests.conftest import SF_SMOKE
+from tests.oracle_duck import duck, normalize
 
 SPECS = all_specs()
 ORACLE_SPECS = sorted(SPECS)
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
-    return con
-
-
-def _normalize(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda r: tuple((x is None, str(x)) for x in r))
-    return [tuple(colnames[i] for i in order)] + out
 
 
 @pytest.mark.parametrize("name", ORACLE_SPECS)
@@ -56,7 +31,7 @@ def test_matches_oracle(spark, name):
     finally:
         spark.catalog.clearCache()
 
-    con = _duck(SF_SMOKE)
+    con = duck(SF_SMOKE)
     oracle = con.execute(spec.oracle).fetch_arrow_table()
     con.close()
     d_cols = oracle.column_names
@@ -70,7 +45,7 @@ def test_matches_oracle(spark, name):
     assert sorted(s_cols) == sorted(d_cols), f"{name}: column mismatch {s_cols} vs {d_cols}"
     assert len(s_rows) == len(d_rows), f"{name}: row count {len(s_rows)} vs {len(d_rows)}"
 
-    sn = _normalize(s_rows, s_cols)
-    dn = _normalize(d_rows, d_cols)
+    sn = normalize(s_rows, s_cols)
+    dn = normalize(d_rows, d_cols)
     for i, (a, b) in enumerate(zip(sn, dn)):
         assert a == b, f"{name}: first divergence at sorted row {i}:\n  spark={a}\n  duck ={b}"

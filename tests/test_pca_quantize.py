@@ -15,11 +15,10 @@ from apache_flink_pratices_spark.operators.quantization import (
     ERR_SCALE,
     embedding_int8_quantize,
 )
-from apache_flink_pratices_spark.plans.explain import (
-    exchange_count,
-    formatted_plan,
-    join_kinds,
-)
+from apache_flink_pratices_spark.plans.explain import formatted_plan
+
+from tests.oracle_duck import duck, oracle_stage, rows_by
+from tests.plan_helpers import exchange_count, join_kinds
 
 SF = "/root/testdata/sf0.001"
 
@@ -183,14 +182,14 @@ def test_ivfpq_candidates_pruned_by_probes(spark):
 
 def test_ivfpq_vectorized_corpus_matches_expression_twin(spark):
     """ivfpq_corpus (numpy mapInPandas) must be BIT-identical to the
-    higher-order-function reference formulation the DuckDB oracle
-    mirrors — cell ids, reconstructed code vectors, and rnrm doubles —
-    on the real corpus at two scale factors (round 7: the corpus prep
-    moved off interpreted HOF lambdas; this pin licenses the move)."""
+    ann_ivfpq_topk DuckDB oracle's own stages — cell ids (``assigned``),
+    reconstructed code vectors (``rec``, one row per element) and rnrm
+    doubles (``rnorm``) — on the real corpus at two scale factors
+    (round 7: the corpus prep moved off interpreted HOF lambdas; this
+    pin licenses the move)."""
     from apache_flink_pratices_spark.operators.quantization import (
         _dim_stats,
         ivfpq_corpus,
-        ivfpq_corpus_expr,
     )
     from apache_flink_pratices_spark.io import load
 
@@ -201,8 +200,17 @@ def test_ivfpq_vectorized_corpus_matches_expression_twin(spark):
             r["vec_id"]: (r["cell"], tuple(r["rec"]), r["rnrm"])
             for r in ivfpq_corpus(e, mn, mx).collect()
         }
+        con = duck(sf)
+        cells = rows_by(con, oracle_stage("ann_ivfpq_topk", "assigned"), "vec_id", "cell")
+        rnrm = rows_by(con, oracle_stage("ann_ivfpq_topk", "rnorm"), "vec_id", "nrm")
+        rec: dict[int, list] = {}
+        for r in sorted(
+            con.execute(oracle_stage("ann_ivfpq_topk", "rec")).fetch_arrow_table().to_pylist(),
+            key=lambda r: (r["vec_id"], r["k"]),
+        ):
+            rec.setdefault(r["vec_id"], []).append(r["r"])
+        con.close()
         ref = {
-            r["vec_id"]: (r["cell"], tuple(r["rec"]), r["rnrm"])
-            for r in ivfpq_corpus_expr(e, mn, mx).collect()
+            v: (cells[v][0], tuple(rec[v]), rnrm[v][0]) for v in rec
         }
         assert vec == ref

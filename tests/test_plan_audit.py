@@ -14,10 +14,11 @@ from apache_flink_pratices_spark.operators.relational import (
     q5_local_supplier,
     q6_forecast_revenue,
 )
-from apache_flink_pratices_spark.plans.explain import (
+from apache_flink_pratices_spark.plans.explain import formatted_plan
+
+from tests.plan_helpers import (
     codegen_stage_count,
     exchange_count,
-    formatted_plan,
     join_kinds,
     pushed_filters,
     scan_columns,

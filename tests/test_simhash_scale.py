@@ -22,14 +22,26 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from apache_flink_pratices_spark.io import load
+from apache_flink_pratices_spark.operators.curation import connected_components
 from apache_flink_pratices_spark.operators.dedup import (
+    HOT_BUCKET_CAP,
+    HOT_BUCKET_REPS,
+    RESCUE_PIVOT_DEG,
+    SIMHASH_BAND_BITS,
+    SIMHASH_BITS,
     SIMHASH_HAMMING_MAX,
     _simhash_candidates,
     _simhash_fingerprints,
     _simhash_fingerprints_of,
+    wedge_rescue_pairs,
 )
+
+from tests.oracle_duck import duck, oracle_stage, rows_by
 
 SF = "/root/testdata/sf0.01"
 
@@ -210,44 +222,91 @@ def test_cluster_offsets_honours_n():
     assert cluster_offsets()[:3] == three  # prefix-stable derivation
 
 
+def hot_bucket_guard_bench(spark, sf_dir: str) -> dict:
+    """Measured above-cap guard behaviour (VERDICT r7 #4).
+
+    The shipped corpora never trip the 1024 cap (max simhash bucket at
+    sf0.1: 203). This plants the adversarial case on ``sf_dir``: the
+    real documents table plus ``HOT_BUCKET_CAP + 200`` identical
+    boilerplate docs — every boilerplate fingerprint is identical, so all
+    four 16-bit bands collide into one bucket past the cap — then runs
+    the exact production candidate kernel (:func:`_simhash_candidates`,
+    same cap/reps constants) end to end.
+
+    Returns the guarded candidate-pair count alongside the arithmetic
+    all-pairs fan-out the unguarded self-join would have emitted for the
+    boilerplate bucket alone (``bands × C(n_boiler, 2)``
+    join rows — ~3.0M pairs for 1224 docs vs the guard's
+    ≤ ``bands·B·reps`` ≈ 39k): a boilerplate block scales the unguarded
+    join quadratically, the guarded one linearly."""
+    n_boiler = HOT_BUCKET_CAP + 200  # the smallest above-cap block
+
+    d = load(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    boiler = spark.range(n_boiler).select(
+        F.concat(F.lit("boiler_"), F.col("id")).alias("doc_id"),
+        F.lit(
+            "the exact same legal boilerplate footer text repeated on "
+            "every page of the crawl"
+        ).alias("text"),
+    )
+    corpus = d.unionByName(boiler)
+    # persisted like every production caller (the kernel contract: the
+    # expensive upstream is cached by the caller) — the pre-check
+    # aggregate, the below-cap join sides, and the hot-branch tagging all
+    # read the one materialized fingerprint table
+    fp = _simhash_fingerprints_of(corpus).persist(StorageLevel.MEMORY_AND_DISK)
+    # hint-less on purpose: the planted corpus is synthetic, so the
+    # pre-check aggregate must run (the adversarial path pays it exactly
+    # once per corpus in production)
+    pairs = int(_simhash_candidates(fp).count())
+    fp.unpersist()
+    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
+    return {
+        "pairs": pairs,
+        "n_boiler": n_boiler,
+        "unguarded_boiler_pairs": n_bands * n_boiler * (n_boiler - 1) // 2,
+        "guard_bound_pairs": n_bands * n_boiler * HOT_BUCKET_REPS,
+    }
+
+
 def test_hot_bucket_guard_bench_contract(spark):
     """The guard measurement (VERDICT r7 #4) must actually exercise the
     above-cap branch: the planted boilerplate block exceeds the
     production cap, the reported pair count stays far below the
     all-pairs fan-out, and the dict carries its pinned keys."""
-    from apache_flink_pratices_spark.operators.dedup import (
-        HOT_BUCKET_CAP,
-        hot_bucket_guard_bench,
-    )
     from tests.conftest import SF_SMOKE
 
     out = hot_bucket_guard_bench(spark, SF_SMOKE)
     assert set(out) == {
-        "pairs", "wall_s", "n_boiler", "unguarded_boiler_pairs", "guard_bound_pairs",
+        "pairs", "n_boiler", "unguarded_boiler_pairs", "guard_bound_pairs",
     }
     assert out["n_boiler"] == HOT_BUCKET_CAP + 200
-    assert out["wall_s"] > 0
     # the guarded total (boiler + normal-corpus pairs) must stay under the
     # unguarded boilerplate fan-out alone — the point of the guard
     assert 0 < out["pairs"] < out["unguarded_boiler_pairs"]
     assert out["guard_bound_pairs"] < out["unguarded_boiler_pairs"]
 
 
+def _oracle_fingerprints(d) -> dict:
+    """doc_id -> fp from the dedup_simhash oracle's own ``fp`` stage,
+    run by DuckDB over the same (doc_id, text) frame."""
+    con = duck(documents=d)
+    fps = rows_by(con, oracle_stage("dedup_simhash", "fp"), "doc_id", "fp")
+    con.close()
+    return {k: v[0] for k, v in fps.items()}
+
+
 def test_vectorized_fingerprints_match_expression_twin(spark):
     """The round-8 vectorized fingerprint kernel must be BIT-EQUAL to the
-    retained expression twin (the derivation the DuckDB oracles mirror) —
-    including negative md5 hashes, where numpy's floor-mod `%` would
-    diverge from Spark/DuckDB's truncated `%` (the kernel uses np.fmod),
-    and string doc_ids (planted corpora)."""
-    from apache_flink_pratices_spark.io import load
-    from apache_flink_pratices_spark.operators.dedup import (
-        _simhash_fingerprints_expr_of,
-        _simhash_fingerprints_of,
-    )
-
-    d = load(spark, "/root/testdata/sf0.001", "documents")
+    dedup_simhash DuckDB oracle's ``fp`` stage — including negative md5
+    hashes, where numpy's floor-mod `%` would diverge from Spark/DuckDB's
+    truncated `%` (the kernel uses np.fmod), and string doc_ids (planted
+    corpora)."""
+    d = load(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text")
     vec = {r.doc_id: r.fp for r in _simhash_fingerprints_of(d).collect()}
-    exp = {r.doc_id: r.fp for r in _simhash_fingerprints_expr_of(d).collect()}
+    exp = _oracle_fingerprints(d)
     assert vec == exp and len(vec) == 500
 
     docs = [(f"b{i:03d}", "the same boilerplate text repeated here")
@@ -259,7 +318,7 @@ def test_vectorized_fingerprints_match_expression_twin(spark):
     docs += [(None, "null id document text")]
     df = spark.createDataFrame(docs, "doc_id string, text string")
     vec = {r.doc_id: r.fp for r in _simhash_fingerprints_of(df).collect()}
-    exp = {r.doc_id: r.fp for r in _simhash_fingerprints_expr_of(df).collect()}
+    exp = _oracle_fingerprints(df)
     assert vec == exp and len(vec) == 51 and None in vec
 
 
@@ -268,15 +327,10 @@ def test_vectorized_fingerprints_huge_long_ids_with_nulls(spark):
     nullable LONG doc_id batch that contains an actual null reaches a
     pandas kernel as float64, so ids past 2^53 would silently collapse
     onto even neighbours (2^53 and 2^53+1 are the same float64). The
-    kernel routes non-string ids through a lossless string round-trip;
-    this pins bit-equality with the JVM expression twin on exactly the
+    kernel reads ids through Arrow as exact Python ints; this pins
+    bit-equality with the DuckDB oracle's ``fp`` stage on exactly the
     corrupting corpus: adjacent ids straddling 2^53, int64 extremes, and
     a null id in the same batch — and that every id survives verbatim."""
-    from apache_flink_pratices_spark.operators.dedup import (
-        _simhash_fingerprints_expr_of,
-        _simhash_fingerprints_of,
-    )
-
     big = 1 << 53
     ids = [big, big + 1, big + 2, big + 3, (1 << 63) - 1, -(1 << 63),
            -(big + 1), 7, None]
@@ -286,7 +340,7 @@ def test_vectorized_fingerprints_huge_long_ids_with_nulls(spark):
     out = _simhash_fingerprints_of(df)
     assert out.schema["doc_id"].dataType.simpleString() == "bigint"
     vec = {r.doc_id: r.fp for r in out.collect()}
-    exp = {r.doc_id: r.fp for r in _simhash_fingerprints_expr_of(df).collect()}
+    exp = _oracle_fingerprints(df)
     assert set(vec) == set(ids)  # every id verbatim — no float64 collapse
     assert vec == exp and len(vec) == len(ids) and None in vec
 
@@ -488,6 +542,230 @@ def test_wedge_rescue_low_degree_pivot_closes_high_degree_skips(spark):
     assert all(a < b for a, b in full)
 
 
+def hot_bucket_recall_bench(spark) -> dict:
+    """Measured verified-pair recall above the hot-bucket cap (VERDICT
+    r8 #3) on two planted fingerprint corpora, with the exact production
+    candidate kernel + Hamming verification + wedge rescue.
+
+    Corpus A — boilerplate mass (``cap+476`` identical fingerprints, all
+    four 16-bit bands hot) with three planted pair classes:
+
+    - ``in_mass``: Hamming-3 pairs, each member ≤ 3 bits from the mass
+      center → representative edges verify → COMPONENT recall must be
+      1.0 while direct-pair recall is 0.0 by design (block-internal pair
+      enumeration is representative-star; closing it is the quadratic
+      blowup the cap prevents, so the rescue's degree cap skips it).
+    - ``fringe``: Hamming-2 pairs, each member 4 bits from the center and
+      agreeing with its partner ONLY on hot bands → no verified edge at
+      all — the guard's honest irreducible loss. Expected 0.0 recall;
+      what bounds it in real corpora is the ``control`` class.
+    - ``control``: same 4-bit distance from the center, but the pair
+      shares a private (below-cap) band bucket → found by the normal
+      join. Pigeonhole: a Hamming ≤ 3 pair always shares an intact band,
+      so a pair is lost ONLY when every shared band is independently
+      hot — both members must carry the exact mass pattern on all their
+      agreeing bands.
+
+    Corpus B — heterogeneous hot bucket (two bands carry a shared hot
+    pattern, two are per-member random), the near-threshold case the
+    rescue targets:
+
+    - ``wedge``: Hamming-3 pairs whose members verify against the same
+      low-degree representative but share only hot bands with each
+      other → direct recall 0.0 WITHOUT the rescue, 1.0 WITH it.
+    - ``orphan``: Hamming-2 pairs ≥ 4 bits from every representative,
+      agreeing only on hot bands → 0.0 everywhere (irreducible).
+
+    Returns per-class direct/component/rescued recall fractions; the
+    class expectations above are pinned by
+    :func:`test_hot_bucket_recall_classes`. Components come from the
+    engine's ``connected_components``, which sums its long labels to
+    detect convergence, so it runs over each doc's row index and the
+    labels are mapped back to the string ids."""
+    import hashlib
+
+    center = 0x5A5A3C3CF0F09696  # arbitrary fixed center, positive int64
+    bit = lambda band, i: 1 << (16 * band + i)  # noqa: E731
+
+    def md5v(doc_id: str) -> int:
+        return int(hashlib.md5(doc_id.encode()).hexdigest()[:14], 16)
+
+    # --- corpus A: boilerplate mass --------------------------------------
+    n_mass = HOT_BUCKET_CAP + 476
+    rows_a = [(f"m{i:05d}", center) for i in range(n_mass)]
+    in_mass, fringe, control = [], [], []
+    for i in range(20):  # in-mass: x 1 bit out, y 2 bits out, same band
+        b, t = i % 4, i // 4
+        x = center ^ bit(b, 3 * t)
+        y = center ^ bit(b, 3 * t + 1) ^ bit(b, 3 * t + 2)
+        in_mass.append((f"pax{i:02d}", f"pay{i:02d}"))
+        rows_a += [(f"pax{i:02d}", x), (f"pay{i:02d}", y)]
+    for i in range(12):  # fringe: 4 bits out each, 3 shared flips
+        b, s = i % 4, i // 4
+        g = [5 * s + j for j in range(5)]
+        u = center
+        for j in (0, 1, 2, 3):
+            u ^= bit(b, g[j])
+        v = center
+        for j in (0, 1, 2, 4):
+            v ^= bit(b, g[j])
+        fringe.append((f"pau{i:02d}", f"pav{i:02d}"))
+        rows_a += [(f"pau{i:02d}", u), (f"pav{i:02d}", v)]
+    for i in range(12):  # control: 4 bits out, pair shares a private band
+        b, s = i % 4, i // 4
+        g = [5 * s + j for j in range(5)]
+        w = center
+        for j in (0, 1, 3, 4):
+            w ^= bit(b, g[j])
+        z = w ^ bit((b + 1) % 4, 7)
+        control.append((f"paw{i:02d}", f"paz{i:02d}"))
+        rows_a += [(f"paw{i:02d}", w), (f"paz{i:02d}", z)]
+    # planted fps must be unique (an accidental duplicate would open an
+    # unplanned exact-match path and corrupt the accounting)
+    planted_a = [fp for did, fp in rows_a if not did.startswith("m")]
+    # bench-integrity invariants raise explicitly, not via assert: assert
+    # is stripped under `python -O`, which would let the corrupted
+    # accounting these comments describe pass silently (ADVICE r9)
+    if not (len(set(planted_a)) == len(planted_a) and center not in planted_a):
+        raise RuntimeError("recall bench: corpus-A planted fps not unique")
+    # no planted id may win a representative slot: the 8 md5-smallest
+    # MASS ids sit in every hot bucket, so if every planted md5 sorts
+    # above them, every bucket's bottom-8 is mass-only. (First run of
+    # this harness: 'av03' DID win a slot and silently turned one fringe
+    # pair direct — hence the 'p' prefix and this mechanical check.)
+    mass_floor = sorted(
+        md5v(did) for did, _ in rows_a if did.startswith("m")
+    )[: HOT_BUCKET_REPS]
+    if not all(
+        md5v(did) > mass_floor[-1]
+        for did, _ in rows_a
+        if not did.startswith("m")
+    ):
+        raise RuntimeError("recall bench: a corpus-A planted id wins a rep slot")
+
+    # --- corpus B: heterogeneous hot bucket ------------------------------
+    # bands 0 and 3 carry the shared (hot) pattern; bands 1-2 are
+    # deterministic pseudo-random per member, so members sit far apart
+    # and representative edges FAIL verification — except around the
+    # planted pivot p, the md5-smallest member (the salted bottom-k
+    # representative pick is md5-ordered, so p is a representative of
+    # both hot buckets by construction).
+    n_het = HOT_BUCKET_CAP + 200
+    mask12 = ((1 << 32) - 1) << 16  # bands 1-2
+    rows_b = []
+    for i in range(n_het):
+        h = int(
+            hashlib.md5(f"het-fp-{i}".encode()).hexdigest()[:8], 16
+        )  # 32 random-ish bits for bands 1-2
+        rows_b.append((f"h{i:05d}", (center & ~mask12) | (h << 16)))
+    p_id, p_fp = min(rows_b, key=lambda r: md5v(r[0]))
+    wedge, orphan = [], []
+    for i in range(8):  # wedge: x,y verify against pivot p only
+        x = p_fp ^ bit(1, i)
+        y = p_fp ^ bit(1, i + 8) ^ bit(2, i)
+        wedge.append((f"bx{i}", f"by{i}"))
+        rows_b += [(f"bx{i}", x), (f"by{i}", y)]
+    for j in range(6):  # orphan: ≥4 bits from p, agree only on hot bands
+        c = p_fp ^ bit(1, j) ^ bit(1, j + 6) ^ bit(2, j) ^ bit(2, j + 6)
+        q1 = c ^ bit(1, 15)
+        q2 = c ^ bit(2, 15)
+        orphan.append((f"bq{j}a", f"bq{j}b"))
+        rows_b += [(f"bq{j}a", q1), (f"bq{j}b", q2)]
+    planted_b = [fp for did, fp in rows_b if not did.startswith("h")]
+    if len(set(planted_b)) != len(planted_b):
+        raise RuntimeError("recall bench: corpus-B planted fps not unique")
+    # planted members must not themselves win representative slots (md5
+    # order is deterministic — check mechanically, don't hope)
+    rep_floor = sorted(md5v(did) for did, _ in rows_b)[:HOT_BUCKET_REPS]
+    if md5v(p_id) != rep_floor[0]:
+        raise RuntimeError("recall bench: pivot is not the md5-smallest member")
+    if not all(
+        md5v(did) not in rep_floor
+        for did, _ in rows_b
+        if not did.startswith("h")
+    ):
+        raise RuntimeError("recall bench: a corpus-B planted id wins a rep slot")
+
+    def measure(rows, classes) -> dict:
+        fp = spark.createDataFrame(rows, "doc_id string, fp long").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        fp.count()
+        nid = spark.createDataFrame(
+            [(did, i) for i, (did, _) in enumerate(rows)], "doc_id string, nid long"
+        )
+        cand = _simhash_candidates(fp)
+        fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("fp").alias("fp_a"))
+        fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("fp").alias("fp_b"))
+        ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
+
+        def verify(c: DataFrame) -> DataFrame:
+            return (
+                c.join(fa, "doc_a")
+                .join(fb, "doc_b")
+                .filter(ham <= SIMHASH_HAMMING_MAX)
+                .select("doc_a", "doc_b")
+            )
+
+        base = verify(cand).persist(StorageLevel.MEMORY_AND_DISK)
+        rescued = base.unionByName(
+            verify(wedge_rescue_pairs(base))
+        ).distinct()
+        edges = (
+            base.join(nid.withColumnRenamed("doc_id", "doc_a"), "doc_a")
+            .withColumnRenamed("nid", "src")
+            .join(nid.withColumnRenamed("doc_id", "doc_b"), "doc_b")
+            .select("src", F.col("nid").alias("dst"))
+        )
+        labels = connected_components(
+            nid.select(F.col("nid").alias("id")), edges
+        ).join(nid, F.col("id") == F.col("nid")).select(
+            F.col("doc_id").alias("id"), "label"
+        )
+
+        def recall(pairs, planted) -> float:
+            canon = [(min(a, b), max(a, b)) for a, b in planted]
+            pl = spark.createDataFrame(canon, "doc_a string, doc_b string")
+            return round(
+                pl.join(pairs, ["doc_a", "doc_b"], "semi").count() / len(canon),
+                3,
+            )
+
+        def comp_recall(planted) -> float:
+            pl = spark.createDataFrame(planted, "doc_a string, doc_b string")
+            same = (
+                pl.join(labels.withColumnRenamed("id", "doc_a"), "doc_a")
+                .withColumnRenamed("label", "la")
+                .join(labels.withColumnRenamed("id", "doc_b"), "doc_b")
+                .filter(F.col("la") == F.col("label"))
+                .count()
+            )
+            return round(same / len(planted), 3)
+
+        out = {
+            name: {
+                "direct": recall(base, planted),
+                "component": comp_recall(planted),
+                "rescued": recall(rescued, planted),
+            }
+            for name, planted in classes.items()
+        }
+        base.unpersist()
+        fp.unpersist()
+        return out
+
+    return {
+        "mass": measure(
+            rows_a,
+            {"in_mass": in_mass, "fringe": fringe, "control": control},
+        ),
+        "het": measure(rows_b, {"wedge": wedge, "orphan": orphan}),
+        "n_mass": n_mass,
+        "n_het": n_het,
+        "deg_cap": RESCUE_PIVOT_DEG,
+    }
+
+
 def test_hot_bucket_recall_classes(spark):
     """Measured verified-pair recall above the cap (VERDICT r8 #3) — pins
     the class expectations the guard's trade-off documentation makes:
@@ -501,10 +779,6 @@ def test_hot_bucket_recall_classes(spark):
       ≥ 4 bits from every representative, agreeing only on hot bands);
     - wedge pairs: 0.0 direct but 1.0 AFTER the 2-hop rescue — the
       near-threshold case the rescue ships for."""
-    from apache_flink_pratices_spark.operators.dedup import (
-        hot_bucket_recall_bench,
-    )
-
     r = hot_bucket_recall_bench(spark)
     m, h = r["mass"], r["het"]
     assert m["in_mass"] == {"direct": 0.0, "component": 1.0, "rescued": 0.0}

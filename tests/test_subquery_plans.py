@@ -11,11 +11,9 @@ from apache_flink_pratices_spark.operators.subqueries import (
     q21_late_sole_supplier,
     q22_dormant_balance,
 )
-from apache_flink_pratices_spark.plans.explain import (
-    formatted_plan,
-    join_kinds,
-    pushed_filters,
-)
+from apache_flink_pratices_spark.plans.explain import formatted_plan
+
+from tests.plan_helpers import join_kinds, pushed_filters
 
 SF = "/root/testdata/sf0.001"
 

@@ -196,10 +196,8 @@ def test_event_transitions_single_shuffle(spark):
     """One exchange on user_id feeds both the lead() window and (via the
     bounded K² matrix) the final aggregation's partial side."""
     from apache_flink_pratices_spark.operators.temporal import q_event_transitions
-    from apache_flink_pratices_spark.plans.explain import (
-        exchange_count,
-        formatted_plan,
-    )
+    from apache_flink_pratices_spark.plans.explain import formatted_plan
+    from tests.plan_helpers import exchange_count
 
     plan = formatted_plan(q_event_transitions(spark, "/root/testdata/sf0.001"))
     # window shuffle + final-agg shuffle; no join anywhere

@@ -22,6 +22,7 @@ from apache_flink_pratices_spark.operators.text import (
 )
 
 from tests.conftest import SF_SMOKE
+from tests.oracle_duck import duck, oracle_stage, rows_by
 
 
 # --- quality_repetition -----------------------------------------------------
@@ -153,10 +154,8 @@ def test_gopher_rules_zero_shuffles_and_flag_consistency(spark):
     """The Gopher gate is pure map work (no exchange anywhere in the plan)
     and the pass bit is exactly the conjunction of the four rule flags."""
     from apache_flink_pratices_spark.operators.text import quality_gopher_rules
-    from apache_flink_pratices_spark.plans.explain import (
-        exchange_count,
-        formatted_plan,
-    )
+    from apache_flink_pratices_spark.plans.explain import formatted_plan
+    from tests.plan_helpers import exchange_count
 
     df = quality_gopher_rules(spark, SF_SMOKE)
     assert exchange_count(formatted_plan(df)) == 0
@@ -226,37 +225,41 @@ def test_dup_ngram_coverage_short_docs(spark, tmp_path):
 # --- r14: vectorized repetition-metrics kernel pinned to the HOF twin --------
 
 
-def _rep_token_frame(spark, texts):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    return df.select(
+def _rep_token_frame(d):
+    return d.select(
         "doc_id",
         F.expr("filter(split(lower(text), ' '), w -> w <> '')").alias("ws"),
     ).filter(F.size("ws") > 0)
 
 
-def test_repetition_kernel_matches_expression_twin(spark):
-    """_repetition_metrics (Arrow kernel) must equal the retained HOF twin
-    row for row on the real corpus — every output is an integer count, so
-    equality is exact."""
-    from apache_flink_pratices_spark.io import load
-    from apache_flink_pratices_spark.operators.text import (
-        _repetition_metrics,
-        _repetition_metrics_expr,
-    )
+def _rep_kernel_and_oracle(d):
+    """(kernel, oracle): doc_id -> (n_words, n_distinct, top_word_cnt,
+    n_dup_bigrams) from _repetition_metrics over the token frame, and
+    from the quality_repetition oracle's ``m`` stage run by DuckDB over
+    the same (doc_id, text) frame."""
+    from apache_flink_pratices_spark.operators.text import _repetition_metrics
 
-    d = load(spark, SF_SMOKE, "documents")
-    t = d.select(
-        "doc_id",
-        F.expr("filter(split(lower(text), ' '), w -> w <> '')").alias("ws"),
-    ).filter(F.size("ws") > 0).persist()
+    t = _rep_token_frame(d).persist()
     t.count()
     got = {r["doc_id"]: tuple(r)[1:] for r in _repetition_metrics(t).collect()}
-    ref = {
-        r["doc_id"]: tuple(r)[1:] for r in _repetition_metrics_expr(t).collect()
-    }
     t.unpersist()
+    con = duck(documents=d)
+    ref = rows_by(
+        con, oracle_stage("quality_repetition", "m"), "doc_id",
+        "n_words", "n_distinct", "top_word_cnt", "n_dup_bigrams",
+    )
+    con.close()
+    return got, ref
+
+
+def test_repetition_kernel_matches_expression_twin(spark):
+    """_repetition_metrics (Arrow kernel) must equal the quality_repetition
+    DuckDB oracle's metric stage row for row on the real corpus — every
+    output is an integer count, so equality is exact."""
+    from apache_flink_pratices_spark.io import load
+
+    d = load(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    got, ref = _rep_kernel_and_oracle(d)
     assert len(got) > 0 and got == ref
 
 
@@ -264,10 +267,6 @@ def test_repetition_kernel_twin_on_adversarial_texts(spark):
     """Hand-built shapes the counting logic can get wrong: repeated
     separators, single word, all-same, alternating bigram dups, unicode
     tokens, case folding."""
-    from apache_flink_pratices_spark.operators.text import (
-        _repetition_metrics,
-        _repetition_metrics_expr,
-    )
 
     texts = [
         "x x x x",
@@ -279,11 +278,8 @@ def test_repetition_kernel_twin_on_adversarial_texts(spark):
         "héllo wörld héllo wörld",  # non-ASCII tokens
         "z " * 200,             # long degenerate doc (trailing empty dropped)
     ]
-    t = _rep_token_frame(spark, texts).persist()
-    t.count()
-    got = {r["doc_id"]: tuple(r)[1:] for r in _repetition_metrics(t).collect()}
-    ref = {
-        r["doc_id"]: tuple(r)[1:] for r in _repetition_metrics_expr(t).collect()
-    }
-    t.unpersist()
+    d = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    got, ref = _rep_kernel_and_oracle(d)
     assert len(got) == len(texts) and got == ref
